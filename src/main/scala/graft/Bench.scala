@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every declared query at the given scale factor and
   * prints one JSON line. Queries are materialized through the noop sink —
@@ -41,20 +40,6 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** The JDK-17 module packages Spark needs opened when a JVM is launched
-    * outside spark-submit (which injects them itself). ONE list for every
-    * fork site — the local-cluster executor command line here and the
-    * at-rest probe JVM in BenchSplitSpec — so a Spark upgrade that needs
-    * one more open can't half-land.
-    */
-  val Jdk17OpenPackages: Seq[String] = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar")
   private def loadavg(): String =
     try scala.io.Source.fromFile("/proc/loadavg").mkString.trim.split(" ").take(3).mkString(" ")
     catch { case _: Throwable => "" }
@@ -67,30 +52,14 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
-    // SPARK_GRAFT_MASTER=local-cluster[4,8,2048] runs the MULTI-JVM tier:
-    // separate executor processes, so closure serialization, broadcast
-    // shipping and remote shuffle fetch are real (local[n] shares one JVM
-    // and hides all three). Executor JVMs need our classes + the JDK-17
-    // module opens on their own command line — forward both.
+    // SPARK_GRAFT_MASTER=local-cluster[4,8,2048] runs the MULTI-JVM tier
+    // (see GraftSession): local[n] shares one JVM and hides closure
+    // serialization, broadcast shipping and remote shuffle fetch.
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-    val builder =
-      if (!master.startsWith("local-cluster")) builder0
-      else builder0
-        .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
-        .config("spark.executor.extraJavaOptions",
-          Jdk17OpenPackages.map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" "))
-    val spark = builder
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // harness tables are single small parquet files; without a lower
-      // split size every scan is one task and the cores idle until the
-      // first shuffle (a cluster run has many files and keeps the default)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // harness tables are single small parquet files; without a lower
+    // split size every scan is one task and the cores idle until the
+    // first shuffle (a cluster run has many files and keeps the default)
+    val spark = GraftSession.local(master, cpus.toInt, Some("4m"))
     // warmup: JVM + parquet footer listing, so startup cost is not
     // attributed to the alphabetically-first query
     Tables.names.foreach { n =>
@@ -102,20 +71,22 @@ object Bench {
       val n = s.length
       if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
     }
-    def numOrNull(v: Option[Double]): String = v.map(d => f"$d%.3f").getOrElse("null")
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    def selected(name: String): Boolean = only.isEmpty || only(name)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => selected(name) }
-      .map { case (name, fn) =>
-      val runs: Seq[Option[Double]] = (1 to nRuns).map { _ =>
+    def num(v: Option[Double]): Option[java.math.BigDecimal] = v.map(Json.fixed(_))
+    /** `nRuns` timed runs of `body` (None for a run that threw), then one
+      * compact `{"q","sec","min"}` line AS THE QUERY COMPLETES: the full
+      * per-query map below is tens of KB and falls outside a bounded
+      * stdout capture. A whole-stdout parser recovers the map from these
+      * lines; a tail capture still gets the compact total. Returns
+      * (median, min, runs).
+      */
+    def timeRuns(q: String)(body: => Unit)
+        : (Option[Double], Option[Double], Seq[Option[Double]]) = {
+      val runs = (1 to nRuns).map { _ =>
         val t0 = System.nanoTime()
         val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+          try { body; true }
           catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            System.err.println(s"[bench] $q failed: ${e.getMessage}")
             false
           }
         val elapsed = (System.nanoTime() - t0) / 1e9
@@ -127,17 +98,22 @@ object Bench {
         if (ok) Some(elapsed) else None
       }
       val good = runs.flatten
-      // one compact line per query AS IT COMPLETES (driver contract,
-      // round-13 verdict item 2): the full per-query map below is tens of
-      // KB and falls outside the driver's bounded stdout capture, so
-      // PERF_r{12,13}.json recorded per_query = {}. A whole-stdout parser
-      // recovers the map from these lines; a tail capture still gets the
-      // compact total. Median + min, same statistics as the big line.
-      println(f"""{"q":"$name","sec":${numOrNull(
-        good.headOption.map(_ => median(good)))},"min":${numOrNull(
-        good.minOption)}}""")
-      (name, good.headOption.map(_ => median(good)), good.minOption, runs)
+      val p50 = good.headOption.map(_ => median(good))
+      println(Json.write(Json.obj("q" -> q, "sec" -> num(p50), "min" -> num(good.minOption))))
+      (p50, good.minOption, runs)
     }
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .getOrElse(Set.empty[String])
+    def selected(name: String): Boolean = only.isEmpty || only(name)
+    def noop(df: => org.apache.spark.sql.DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
+    val results = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => selected(name) }
+      .map { case (name, fn) =>
+        val (p50, mn, runs) = timeRuns(name)(noop(fn(spark, sfDir)))
+        (name, p50, mn, runs)
+      }
     // ---- index-family build/probe split (BenchSplits) ----
     val splitQueries = BenchSplits.probes.keys.filter(selected).toSeq.sorted
     val neededGroups = splitQueries.map(BenchSplits.probes(_).group).distinct
@@ -171,29 +147,9 @@ object Bench {
     val probeResults = splitQueries.map { q =>
       if (!builtGroups(BenchSplits.probes(q).group)) (q, None, None, -1)
       else {
-        val runs = (1 to nRuns).map { _ =>
-          val t0 = System.nanoTime()
-          val ok =
-            try {
-              BenchSplits.probes(q).run(spark, sfDir, art)
-                .write.format("noop").mode("overwrite").save()
-              true
-            } catch { case e: Throwable =>
-              System.err.println(s"[bench] probe $q failed: ${e.getMessage}")
-              false
-            }
-          val elapsed = (System.nanoTime() - t0) / 1e9
-          spark.catalog.clearCache()
-          System.gc()
-          if (ok) Some(elapsed) else None
-        }
-        val good = runs.flatten
-        // same one-line-per-query contract as the main phase
-        println(f"""{"q":"probe:$q","sec":${numOrNull(
-          good.headOption.map(_ => median(good)))},"min":${numOrNull(
-          good.minOption)}}""")
-        (q, good.headOption.map(_ => median(good)), good.minOption,
-          runs.count(_.isEmpty))
+        val (p50, mn, runs) = timeRuns(s"probe:$q")(
+          noop(BenchSplits.probes(q).run(spark, sfDir, art)))
+        (q, p50, mn, runs.count(_.isEmpty))
       }
     }
     // the frozen artifacts are corpus-sized (posting tables, two IVFPQ
@@ -206,38 +162,24 @@ object Bench {
     }
     rmTree(new java.io.File(frozenDir))
 
-    val qs = results.map { case (k, p50, _, _) => "\"" + k + "\":" + numOrNull(p50) }
-      .mkString("{", ",", "}")
-    val qsMin = results.map { case (k, _, mn, _) => "\"" + k + "\":" + numOrNull(mn) }
-      .mkString("{", ",", "}")
-    val runsJson = results.map { case (k, _, _, rs) =>
-      "\"" + k + "\":" + rs.map(numOrNull).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
     // split-phase breakage feeds the same failed map as the main phase:
     // probe failures as "probe:<q>" (count of attempted-and-failed runs,
     // or "skipped" when the build failure meant zero probe runs were
     // attempted), build failures as "build:<g>"
-    val failedEntries =
+    val failed = Json.obj(
       results.collect { case (k, _, _, rs) if rs.exists(_.isEmpty) =>
-        "\"" + k + "\":" + rs.count(_.isEmpty)
+        k -> rs.count(_.isEmpty)
       } ++
-      buildSecs.collect { case (g, None) => "\"build:" + g + "\":1" } ++
+      buildSecs.collect { case (g, None) => s"build:$g" -> 1 } ++
       probeResults.collect {
-        case (q, _, _, nf) if nf > 0 => "\"probe:" + q + "\":" + nf
-        case (q, _, _, nf) if nf < 0 => "\"probe:" + q + "\":\"skipped\""
-      }
-    val failed = failedEntries.mkString("{", ",", "}")
+        case (q, _, _, nf) if nf > 0 => s"probe:$q" -> nf
+        case (q, _, _, nf) if nf < 0 => s"probe:$q" -> "skipped"
+      }: _*)
     // a query with zero successful runs poisons the headline: a total that
     // silently omits it would report breakage as a speedup
-    val totalStr =
-      if (results.exists(_._2.isEmpty)) "null"
-      else f"${results.flatMap(_._2).sum}%.3f"
-    val buildsJson = buildSecs.map { case (g, v) => "\"" + g + "\":" + numOrNull(v) }
-      .mkString("{", ",", "}")
-    val probesJson = probeResults.map { case (q, p50, _, _) => "\"" + q + "\":" + numOrNull(p50) }
-      .mkString("{", ",", "}")
-    val probesMinJson = probeResults.map { case (q, _, mn, _) => "\"" + q + "\":" + numOrNull(mn) }
-      .mkString("{", ",", "}")
+    val total =
+      if (results.exists(_._2.isEmpty)) None
+      else num(Some(results.flatMap(_._2).sum))
     // ---- streaming throughput tier (BenchStreaming) ----
     // Runs in a FORKED JVM after the query section is fully measured and
     // its closing loadavg recorded: the round-10 driver pass ran both
@@ -251,15 +193,13 @@ object Bench {
     // failed fork) records an error object — either way the batch
     // numbers above stay intact.
     val loadAfterQueries = loadavg()
-    val streamingJson =
+    val streaming: Any =
       if (sys.env.get("SPARK_GRAFT_BENCH_SKIP_STREAMING").contains("1"))
-        """{"skipped":true}"""
-      else if (only.nonEmpty) """{"skipped":"subset run"}"""
+        Json.obj("skipped" -> true)
+      else if (only.nonEmpty) Json.obj("skipped" -> "subset run")
       else {
         val tmp = java.nio.file.Files.createTempFile("bench_streaming", ".json")
         try {
-          val addOpens = Jdk17OpenPackages
-            .flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
           // the fork mirrors the batch session's scan parallelism
           // (maxPartitionBytes) so streaming throughput is measured under
           // the SAME split sizing as the query section it's compared
@@ -267,7 +207,8 @@ object Bench {
           // or the driver harness) keeps its own multi-GB heap alive and
           // the two would otherwise contend for the box
           val cmd = Seq(
-            s"${System.getProperty("java.home")}/bin/java") ++ addOpens ++ Seq(
+            s"${System.getProperty("java.home")}/bin/java") ++
+            GraftSession.addOpens ++ Seq(
             "-Xmx8g", "-cp", System.getProperty("java.class.path"),
             "-Dspark.ui.enabled=false",
             "-Dspark.sql.session.timeZone=UTC",
@@ -276,7 +217,7 @@ object Bench {
           val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
           pb.environment().put("SPARK_GRAFT_STREAMBENCH_OUT", tmp.toString)
           // RAW: the fork writes the BARE streaming object to the tmp
-          // file (no wrapper), so it embeds verbatim — no marker-string
+          // file (no wrapper), so it embeds as parsed — no marker-string
           // extraction that a twin or sfDir containing the marker text
           // could defeat
           pb.environment().put("SPARK_GRAFT_STREAMBENCH_RAW", "1")
@@ -285,22 +226,21 @@ object Bench {
           val exit = proc.waitFor()
           if (exit != 0)
             sys.error(s"streaming JVM exited $exit: ${log.takeRight(300)}")
-          val obj = new String(java.nio.file.Files.readAllBytes(tmp)).trim
-          if (!(obj.startsWith("{") && obj.endsWith("}")))
-            sys.error(s"no streaming object in: ${obj.take(200)}")
-          obj
+          val node = Json.parse(new String(java.nio.file.Files.readAllBytes(tmp)))
+          if (!node.isObject)
+            sys.error(s"no streaming object in: ${node.toString.take(200)}")
+          node
         }
         catch { case e: Throwable =>
           System.err.println(s"[bench] streaming phase failed: ${e.getMessage}")
-          // truncate the RAW message, then escape: cutting after escaping
-          // can split a doubled backslash and leave a dangling escape that
-          // poisons the closing JSON quote
-          s"""{"error":"${BenchStreaming.esc(
-            Option(e.getMessage).getOrElse(e.getClass.getName).take(200))}"}"""
+          Json.obj("error" ->
+            Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
         }
         finally java.nio.file.Files.deleteIfExists(tmp)
       }
     val loadAfter = loadavg()
+    val loads = Json.obj("before" -> loadBefore,
+      "after_queries" -> loadAfterQueries, "after" -> loadAfter)
     // the COMPACT headline: everything a round-over-round comparison
     // needs, small enough (<250 chars) to survive a bounded stdout
     // capture. The driver keeps only a tail of bench stdout and the full
@@ -311,12 +251,22 @@ object Bench {
     // self-contained whichever end survives; the two lines are identical
     // so any parser that keeps first/last/any match records the same
     // totals.
-    val nQueries = results.size
-    val nFailed = results.count(_._2.isEmpty)
-    val compact =
-      f"""{"metric":"total","value":$totalStr,"unit":"sec","n_queries":$nQueries,"n_failed":$nFailed,"runs_per_query":$nRuns,"loadavg":{"before":"$loadBefore","after_queries":"$loadAfterQueries","after":"$loadAfter"},"sf":"$sfDir"}"""
-    val line =
-      f"""{"metric":"total","value":$totalStr,"unit":"sec","queries":$qs,"queries_min":$qsMin,"runs":$runsJson,"failed":$failed,"runs_per_query":$nRuns,"artifact_builds":$buildsJson,"probes":$probesJson,"probes_min":$probesMinJson,"streaming":$streamingJson,"loadavg":{"before":"$loadBefore","after_queries":"$loadAfterQueries","after":"$loadAfter"},"sf":"$sfDir"}"""
+    val compact = Json.write(Json.obj(
+      "metric" -> "total", "value" -> total, "unit" -> "sec",
+      "n_queries" -> results.size, "n_failed" -> results.count(_._2.isEmpty),
+      "runs_per_query" -> nRuns, "loadavg" -> loads, "sf" -> sfDir))
+    val line = Json.write(Json.obj(
+      "metric" -> "total", "value" -> total, "unit" -> "sec",
+      "queries" -> Json.obj(results.map { case (k, p50, _, _) => k -> num(p50) }: _*),
+      "queries_min" -> Json.obj(results.map { case (k, _, mn, _) => k -> num(mn) }: _*),
+      "runs" -> Json.obj(results.map { case (k, _, _, rs) => k -> rs.map(num) }: _*),
+      "failed" -> failed,
+      "runs_per_query" -> nRuns,
+      "artifact_builds" -> Json.obj(buildSecs.map { case (g, v) => g -> num(v) }: _*),
+      "probes" -> Json.obj(probeResults.map { case (q, p50, _, _) => q -> num(p50) }: _*),
+      "probes_min" -> Json.obj(probeResults.map { case (q, _, mn, _) => q -> num(mn) }: _*),
+      "streaming" -> streaming,
+      "loadavg" -> loads, "sf" -> sfDir))
     println(compact)
     println(line)
     println(compact)

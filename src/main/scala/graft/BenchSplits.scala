@@ -99,13 +99,7 @@ object BenchSplits {
 object ProbeAtRest {
   def main(args: Array[String]): Unit = {
     val Array(artifactDir, sfDir, outDir) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("local[2]", 4)
     def art(name: String) = spark.read.parquet(s"$artifactDir/$name")
     BenchSplits.probes.toSeq.sortBy(_._1).foreach { case (q, probe) =>
       probe.run(spark, sfDir, art)

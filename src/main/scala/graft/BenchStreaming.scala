@@ -350,29 +350,23 @@ object BenchStreaming {
     results
   }
 
-  /** JSON string-escape for error messages landing inside the bench line:
-    * backslash FIRST, quotes neutralized, and EVERY control character
-    * (Spark error text routinely embeds tabs and CRs from plan/schema
-    * fragments) mapped to a space — one un-escaped control char would
-    * make the whole line unparseable downstream. Shared by the streaming
-    * section here and Bench's phase-failure catch.
-    */
-  def esc(s: String): String = s.replace("\\", "\\\\").replace("\"", "'")
-    .map(c => if (c < ' ') ' ' else c)
-
   /** JSON object for the bench line: per-twin metrics + bound verdicts. */
-  def json(results: Seq[(String, Either[String, TwinResult])]): String = {
-    val entries = results.map {
-      case (name, Right(r)) =>
-        f""""$name":{"rows":${r.rows},"sec":${r.sec}%.3f,"rows_per_sec":${r.rowsPerSec}%.0f,"batches":${r.batches},"trigger_ms_p50":${r.trigP50Ms}%.0f,"trigger_ms_max":${r.trigMaxMs}%.0f,"state_rows_max":${r.stateRowsMax},"state_bytes_max":${r.stateBytesMax},"state_bound":${r.bound},"bound_ok":${r.boundOk},"bound":"${esc(r.boundDesc)}"}"""
-      case (name, Left(err)) =>
-        s""""$name":{"failed":"${esc(err)}"}"""
+  def json(results: Seq[(String, Either[String, TwinResult])]): Map[String, Any] = {
+    val twins = results.map {
+      case (name, Right(r)) => name -> Json.obj(
+        "rows" -> r.rows, "sec" -> Json.fixed(r.sec),
+        "rows_per_sec" -> Json.fixed(r.rowsPerSec, 0), "batches" -> r.batches,
+        "trigger_ms_p50" -> Json.fixed(r.trigP50Ms, 0),
+        "trigger_ms_max" -> Json.fixed(r.trigMaxMs, 0),
+        "state_rows_max" -> r.stateRowsMax, "state_bytes_max" -> r.stateBytesMax,
+        "state_bound" -> r.bound, "bound_ok" -> r.boundOk, "bound" -> r.boundDesc)
+      case (name, Left(err)) => name -> Json.obj("failed" -> err)
     }
     val allOk = results.forall {
       case (_, Right(r)) => r.boundOk
       case _ => false
     }
-    s"""{"all_bounded":$allOk,"twins":${entries.mkString("{", ",", "}")}}"""
+    Json.obj("all_bounded" -> allOk, "twins" -> Json.obj(twins: _*))
   }
 
   /** Standalone entry: one JSON line, same env contract as [[Bench]] —
@@ -384,22 +378,9 @@ object BenchStreaming {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-    val builder =
-      if (!master.startsWith("local-cluster")) builder0
-      else builder0
-        .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
-        .config("spark.executor.extraJavaOptions",
-          Bench.Jdk17OpenPackages.map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" "))
-    val spark = builder
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(master, cpus.toInt)
     val obj = json(run(spark, sfDir))
-    val line = s"""{"metric":"streaming","sf":"$sfDir","streaming":$obj}"""
+    val line = Json.write(Json.obj("metric" -> "streaming", "sf" -> sfDir, "streaming" -> obj))
     println(line)
     val out = sys.env.getOrElse("SPARK_GRAFT_STREAMBENCH_OUT", "bench_streaming.json")
     // RAW=1 (the Bench fork) writes the BARE streaming object so the
@@ -408,7 +389,7 @@ object BenchStreaming {
     // standalone artifact keeps the self-describing wrapper shape
     val raw = sys.env.get("SPARK_GRAFT_STREAMBENCH_RAW").contains("1")
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      ((if (raw) obj else line) + "\n")
+      ((if (raw) Json.write(obj) else line) + "\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     spark.stop()
   }

@@ -29,20 +29,8 @@ import org.apache.spark.sql.functions._
   */
 object BenchSyncJob {
 
-  private def session(): SparkSession = {
-    val builder = SparkSession.builder()
-      .master("local-cluster[4,8,2048]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
-      .config("spark.executor.extraJavaOptions",
-        Bench.Jdk17OpenPackages.map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" "))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-    val s = builder.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private def session(): SparkSession =
+    GraftSession.local("local-cluster[4,8,2048]", 32, Some("16m"))
 
   /** Order-insensitive digest of a frame: (row count, XOR of row md5s).
     * Rows canonicalize as a '|'-joined cast-to-string of every column in
@@ -157,18 +145,17 @@ object BenchSyncJob {
     s2.stop()
 
     val identical = qd == kd && qPkg == kPkg && qErr == kErr
-    def tm(m: Map[String, Double]): String =
-      m.toSeq.sortBy(_._1)
-        .map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-    println(
-      s"""{"metric":"syncjob_e2e","dir":"$dir",""" +
-        s""""quiet":{"wall":$quietWall,"stages":${tm(qt)},""" +
-        s""""actions_n":${qd._1},"actions_xor":${qd._2},""" +
-        s""""packages":$qPkg,"errors":$qErr},""" +
-        s""""kill":{"wall":$killWall,"stages":${tm(kt)},""" +
-        s""""actions_n":${kd._1},"actions_xor":${kd._2},""" +
-        s""""packages":$kPkg,"errors":$kErr,"killed_pid":$killed},""" +
-        s""""identical":$identical}""")
+    def tm(m: Map[String, Double]) =
+      Json.obj(m.toSeq.sortBy(_._1).map { case (k, v) => k -> Json.fixed(v) }: _*)
+    println(Json.write(Json.obj(
+      "metric" -> "syncjob_e2e", "dir" -> dir,
+      "quiet" -> Json.obj("wall" -> quietWall, "stages" -> tm(qt),
+        "actions_n" -> qd._1, "actions_xor" -> qd._2,
+        "packages" -> qPkg, "errors" -> qErr),
+      "kill" -> Json.obj("wall" -> killWall, "stages" -> tm(kt),
+        "actions_n" -> kd._1, "actions_xor" -> kd._2,
+        "packages" -> kPkg, "errors" -> kErr, "killed_pid" -> killed),
+      "identical" -> identical)))
     require(killed > 0, "executor kill never fired — the run proves nothing")
     require(identical,
       s"action sets diverged after executor loss: quiet=$qd kill=$kd")

@@ -78,13 +78,7 @@ object GenSkew {
     val src = args(0)
     val dst = args(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(s"local[$cpus]", cpus.toInt)
     def t(n: String) = Tables.table(spark, src, n)
     def head(table: String, key: String): Long =
       t(table).agg(min(col(key).cast("long"))).head().getLong(0)
@@ -166,13 +160,7 @@ object GenScale {
     val dst = args(1)
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(s"local[$cpus]", cpus.toInt)
 
     // construction limits: the rotation ring is the 52-letter a–zA–Z
     // cycle (the text corpus is letters+whitespace only — no digits or

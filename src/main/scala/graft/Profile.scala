@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -16,9 +15,9 @@ import scala.collection.mutable
   *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
   *     sbt "runMain graft.Profile q_ann_eval q_graph_lpa"
   *
-  * Mirrors Bench's session config (shuffle.partitions=cpus,
-  * maxPartitionBytes=4m, UTC, no UI) so stage shapes match what the bench
-  * times. Each query runs SPARK_GRAFT_PROFILE_RUNS times (default 2); the
+  * Builds the same [[GraftSession]] as Bench (shuffle.partitions=cpus,
+  * maxPartitionBytes=4m) so stage shapes match what the bench times.
+  * Each query runs SPARK_GRAFT_PROFILE_RUNS times (default 2); the
   * listener records every run, labeled, so warm-vs-cold is visible.
   */
 object Profile {
@@ -40,14 +39,7 @@ object Profile {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_PROFILE_RUNS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(s"local[$cpus]", cpus.toInt, Some("4m"))
 
     val stages = mutable.LinkedHashMap.empty[(Int, Int), StageRec]
     val jobsOfGroup = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Int]]

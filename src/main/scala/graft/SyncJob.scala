@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The complete harvest lifecycle (SURVEY.md §3) as one callable — the
   * set-oriented equivalent of running gather_stage + import_stage end to
@@ -51,8 +52,11 @@ object SyncJob {
     // recompute per verb. Join ONCE against all non-delete actions and
     // persist the result: it holds only the changed rows — small relative to
     // the corpus by the merge's nature — so the cache is cheap and create /
-    // update are two filters over the same materialized frame.
-    val acts = actions.persist()
+    // update are two filters over the same materialized frame. An
+    // `actions` frame the caller already cached stays the caller's: only
+    // a cache taken here is released here.
+    val ownsActsCache = actions.storageLevel == StorageLevel.NONE
+    val acts = if (ownsActsCache) actions.persist() else actions
     val upserts = acts.filter(col("action") =!= "delete")
       .select(col("key"), col("action").as("__action"))
     val payload = packages
@@ -84,7 +88,7 @@ object SyncJob {
       sink.delete(acts.filter(col("action") === "delete").select(col("key")))
     } finally {
       payload.unpersist()
-      acts.unpersist()
+      if (ownsActsCache) acts.unpersist()
     }
   }
 

@@ -151,49 +151,6 @@ object SyncPipeline {
         to_json(struct(col("*"))).as("content"))
       .write.mode("overwrite").parquet(stagingDir)
 
-  /** K2: the import stage's queue source (odgovlt.py:378) — parse the JSON
-    * payloads back into typed records (schema from the source catalog).
-    */
-  def importFromStaging(s: SparkSession, dir: String, stagingDir: String): DataFrame = {
-    val schema = t(s, dir, "orders").schema
-    s.read.parquet(stagingDir)
-      .select(col("guid"), from_json(col("content"), schema).as("rec"))
-      .select((Seq(col("guid")) ++ schema.fieldNames.map(f => col(s"rec.$f"))): _*)
-  }
-
-  /** The PER-OBJECT ERROR CHANNEL on a staged work-item frame — the
-    * harvest framework's `_save_object_error` accounting (a failed
-    * HarvestObject is recorded against the object and the job CONTINUES;
-    * the reference inherits it from ckanext-harvest's import loop around
-    * `odgovlt.py:378`): every staged `(guid, content)` item classifies as
-    * importable or errored, errored rows land in a side table instead of
-    * failing the stage or silently nulling through. Two error classes:
-    * `missing_guid` (no object identity — nothing to upsert against) and
-    * `parse_error` (the JSON payload does not parse). Detector: the
-    * parse schema carries an explicit corrupt-record column
-    * (`columnNameOfCorruptRecord`, [[CorruptField]]) — PERMISSIVE
-    * `from_json` fills it with the raw text whenever ANY parse error
-    * occurred, independent of `spark.sql.json.enablePartialResults`
-    * (which, default-true since 3.4, can let a LEADING field like the PK
-    * survive a mid-payload truncation under some configs — a PK-only
-    * probe is config-fragile; round-8 advice). The parsed-PK probe stays
-    * as a second clause: a payload that parses cleanly but carries no PK
-    * is unimportable for the same operational reason. Deliberately few
-    * probes: a per-field all-null conjunction makes the filter pushdown
-    * duplicate the whole to_json→from_json chain once per schema column
-    * (measured — ~8 parse evaluations per row); two probes keep it
-    * bounded.
-    *
-    * Returns (ok, errors): `ok` is [[importFromStaging]]'s typed frame
-    * over the importable subset; `errors` is `(guid, error)` — the audit
-    * rows an operator reads before re-running the harvest. The two frames
-    * prune opposite halves of one shared classifier PLAN — but they are
-    * returned lazily, so a caller that ACTIONS both pays two staging
-    * scans (and two JSON parses); a caller on the both-sides path should
-    * persist the frames it is about to consume (the standing
-    * caller-owns-the-cache contract — the library never pins a cache
-    * inside a returned frame).
-    */
   /** The row-local error classifier — ONE definition for the batch
     * channel ([[importFromStagingWithErrors]], [[syncErrors]]) and the
     * streaming twin ([[graft.streaming.StreamOps.importErrorStream]]),
@@ -221,6 +178,41 @@ object SyncPipeline {
       schema.add(CorruptField, org.apache.spark.sql.types.StringType),
       java.util.Map.of("columnNameOfCorruptRecord", CorruptField))
 
+  /** K2: the import stage's queue source (odgovlt.py:378) — parse the
+    * staged JSON payloads back into typed records (schema from the source
+    * catalog) — with the PER-OBJECT ERROR CHANNEL on the work items: the
+    * harvest framework's `_save_object_error` accounting (a failed
+    * HarvestObject is recorded against the object and the job CONTINUES;
+    * the reference inherits it from ckanext-harvest's import loop around
+    * `odgovlt.py:378`): every staged `(guid, content)` item classifies as
+    * importable or errored, errored rows land in a side table instead of
+    * failing the stage or silently nulling through. Two error classes:
+    * `missing_guid` (no object identity — nothing to upsert against) and
+    * `parse_error` (the JSON payload does not parse). Detector: the
+    * parse schema carries an explicit corrupt-record column
+    * (`columnNameOfCorruptRecord`, [[CorruptField]]) — PERMISSIVE
+    * `from_json` fills it with the raw text whenever ANY parse error
+    * occurred, independent of `spark.sql.json.enablePartialResults`
+    * (which, default-true since 3.4, can let a LEADING field like the PK
+    * survive a mid-payload truncation under some configs — a PK-only
+    * probe is config-fragile; round-8 advice). The parsed-PK probe stays
+    * as a second clause: a payload that parses cleanly but carries no PK
+    * is unimportable for the same operational reason. Deliberately few
+    * probes: a per-field all-null conjunction makes the filter pushdown
+    * duplicate the whole to_json→from_json chain once per schema column
+    * (measured — ~8 parse evaluations per row); two probes keep it
+    * bounded.
+    *
+    * Returns (ok, errors): `ok` is the typed frame (guid + the source
+    * schema's columns) over the importable subset; `errors` is
+    * `(guid, error)` — the audit rows an operator reads before re-running
+    * the harvest. The two frames prune opposite halves of one shared
+    * classifier PLAN — but they are returned lazily, so a caller that
+    * ACTIONS both pays two staging scans (and two JSON parses); a caller
+    * on the both-sides path should persist the frames it is about to
+    * consume (the standing caller-owns-the-cache contract — the library
+    * never pins a cache inside a returned frame).
+    */
   def importFromStagingWithErrors(s: SparkSession, dir: String,
       stagingDir: String): (DataFrame, DataFrame) = {
     val schema = t(s, dir, "orders").schema
@@ -277,18 +269,6 @@ object SyncPipeline {
       .orderBy("obj_id")
   }
 
-  /** K3-K5 merge-set computation (the upsert/delete semantics of
-    * odgovlt.py:205-211,249-257,312-318,407) as a single full-outer diff:
-    * classify every key as create / update / delete / noop.
-    *
-    *  - source: current upstream state (published orders)
-    *  - target: previously-synced state — simulated as a deterministic
-    *    subset with a deterministic field mutation
-    *  - delete only fires for target rows "owned" by this source
-    *    (the F4 `Šaltinis == 'IVPK IRS'` guard) — here: even order keys.
-    * Change detection follows the reference's subset semantics
-    * (odgovlt.py:112-124): only fields present on the source side compare.
-    */
   /** The reference's sync protocol CLASSIFIER against a REAL target
     * snapshot (what [[mergeActions]] demonstrates on a simulated target):
     * given the assembled source state and the target's current documents,
@@ -353,6 +333,18 @@ object SyncPipeline {
         col("key") === col("__t_key"), "left_anti")
       .select(col("key"), lit("create").as("action"))
 
+  /** K3-K5 merge-set computation (the upsert/delete semantics of
+    * odgovlt.py:205-211,249-257,312-318,407) as a single full-outer diff:
+    * classify every key as create / update / delete / noop.
+    *
+    *  - source: current upstream state (published orders)
+    *  - target: previously-synced state — simulated as a deterministic
+    *    subset with a deterministic field mutation
+    *  - delete only fires for target rows "owned" by this source
+    *    (the F4 `Šaltinis == 'IVPK IRS'` guard) — here: even order keys.
+    * Change detection follows the reference's subset semantics
+    * (odgovlt.py:112-124): only fields present on the source side compare.
+    */
   def mergeActions(s: SparkSession, dir: String): DataFrame = {
     val orders = t(s, dir, "orders")
     val source = orders.filter(col("o_orderstatus") === "F")

@@ -1113,7 +1113,7 @@ object Similarity {
   /** The IVF routing table alone — each query's `probes` nearest
     * centroids as (q_id, probe_cid), the same 9dp-rounded cosine argmax
     * [[ivfPqProbe]] prunes the index scan with. Public so the
-    * recall-curve harness ([[graft.BenchRecall]]) can decompose measured
+    * recall-curve spec (`RecallCurveSpec`) can decompose measured
     * recall into the routing term (coverage of the exact top-k by probed
     * clusters — monotone in `probes` since probed sets are nested) and
     * the shortlist/quantization term, without re-deriving the argmax.

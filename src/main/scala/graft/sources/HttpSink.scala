@@ -16,8 +16,8 @@ import java.time.Duration
   *
   * Execution shape (the part the reference, a per-row driver loop, does not
   * have): `foreachPartition` — every partition opens ONE keep-alive client
-  * and streams its rows in [[batchSize]] chunks, so N executors × M
-  * partitions POST concurrently while per-task buffering stays bounded.
+  * and streams its rows one POST at a time, so N executors × M partitions
+  * POST concurrently while per-task buffering stays bounded.
   * Rows are serialized by the engine (`df.toJSON`) before the sink sees
   * them, so the HTTP loop never touches Spark rows.
   *
@@ -38,7 +38,6 @@ final case class HttpSink(
     entity: String = "package",
     idField: String = "id",
     apiKey: Option[String] = None,
-    batchSize: Int = 100,
     maxRetries: Int = 3,
     retryBaseMs: Long = 50L,
     timeoutMs: Long = 30000L) extends ActionSink {
@@ -64,30 +63,25 @@ final case class HttpSink(
     */
   private def post(rows: org.apache.spark.sql.Dataset[String], action: String,
       fallbackOn: Int, fallback: Option[String]): Unit = {
-    val (base, key, batch, retries, backoff, timeout) =
-      (baseUrl, apiKey, batchSize, maxRetries, retryBaseMs, timeoutMs)
+    val (base, key, retries, backoff, timeout) =
+      (baseUrl, apiKey, maxRetries, retryBaseMs, timeoutMs)
     val fb = fallback
     rows.foreachPartition { it: Iterator[String] =>
       if (it.nonEmpty) {
         val client = HttpClient.newBuilder()
           .connectTimeout(Duration.ofMillis(timeout)).build()
-        it.grouped(batch).foreach { chunk =>
-          // chunk boundary = backpressure unit: a real deployment hooks
-          // flow-control / progress reporting here without holding more
-          // than `batch` bodies in flight
-          chunk.foreach { body =>
-            val status = send(client, base, action, body, key, retries,
-              backoff, timeout)
-            if (status == fallbackOn) {
-              fb.foreach { fbAction =>
-                val st2 = send(client, base, fbAction, body, key, retries,
-                  backoff, timeout)
-                if (st2 / 100 != 2) throw new java.io.IOException(
-                  s"$fbAction fallback after $action=$fallbackOn returned $st2")
-              }
-            } else if (status / 100 != 2) throw new java.io.IOException(
-              s"$action returned $status")
-          }
+        it.foreach { body =>
+          val status = send(client, base, action, body, key, retries,
+            backoff, timeout)
+          if (status == fallbackOn) {
+            fb.foreach { fbAction =>
+              val st2 = send(client, base, fbAction, body, key, retries,
+                backoff, timeout)
+              if (st2 / 100 != 2) throw new java.io.IOException(
+                s"$fbAction fallback after $action=$fallbackOn returned $st2")
+            }
+          } else if (status / 100 != 2) throw new java.io.IOException(
+            s"$action returned $status")
         }
       }
     }
@@ -96,13 +90,10 @@ final case class HttpSink(
 
 object HttpSink {
 
-  /** One POST with bounded retry. Returns the final HTTP status; transient
-    * failures (connect/send errors, 5xx) retry with exponential backoff and
-    * the last status (or a thrown I/O error) surfaces after `maxRetries`.
-    * 4xx is NEVER retried — it is a semantic answer (exists / not found)
-    * the caller routes on.
+  /** One POST; returns the final HTTP status. 4xx is a semantic answer
+    * (exists / not found) the caller routes on.
     */
-  private[sources] def send(client: HttpClient, baseUrl: String,
+  private def send(client: HttpClient, baseUrl: String,
       action: String, body: String, apiKey: Option[String], maxRetries: Int,
       retryBaseMs: Long, timeoutMs: Long): Int = {
     val b = HttpRequest.newBuilder(URI.create(s"$baseUrl/$action"))
@@ -110,24 +101,33 @@ object HttpSink {
       .header("Content-Type", "application/json")
       .POST(HttpRequest.BodyPublishers.ofString(body))
     apiKey.foreach(k => b.header("Authorization", k))
-    val req = b.build()
-    var attempt = 0
-    var status = -1
-    var lastErr: Throwable = null
-    while (attempt <= maxRetries && (status < 0 || status / 100 == 5)) {
-      if (attempt > 0) Thread.sleep(retryBaseMs << (attempt - 1))
-      try {
-        status = client.send(req, HttpResponse.BodyHandlers.discarding()).statusCode()
-        lastErr = null
-        if (status / 100 != 5) return status
-      } catch {
-        case e: java.io.IOException => lastErr = e; status = -1
-        case e: InterruptedException => throw e
+    withRetry(client, b.build(), HttpResponse.BodyHandlers.discarding(),
+      action, maxRetries, retryBaseMs).statusCode()
+  }
+
+  /** The REST tier's one retry ladder, for the sink's POSTs and
+    * [[HttpSource]]'s page GETs. I/O errors and 5xx are transient: they
+    * retry with exponential backoff, at most `maxRetries` times. Returns
+    * the first response that is not a 5xx, or the last 5xx once the
+    * retries are spent; throws if the last attempt was an I/O error. Any
+    * other status is the caller's to route — every call is idempotent,
+    * so a retry never double-applies.
+    */
+  private[sources] def withRetry[T](client: HttpClient, req: HttpRequest,
+      handler: HttpResponse.BodyHandler[T], what: String, maxRetries: Int,
+      retryBaseMs: Long): HttpResponse[T] = {
+    @annotation.tailrec
+    def attempt(n: Int): HttpResponse[T] = {
+      if (n > 0) Thread.sleep(retryBaseMs << (n - 1))
+      val r = try Right(client.send(req, handler))
+        catch { case e: java.io.IOException => Left(e) }
+      r match {
+        case Right(resp) if resp.statusCode / 100 != 5 || n == maxRetries => resp
+        case Left(e) if n == maxRetries => throw new java.io.IOException(
+          s"$what failed after $maxRetries retries", e)
+        case _ => attempt(n + 1)
       }
-      attempt += 1
     }
-    if (lastErr != null)
-      throw new java.io.IOException(s"$action failed after $maxRetries retries", lastErr)
-    status
+    attempt(0)
   }
 }

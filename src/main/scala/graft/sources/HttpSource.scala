@@ -101,42 +101,22 @@ final case class HttpSource(
 
 object HttpSource {
 
-  /** One GET with bounded retry — [[HttpSink.send]]'s ladder for the read
-    * path: transient failures (I/O, 5xx) retry with exponential backoff;
-    * any other non-2xx throws (a 4xx on a page read is a contract
-    * violation, not a semantic answer).
+  /** One GET on [[HttpSink.withRetry]]'s ladder; any final non-2xx
+    * throws (a 4xx on a page read is a contract violation, not a semantic
+    * answer).
     */
-  private[sources] def get(client: HttpClient, baseUrl: String,
+  private def get(client: HttpClient, baseUrl: String,
       action: String, offset: Long, limit: Int, maxRetries: Int,
       retryBaseMs: Long, timeoutMs: Long): String = {
+    val what = s"$action?offset=$offset"
     val req = HttpRequest
-      .newBuilder(URI.create(s"$baseUrl/$action?offset=$offset&limit=$limit"))
+      .newBuilder(URI.create(s"$baseUrl/$what&limit=$limit"))
       .timeout(Duration.ofMillis(timeoutMs))
       .GET().build()
-    var attempt = 0
-    var lastErr: Throwable = null
-    while (attempt <= maxRetries) {
-      if (attempt > 0) Thread.sleep(retryBaseMs << (attempt - 1))
-      var status = -1
-      var body: String = null
-      try {
-        val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
-        status = resp.statusCode()
-        body = resp.body()
-      } catch {
-        case e: InterruptedException => throw e
-        case e: java.io.IOException => lastErr = e
-      }
-      // routed OUTSIDE the try so the 4xx throw is not swallowed by the
-      // transient-error catch and retried
-      if (status / 100 == 2) return body
-      if (status >= 0 && status / 100 != 5) throw new java.io.IOException(
-        s"$action?offset=$offset returned $status")
-      if (status >= 0) lastErr = new java.io.IOException(
-        s"$action?offset=$offset returned $status")
-      attempt += 1
-    }
-    throw new java.io.IOException(
-      s"$action?offset=$offset failed after $maxRetries retries", lastErr)
+    val resp = HttpSink.withRetry(client, req,
+      HttpResponse.BodyHandlers.ofString(), what, maxRetries, retryBaseMs)
+    if (resp.statusCode / 100 != 2)
+      throw new java.io.IOException(s"$what returned ${resp.statusCode}")
+    resp.body()
   }
 }

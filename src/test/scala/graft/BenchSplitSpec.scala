@@ -59,10 +59,8 @@ class BenchSplitSpec extends AnyFunSuite {
     // SparkSession, empty block-manager, empty rule memo — if any probe
     // depended on state the build left in this JVM rather than on the
     // parquet alone, the at-rest run would diverge or die
-    val addOpens = Bench.Jdk17OpenPackages
-      .flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
     val cmd = Seq(
-      s"${System.getProperty("java.home")}/bin/java") ++ addOpens ++ Seq(
+      s"${System.getProperty("java.home")}/bin/java") ++ GraftSession.addOpens ++ Seq(
       "-Xmx2g", "-cp", System.getProperty("java.class.path"),
       "graft.ProbeAtRest", dir, sf, out)
     val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
@@ -82,29 +80,24 @@ class BenchSplitSpec extends AnyFunSuite {
 
   test("bench error-message escape neutralizes every control character") {
     // one raw control char inside a JSON string poisons the whole bench
-    // line; Spark error text routinely embeds tabs/CRs from plan fragments
+    // line; Spark error text routinely embeds quotes, backslashes, tabs and
+    // CRs from plan fragments
     val hostile = "a\\b\"c\nd\te\rf\u0001g"
-    val escaped = BenchStreaming.esc(hostile)
-    assert(escaped == "a\\\\b'c d e f g")
-    // the escaped form survives a real JSON parse inside a string value
-    val line = s"""{"error":"$escaped"}"""
-    assert(!line.exists(_ < ' '))
+    val line = Json.write(Json.obj("error" -> hostile))
+    assert(!line.exists(_ < ' '), s"raw control character in $line")
+    // the written form survives a real JSON parse and gives the text back
+    assert(Json.parse(line).get("error").asText == hostile)
   }
 
   test("truncation happens before escaping at the 200-char boundary") {
-    // a message of 200 backslashes doubles to 400 escaped chars; the safe
-    // order (truncate raw, then escape) yields an even run of backslashes
-    // that closes cleanly inside a JSON string — cutting AFTER escaping
-    // could split a doubled backslash and leave a dangling escape that
-    // swallows the closing quote
+    // Bench cuts a raw error message to 200 chars and only then writes it,
+    // so the writer sees whole characters and escapes each one: 200
+    // backslashes become 200 escaped pairs that close cleanly inside the
+    // JSON string, with no dangling escape to swallow the closing quote
     val raw = "\\" * 250
-    val safe = BenchStreaming.esc(raw.take(200))
-    assert(safe == "\\\\" * 200)
-    val unsafe = BenchStreaming.esc(raw).take(201) // odd cut: dangling escape
-    assert(unsafe.length % 2 == 1)
-    val line = s"""{"error":"$safe"}"""
-    // even-run backslashes: the char before the closing quote is itself
-    // escaped-pair-complete, so the string terminates where it should
-    assert(line.endsWith("\\\\\"}"))
+    val cut = raw.take(200)
+    val line = Json.write(Json.obj("error" -> cut))
+    assert(line == "{\"error\":\"" + "\\\\" * 200 + "\"}")
+    assert(Json.parse(line).get("error").asText == cut)
   }
 }

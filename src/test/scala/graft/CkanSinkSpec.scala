@@ -133,7 +133,7 @@ class CkanSinkSpec extends AnyFunSuite {
     val actions = SyncPipeline.classifyAgainst(packages, target,
       "o_orderkey", owned = col("extras_kodas").isNotNull)
     val sink = HttpSink(ckan.url, entity = "package", idField = "o_orderkey",
-      batchSize = 50, maxRetries = 2, retryBaseMs = 1L)
+      maxRetries = 2, retryBaseMs = 1L)
     SyncJob.applyActions(packages, actions, "o_orderkey", sink)
     packages
   }
@@ -199,7 +199,7 @@ class CkanSinkSpec extends AnyFunSuite {
     val actions = SyncPipeline.classifyAgainst(docs, target, "group_slug",
       owned = col("extras_source") === "IVPK IRS")
     val sink = HttpSink(ckan.url, entity = "group", idField = "group_slug",
-      batchSize = 50, maxRetries = 2, retryBaseMs = 1L)
+      maxRetries = 2, retryBaseMs = 1L)
     SyncJob.applyGroupActions(docs, actions, "group_slug", "depth", sink)
     docs
   }
@@ -280,7 +280,7 @@ class CkanSinkSpec extends AnyFunSuite {
           val actions = SyncPipeline.classifyFindOrCreate(
             source, targetState(ckan, schema), idField)
           val sink = HttpSink(ckan.url, entity = entity, idField = idField,
-            batchSize = 50, maxRetries = 2, retryBaseMs = 1L)
+            maxRetries = 2, retryBaseMs = 1L)
           SyncJob.applyActions(source, actions, idField, sink)
         }
         val ids = source.select(idField).collect().map(_.getString(0)).sorted

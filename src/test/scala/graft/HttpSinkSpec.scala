@@ -12,6 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 import graft.sources.HttpSink
+import scala.jdk.CollectionConverters._
 
 /** K3-K5 over the REST tier, against an in-process HTTP server standing in
   * for the CKAN action API — the same substitution JdbcSpec makes with
@@ -85,7 +86,7 @@ class HttpSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def sinkFor(ckan: FakeCkan, retries: Int = 3) =
     HttpSink(ckan.url, entity = "package", idField = "id",
-      apiKey = Some("test-key"), batchSize = 2, maxRetries = retries,
+      apiKey = Some("test-key"), maxRetries = retries,
       retryBaseMs = 1L)
 
   test("create set lands; replayed create falls through to update (idempotent by guid)") {
@@ -170,7 +171,7 @@ class HttpSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ckan = new FakeCkan("o_orderkey")
     try {
       val sink = HttpSink(ckan.url, entity = "package",
-        idField = "o_orderkey", batchSize = 50, maxRetries = 2, retryBaseMs = 1L)
+        idField = "o_orderkey", maxRetries = 2, retryBaseMs = 1L)
       val r = SyncJob.push(spark, dir, staging, sink)
       // expected end state: create ∪ update keys present (target starts
       // empty: updates fall back to create, deletes 404 → no-op)
@@ -183,6 +184,22 @@ class HttpSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(upserts.forall(ckan.store.containsKey))
       // payload is the assembled package, not just the key
       assert(ckan.store.values().iterator().next().contains("name_slug"))
+    } finally ckan.stop()
+  }
+
+  test("applyActions leaves a caller-persisted actions frame cached") {
+    import spark.implicits._
+    val ckan = new FakeCkan("id")
+    try {
+      val packages = Seq(("a", "v"), ("b", "v")).toDF("id", "val")
+      val actions = Seq(("a", "create"), ("z", "delete")).toDF("key", "action")
+        .persist()
+      try {
+        SyncJob.applyActions(packages, actions, "id", sinkFor(ckan))
+        assert(ckan.store.keySet().asScala == Set("a"))
+        assert(actions.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+          "applyActions evicted the caller's cache")
+      } finally actions.unpersist()
     } finally ckan.stop()
   }
 }

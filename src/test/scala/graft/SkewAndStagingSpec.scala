@@ -192,7 +192,9 @@ class SkewAndStagingSpec extends AnyFunSuite {
   test("staging queue round-trip is lossless (K1 gather -> K2 import)") {
     val staging = java.nio.file.Files.createTempDirectory("graft-staging").toString
     SyncPipeline.gatherToStaging(spark, sf, staging)
-    val back = SyncPipeline.importFromStaging(spark, sf, staging)
+    val (ok, errors) = SyncPipeline.importFromStagingWithErrors(spark, sf, staging)
+    assert(errors.isEmpty, "a clean staging write must import without errors")
+    val back = ok
       .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3))).sorted
     val orig = Tables.table(spark, sf, "orders")
