@@ -11,8 +11,10 @@ import graft.functions.{BloomBuild, BloomContains, CharStats, CharTrigrams, CmsS
   */
 object GraftCatalog {
 
-  /** Register base tables, derived views, and functions on the session. */
-  def register(spark: SparkSession, sfDir: String): Unit = {
+  /** Register base tables, derived views, and functions on the session.
+    * The views pin nothing: they mount inside [[Reuse.released]].
+    */
+  def register(spark: SparkSession, sfDir: String): Unit = Reuse.released {
     Tables.names.foreach { n =>
       Tables.table(spark, sfDir, n).createOrReplaceTempView(n)
     }
@@ -28,10 +30,8 @@ object GraftCatalog {
       .createOrReplaceTempView("group_docs")
     // lazy plans only: nearDupComponents is deliberately NOT mounted — its
     // iterative loop runs Spark jobs eagerly, which a view registration
-    // must not do; call it directly when needed. tfidf mounts WITHOUT its
-    // tf cache — a cache pinned inside a session-lifetime view is never
-    // unpersisted
-    graft.llm.TextAnalysis.tfidfTopTerms(spark, sfDir, cacheTf = false)
+    // must not do; call it directly when needed
+    graft.llm.TextAnalysis.tfidfTopTerms(spark, sfDir)
       .createOrReplaceTempView("tfidf_top_terms")
     graft.llm.TextAnalysis.trainValSplit(spark, sfDir)
       .createOrReplaceTempView("sample_split")
@@ -39,25 +39,20 @@ object GraftCatalog {
       .createOrReplaceTempView("decontaminated")
     graft.llm.Curation.sourceMix(spark, sfDir)
       .createOrReplaceTempView("source_mix")
-    // cache = false on both: a cache pinned inside a session-lifetime view
-    // is never unpersisted (the standing view-mount contract)
-    graft.llm.Curation.sourceMixTemperature(spark, sfDir, cache = false)
+    graft.llm.Curation.sourceMixTemperature(spark, sfDir)
       .createOrReplaceTempView("source_mix_temp")
     // k pinned: auto-sizing (k = None) counts the corpus — an eager job
     // a view registration must not run; the fixture-fixed k is identical
     // at any mounted harness scale ≤ sf0.1
-    graft.llm.Similarity.semDedup(spark, sfDir, cache = false,
+    graft.llm.Similarity.semDedup(spark, sfDir,
       k = Some(graft.llm.Similarity.KmeansK))
       .createOrReplaceTempView("semdedup")
-    // cache = false: a cache pinned inside a session-lifetime view is
-    // never unpersisted (same contract as tfidf's cacheTf above)
-    graft.llm.Curation.pipelineCurate(spark, sfDir, cache = false)
+    graft.llm.Curation.pipelineCurate(spark, sfDir)
       .createOrReplaceTempView("curated_corpus")
     graft.llm.Similarity.retrieveRerank(spark, sfDir)
       .createOrReplaceTempView("retrieve_rerank")
     // round-6 additions — all lazy plans (pageRank's loop only BUILDS the
-    // plan; the eagerly-iterating components stays unmounted), cache=false
-    // under the standing view-mount contract
+    // plan; the eagerly-iterating components stays unmounted)
     graft.llm.Sketches.hllDistinct(spark, sfDir)
       .createOrReplaceTempView("hll_distinct")
     graft.llm.Sketches.cmsTermFreq(spark, sfDir)
@@ -66,7 +61,7 @@ object GraftCatalog {
       .createOrReplaceTempView("sketch_overlap")
     graft.ops.ProfileOps.profileTable(spark, sfDir)
       .createOrReplaceTempView("table_profile")
-    graft.ops.GraphOps.pageRank(spark, sfDir, cache = false)
+    graft.ops.GraphOps.pageRank(spark, sfDir)
       .createOrReplaceTempView("pagerank")
     graft.ops.ChangeOps.scd2History(spark, sfDir)
       .createOrReplaceTempView("scd2_history")
@@ -77,10 +72,10 @@ object GraftCatalog {
     graft.ops.IncrementalOps.ivmMergeAgg(spark, sfDir)
       .createOrReplaceTempView("ivm_agg")
     // k pinned for the same no-eager-jobs reason as the semdedup mount
-    graft.llm.Similarity.hardNegatives(spark, sfDir, cache = false,
+    graft.llm.Similarity.hardNegatives(spark, sfDir,
       k = Some(graft.llm.Similarity.KmeansK))
       .createOrReplaceTempView("hard_negatives")
-    graft.llm.TextAnalysis.bpeEncode(spark, sfDir, cache = false)
+    graft.llm.TextAnalysis.bpeEncode(spark, sfDir)
       .createOrReplaceTempView("bpe_encoded")
     graft.llm.TextAnalysis.oovRate(spark, sfDir)
       .createOrReplaceTempView("oov_rate")
@@ -99,21 +94,20 @@ object GraftCatalog {
       .createOrReplaceTempView("fuzzy_name_match")
     graft.ops.IncrementalOps.ivmJoin(spark, sfDir)
       .createOrReplaceTempView("ivm_join")
-    // retrieval-index tier — lazy plans, cache=false under the standing
-    // view-mount contract
-    graft.llm.TextAnalysis.invertedIndex(spark, sfDir, cache = false)
+    // retrieval-index tier — lazy plans
+    graft.llm.TextAnalysis.invertedIndex(spark, sfDir)
       .createOrReplaceTempView("inverted_index")
-    graft.llm.TextAnalysis.bm25Indexed(spark, sfDir, cache = false)
+    graft.llm.TextAnalysis.bm25Indexed(spark, sfDir)
       .createOrReplaceTempView("bm25_indexed")
-    graft.llm.TextAnalysis.collocations(spark, sfDir, cache = false)
+    graft.llm.TextAnalysis.collocations(spark, sfDir)
       .createOrReplaceTempView("collocations")
-    graft.llm.TextAnalysis.bigramCommonness(spark, sfDir, cache = false)
+    graft.llm.TextAnalysis.bigramCommonness(spark, sfDir)
       .createOrReplaceTempView("bigram_lm")
     // leakageSafeSplit stays unmounted like the components it composes
     // (its fixpoint runs Spark jobs eagerly - the view contract forbids it)
     graft.llm.Similarity.randomProjection(spark, sfDir)
       .createOrReplaceTempView("embed_rp")
-    graft.llm.TextAnalysis.ivmIndex(spark, sfDir, cache = false)
+    graft.llm.TextAnalysis.ivmIndex(spark, sfDir)
       .createOrReplaceTempView("ivm_index")
     // round-7 batch — lazy plans; kCore stays UNMOUNTED (its per-round
     // localCheckpoint runs Spark jobs eagerly, the same exclusion as the
@@ -126,7 +120,7 @@ object GraftCatalog {
       .createOrReplaceTempView("dq_checks")
     graft.llm.Sketches.histQuantiles(spark, sfDir)
       .createOrReplaceTempView("hist_quantiles")
-    graft.llm.TextAnalysis.docNeighbors(spark, sfDir, cache = false)
+    graft.llm.TextAnalysis.docNeighbors(spark, sfDir)
       .createOrReplaceTempView("tfidf_neighbors")
     // bfs stays unmounted with kCore (eager per-round checkpoints)
     graft.ops.AnalyticsOps.winsorize(spark, sfDir)
@@ -163,9 +157,9 @@ object GraftCatalog {
       .createOrReplaceTempView("weighted_median")
     graft.llm.Training.prCurve(spark, sfDir)
       .createOrReplaceTempView("pr_curve")
-    graft.llm.Sketches.cmsTopK(spark, sfDir, cache = false)
+    graft.llm.Sketches.cmsTopK(spark, sfDir)
       .createOrReplaceTempView("cms_topk")
-    graft.llm.Similarity.rrfFusion(spark, sfDir, cache = false)
+    graft.llm.Similarity.rrfFusion(spark, sfDir)
       .createOrReplaceTempView("rrf_fusion")
     graft.llm.Similarity.maxSimLate(spark, sfDir)
       .createOrReplaceTempView("maxsim_results")
@@ -175,9 +169,9 @@ object GraftCatalog {
       .createOrReplaceTempView("grouping_sets_report")
     graft.llm.Curation.epochShuffle(spark, sfDir)
       .createOrReplaceTempView("epoch_shuffle")
-    graft.llm.TextAnalysis.bpeFertility(spark, sfDir, cache = false)
+    graft.llm.TextAnalysis.bpeFertility(spark, sfDir)
       .createOrReplaceTempView("bpe_fertility")
-    graft.ops.AnalyticsOps.basketRules(spark, sfDir, cache = false)
+    graft.ops.AnalyticsOps.basketRules(spark, sfDir)
       .createOrReplaceTempView("basket_rules")
     graft.ops.AnalyticsOps.rfmSegments(spark, sfDir)
       .createOrReplaceTempView("rfm_segments")
@@ -185,7 +179,7 @@ object GraftCatalog {
       .createOrReplaceTempView("cal_spine")
     graft.ops.PrivacyOps.kAnonymity(spark, sfDir)
       .createOrReplaceTempView("privacy_kanon")
-    graft.llm.Dedup.containmentPairs(spark, sfDir, cache = false)
+    graft.llm.Dedup.containmentPairs(spark, sfDir)
       .createOrReplaceTempView("containment_pairs")
     graft.ops.AsofOps.asofClickTol(spark, sfDir)
       .createOrReplaceTempView("asof_tolerance")
@@ -195,7 +189,7 @@ object GraftCatalog {
       .createOrReplaceTempView("flagship_revenue")
     graft.llm.TextAnalysis.langIdConfusion(spark, sfDir)
       .createOrReplaceTempView("langid_confusion")
-    graft.llm.Curation.curateBudget(spark, sfDir, cache = false)
+    graft.llm.Curation.curateBudget(spark, sfDir)
       .createOrReplaceTempView("curate_budget")
     graft.ops.PrivacyOps.erasurePropagation(spark, sfDir)
       .createOrReplaceTempView("erasure_report")
@@ -206,7 +200,7 @@ object GraftCatalog {
       .createOrReplaceTempView("first_touch_attr")
     graft.ops.AnalyticsOps.funnelLatency(spark, sfDir)
       .createOrReplaceTempView("funnel_latency")
-    graft.ops.CoreOps.seasonality(spark, sfDir, cache = false)
+    graft.ops.CoreOps.seasonality(spark, sfDir)
       .createOrReplaceTempView("dow_seasonality")
     // round-8 additions — both lazy plans (the pixel decode's
     // mapPartitions and the error classifier build no jobs at mount time)
@@ -226,14 +220,14 @@ object GraftCatalog {
     graft.ops.MultimodalOps.mmVideo(spark, sfDir)
       .createOrReplaceTempView("video_frame_stats")
     // round-13 continuation: DSIR selection + retrieval-quality eval —
-    // lazy plans under the cache=false view-mount contract
-    graft.llm.Curation.dsirWeights(spark, sfDir, cache = false)
+    // lazy plans
+    graft.llm.Curation.dsirWeights(spark, sfDir)
       .createOrReplaceTempView("dsir_weights")
-    graft.llm.Curation.dsirSelect(spark, sfDir, cache = false)
+    graft.llm.Curation.dsirSelect(spark, sfDir)
       .createOrReplaceTempView("dsir_selected")
-    graft.llm.Similarity.annEval(spark, sfDir, cache = false)
+    graft.llm.Similarity.annEval(spark, sfDir)
       .createOrReplaceTempView("ann_eval")
-    graft.llm.Curation.textDrift(spark, sfDir, cache = false)
+    graft.llm.Curation.textDrift(spark, sfDir)
       .createOrReplaceTempView("text_drift")
     // round-13 continuation: duplicated-substring family + prototype
     // pruning — all lazy plans; k pinned on the prune for the same
@@ -244,7 +238,7 @@ object GraftCatalog {
       .createOrReplaceTempView("substr_trimmed")
     graft.llm.Dedup.substrStats(spark, sfDir)
       .createOrReplaceTempView("substr_stats")
-    graft.llm.Similarity.prototypePrune(spark, sfDir, cache = false,
+    graft.llm.Similarity.prototypePrune(spark, sfDir,
       k = Some(graft.llm.Similarity.KmeansK))
       .createOrReplaceTempView("prototype_prune")
     // round-13 continuation: CCNet LM-perplexity filter — lazy plans
@@ -259,13 +253,12 @@ object GraftCatalog {
     graft.llm.Curation.pipelineQuality(spark, sfDir)
       .createOrReplaceTempView("quality_pipeline")
     // round-13 continuation: excess-surprise / novelty / balanced-sample /
-    // semantic-decon selection tier — lazy plans under the same
-    // cache=false view-mount contract
-    graft.llm.Curation.lmExcess(spark, sfDir, cache = false)
+    // semantic-decon selection tier — lazy plans
+    graft.llm.Curation.lmExcess(spark, sfDir)
       .createOrReplaceTempView("lm_excess_selected")
     graft.llm.Curation.ngramNovelty(spark, sfDir)
       .createOrReplaceTempView("ngram_novelty")
-    graft.llm.Similarity.diversitySample(spark, sfDir, cache = false,
+    graft.llm.Similarity.diversitySample(spark, sfDir,
       k = Some(graft.llm.Similarity.KmeansK))
       .createOrReplaceTempView("diversity_sample")
     graft.llm.Similarity.semanticDecontaminate(spark, sfDir)

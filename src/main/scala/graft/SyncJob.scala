@@ -12,8 +12,8 @@ import org.apache.spark.storage.StorageLevel
   *   2. import: staging → typed records (K2)
   *   3. assembly: joins + defaults + bridge collect + tag pipeline →
   *      package documents (J1-J4, P4, SF1-SF7)
-  *   4. merge: classify create/update/delete against the target state
-  *      (A7, K3-K5)
+  *   4. merge: classify create/update/delete against the target's
+  *      current documents (A7, K3-K5)
   *
   * The staging hop is the exactly-once boundary: a crashed import re-reads
   * the same staged snapshot, and re-running the whole job is idempotent
@@ -29,13 +29,20 @@ object SyncJob {
   final case class Result(packages: DataFrame, actions: DataFrame,
       errors: DataFrame)
 
-  def run(s: SparkSession, dir: String, stagingDir: String): Result = {
+  /** `target`: the target's current documents — `o_orderkey`,
+    * `extras_kodas` (set on documents this source owns) and any package
+    * fields to compare. An empty target classifies every package a create.
+    */
+  def run(s: SparkSession, dir: String, stagingDir: String,
+      target: DataFrame): Result = {
     SyncPipeline.gatherToStaging(s, dir, stagingDir)
     val (ok, errors) =
       SyncPipeline.importFromStagingWithErrors(s, dir, stagingDir)
     val packages = SyncPipeline.assembled(s, dir, Some(ok.drop("guid")))
       .orderBy("o_orderkey")
-    Result(packages, SyncPipeline.mergeActions(s, dir), errors)
+    val actions = SyncPipeline.classifyAgainst(packages, target, "o_orderkey",
+      owned = col("extras_kodas").isNotNull)
+    Result(packages, actions, errors)
   }
 
   /** Step 5 — apply the classified sets to a target through any
@@ -115,8 +122,8 @@ object SyncJob {
     * (`/root/reference/odgovlt.py:355-367,373-407`) as one call.
     */
   def push(s: SparkSession, dir: String, stagingDir: String,
-      sink: graft.sources.ActionSink): Result = {
-    val r = run(s, dir, stagingDir)
+      target: DataFrame, sink: graft.sources.ActionSink): Result = {
+    val r = run(s, dir, stagingDir, target)
     applyActions(r.packages, r.actions, "o_orderkey", sink)
     r
   }

@@ -59,9 +59,9 @@ case class NearestCentroid(first: Expression, second: Expression,
   override def checkInputDataTypes(): TypeCheckResult =
     (first.dataType, second.dataType, third.dataType) match {
       case (ArrayType(DoubleType, _), DoubleType,
-            ArrayType(StructType(Array(a, b, c)), _))
-          if a.dataType == IntegerType &&
-            b.dataType.isInstanceOf[ArrayType] && c.dataType == DoubleType =>
+            ArrayType(StructType(Array(StructField(_, IntegerType, _, _),
+              StructField(_, ArrayType(DoubleType, _), _, _),
+              StructField(_, DoubleType, _, _))), _)) =>
         TypeCheckResult.TypeCheckSuccess
       case (l, m, r) => TypeCheckResult.TypeCheckFailure(
         "nearest_centroid requires (array<double>, double, " +
@@ -113,8 +113,9 @@ case class NearestCode(left: Expression, right: Expression)
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(StructType(Array(a, b)), _))
-          if a.dataType == IntegerType && b.dataType.isInstanceOf[ArrayType] =>
+      case (ArrayType(DoubleType, _), ArrayType(StructType(Array(
+            StructField(_, IntegerType, _, _),
+            StructField(_, ArrayType(DoubleType, _), _, _))), _)) =>
         TypeCheckResult.TypeCheckSuccess
       case (l, r) => TypeCheckResult.TypeCheckFailure(
         "nearest_code requires (array<double>, " +

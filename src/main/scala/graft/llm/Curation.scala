@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Reuse
 import graft.Tables.{table => t}
 import TextHash._
 
@@ -100,18 +101,16 @@ object Curation {
     * mid-pipeline by [[pipelineCurate]], where an interior sort would be
     * dead work.
     */
-  private[llm] def bloomVerdicts(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
+  private[llm] def bloomVerdicts(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.{BloomBuild, BloomContains}
     val sh = t(s, dir, "documents")
       .select(col("doc_id"), shingles3(tokens(col("text"))).as("grams"))
-    // cache: the benchmark shingle pipeline feeds BOTH the bloom build and
-    // the verify join's distinct set — uncached it would scan and shingle
-    // the benchmark slice twice
-    val benchBase = sh.filter(col("doc_id") % BenchmarkModulus === 0)
+    // pinned: the benchmark shingle pipeline feeds BOTH the bloom build
+    // and the verify join's distinct set — unpinned it would scan and
+    // shingle the benchmark slice twice
+    val bench = Reuse(sh.filter(col("doc_id") % BenchmarkModulus === 0)
       .select(explode(col("grams")).as("gram"))
-      .filter(col("gram") =!= "")
-    val bench = if (cache) benchBase.cache() else benchBase
+      .filter(col("gram") =!= ""))
     // the bloom dedupes by construction — no distinct() before the build
     val bloom = bench
       .select(md5Long(col("gram")).as("h"))
@@ -210,14 +209,12 @@ object Curation {
     * only per-document ordering is WITHIN each score bucket (one window
     * partitioned by score), so no stage ever totally orders the corpus.
     */
-  def curateBudget(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
+  def curateBudget(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // cached: the scored frame feeds BOTH the per-score collapse and the
-    // verdict join — uncached, the tokenize + per-token md5 scoring scan
-    // runs twice; cache = false for the view mount (standing contract)
-    val scoredPlan = TextAnalysis.modelScored(s, dir)
-    val scored = if (cache) scoredPlan.cache() else scoredPlan
+    // pinned: the scored frame feeds BOTH the per-score collapse and the
+    // verdict join — unpinned, the tokenize + per-token md5 scoring scan
+    // runs twice
+    val scored = Reuse(TextAnalysis.modelScored(s, dir))
     val g = scored.groupBy(col("raw_score"))
       .agg(sum(col("n_tokens")).cast("bigint").as("btoks"))
     val wDesc = Window.orderBy(col("raw_score").desc)
@@ -425,10 +422,9 @@ object Curation {
     * single-row pattern) and the rates broadcast back — the corpus itself
     * is never shuffled and never sees a window.
     */
-  def sourceMixTemperature(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame =
+  def sourceMixTemperature(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "documents").filter(col("source").rlike("src[0-9]+"))
-      .join(broadcast(mixTempRates(s, dir, cache)), Seq("source"))
+      .join(broadcast(mixTempRates(s, dir)), Seq("source"))
       .filter(mixTempKeep)
       .select(col("doc_id"), col("source"), col("mix_weight"), col("keep_bp"))
       .orderBy("doc_id")
@@ -437,19 +433,15 @@ object Curation {
     * (source, n_docs, mix_weight, keep_bp). Split out so the STREAMING
     * form can freeze rates from a corpus snapshot and probe them
     * stream-static ([[graft.streaming.StreamOps.mixTempStream]]).
-    * `cache=false` for session-lifetime view mounts (GraftCatalog) — the
-    * documented pinned-cache contract.
     */
-  def mixTempRates(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
-    // ~|sources| rows consumed twice (normalization scalar + rates): cache,
+  def mixTempRates(s: SparkSession, dir: String): DataFrame = {
+    // ~|sources| rows consumed twice (normalization scalar + rates): pin,
     // or the corpus-wide count scans the source column once per consumer
-    val bySrc0 = t(s, dir, "documents")
+    val bySrc = Reuse(t(s, dir, "documents")
       .filter(col("source").rlike("src[0-9]+"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"))
-      .withColumn("w", sqrt(col("n_docs")))
-    val bySrc = if (cache) bySrc0.cache() else bySrc0
+      .withColumn("w", sqrt(col("n_docs"))))
     // w_sum as an exact DECIMAL sum (the repo's standing cross-engine-sum
     // discipline): double addition is order-sensitive, and the partials'
     // merge order is not — one deterministic decimal→double conversion at
@@ -495,17 +487,13 @@ object Curation {
     * definition of its standalone operator, so the composed oracle is
     * assembled from the same shared CTEs.
     */
-  def pipelineCurate(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
-    val clean = bloomVerdicts(s, dir, cache).filter(col("keep")).select("doc_id")
-    // cache: the surviving-population scores feed the percentile AND the
-    // verdict projection. `cache = false` for session-lifetime VIEW mounts
-    // (GraftCatalog) — a cache pinned inside a view is never unpersisted,
-    // same contract as tfidfTopTerms' cacheTf
-    val scoredBase = TextAnalysis.modelScored(s, dir)
+  def pipelineCurate(s: SparkSession, dir: String): DataFrame = {
+    val clean = bloomVerdicts(s, dir).filter(col("keep")).select("doc_id")
+    // pinned: the surviving-population scores feed the percentile AND the
+    // verdict projection
+    val scored = Reuse(TextAnalysis.modelScored(s, dir)
       .join(clean, "doc_id")
-      .select(col("doc_id"), col("raw_score"))
-    val scored = if (cache) scoredBase.cache() else scoredBase
+      .select(col("doc_id"), col("raw_score")))
     val thr = scored.agg(
       round(percentile(col("raw_score"), lit(TextAnalysis.CutPercentile)), 4)
         .as("cutoff"))
@@ -622,10 +610,8 @@ object Curation {
     * the ratio table broadcasts; the per-document sum is the only other
     * shuffle, keyed doc_id. Nothing is all-pairs, nothing collects.
     */
-  def dsirWeights(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
-    val fbPlan = dsirBucketCounts(s, dir)
-    val fb = if (cache) fbPlan.cache() else fbPlan
+  def dsirWeights(s: SparkSession, dir: String): DataFrame = {
+    val fb = Reuse(dsirBucketCounts(s, dir))
     fb.filter(!col("is_target"))
       .join(broadcast(dsirRatios(fb)), Seq("bucket"))
       .groupBy(col("doc_id"))
@@ -645,9 +631,8 @@ object Curation {
     * sort), and only the K winners join back for their labels, as a
     * broadcast.
     */
-  def dsirSelect(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
-    val top = dsirWeights(s, dir, cache)
+  def dsirSelect(s: SparkSession, dir: String): DataFrame = {
+    val top = dsirWeights(s, dir)
       .orderBy(col("avg_ratio").desc, col("doc_id"))
       .limit(DsirQuota)
     t(s, dir, "documents").select(col("doc_id"), col("lang"), col("source"))
@@ -670,16 +655,14 @@ object Curation {
     * alerts on this before a shifted crawl batch poisons the mixture.
     *
     * Scale shape: ONE text scan into the shared (doc, bucket)
-    * aggregation ([[featureBucketCounts]], cached for its three
+    * aggregation ([[featureBucketCounts]], pinned for its three
     * consumers); everything downstream is O([[DsirBuckets]]) rows —
     * the full-outer bucket join, the scalar totals, and the ordered
     * limit are all constant-size regardless of corpus size.
     */
-  def textDrift(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
-    val fbPlan = featureBucketCounts(s, dir,
-      col("doc_id") % graft.llm.Dedup.IncrementModulus === 0)
-    val fb = if (cache) fbPlan.cache() else fbPlan
+  def textDrift(s: SparkSession, dir: String): DataFrame = {
+    val fb = Reuse(featureBucketCounts(s, dir,
+      col("doc_id") % graft.llm.Dedup.IncrementModulus === 0))
     val base = fb.filter(!col("is_target"))
       .groupBy(col("bucket")).agg(sum(col("cnt")).as("n_base"))
     val nw = fb.filter(col("is_target"))
@@ -707,15 +690,14 @@ object Curation {
     * [[graft.streaming.StreamOps.textDriftStream]] probes: the BASE
     * corpus's bucket probabilities on the [[DsirProbScale]] grid — the
     * same quantization as [[textDrift]]'s `pb_x1e9` column. One corpus
-    * scan into O([[DsirBuckets]]) rows (cached: the aggregate feeds both
+    * scan into O([[DsirBuckets]]) rows (pinned: the aggregate feeds both
     * its own total and the projection — 1024 rows, not a corpus pin).
     */
   def driftBaseProbs(s: SparkSession, dir: String): DataFrame = {
-    val base = featureBucketCounts(s, dir,
+    val base = Reuse(featureBucketCounts(s, dir,
       col("doc_id") % graft.llm.Dedup.IncrementModulus === 0)
       .filter(!col("is_target"))
-      .groupBy(col("bucket")).agg(sum(col("cnt")).as("n_base"))
-      .cache()
+      .groupBy(col("bucket")).agg(sum(col("cnt")).as("n_base")))
     val scal = base.agg(sum(col("n_base")).as("base_tot"))
     base.crossJoin(broadcast(scal))
       .selectExpr("bucket", "n_base",
@@ -1016,12 +998,10 @@ object Curation {
     * already carries). The selection is an ordered limit
     * (TakeOrderedAndProject — per-partition heaps, no global sort).
     */
-  def lmExcess(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
+  def lmExcess(s: SparkSession, dir: String): DataFrame = {
     val (c12r, c1r, vr) = lmModel(s, dir)
     val pool = lmTokens(s, dir).filter(col("source") =!= DsirTargetSource)
-    val pbgPlan = lmBigrams(pool)
-    val pbg = if (cache) pbgPlan.cache() else pbgPlan
+    val pbg = Reuse(lmBigrams(pool))
     val c12s = pbg.groupBy(col("bgh")).agg(count(lit(1)).as("c12s"))
     val c1s = pbg.groupBy(col("lkh")).agg(count(lit(1)).as("c1s"))
     val vs = pool.select(col("lang"), explode(col("toks")).as("w"))

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Reuse
 import graft.Tables.{table => t}
 import TextHash._
 
@@ -23,13 +24,10 @@ import TextHash._
   *    pigeonhole banding (7 chunk equi-joins — exact for distance ≤ 6),
   *    verified with bit_count(xor).
   *
-  * Cache lifecycle: the near-dup operators `.cache()` a small derived table
-  * (shingles / sketches) that both sides of a candidate self-join read —
-  * without it the whole upstream aggregation executes twice. The returned
-  * plans are lazy, so the operator cannot unpersist for you: a long-lived
-  * session should call `spark.catalog.clearCache()` (or unpersist the
-  * specific tables) after consuming each result, as `graft.Bench` and
-  * `graft.Verify` do between queries.
+  * Cache lifecycle: an operator pins every derived table its returned
+  * plan reads more than once (shingles, sketches, band tables, the
+  * corpus-sized substring occurrence table) through [[graft.Reuse]],
+  * which decides how long the pin lives.
   */
 object Dedup {
 
@@ -73,7 +71,7 @@ object Dedup {
     */
   def ngramJaccard(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sh = shingled(s, dir).cache()
+    val sh = Reuse(shingled(s, dir))
     val posts = sh.select(col("doc_id"), col("lang"), col("n_chars"),
       size(col("grams")).as("sz"), explode(col("grams")).as("gram"))
     val gramDf = posts.groupBy(col("gram")).agg(count(lit(1)).as("df"))
@@ -121,11 +119,8 @@ object Dedup {
     * containment is re-verified exactly against the full gram sets on the
     * surviving candidates only (the LSH-then-exact two-stage shape).
     */
-  def containmentPairs(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
-    // cache = false for the view mount (the standing view-mount contract)
-    val shPlan = shingled(s, dir).select(col("doc_id"), col("grams"))
-    val sh = if (cache) shPlan.cache() else shPlan
+  def containmentPairs(s: SparkSession, dir: String): DataFrame = {
+    val sh = Reuse(shingled(s, dir).select(col("doc_id"), col("grams")))
     val post = sh.select(col("doc_id"), explode(col("grams")).as("gram"))
     val dfT = post.groupBy(col("gram")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= ContainMaxDf)
@@ -215,10 +210,10 @@ object Dedup {
     */
   private[graft] def lshVerifiedPairs(shIn: DataFrame,
       threshold: Double): DataFrame = {
-    val sh = shIn.cache()
-    // cache: both sides of the candidate self-join read bands; without the
-    // cache the whole explode+md5+groupBy signature pipeline runs twice
-    val bands = bandTable(signatureTable(sh)).cache()
+    val sh = Reuse(shIn)
+    // pinned: both sides of the candidate self-join read bands; without
+    // the pin the whole explode+md5+groupBy signature pipeline runs twice
+    val bands = Reuse(bandTable(signatureTable(sh)))
     val cand = bands.as("x").join(bands.as("y"),
         col("x.band_idx") === col("y.band_idx") &&
           col("x.key") === col("y.key") &&
@@ -250,12 +245,12 @@ object Dedup {
     * Jaccard divides two ints.
     */
   def minhashEstimate(s: SparkSession, dir: String): DataFrame = {
-    val sh = shingled(s, dir).cache()
-    val sig = signatureTable(sh).cache()
-    // both sides of the candidate self-join read bands — uncached, the
-    // band explode + per-band md5 would run twice (sig's cache only covers
+    val sh = Reuse(shingled(s, dir))
+    val sig = Reuse(signatureTable(sh))
+    // both sides of the candidate self-join read bands — unpinned, the
+    // band explode + per-band md5 would run twice (sig's pin only covers
     // the aggregation below it)
-    val bands = bandTable(sig).cache()
+    val bands = Reuse(bandTable(sig))
     val cand = bands.as("x").join(bands.as("y"),
         col("x.band_idx") === col("y.band_idx") &&
           col("x.key") === col("y.key") &&
@@ -303,8 +298,8 @@ object Dedup {
     * persistence is the deployment story, not a different plan.
     */
   def incrementalDedup(s: SparkSession, dir: String): DataFrame = {
-    val sh = shingled(s, dir).cache()
-    val bands = bandTable(signatureTable(sh)).cache()
+    val sh = Reuse(shingled(s, dir))
+    val bands = Reuse(bandTable(signatureTable(sh)))
     val isDelta = col("doc_id") % IncrementModulus === 0
     val cand = bands.filter(isDelta).as("d")
       .join(bands.filter(!isDelta).as("b"),
@@ -449,9 +444,9 @@ object Dedup {
     * candidate pairs just to feed a hash join is pure waste at scale.
     */
   private[graft] def simhashPairsUnsorted(s: SparkSession, dir: String): DataFrame =
-    // cache: the sketch aggregation is the expensive part; both sides of
+    // pinned: the sketch aggregation is the expensive part; both sides of
     // the band self-join must read it, not recompute it
-    bandedHammingPairs(simhashTable(s, dir).cache(), Simhash32Plan)
+    bandedHammingPairs(Reuse(simhashTable(s, dir)), Simhash32Plan)
 
   /** Max Hamming distance for the 64-bit tier — the standard operating
     * point at the wider fingerprint (4 bands × 16 bits).
@@ -541,11 +536,10 @@ object Dedup {
 
   private[graft] def simhash64PairsUnsortedAt(
       s: SparkSession, dir: String, blocks: Int): DataFrame = {
-    val sk = t(s, dir, "documents")
+    val sk = Reuse(t(s, dir, "documents")
       .select(col("doc_id"), col("lang"),
         graft.functions.Simhash64Sketch(tokens(col("text"))).as("sh"))
-      .filter(col("sh").isNotNull)
-      .cache()
+      .filter(col("sh").isNotNull))
     bandedHammingPairs(sk, BandPlan(64, blocks, Simhash64MaxHamming))
   }
 
@@ -927,7 +921,7 @@ object Dedup {
     * map-side combine (partial count + partial min-struct — a boilerplate
     * gram occurring 10⁶ times costs its reducer one row per upstream
     * partition; min over a struct plans as SortAggregate); the
-    * occurrence table is CACHED for its two consumers (the gram stats and
+    * occurrence table is PINNED for its two consumers (the gram stats and
     * the duplicated-gram attach): the round-13 form re-exploded the
     * corpus for the attach instead, and the second tokenize+md5 pass was
     * the dominant stage (measured at sf1: ranges 8.2 → 4.6 s, stats
@@ -941,7 +935,7 @@ object Dedup {
     */
   private[graft] def substrIslands(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val occ = substrOccurrences(t(s, dir, "documents")).cache()
+    val occ = Reuse(substrOccurrences(t(s, dir, "documents")))
     val dup = occ.groupBy(col("gh"))
       .agg(count(lit(1)).as("cnt"),
         min(struct(col("doc_id"), col("p"))).as("first"))

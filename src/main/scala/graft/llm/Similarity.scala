@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Reuse
 import graft.Tables.{table => t}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
@@ -22,10 +23,9 @@ import graft.Tables.{table => t}
   * decimals is associative, so the result is independent of partitioning and
   * reproducible in any engine — double sums would be order-dependent).
   *
-  * Cache lifecycle: `embedNearDup` caches the bucketed corpus its self-join
-  * reads twice; the returned plan is lazy, so callers with long-lived
-  * sessions should `spark.catalog.clearCache()` after consuming results
-  * (see the note on [[Dedup]]).
+  * Cache lifecycle: a frame the returned plan reads more than once (the
+  * bucketed corpus, centroids, codebooks, cluster membership) is pinned
+  * through [[graft.Reuse]], which decides how long the pin lives.
   */
 object Similarity {
 
@@ -290,8 +290,7 @@ object Similarity {
     * (q_id, doc_id) and one per-query top-k window. vec_id ≡ doc_id in
     * the harness corpus (the [[retrieveRerank]] contract).
     */
-  def rrfFusion(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
+  def rrfFusion(s: SparkSession, dir: String): DataFrame = {
     import TextHash.{shingles3, tokens}
     val c = corpus(s, dir)
     val queries = broadcast(
@@ -313,12 +312,10 @@ object Similarity {
     // (measured 4.4 s → the 20×corpus array_intersect was the bench line).
     // Docs sharing NO gram get no sparse rank (they carry no lexical
     // signal to fuse; the oracle applies the same jw > 0 cut).
-    // cached: the shingled corpus feeds BOTH the broadcast query postings
-    // and the corpus-side explode — uncached, tokenize+shingle runs
-    // twice; cache = false for the view mount (standing contract)
-    val shPlan = t(s, dir, "documents")
-      .select(col("doc_id"), shingles3(tokens(col("text"))).as("grams"))
-    val sh = if (cache) shPlan.cache() else shPlan
+    // pinned: the shingled corpus feeds BOTH the broadcast query postings
+    // and the corpus-side explode — unpinned, tokenize+shingle runs twice
+    val sh = Reuse(t(s, dir, "documents")
+      .select(col("doc_id"), shingles3(tokens(col("text"))).as("grams")))
     val qPost = broadcast(sh.filter(col("doc_id") < NQueries)
       .select(col("doc_id").as("q_id"), size(col("grams")).as("qsz"),
         explode(col("grams")).as("gram")))
@@ -466,7 +463,7 @@ object Similarity {
       when(dot(col("v"), typedLit(w)) >= 0, lit(1L << p)).otherwise(lit(0L))
     }.reduce(_ + _)
     val bucketed =
-      c.select(col("vec_id"), col("v"), col("nv"), bucket.as("bucket")).cache()
+      Reuse(c.select(col("vec_id"), col("v"), col("nv"), bucket.as("bucket")))
     bucketed.as("a").join(bucketed.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
@@ -663,8 +660,8 @@ object Similarity {
     */
   def ivfKmeansTopK(s: SparkSession, dir: String, probes: Int = Probes): DataFrame = {
     val c = corpus(s, dir)
-    // consumed twice (membership + routing); cache per the class cache note
-    val cents = kmeansCentroids(s, dir).cache()
+    // consumed twice (membership + routing); pinned per the class note
+    val cents = Reuse(kmeansCentroids(s, dir))
     val members = assign(c, cents)
     val queries = c.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nv").as("nq"))
@@ -787,15 +784,13 @@ object Similarity {
 
   /** The trained codebooks as a public surface — at deployment these
     * (M·K·sub doubles) are what ships to query nodes; the corpus keeps
-    * only code words. `cache` covers the exploded corpus pqTrain reads
-    * twice (seed + assignment).
+    * only code words. The exploded corpus pqTrain reads twice (seed +
+    * assignment) is pinned.
     */
-  def pqCodebooks(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
+  def pqCodebooks(s: SparkSession, dir: String): DataFrame = {
     val c = t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val sub0 = pqSubvectors(c)
-    pqTrain(if (cache) sub0.cache() else sub0)
+    pqTrain(Reuse(pqSubvectors(c)))
   }
 
   /** Product quantization: per-subspace codebooks seeded from the first
@@ -813,13 +808,11 @@ object Similarity {
     * asymmetric distance tables against the codebooks replace full dot
     * products at query time.
     */
-  def pqQuantize(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
+  def pqQuantize(s: SparkSession, dir: String): DataFrame = {
     val c = t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    // consumed by seed + two assignment passes: cache the exploded form
-    val sub0 = pqSubvectors(c)
-    val sub = if (cache) sub0.cache() else sub0
+    // consumed by seed + two assignment passes: pin the exploded form
+    val sub = Reuse(pqSubvectors(c))
     pqAssign(sub, pqTrain(sub), keepSv = false)
       .groupBy(col("vec_id"))
       // err: the M-way sum of the 9dp-rounded per-subspace distances runs
@@ -858,10 +851,9 @@ object Similarity {
     * Shuffle carries one partial-summed row per (query, vector) — the
     * ADC scan pattern; the table join itself is broadcast.
     */
-  def pqSearch(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
+  def pqSearch(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("q_id")).orderBy(col("adist"), col("vec_id"))
-    pqAdcScores(s, dir, cache)
+    pqAdcScores(s, dir)
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= PqTopK)
       .select(col("q_id"), col("rk").cast("int").as("rk"), col("vec_id"),
@@ -873,16 +865,13 @@ object Similarity {
     * approximate distance from the code words (see [[pqSearch]] for the
     * economics and determinism notes).
     */
-  private def pqAdcScores(s: SparkSession, dir: String,
-      cache: Boolean): DataFrame = {
+  private def pqAdcScores(s: SparkSession, dir: String): DataFrame = {
     val c = t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    // consumed by train + corpus-assign + query side: cache the explode
-    val sub0 = pqSubvectors(c)
-    val sub = if (cache) sub0.cache() else sub0
+    // consumed by train + corpus-assign + query side: pin the explode
+    val sub = Reuse(pqSubvectors(c))
     // codebooks feed the corpus assignment AND the distance tables
-    val books0 = pqTrain(sub)
-    val books = if (cache) books0.cache() else books0
+    val books = Reuse(pqTrain(sub))
     val codes = pqAssign(sub, books, keepSv = false)
       .select(col("vec_id"), col("m"), col("code"))
     val tables = sub.filter(col("vec_id") < NQueries)
@@ -923,10 +912,9 @@ object Similarity {
     * NQueries-row table; the final top-k is one window over
     * O(queries · 20k) rows.
     */
-  def pqSearchRerank(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
+  def pqSearchRerank(s: SparkSession, dir: String): DataFrame = {
     val wa = Window.partitionBy(col("q_id")).orderBy(col("adist"), col("vec_id"))
-    val shortlist = pqAdcScores(s, dir, cache)
+    val shortlist = pqAdcScores(s, dir)
       .withColumn("ark", row_number().over(wa))
       .filter(col("ark") <= PqRerankCandidates)
       .select(col("q_id"), col("vec_id"), col("adist"))
@@ -967,9 +955,8 @@ object Similarity {
     * partial ADC sums; the re-rank is [[pqSearchRerank]]'s streaming
     * corpus join.
     */
-  def ivfPqSearch(s: SparkSession, dir: String, probes: Int = Probes,
-      cache: Boolean = true): DataFrame = {
-    val (cents, books, index) = ivfPqIndex(s, dir, cache)
+  def ivfPqSearch(s: SparkSession, dir: String, probes: Int = Probes): DataFrame = {
+    val (cents, books, index) = ivfPqIndex(s, dir)
     ivfPqProbe(s, dir, cents, books, index, probes)
   }
 
@@ -987,9 +974,8 @@ object Similarity {
     * is the ground-truth price of an eval — at 100 TB the query SAMPLE
     * (NQueries) is the knob, never the corpus side.
     */
-  def annEval(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
-    val ann = ivfPqSearch(s, dir, cache = cache)
+  def annEval(s: SparkSession, dir: String): DataFrame = {
+    val ann = ivfPqSearch(s, dir)
       .select(col("q_id"), col("rk").cast("bigint").as("ann_rk"),
         col("vec_id"))
     val exact = bruteForceTopK(s, dir).filter(col("rk") <= PqTopK)
@@ -1018,23 +1004,19 @@ object Similarity {
     * Spark would sort-merge) never exists. At rest the index would
     * persist bucketed by cid; here cid is simply a column of the frame.
     */
-  def ivfPqIndex(s: SparkSession, dir: String,
-      cache: Boolean = true): (DataFrame, DataFrame, DataFrame) =
-    ivfPqIndexOf(corpus(s, dir), cache)
+  def ivfPqIndex(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
+    ivfPqIndexOf(corpus(s, dir))
 
   /** [[ivfPqIndex]] over an explicit corpus frame (the incremental tier
     * builds its base-trained artifacts through this).
     */
-  private def ivfPqIndexOf(c: DataFrame,
-      cache: Boolean): (DataFrame, DataFrame, DataFrame) = {
-    // consumed twice (membership + routing); cache per the class note
-    val cents = kmeansCentroidsOf(c).cache()
-    val sub0 = pqSubvectors(
+  private def ivfPqIndexOf(c: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    // consumed twice (membership + routing); pinned per the class note
+    val cents = Reuse(kmeansCentroidsOf(c))
+    val sub = Reuse(pqSubvectors(
       assign(c, cents).select(col("vec_id"), col("v"), col("cid")),
-      carry = Seq("cid"))
-    val sub = if (cache) sub0.cache() else sub0
-    val books0 = pqTrain(sub)
-    val books = if (cache) books0.cache() else books0
+      carry = Seq("cid")))
+    val books = Reuse(pqTrain(sub))
     val index = pqAssign(sub, books, keepSv = false, carry = Seq("cid"))
       .select(col("vec_id"), col("cid"), col("m"), col("code"))
     (cents, books, index)
@@ -1063,9 +1045,8 @@ object Similarity {
     * flat. Output: the merged persisted index, one row per vector with
     * its routed cluster and its [[PqM]]-byte code word (csv).
     */
-  def ivfPqIncremental(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
-    val (cents, books, baseIdx) = ivfPqBase(s, dir, cache)
+  def ivfPqIncremental(s: SparkSession, dir: String): DataFrame = {
+    val (cents, books, baseIdx) = ivfPqBase(s, dir)
     ivfPqAppend(s, dir, cents, books, baseIdx)
   }
 
@@ -1073,12 +1054,10 @@ object Similarity {
     * half for the incremental tier): centroids, codebooks, and the code
     * index of the base corpus alone.
     */
-  def ivfPqBase(s: SparkSession, dir: String,
-      cache: Boolean = true): (DataFrame, DataFrame, DataFrame) =
+  def ivfPqBase(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
     ivfPqIndexOf(
       corpus(s, dir)
-        .filter(col("vec_id") % graft.llm.Dedup.IncrementModulus =!= 0),
-      cache)
+        .filter(col("vec_id") % graft.llm.Dedup.IncrementModulus =!= 0))
 
   /** The MAINTENANCE half alone: encode the delta batch against a
     * (possibly frozen) artifact triple and append — O(delta) work, no
@@ -1187,14 +1166,12 @@ object Similarity {
     * [[graft.streaming.StreamOps.semDedupStream]].
     */
   def semDedupIndex(s: SparkSession, dir: String,
-      cache: Boolean = true, k: Option[Int] = None): (DataFrame, DataFrame) = {
+      k: Option[Int] = None): (DataFrame, DataFrame) = {
     val c = corpus(s, dir)
-    val cents0 = kmeansCentroidsOf(c, resolvePairK(c, k), rankSeed = true)
-    val cents = if (cache) cents0.cache() else cents0
+    val cents = Reuse(kmeansCentroidsOf(c, resolvePairK(c, k), rankSeed = true))
     // the static side of a stream-static join re-evaluates per micro-batch:
-    // without the cache every trigger re-runs Lloyd + the assignment scan
-    val asg0 = assign(c, cents)
-    (cents, if (cache) asg0.cache() else asg0)
+    // without the pin every trigger re-runs Lloyd + the assignment scan
+    (cents, Reuse(assign(c, cents)))
   }
 
   /** SemDeDup-style semantic deduplication: cluster the corpus with the
@@ -1292,16 +1269,13 @@ object Similarity {
     * deterministic (rank seeds, 9-dp rounding before every argmax, exact
     * DECIMAL component sums), so the DuckDB oracle replays both levels.
     *
-    * `cache` pins the coarse membership: the fine chain references it
-    * from every Lloyd round, the seed window, the cell sizing and the
-    * final assignment — ~7 subtree occurrences in one lazy plan, each
-    * re-running the coarse Lloyd chain without the pin (measured 2× wall
-    * clock at sf1). `cache = false` for session-lifetime view mounts
-    * (GraftCatalog's pinned-cache contract), which keep the fully lazy
-    * plan and pay the recompute exactly as the flat form did.
+    * The coarse membership is pinned: the fine chain references it from
+    * every Lloyd round, the seed window, the cell sizing and the final
+    * assignment — ~7 subtree occurrences in one lazy plan, each re-running
+    * the coarse Lloyd chain without the pin (measured 2× wall clock at
+    * sf1).
     */
-  private def hierMembers(c: DataFrame, k: Int,
-      cache: Boolean = true): DataFrame = {
+  private def hierMembers(c: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val kc = coarseCount(k)
     // ONE coarse Lloyd round: the coarse level only routes vectors into
@@ -1313,13 +1287,12 @@ object Similarity {
     // — so the coarse Lloyd chain is skipped outright and the membership
     // degenerates to the flat global-rank-seeded form, erasing the
     // two-level stage constant exactly where it was the whole cost
-    val cm0 =
+    val cm = Reuse(
       if (kc == 1)
         c.select(col("vec_id"), col("v"), col("nv"), lit(0).as("ccid"))
       else
         assign(c, kmeansCentroidsOf(c, kc, rankSeed = true, iters = CoarseIters))
-          .withColumnRenamed("cid", "ccid")
-    val cm = if (cache) cm0.cache() else cm0
+          .withColumnRenamed("cid", "ccid"))
     val cells = cm.groupBy(col("ccid"))
       .agg(count(lit(1)).as("cnt"))
       .select(col("ccid"),
@@ -1363,13 +1336,11 @@ object Similarity {
   }
 
   def semDedup(s: SparkSession, dir: String,
-      cache: Boolean = true, k: Option[Int] = None): DataFrame = {
+      k: Option[Int] = None): DataFrame = {
     val c = corpus(s, dir)
     // three consumers (both self-join sides + the verdict projection):
-    // cache the assignment, not the lineage behind it. `cache=false` for
-    // session-lifetime view mounts (GraftCatalog's pinned-cache contract)
-    val members0 = hierMembers(c, resolvePairK(c, k), cache)
-    val members = if (cache) members0.cache() else members0
+    // pin the assignment, not the lineage behind it
+    val members = Reuse(hierMembers(c, resolvePairK(c, k)))
     val dups = clusterPairs(members)
       .filter(col("b_id") < col("vec_id") &&
         col("cos") >= SemDedupThreshold)
@@ -1396,10 +1367,9 @@ object Similarity {
     * row_number-equivalent the oracle uses), never a k×corpus window.
     */
   def hardNegatives(s: SparkSession, dir: String,
-      cache: Boolean = true, k: Option[Int] = None): DataFrame = {
+      k: Option[Int] = None): DataFrame = {
     val c = corpus(s, dir)
-    val members0 = hierMembers(c, resolvePairK(c, k), cache)
-    val members = if (cache) members0.cache() else members0
+    val members = Reuse(hierMembers(c, resolvePairK(c, k)))
     clusterPairs(members)
       .filter(col("cos") < SemDedupThreshold)
       .select(col("vec_id"), col("cid"),
@@ -1439,11 +1409,10 @@ object Similarity {
     * with an O(n) scoring pass instead of the O(n·target) pair scan.
     */
   def prototypePrune(s: SparkSession, dir: String,
-      cache: Boolean = true, k: Option[Int] = None): DataFrame = {
+      k: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val c = corpus(s, dir)
-    val members0 = hierMembers(c, resolvePairK(c, k), cache)
-    val members = if (cache) members0.cache() else members0
+    val members = Reuse(hierMembers(c, resolvePairK(c, k)))
     val cents = members
       .select(col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
       .groupBy(col("cid"), col("pos"))
@@ -1491,10 +1460,10 @@ object Similarity {
     * the corpus skews.
     */
   def diversitySample(s: SparkSession, dir: String,
-      cache: Boolean = true, k: Option[Int] = None): DataFrame = {
+      k: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val c = corpus(s, dir)
-    val members = hierMembers(c, resolvePairK(c, k), cache)
+    val members = hierMembers(c, resolvePairK(c, k))
     val w = Window.partitionBy(col("cid"))
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
     members

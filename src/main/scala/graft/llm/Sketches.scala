@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Reuse
 import graft.Tables.{table => t}
 import graft.functions.{CmsSketch, HllRegisters, KMinValues}
 import org.apache.spark.sql.catalyst.expressions.ShiftLeft
@@ -345,15 +346,12 @@ object Sketches {
     * one-sided error (`overcount >= 0`) — it is the column you delete at
     * 100 TB, and with it the second token aggregation.
     */
-  def cmsTopK(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
+  def cmsTopK(s: SparkSession, dir: String): DataFrame = {
     // two consumers of the exploded token frame (the CMS sketch aggregate
-    // + the exact vocab counts) — cached per the module's single-scan
-    // discipline; cache = false for long-lived mounts (the GraftCatalog
-    // view contract)
-    val toksPlan = t(s, dir, "documents")
-      .select(explode(tokens(col("text"))).as("term"))
-    val toks = if (cache) toksPlan.cache() else toksPlan
+    // + the exact vocab counts) — pinned per the module's single-scan
+    // discipline
+    val toks = Reuse(t(s, dir, "documents")
+      .select(explode(tokens(col("text"))).as("term")))
     val sk = broadcast(
       toks.agg(CmsSketch(cmsBuckets(col("term")), CmsD, CmsW).as("cms")))
     val vocab = toks

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Reuse
 import graft.Tables.{table => t}
 import TextHash._
 
@@ -247,22 +248,16 @@ object TextAnalysis {
     * aggregation into the cached tf table, from which df derives (tf holds
     * exactly one row per (doc, term), so df = count per term) — the scan
     * and explode run once, and the df table joins per-term, never
-    * per-document. Cache lifecycle as on [[Dedup]]: callers clearCache
-    * after consuming.
+    * per-document. The tf table is pinned through [[graft.Reuse]].
     */
-  def tfidfTopTerms(s: SparkSession, dir: String,
-      cacheTf: Boolean = true): DataFrame = {
+  def tfidfTopTerms(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = t(s, dir, "documents")
     val nDocs = broadcast(docs.agg(countDistinct(col("doc_id")).as("n")))
-    val tfPlan = docs
+    val tf = Reuse(docs
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
       .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-    // cacheTf = false for long-lived mounts (GraftCatalog views): a cached
-    // tf pinned inside a session-lifetime view would never be unpersisted;
-    // the view then recomputes tf per consumer instead of holding memory
-    val tf = if (cacheTf) tfPlan.cache() else tfPlan
+      .agg(count(lit(1)).as("tf")))
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("score").desc, col("term"))
@@ -348,8 +343,7 @@ object TextAnalysis {
       .orderBy("query_id", "rk")
   }
 
-  def bm25TopDocs(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
+  def bm25TopDocs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = t(s, dir, "documents")
     val toks = tokens(col("text"))
@@ -361,15 +355,13 @@ object TextAnalysis {
     val qterms = broadcast(
       Bm25Queries.flatMap { case (q, ts) => ts.map(t => (q, t)) }
         .toDF("query_id", "term"))
-    val tfPlan = docs
+    // two consumers (df derivation + the score join)
+    val tf = Reuse(docs
       .select(col("doc_id"), size(toks).cast("bigint").as("dl"),
         explode(toks).as("term"))
       .join(broadcast(qterms.select("term").distinct()), Seq("term"))
       .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-    // two consumers (df derivation + the score join); cache = false for
-    // long-lived mounts (the GraftCatalog view contract, as on cacheTf)
-    val tf = if (cache) tfPlan.cache() else tfPlan
+      .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl")))
     val dfT = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     bm25Collapse(
       tf.join(broadcast(dfT), Seq("term"))
@@ -732,8 +724,8 @@ object TextAnalysis {
       exact: Boolean): DataFrame = {
     // both passes read the scored frame (percentile aggregate + verdict
     // projection) — uncached, the tokenize + per-token md5 scoring scan
-    // would run twice; lifecycle per the Dedup module's cache contract
-    val sc = modelScored(s, dir).cache()
+    // would run twice
+    val sc = Reuse(modelScored(s, dir))
     val cutoff =
       if (exact) round(percentile(col("raw_score"), lit(CutPercentile)), 4)
       else approx_percentile(col("raw_score"), lit(CutPercentile),
@@ -808,10 +800,8 @@ object TextAnalysis {
     * this step on the vocabulary table without ever rescanning the
     * corpus.
     */
-  def bpeMergeStep(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
-    val v0 = vocabTable(s, dir)
-    val vocab = if (cache) v0.cache() else v0
+  def bpeMergeStep(s: SparkSession, dir: String): DataFrame = {
+    val vocab = Reuse(vocabTable(s, dir))
     val top = broadcast(pairWeights(vocab).limit(1).select(col("pair")))
     vocab.crossJoin(top)
       .select(col("term"), col("freq"), col("pair"),
@@ -869,10 +859,9 @@ object TextAnalysis {
     * [[graft.ops.GraphOps]]'s fixpoints (one bounded shuffle per round,
     * K rounds).
     */
-  def bpeTrain(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
+  def bpeTrain(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    trainAndFreeze(s, dir, cache)
+    trainAndFreeze(s, dir)
       .toDF("round", "pair", "weight")
       .orderBy("round")
   }
@@ -894,13 +883,13 @@ object TextAnalysis {
     * and the plain-Scala replay (all inherit the same non-overlapping
     * scan). Each round's segmentation is cached and the previous round's
     * cache unpersists as soon as the next materializes, so O(1)
-    * vocabulary copies are live regardless of K.
+    * vocabulary copies are live regardless of K; the last one unpersists
+    * when the loop ends.
     */
-  private def trainedRules(vocabFrame: DataFrame,
-      cache: Boolean): Seq[(Int, String, Long)] = {
+  private def trainedRules(vocabFrame: DataFrame): Seq[(Int, String, Long)] = {
     var vocab = vocabFrame
       .select(col("freq"), symString(col("term")).as("ss"))
-    (1 to BpeTrainK).map { r =>
+    val rules = (1 to BpeTrainK).map { r =>
       val top = vocab
         .select(explode(symPairs(col("ss"))).as("pair"), col("freq"))
         .groupBy(col("pair")).agg(sum(col("freq")).as("weight"))
@@ -912,14 +901,14 @@ object TextAnalysis {
         val next = vocab.select(col("freq"),
           replace(col("ss"), lit(s" $pair "),
             lit(" " + pair.replace(" ", "") + " ")).as("ss"))
-        vocab = if (cache) next.cache() else next
-        if (cache) {
-          vocab.count() // materialize before dropping the parent
-          if (r > 1) prev.unpersist() // round 1 reads the shared vocabFrame
-        }
+        vocab = next.cache()
+        vocab.count() // materialize before dropping the parent
+        if (r > 1) prev.unpersist() // round 1 reads the shared vocabFrame
       }
       (r, pair, weight)
     }
+    vocab.unpersist()
+    rules
   }
 
   /** The FROZEN rule table — BPE training as a train-once / probe-many
@@ -994,8 +983,8 @@ object TextAnalysis {
   private def corpusDigest(dir: String): String = {
     val root = new java.io.File(dir, "documents.parquet")
     val stamp = shallowStamp(root)
-    val cached = digestMemo.get(dir)
-    if (cached != null && cached._1 == stamp) return cached._2
+    val memo = digestMemo.get(dir)
+    if (memo != null && memo._1 == stamp) return memo._2
     digestWalks.incrementAndGet()
     val entries = scala.collection.mutable.ArrayBuffer.empty[String]
     def walk(f: java.io.File, rel: String): Unit =
@@ -1041,19 +1030,16 @@ object TextAnalysis {
   }
 
   /** One training run over the `dir` corpus's vocabulary. */
-  private def train(s: SparkSession, dir: String,
-      cache: Boolean): Seq[(Int, String, Long)] = {
-    val v0 = vocabTable(s, dir)
-    val vocab = if (cache) v0.cache() else v0
-    val rules = trainedRules(vocab, cache)
-    if (cache) vocab.unpersist() // training consumed it; probes re-derive
+  private def train(s: SparkSession, dir: String): Seq[(Int, String, Long)] = {
+    val vocab = vocabTable(s, dir).cache()
+    val rules = trainedRules(vocab)
+    vocab.unpersist() // training consumed it; probes re-derive
     rules
   }
 
   /** Run the training loop and (re)freeze its rule table for `dir`. */
-  private def trainAndFreeze(s: SparkSession, dir: String,
-      cache: Boolean): Seq[(Int, String, Long)] = {
-    val rules = train(s, dir, cache)
+  private def trainAndFreeze(s: SparkSession, dir: String): Seq[(Int, String, Long)] = {
+    val rules = train(s, dir)
     val key = ruleKey(dir)
     ruleStore.put(key, rules)
     evictStale(key)
@@ -1067,13 +1053,12 @@ object TextAnalysis {
     * able to evict a concurrently-frozen fresh entry (which would force
     * a redundant retrain — no wrong results, just churn).
     */
-  def frozenRules(s: SparkSession, dir: String,
-      cache: Boolean = true): Seq[(Int, String, Long)] = {
+  def frozenRules(s: SparkSession, dir: String): Seq[(Int, String, Long)] = {
     val key = ruleKey(dir)
     var trained = false
     val rules = ruleStore.computeIfAbsent(key, _ => {
       trained = true
-      train(s, dir, cache)
+      train(s, dir)
     })
     if (trained) evictStale(key)
     rules
@@ -1096,9 +1081,8 @@ object TextAnalysis {
     * higher-order-function state. Per-term work is a row-local K-step
     * string fold.
     */
-  def bpeEncode(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame =
-    encodedVocab(s, dir, cache)
+  def bpeEncode(s: SparkSession, dir: String): DataFrame =
+    encodedVocab(s, dir)
       .orderBy(col("freq").desc, col("term"))
       .limit(VocabTopN)
 
@@ -1109,14 +1093,13 @@ object TextAnalysis {
     * [[graft.streaming.StreamOps.bpeTokenizeStream]] probes it
     * stream-static.
     */
-  def encodedVocab(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
+  def encodedVocab(s: SparkSession, dir: String): DataFrame = {
     // the K learned rules come from the FROZEN store (train-once /
     // probe-many — [[frozenRules]]); resolve them BEFORE building the
     // vocab projection so a cold store's training pass does not
     // interleave with this plan's cache.
-    val rules = frozenRules(s, dir, cache)
-    encodedVocabFrom(s, dir, rules.map(_._2), cache)
+    val rules = frozenRules(s, dir)
+    encodedVocabFrom(s, dir, rules.map(_._2))
   }
 
   /** [[encodedVocab]] from an EXPLICIT rule list (pair strings in learned
@@ -1126,14 +1109,9 @@ object TextAnalysis {
     * into one static K-step replace chain — a plain codegen'd projection,
     * no join, no higher-order-function state.
     */
-  def encodedVocabFrom(s: SparkSession, dir: String, pairs: Seq[String],
-      cache: Boolean = true): DataFrame = {
-    // NO cache here: since training moved behind [[frozenRules]] (its own
-    // cached scan), this projection reads the vocabulary exactly once —
-    // a cache would be pure materialization overhead pinned until
-    // clearCache. The `cache` param is retained for call-site symmetry
-    // with the rest of the module; nothing in this plan re-reads.
-    val _ = cache
+  def encodedVocabFrom(s: SparkSession, dir: String, pairs: Seq[String]): DataFrame = {
+    // NO pin here: this projection reads the vocabulary exactly once
+    // (training, behind [[frozenRules]], caches its own scan)
     val vocab = vocabTable(s, dir)
     val encoded = pairs
       .foldLeft(symString(col("term"))) { case (acc, pair) =>
@@ -1160,11 +1138,10 @@ object TextAnalysis {
     * partials; tokenization cost is paid once on the vocabulary (which
     * saturates), never re-paid per corpus row.
     */
-  def bpeTokenizeCorpus(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame =
+  def bpeTokenizeCorpus(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "documents")
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-      .join(broadcast(encodedVocab(s, dir, cache)
+      .join(broadcast(encodedVocab(s, dir)
         .select(col("term"), col("n_syms"))), Seq("term"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"),
@@ -1185,11 +1162,10 @@ object TextAnalysis {
     * artifact, not a corpus-sized one), collapsed to O(langs) rows with
     * map-side partials.
     */
-  def bpeFertility(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame =
+  def bpeFertility(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "documents")
       .select(col("lang"), explode(tokens(col("text"))).as("term"))
-      .join(broadcast(encodedVocab(s, dir, cache)
+      .join(broadcast(encodedVocab(s, dir)
         .select(col("term"), col("n_syms"))), Seq("term"))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_words"),
@@ -1403,12 +1379,10 @@ object TextAnalysis {
     * with a term-keyed shuffle join), and the corpus text is scanned once
     * into the shared [[postingsOf]] aggregation.
     */
-  def docNeighbors(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
+  def docNeighbors(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     val nDocs = broadcast(docs.agg(count(lit(1)).as("n_docs")))
-    val postPlan = postingsOf(docs)
-    val post = if (cache) postPlan.cache() else postPlan
+    val post = Reuse(postingsOf(docs))
     // scale-aware rare band (the 1-row scalar rides the standard
     // crossJoin attach; df table is O(vocab), the greatest() cut is free)
     val dfT = post.groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -1446,16 +1420,13 @@ object TextAnalysis {
       .limit(NeighborTopK)
   }
 
-  def bm25Index(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
+  def bm25Index(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     val toks = tokens(col("text"))
     val scal = broadcast(docs.select(size(toks).cast("bigint").as("dl0"))
       .agg(count(lit(1)).as("n_docs"), sum(col("dl0")).as("sum_dl")))
-    val postPlan = postingsOf(docs)
-    // two consumers (df derivation + the final projection); cache = false
-    // for long-lived mounts (the GraftCatalog view contract)
-    val post = if (cache) postPlan.cache() else postPlan
+    // two consumers (df derivation + the final projection)
+    val post = Reuse(postingsOf(docs))
     val dfT = post.groupBy(col("term")).agg(count(lit(1)).as("df"))
     post.join(broadcast(dfT), Seq("term"))
       .crossJoin(scal)
@@ -1466,9 +1437,8 @@ object TextAnalysis {
   /** [[bm25Index]] declared: the full posting table in (term, doc_id)
     * order — what a user materializes before serving retrieval traffic.
     */
-  def invertedIndex(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame =
-    bm25Index(s, dir, cache).orderBy("term", "doc_id")
+  def invertedIndex(s: SparkSession, dir: String): DataFrame =
+    bm25Index(s, dir).orderBy("term", "doc_id")
 
   /** Incremental maintenance of the inverted index — the IVM tier
     * ([[graft.ops.IncrementalOps]]) applied to the retrieval artifact:
@@ -1486,10 +1456,9 @@ object TextAnalysis {
     * [[Dedup.IncrementModulus]]-th doc_id, the library's standing
     * new-batch convention.
     */
-  def ivmIndex(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
-    val (basePost, baseScal) = ivmBase(s, dir, cache)
-    ivmMerge(s, dir, basePost, baseScal, cache)
+  def ivmIndex(s: SparkSession, dir: String): DataFrame = {
+    val (basePost, baseScal) = ivmBase(s, dir)
+    ivmMerge(s, dir, basePost, baseScal)
   }
 
   /** Per-side (n_docs, Σdl) scalars of one document predicate. */
@@ -1504,12 +1473,10 @@ object TextAnalysis {
     * `(n, s)` scalars — what a deployment keeps on disk between batches
     * (the bench's build/probe split freezes exactly these two frames).
     */
-  def ivmBase(s: SparkSession, dir: String,
-      cache: Boolean = true): (DataFrame, DataFrame) = {
+  def ivmBase(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val docs = t(s, dir, "documents")
     val isBase = col("doc_id") % Dedup.IncrementModulus =!= 0
-    val p = postingsOf(docs.filter(isBase))
-    (if (cache) p.cache() else p, dlOf(docs, isBase))
+    (Reuse(postingsOf(docs.filter(isBase))), dlOf(docs, isBase))
   }
 
   /** The MAINTENANCE half alone: merge a (possibly frozen) base artifact
@@ -1518,11 +1485,10 @@ object TextAnalysis {
     * rescanned (only its posting artifact is re-aggregated, O(postings)).
     */
   def ivmMerge(s: SparkSession, dir: String, basePost: DataFrame,
-      baseScal: DataFrame, cache: Boolean = true): DataFrame = {
+      baseScal: DataFrame): DataFrame = {
     val docs = t(s, dir, "documents")
     val isDelta = col("doc_id") % Dedup.IncrementModulus === 0
-    val dPlan = postingsOf(docs.filter(isDelta))
-    val delta = if (cache) dPlan.cache() else dPlan
+    val delta = Reuse(postingsOf(docs.filter(isDelta)))
     val dfMerged = basePost.groupBy(col("term")).agg(count(lit(1)).as("df_b"))
       .join(delta.groupBy(col("term")).agg(count(lit(1)).as("df_d")),
         Seq("term"), "full_outer")
@@ -1553,9 +1519,8 @@ object TextAnalysis {
     * viable at 100 TB: [[bm25TopDocs]] pays two corpus scans per query
     * workload, this pays zero.
     */
-  def bm25Indexed(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame =
-    bm25Probe(s, bm25Index(s, dir, cache))
+  def bm25Indexed(s: SparkSession, dir: String): DataFrame =
+    bm25Probe(s, bm25Index(s, dir))
 
   /** The PROBE half alone, over any prebuilt [[bm25Index]]-shaped frame —
     * what a serving tier runs against the PERSISTED index (the bench's
@@ -1605,16 +1570,14 @@ object TextAnalysis {
     * TakeOrderedAndProject (per-partition heaps), never a global sort of
     * the bigram vocabulary.
     */
-  def collocations(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
+  def collocations(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     val toks = tokens(col("text"))
-    val ucntPlan = docs.select(explode(toks).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("c"))
     // two consumers (the T scalar + the two broadcast joins); O(vocab)
-    // cached — deriving T from the unigram table keeps the corpus at two
+    // pinned — deriving T from the unigram table keeps the corpus at two
     // scans total (bigram explode + unigram count), not three
-    val ucnt = if (cache) ucntPlan.cache() else ucntPlan
+    val ucnt = Reuse(docs.select(explode(toks).as("w"))
+      .groupBy(col("w")).agg(count(lit(1)).as("c")))
     val tot = broadcast(ucnt.agg(sum(col("c")).as("t")))
     docs.select(explode(bigramPairs(toks)).as("p"))
       .select(col("p.a").as("a"), col("p.b").as("b"))
@@ -1649,15 +1612,13 @@ object TextAnalysis {
     * two tokens surface with zero bigrams via the left join, not silently
     * dropped.
     */
-  def bigramCommonness(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
+  def bigramCommonness(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val dbcPlan = docs
+    // two consumers (corpus re-agg + the score join)
+    val dbc = Reuse(docs
       .select(col("doc_id"), explode(bigramPairs(tokens(col("text")))).as("p"))
       .groupBy(col("doc_id"), col("p.a").as("a"), col("p.b").as("b"))
-      .agg(count(lit(1)).as("dcnt"))
-    // two consumers (corpus re-agg + the score join)
-    val dbc = if (cache) dbcPlan.cache() else dbcPlan
+      .agg(count(lit(1)).as("dcnt")))
     val cc = dbc.groupBy(col("a"), col("b"))
       .agg(sum(col("dcnt")).as("cooc"))
     val per = dbc.join(cc, Seq("a", "b"))

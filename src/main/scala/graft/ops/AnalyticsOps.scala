@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.Reuse
 import graft.llm.TextHash
 
 /** Warehouse-analytics operators beyond the reference's own surface
@@ -444,15 +445,12 @@ object AnalyticsOps {
     * broadcast back over the surviving pairs, and the final top-K by
     * (lift DESC) planning as TakeOrderedAndProject.
     */
-  def basketRules(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
-    // cache: the distinct basket table feeds the order count, the item
-    // counts, AND the pair join; cache = false for the view mount (a
-    // cache pinned inside a session-lifetime view is never unpersisted)
-    val liPlan = t(s, dir, "lineitem")
+  def basketRules(s: SparkSession, dir: String): DataFrame = {
+    // pinned: the distinct basket table feeds the order count, the item
+    // counts, AND the pair join
+    val li = Reuse(t(s, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      .distinct()
-    val li = if (cache) liPlan.cache() else liPlan
+      .distinct())
     val n = broadcast(li.select(col("ok")).distinct()
       .agg(count(lit(1)).as("n_orders")))
     val itemCnt = li.groupBy(col("pk")).agg(count(lit(1)).as("cnt"))

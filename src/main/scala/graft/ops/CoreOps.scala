@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Reuse, Tables}
 
 /** Core relational operators from SURVEY.md §2.1-2.7, declared as
   * set-oriented DataFrame plans over the harness star schema
@@ -455,14 +455,11 @@ object CoreOps {
     * holds unequal weekday counts — the reason a calendar dimension
     * exists). Rate in integer thousandths (`n·1000 div days`).
     */
-  def seasonality(s: SparkSession, dir: String,
-      cache: Boolean = true): DataFrame = {
+  def seasonality(s: SparkSession, dir: String): DataFrame = {
     import graft.Tables.{table => t}
-    // cached: the spine feeds BOTH the per-dow day counts and the order
-    // join — uncached, the bounds aggregate + sequence explode run twice;
-    // cache = false for the view mount (standing contract)
-    val spinePlan = calSpine(s, dir).select(col("day"), col("dow"))
-    val spine = if (cache) spinePlan.cache() else spinePlan
+    // pinned: the spine feeds BOTH the per-dow day counts and the order
+    // join — unpinned, the bounds aggregate + sequence explode run twice
+    val spine = Reuse(calSpine(s, dir).select(col("day"), col("dow")))
     val days = spine.groupBy(col("dow")).agg(count(lit(1)).as("n_days"))
     val ords = t(s, dir, "orders")
       .select(date_format(col("o_orderdate").cast("date"), "yyyy-MM-dd")

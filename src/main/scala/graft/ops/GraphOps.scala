@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.SyncPipeline
+import graft.{Reuse, SyncPipeline}
 import graft.Tables.{table => t}
 
 /** Graph analytics over the membership graph ([[SyncPipeline.memberEdges]]:
@@ -139,14 +139,13 @@ object GraphOps {
     val rk = deg.select(col("v"), (col("deg") * TriRankStride + col("v")).as("rk"))
     // three consumers (both wedge sides + the closing semi-join): cache the
     // O(edges) oriented list so the pair aggregation + degree join run once
-    val oriented = edges
+    val oriented = Reuse(edges
       .join(rk.select(col("v").as("pa"), col("rk").as("rka")), "pa")
       .join(rk.select(col("v").as("pb"), col("rk").as("rkb")), "pb")
       .select(
         when(col("rka") < col("rkb"), col("pa")).otherwise(col("pb")).as("src"),
         when(col("rka") < col("rkb"), col("pb")).otherwise(col("pa")).as("dst"),
-        greatest(col("rka"), col("rkb")).as("dstk"))
-      .cache()
+        greatest(col("rka"), col("rkb")).as("dstk")))
     val wedges = oriented.as("e1")
       .join(oriented.as("e2"),
         col("e1.src") === col("e2.src") && col("e1.dstk") < col("e2.dstk"))
@@ -243,8 +242,7 @@ object GraphOps {
     out
   }
 
-  def pageRank(s: SparkSession, dir: String, iters: Int = PrIters,
-      cache: Boolean = true): DataFrame = {
+  def pageRank(s: SparkSession, dir: String, iters: Int = PrIters): DataFrame = {
     val m = SyncPipeline.memberEdgesUnsorted(s, dir)
       .select(concat(lit("u:"), col("owner_name")).as("u"),
         concat(lit("g:"), col("org_name")).as("g"))
@@ -252,11 +250,9 @@ object GraphOps {
     // directions can never collide, so the symmetric form stays dup-free
     val edges = bothDirections(m, "u", "g")
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val edgesDeg0 = edges.join(deg, "src")
-    val edgesDeg = if (cache) edgesDeg0.cache() else edgesDeg0
+    val edgesDeg = Reuse(edges.join(deg, "src"))
     val nTotal = broadcast(deg.agg(count(lit(1)).as("n")))
-    val nodes0 = deg.select(col("src").as("node")).crossJoin(nTotal)
-    val nodes = if (cache) nodes0.cache() else nodes0
+    val nodes = Reuse(deg.select(col("src").as("node")).crossJoin(nTotal))
 
     var pr = nodes.select(col("node"), expr(s"$PrScale div n").as("pr"))
     for (i <- 1 to iters) {
@@ -437,10 +433,9 @@ object GraphOps {
     val sym = bothDirections(base, "pa", "pb").toDF("node", "nbr")
     val keep = sym.groupBy(col("node")).agg(count(lit(1)).as("deg"))
       .filter(col("deg") <= SimMaxDeg).select(col("node"))
-    val se = sym
+    val se = Reuse(sym
       .join(keep, Seq("node"), "left_semi")
-      .join(keep.withColumnRenamed("node", "nbr"), Seq("nbr"), "left_semi")
-      .cache()
+      .join(keep.withColumnRenamed("node", "nbr"), Seq("nbr"), "left_semi"))
     val sdeg = se.groupBy(col("node")).agg(count(lit(1)).as("deg"))
     val inter = se.as("l")
       .join(se.as("r"),

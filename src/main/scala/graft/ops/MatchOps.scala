@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Reuse
 
 /** Entity-resolution matching — fuzzy string joins with blocking
   * (SURVEY.md "beyond" tier). The reference reconciles records by exact
@@ -98,9 +99,8 @@ object MatchOps {
     * aggregate and is never touched again.
     */
   def entityResolve(s: SparkSession, dir: String): DataFrame = {
-    val names = t(s, dir, "part")
-      .groupBy(col("p_name")).agg(min(col("p_partkey")).as("nid"))
-      .cache()
+    val names = Reuse(t(s, dir, "part")
+      .groupBy(col("p_name")).agg(min(col("p_partkey")).as("nid")))
     val edges = candidatePairs(names.select(col("p_name")))
       .filter(levenshtein(col("name_a"), col("name_b")) <= MaxEditDistance)
       .join(names.select(col("p_name").as("name_a"), col("nid").as("a_id")),

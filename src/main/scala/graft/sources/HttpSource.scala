@@ -11,8 +11,8 @@ import java.time.Duration
   * system's rows before importing them (`/root/reference/odgovlt.py:355-367`
   * reads the legacy DB; a CKAN-side harvester does the same through the
   * paginated search API). Endpoint shape: GET
-  * `{baseUrl}/{action}?offset=N&limit=M` returning
-  * `{"count": total, "<rowsField>": [ {...}, ... ]}` — the CKAN
+  * `{baseUrl}/package_search?offset=N&limit=M` returning
+  * `{"count": total, "results": [ {...}, ... ]}` — the CKAN
   * `package_search` convention.
   *
   * Execution shape: ONE driver-side probe (offset 0, limit 1) discovers
@@ -33,9 +33,6 @@ import java.time.Duration
   */
 final case class HttpSource(
     baseUrl: String,
-    action: String = "package_search",
-    rowsField: String = "results",
-    countField: String = "count",
     pageSize: Int = 100,
     maxRetries: Int = 3,
     retryBaseMs: Long = 50L,
@@ -45,16 +42,15 @@ final case class HttpSource(
 
   /** The remote row set as a DataFrame with an inferred schema. */
   def load(spark: SparkSession): DataFrame = {
-    val (base, act, rf, cf, psz, retries, backoff, timeout) =
-      (baseUrl, action, rowsField, countField, pageSize, maxRetries,
-        retryBaseMs, timeoutMs)
+    val (base, psz, retries, backoff, timeout) =
+      (baseUrl, pageSize, maxRetries, retryBaseMs, timeoutMs)
     // driver-side probe: one bounded request for the total
     val probeClient = HttpClient.newBuilder()
       .connectTimeout(Duration.ofMillis(timeout)).build()
-    val probe = get(probeClient, base, act, 0, 1, retries, backoff, timeout)
+    val probe = get(probeClient, base, 0, 1, retries, backoff, timeout)
     import spark.implicits._
     val total = spark.read.json(Seq(probe).toDS)
-      .select(col(cf).cast("long")).head().getLong(0)
+      .select(col("count").cast("long")).head().getLong(0)
     // an empty remote is a legitimate harvest result, not an error — but
     // its schema is unknowable (no record to infer from), so the honest
     // answer is an empty zero-column frame rather than a star-expansion
@@ -67,8 +63,8 @@ final case class HttpSource(
       .mapPartitions { pages =>
         val client = HttpClient.newBuilder()
           .connectTimeout(Duration.ofMillis(timeout)).build()
-        pages.map(p => get(client, base, act, p * psz, psz, retries,
-          backoff, timeout))
+        pages.map(p => get(client, base, p * psz, psz, retries, backoff,
+          timeout))
       }
       // cached: read.json's schema-inference pass is an action of its own
       // — uncached, every page would be FETCHED twice (inference + read).
@@ -82,7 +78,7 @@ final case class HttpSource(
     // evict every caller's frames — and (b) the returned frame is
     // self-contained: later actions never re-fetch pages
     val rows = spark.read.json(bodies)
-      .select(explode(col(rf)).as("__r"))
+      .select(explode(col("results")).as("__r"))
       .select(col("__r.*"))
       .localCheckpoint(true)
     bodies.unpersist()
@@ -93,7 +89,7 @@ final case class HttpSource(
     val got = rows.count()
     if (got != total)
       throw new IllegalStateException(
-        s"HttpSource $base/$act: probed count=$total but fetched $got rows " +
+        s"HttpSource $base: probed count=$total but fetched $got rows " +
           "— remote changed between probe and page fetches; re-run the pull")
     rows
   }
@@ -105,10 +101,10 @@ object HttpSource {
     * throws (a 4xx on a page read is a contract violation, not a semantic
     * answer).
     */
-  private def get(client: HttpClient, baseUrl: String,
-      action: String, offset: Long, limit: Int, maxRetries: Int,
-      retryBaseMs: Long, timeoutMs: Long): String = {
-    val what = s"$action?offset=$offset"
+  private def get(client: HttpClient, baseUrl: String, offset: Long,
+      limit: Int, maxRetries: Int, retryBaseMs: Long,
+      timeoutMs: Long): String = {
+    val what = s"package_search?offset=$offset"
     val req = HttpRequest
       .newBuilder(URI.create(s"$baseUrl/$what&limit=$limit"))
       .timeout(Duration.ofMillis(timeoutMs))

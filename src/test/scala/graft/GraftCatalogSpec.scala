@@ -15,7 +15,9 @@ class GraftCatalogSpec extends AnyFunSuite {
     .getOrCreate()
 
   test("registered views and functions answer SQL end to end") {
+    spark.catalog.clearCache()
     GraftCatalog.register(spark, "/root/testdata/sf0.001")
+    assert(spark.sharedState.cacheManager.isEmpty) // the views pin nothing
     val joined = spark.sql("""
       SELECT p.o_orderkey, p.owner_name, t.root_name,
              slug_truncate(p.name_slug, 20) AS short_slug

@@ -172,16 +172,17 @@ class HttpSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       val sink = HttpSink(ckan.url, entity = "package",
         idField = "o_orderkey", maxRetries = 2, retryBaseMs = 1L)
-      val r = SyncJob.push(spark, dir, staging, sink)
-      // expected end state: create ∪ update keys present (target starts
-      // empty: updates fall back to create, deletes 404 → no-op)
+      import spark.implicits._
       import org.apache.spark.sql.functions.col
-      val upserts = r.actions.filter(col("action").isin("create", "update"))
-        .select("key").collect().map(_.get(0).toString).toSet
-      val deletes = r.actions.filter(col("action") === "delete").count()
-      assert(upserts.nonEmpty && deletes > 0, "fixture must exercise all sets")
-      assert(ckan.store.keySet().size === upserts.size)
-      assert(upserts.forall(ckan.store.containsKey))
+      // the target starts empty: every published package is a create
+      val cold = Seq.empty[(Long, String)].toDF("o_orderkey", "extras_kodas")
+      val r = SyncJob.push(spark, dir, staging, cold, sink)
+      val published = Tables.table(spark, dir, "orders")
+        .filter(col("o_orderstatus") === "F")
+        .select("o_orderkey").collect().map(_.getLong(0).toString).toSet
+      assert(published.nonEmpty)
+      assert(r.actions.filter(col("action") =!= "create").isEmpty)
+      assert(ckan.store.keySet().asScala == published)
       // payload is the assembled package, not just the key
       assert(ckan.store.values().iterator().next().contains("name_slug"))
     } finally ckan.stop()

@@ -112,6 +112,21 @@ class NearestSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(winner == 0, s"tie must break to the smallest cid, got $winner")
   }
 
+  test("an array<float> centroid or codebook fails analysis") {
+    import graft.functions.{NearestCentroid, NearestCode}
+    val v = typedLit(Seq(1.0, 0.0))
+    val cents = array(struct(lit(0).as("cid"),
+      typedLit(Seq(1.0f, 0.0f)).as("centroid"), lit(1.0).as("cnorm")))
+    val books = array(struct(lit(0).as("code"),
+      typedLit(Seq(1.0f, 0.0f)).as("cb")))
+    Seq(NearestCentroid(v, lit(1.0), cents) -> "nearest_centroid requires",
+        NearestCode(v, books) -> "nearest_code requires").foreach { case (e, msg) =>
+      val err = intercept[org.apache.spark.sql.AnalysisException](
+        spark.range(1).select(e))
+      assert(err.getMessage.contains(msg), err.getMessage)
+    }
+  }
+
   test("round9 matches Spark's round(col, 9) on doubles") {
     import spark.implicits._
     val xs = Seq(0.1234567895, -0.1234567885, 1.0 / 3.0, -1.0 / 3.0,

@@ -176,7 +176,9 @@ class SkewAndStagingSpec extends AnyFunSuite {
 
   test("SyncJob end-to-end: staged assembly equals direct assembly on published rows") {
     val staging = java.nio.file.Files.createTempDirectory("graft-syncjob").toString
-    val result = SyncJob.run(spark, sf, staging)
+    import spark.implicits._
+    val cold = Seq.empty[(Long, String)].toDF("o_orderkey", "extras_kodas")
+    val result = SyncJob.run(spark, sf, staging, cold)
     val viaJob = result.packages.select("o_orderkey", "name_slug", "owner_name")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).sorted
     val direct = SyncPipeline.packageFlat(spark, sf)
