@@ -5,12 +5,12 @@ import org.apache.spark.sql.functions._
 
 /** End-to-end `SyncJob.run` at scale under MULTI-JVM executors, with a
   * REAL executor loss injected mid-job (r12 ask #4): the composed
-  * gather → staging → import → assemble → merge path runs twice on the
-  * same directory —
+  * gather → staging → import → assemble → classify path runs twice on the
+  * same directory, against an empty target —
   *
   *   1. QUIET: local-cluster[4,8,2048], no interference — records
   *      per-stage wall times and an order-insensitive digest of the
-  *      merge-action set (+ package/error counts);
+  *      action set (+ package/error counts);
   *   2. KILL: same config, and at ~40% of the quiet run's wall a
   *      background thread `kill -9`s one CoarseGrainedExecutorBackend
   *      process — genuine executor death: task failures, shuffle-fetch
@@ -81,8 +81,9 @@ object BenchSyncJob {
     pids
   }
 
-  /** One full lifecycle over a fresh staging dir; returns per-stage secs
-    * and the digests the identity assertion compares.
+  /** One [[SyncJob.run]] over a fresh staging dir against an empty
+    * target (every package a create); returns per-stage secs and the
+    * digests the identity assertion compares.
     */
   private def runOnce(s: SparkSession, dir: String):
       (Map[String, Double], (Long, Long), Long, Long) = {
@@ -93,21 +94,17 @@ object BenchSyncJob {
       val a = body
       (a, (System.nanoTime() - t0) / 1e9)
     }
-    val (_, tGather) = timed(SyncPipeline.gatherToStaging(s, dir, staging))
-    val ((ok, errs), tImportPlan) =
-      timed(SyncPipeline.importFromStagingWithErrors(s, dir, staging))
-    val (nErr, tErr) = timed(errs.count())
-    val (pkgs, tAsmPlan) = timed(
-      SyncPipeline.assembled(s, dir, Some(ok.drop("guid"))))
-    val (nPkg, tAsm) = timed(pkgs.count())
-    val (actions, tMergePlan) = timed(SyncPipeline.mergeActions(s, dir))
-    val (dig, tMerge) = timed(digest(actions))
+    import s.implicits._
+    val empty = Seq.empty[(Long, String)].toDF("o_orderkey", "extras_kodas")
+    val (r, tRun) = timed(SyncJob.run(s, dir, staging, empty))
+    val (nErr, tErr) = timed(r.errors.count())
+    val (nPkg, tPkg) = timed(r.packages.count())
+    val (dig, tDig) = timed(digest(r.actions))
     val times = Map(
-      "gather" -> tGather,
-      "import_plan" -> (tImportPlan + tAsmPlan + tMergePlan),
+      "gather_and_plan" -> tRun,
       "errors_count" -> tErr,
-      "assemble_count" -> tAsm,
-      "merge_digest" -> tMerge)
+      "packages_count" -> tPkg,
+      "actions_digest" -> tDig)
     (times, dig, nPkg, nErr)
   }
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.functions.{BloomBuild, BloomContains, CharStats, CharTrigrams, CmsSketch, DotProduct, HashedScore, HllRegisters, JsonProject, KMinValues, MinhashSig, NgramDupStats, QuantizeInt8, RollingFingerprint, Simhash64Sketch, SimhashSketch, SlugTruncate, TagPipeline, Unidecode, WordShingles}
 
 /** SQL-surface registration: mounts the star schema and the engine's derived
   * relations as temp views and registers the native functions, so the whole
@@ -269,65 +268,8 @@ object GraftCatalog {
   /** Register the native SQL functions only (idempotent). */
   def registerFunctions(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(SlugTruncate.identifier))
-      reg.registerFunction(SlugTruncate.identifier, SlugTruncate.info,
-        SlugTruncate.builder)
-    if (!reg.functionExists(JsonProject.identifier))
-      reg.registerFunction(JsonProject.identifier, JsonProject.info,
-        JsonProject.builder)
-    if (!reg.functionExists(TagPipeline.identifier))
-      reg.registerFunction(TagPipeline.identifier, TagPipeline.info,
-        TagPipeline.builder)
-    if (!reg.functionExists(CharTrigrams.identifier))
-      reg.registerFunction(CharTrigrams.identifier, CharTrigrams.info,
-        CharTrigrams.builder)
-    if (!reg.functionExists(DotProduct.identifier))
-      reg.registerFunction(DotProduct.identifier, DotProduct.info,
-        DotProduct.builder)
-    if (!reg.functionExists(WordShingles.identifier))
-      reg.registerFunction(WordShingles.identifier, WordShingles.info,
-        WordShingles.builder)
-    if (!reg.functionExists(QuantizeInt8.identifier))
-      reg.registerFunction(QuantizeInt8.identifier, QuantizeInt8.info,
-        QuantizeInt8.builder)
-    if (!reg.functionExists(KMinValues.identifier))
-      reg.registerFunction(KMinValues.identifier, KMinValues.info,
-        KMinValues.builder)
-    if (!reg.functionExists(HllRegisters.identifier))
-      reg.registerFunction(HllRegisters.identifier, HllRegisters.info,
-        HllRegisters.builder)
-    if (!reg.functionExists(CmsSketch.identifier))
-      reg.registerFunction(CmsSketch.identifier, CmsSketch.info,
-        CmsSketch.builder)
-    if (!reg.functionExists(NgramDupStats.identifier))
-      reg.registerFunction(NgramDupStats.identifier, NgramDupStats.info,
-        NgramDupStats.builder)
-    if (!reg.functionExists(BloomBuild.identifier))
-      reg.registerFunction(BloomBuild.identifier, BloomBuild.info,
-        BloomBuild.builder)
-    if (!reg.functionExists(BloomContains.identifier))
-      reg.registerFunction(BloomContains.identifier, BloomContains.info,
-        BloomContains.builder)
-    if (!reg.functionExists(HashedScore.identifier))
-      reg.registerFunction(HashedScore.identifier, HashedScore.info,
-        HashedScore.builder)
-    if (!reg.functionExists(MinhashSig.identifier))
-      reg.registerFunction(MinhashSig.identifier, MinhashSig.info,
-        MinhashSig.builder)
-    if (!reg.functionExists(SimhashSketch.identifier))
-      reg.registerFunction(SimhashSketch.identifier, SimhashSketch.info,
-        SimhashSketch.builder)
-    if (!reg.functionExists(Simhash64Sketch.identifier))
-      reg.registerFunction(Simhash64Sketch.identifier, Simhash64Sketch.info,
-        Simhash64Sketch.builder)
-    if (!reg.functionExists(RollingFingerprint.identifier))
-      reg.registerFunction(RollingFingerprint.identifier,
-        RollingFingerprint.info, RollingFingerprint.builder)
-    if (!reg.functionExists(Unidecode.identifier))
-      reg.registerFunction(Unidecode.identifier, Unidecode.info,
-        Unidecode.builder)
-    if (!reg.functionExists(CharStats.identifier))
-      reg.registerFunction(CharStats.identifier, CharStats.info,
-        CharStats.builder)
+    graft.functions.GraftExtensions.functions.foreach { case (id, info, builder) =>
+      if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
+    }
   }
 }

@@ -6,10 +6,12 @@ import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import scala.collection.immutable.ListMap
 
-/** The JSON writer of the bench and verify mains. Values are plain Scala:
-  * [[obj]] for an object (keys in the given order), `Seq` for an array,
-  * `Option` for a nullable value, [[fixed]] for a rounded number, and a
-  * [[parse]]d node to embed another process's output verbatim.
+/** The library's JSON writer and reader: the mains write their output
+  * with it, and [[graft.sources.HttpSource]] reads its count probe.
+  * Values are plain Scala: [[obj]] for an object (keys in the given
+  * order), `Seq` for an array, `Option` for a nullable value, [[fixed]]
+  * for a rounded number, and a [[parse]]d node to embed another
+  * process's output verbatim.
   */
 object Json {
 

@@ -14,22 +14,22 @@ import scala.util.DynamicVariable
   * logical plan, so a view plans the same after the release, uncached.
   *
   * Eager loops that cache and unpersist inside one function (the graph
-  * and component fixpoints, MMR, BPE and perceptron training,
-  * `SyncJob.applyActions`, `HttpSource.load`) release their own frames.
+  * and component fixpoints, MMR, BPE and perceptron training) release
+  * their own frames.
   */
 object Reuse {
 
   private val scope = new DynamicVariable[Option[ArrayBuffer[Dataset[_]]]](None)
 
-  /** Pin `df` and return it. Inside [[released]], a frame that was
-    * already cached stays its owner's and is not released.
+  /** Pin `df` and return it. A frame that is already cached is returned
+    * as it is: it stays its owner's, and [[released]] does not release it.
     */
-  def apply[T](df: Dataset[T]): Dataset[T] = {
-    scope.value.foreach { pinned =>
-      if (df.storageLevel == StorageLevel.NONE) pinned += df
+  def apply[T](df: Dataset[T]): Dataset[T] =
+    if (df.storageLevel != StorageLevel.NONE) df
+    else {
+      scope.value.foreach(_ += df)
+      df.cache()
     }
-    df.cache()
-  }
 
   /** Run `body`, then unpersist, newest first, what it pinned. */
   def released[A](body: => A): A = {

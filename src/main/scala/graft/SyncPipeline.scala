@@ -269,8 +269,8 @@ object SyncPipeline {
       .orderBy("obj_id")
   }
 
-  /** The reference's sync protocol CLASSIFIER against a REAL target
-    * snapshot (what [[mergeActions]] demonstrates on a simulated target):
+  /** The reference's sync protocol CLASSIFIER, the one rule behind the
+    * real harvest and [[mergeActions]]' simulated target:
     * given the assembled source state and the target's current documents,
     * emit exactly the action set the reference's per-entity loop would —
     *
@@ -334,35 +334,26 @@ object SyncPipeline {
       .select(col("key"), lit("create").as("action"))
 
   /** K3-K5 merge-set computation (the upsert/delete semantics of
-    * odgovlt.py:205-211,249-257,312-318,407) as a single full-outer diff:
-    * classify every key as create / update / delete / noop.
+    * odgovlt.py:205-211,249-257,312-318,407): [[classifyAgainst]] over a
+    * simulated target, so the declared query and the real harvest share
+    * one classifier.
     *
     *  - source: current upstream state (published orders)
     *  - target: previously-synced state — simulated as a deterministic
     *    subset with a deterministic field mutation
     *  - delete only fires for target rows "owned" by this source
     *    (the F4 `Šaltinis == 'IVPK IRS'` guard) — here: even order keys.
-    * Change detection follows the reference's subset semantics
-    * (odgovlt.py:112-124): only fields present on the source side compare.
     */
   def mergeActions(s: SparkSession, dir: String): DataFrame = {
     val orders = t(s, dir, "orders")
     val source = orders.filter(col("o_orderstatus") === "F")
-      .select(col("o_orderkey").as("s_key"), col("o_orderpriority").as("s_priority"))
+      .select("o_orderkey", "o_orderpriority")
     val target = orders.filter(col("o_orderkey") % 3 === 0)
-      .select(
-        col("o_orderkey").as("t_key"),
+      .select(col("o_orderkey"),
         when(col("o_orderkey") % 9 === 0, lit("0-MUTATED"))
-          .otherwise(col("o_orderpriority")).as("t_priority"))
-    source.join(target, col("s_key") === col("t_key"), "full_outer")
-      .select(
-        coalesce(col("s_key"), col("t_key")).as("key"),
-        when(col("t_key").isNull, "create")
-          .when(col("s_key").isNull && col("t_key") % 2 === 0, "delete")
-          .when(col("s_key").isNull, "noop")
-          .when(col("s_priority") =!= col("t_priority"), "update")
-          .otherwise("noop").as("action"))
-      .filter(col("action") =!= "noop")
+          .otherwise(col("o_orderpriority")).as("o_orderpriority"))
+    classifyAgainst(source, target, "o_orderkey",
+      owned = col("o_orderkey") % 2 === 0)
       .orderBy("key")
   }
 }

@@ -47,14 +47,35 @@ object SlugTruncate {
   * `spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((SlugTruncate.identifier, SlugTruncate.info, SlugTruncate.builder))
-    ext.injectFunction((JsonProject.identifier, JsonProject.info, JsonProject.builder))
-    ext.injectFunction((TagPipeline.identifier, TagPipeline.info, TagPipeline.builder))
-    ext.injectFunction((CharTrigrams.identifier, CharTrigrams.info, CharTrigrams.builder))
-    ext.injectFunction((DotProduct.identifier, DotProduct.info, DotProduct.builder))
-    ext.injectFunction((WordShingles.identifier, WordShingles.info, WordShingles.builder))
-    ext.injectFunction((QuantizeInt8.identifier, QuantizeInt8.info, QuantizeInt8.builder))
-    ext.injectFunction((Unidecode.identifier, Unidecode.info, Unidecode.builder))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach(ext.injectFunction)
+}
+
+object GraftExtensions {
+
+  /** Every native SQL function as `(identifier, info, builder)`: the one
+    * list both the extension and [[graft.GraftCatalog.registerFunctions]]
+    * register.
+    */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    (SlugTruncate.identifier, SlugTruncate.info, SlugTruncate.builder),
+    (JsonProject.identifier, JsonProject.info, JsonProject.builder),
+    (TagPipeline.identifier, TagPipeline.info, TagPipeline.builder),
+    (CharTrigrams.identifier, CharTrigrams.info, CharTrigrams.builder),
+    (DotProduct.identifier, DotProduct.info, DotProduct.builder),
+    (WordShingles.identifier, WordShingles.info, WordShingles.builder),
+    (QuantizeInt8.identifier, QuantizeInt8.info, QuantizeInt8.builder),
+    (KMinValues.identifier, KMinValues.info, KMinValues.builder),
+    (HllRegisters.identifier, HllRegisters.info, HllRegisters.builder),
+    (CmsSketch.identifier, CmsSketch.info, CmsSketch.builder),
+    (NgramDupStats.identifier, NgramDupStats.info, NgramDupStats.builder),
+    (BloomBuild.identifier, BloomBuild.info, BloomBuild.builder),
+    (BloomContains.identifier, BloomContains.info, BloomContains.builder),
+    (HashedScore.identifier, HashedScore.info, HashedScore.builder),
+    (MinhashSig.identifier, MinhashSig.info, MinhashSig.builder),
+    (SimhashSketch.identifier, SimhashSketch.info, SimhashSketch.builder),
+    (Simhash64Sketch.identifier, Simhash64Sketch.info, Simhash64Sketch.builder),
+    (RollingFingerprint.identifier, RollingFingerprint.info, RollingFingerprint.builder),
+    (Unidecode.identifier, Unidecode.info, Unidecode.builder),
+    (CharStats.identifier, CharStats.info, CharStats.builder))
 }

@@ -81,7 +81,7 @@ object HierarchyOps {
     * slugify(name + ' ' + id) group name (odgovlt.py:289-290), the title,
     * the ORDERED child-name list (the parent's `groups` field — which is
     * why creates must be issued children-first; [[graft.SyncJob
-    * .applyGroupActions]] owns that ordering via the `depth` column), and
+    * .applyActions]] owns that ordering via `createWavesBy`), and
     * the source-ownership extras marker the stale-delete guard reads
     * (odgovlt.py:312-318). Children are collected bottom-up with one
     * hash aggregate over the edge set; everything else is the bounded

@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 
 /** The K3-K5 application surface: one abstraction over "apply the computed
   * create / update / delete sets to an external target". The merge
-  * classification itself is engine work ([[graft.SyncPipeline.mergeActions]],
-  * `q_k3_merge_actions`); a sink only transports each set.
+  * classification itself is engine work ([[graft.SyncPipeline.classifyAgainst]],
+  * which `q_k3_merge_actions` also runs); a sink only transports each set.
   *
   * Two production tiers implement it:
   *  - [[JdbcActionSink]] — set-oriented writes over JDBC (the fast path when

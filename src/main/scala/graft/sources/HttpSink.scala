@@ -29,18 +29,15 @@ import java.time.Duration
   *    the reference's show→NotFound→create probe, direction reversed;
   *  - delete → HTTP 404 counts as success (already gone).
   *
-  * Transient failures (I/O errors and 5xx) retry up to [[maxRetries]] with
-  * exponential backoff; exhaustion throws, failing the task so Spark's own
-  * retry ladder takes over — safe because every call is idempotent.
+  * Transient failures (I/O errors and 5xx) retry on [[HttpSink.withRetry]]'s
+  * ladder; exhaustion throws, failing the task so Spark's own retry ladder
+  * takes over — safe because every call is idempotent.
   */
 final case class HttpSink(
     baseUrl: String,
     entity: String = "package",
     idField: String = "id",
-    apiKey: Option[String] = None,
-    maxRetries: Int = 3,
-    retryBaseMs: Long = 50L,
-    timeoutMs: Long = 30000L) extends ActionSink {
+    apiKey: Option[String] = None) extends ActionSink {
 
   import HttpSink._
 
@@ -63,20 +60,14 @@ final case class HttpSink(
     */
   private def post(rows: org.apache.spark.sql.Dataset[String], action: String,
       fallbackOn: Int, fallback: Option[String]): Unit = {
-    val (base, key, retries, backoff, timeout) =
-      (baseUrl, apiKey, maxRetries, retryBaseMs, timeoutMs)
-    val fb = fallback
     rows.foreachPartition { it: Iterator[String] =>
       if (it.nonEmpty) {
-        val client = HttpClient.newBuilder()
-          .connectTimeout(Duration.ofMillis(timeout)).build()
+        val client = newClient()
         it.foreach { body =>
-          val status = send(client, base, action, body, key, retries,
-            backoff, timeout)
+          val status = send(client, baseUrl, action, body, apiKey)
           if (status == fallbackOn) {
-            fb.foreach { fbAction =>
-              val st2 = send(client, base, fbAction, body, key, retries,
-                backoff, timeout)
+            fallback.foreach { fbAction =>
+              val st2 = send(client, baseUrl, fbAction, body, apiKey)
               if (st2 / 100 != 2) throw new java.io.IOException(
                 s"$fbAction fallback after $action=$fallbackOn returned $st2")
             }
@@ -90,41 +81,50 @@ final case class HttpSink(
 
 object HttpSink {
 
+  /** The REST tier's retry budget: a transient failure is retried this
+    * many times, the n-th retry after `RetryBaseMs << (n - 1)` ms.
+    */
+  private[sources] val MaxRetries = 3
+  private[sources] val RetryBaseMs = 50L
+  /** Connect timeout and per-request timeout. */
+  private[sources] val Timeout = Duration.ofSeconds(30)
+
+  private[sources] def newClient(): HttpClient =
+    HttpClient.newBuilder().connectTimeout(Timeout).build()
+
   /** One POST; returns the final HTTP status. 4xx is a semantic answer
     * (exists / not found) the caller routes on.
     */
   private def send(client: HttpClient, baseUrl: String,
-      action: String, body: String, apiKey: Option[String], maxRetries: Int,
-      retryBaseMs: Long, timeoutMs: Long): Int = {
+      action: String, body: String, apiKey: Option[String]): Int = {
     val b = HttpRequest.newBuilder(URI.create(s"$baseUrl/$action"))
-      .timeout(Duration.ofMillis(timeoutMs))
+      .timeout(Timeout)
       .header("Content-Type", "application/json")
       .POST(HttpRequest.BodyPublishers.ofString(body))
     apiKey.foreach(k => b.header("Authorization", k))
     withRetry(client, b.build(), HttpResponse.BodyHandlers.discarding(),
-      action, maxRetries, retryBaseMs).statusCode()
+      action).statusCode()
   }
 
   /** The REST tier's one retry ladder, for the sink's POSTs and
     * [[HttpSource]]'s page GETs. I/O errors and 5xx are transient: they
-    * retry with exponential backoff, at most `maxRetries` times. Returns
+    * retry with exponential backoff, at most [[MaxRetries]] times. Returns
     * the first response that is not a 5xx, or the last 5xx once the
     * retries are spent; throws if the last attempt was an I/O error. Any
     * other status is the caller's to route — every call is idempotent,
     * so a retry never double-applies.
     */
   private[sources] def withRetry[T](client: HttpClient, req: HttpRequest,
-      handler: HttpResponse.BodyHandler[T], what: String, maxRetries: Int,
-      retryBaseMs: Long): HttpResponse[T] = {
+      handler: HttpResponse.BodyHandler[T], what: String): HttpResponse[T] = {
     @annotation.tailrec
     def attempt(n: Int): HttpResponse[T] = {
-      if (n > 0) Thread.sleep(retryBaseMs << (n - 1))
+      if (n > 0) Thread.sleep(RetryBaseMs << (n - 1))
       val r = try Right(client.send(req, handler))
         catch { case e: java.io.IOException => Left(e) }
       r match {
-        case Right(resp) if resp.statusCode / 100 != 5 || n == maxRetries => resp
-        case Left(e) if n == maxRetries => throw new java.io.IOException(
-          s"$what failed after $maxRetries retries", e)
+        case Right(resp) if resp.statusCode / 100 != 5 || n == MaxRetries => resp
+        case Left(e) if n == MaxRetries => throw new java.io.IOException(
+          s"$what failed after $MaxRetries retries", e)
         case _ => attempt(n + 1)
       }
     }

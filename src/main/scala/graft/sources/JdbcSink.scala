@@ -10,7 +10,7 @@ import java.sql.{Connection, DriverManager, PreparedStatement}
   *
   * Three tiers, in preference order:
   *  1. compute the create/update/delete sets in Spark
-  *     ([[graft.SyncPipeline.mergeActions]]) and apply each with a plain
+  *     ([[graft.SyncPipeline.classifyAgainst]]) and apply each with a plain
   *     append/delete — pure connector writes, fully parallel;
   *  2. `upsert` below — a row-atomic upsert statement batched per partition
   *     for targets where the merge must be atomic per row; the statement

@@ -9,7 +9,7 @@ import java.sql.Timestamp
 
 /** Streaming/incremental semantics (SURVEY.md §2.9). The reference is a
   * batch re-sync, so parity needs only the batch diff-and-merge (SyncPipeline
-  * .mergeActions); this module adds the Structured Streaming surface a
+  * .classifyAgainst); this module adds the Structured Streaming surface a
   * training-data pipeline needs over the `events` stream: watermarked
   * tumbling-window aggregation and stateful sessionization.
   *

@@ -132,8 +132,7 @@ class CkanSinkSpec extends AnyFunSuite {
     // SOURCE_NAME extras marker); a doc without them is not ours to delete
     val actions = SyncPipeline.classifyAgainst(packages, target,
       "o_orderkey", owned = col("extras_kodas").isNotNull)
-    val sink = HttpSink(ckan.url, entity = "package", idField = "o_orderkey",
-      maxRetries = 2, retryBaseMs = 1L)
+    val sink = HttpSink(ckan.url, entity = "package", idField = "o_orderkey")
     SyncJob.applyActions(packages, actions, "o_orderkey", sink)
     packages
   }
@@ -198,9 +197,9 @@ class CkanSinkSpec extends AnyFunSuite {
     val target = targetState(ckan, docs.schema)
     val actions = SyncPipeline.classifyAgainst(docs, target, "group_slug",
       owned = col("extras_source") === "IVPK IRS")
-    val sink = HttpSink(ckan.url, entity = "group", idField = "group_slug",
-      maxRetries = 2, retryBaseMs = 1L)
-    SyncJob.applyGroupActions(docs, actions, "group_slug", "depth", sink)
+    val sink = HttpSink(ckan.url, entity = "group", idField = "group_slug")
+    SyncJob.applyActions(docs, actions, "group_slug", sink,
+      createWavesBy = Some("depth"))
     docs
   }
 
@@ -279,8 +278,7 @@ class CkanSinkSpec extends AnyFunSuite {
         def harvest(): Unit = {
           val actions = SyncPipeline.classifyFindOrCreate(
             source, targetState(ckan, schema), idField)
-          val sink = HttpSink(ckan.url, entity = entity, idField = idField,
-            maxRetries = 2, retryBaseMs = 1L)
+          val sink = HttpSink(ckan.url, entity = entity, idField = idField)
           SyncJob.applyActions(source, actions, idField, sink)
         }
         val ids = source.select(idField).collect().map(_.getString(0)).sorted

@@ -84,10 +84,9 @@ class HttpSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
       Option(hits.get(verb)).map(_.get()).getOrElse(0)
   }
 
-  private def sinkFor(ckan: FakeCkan, retries: Int = 3) =
+  private def sinkFor(ckan: FakeCkan) =
     HttpSink(ckan.url, entity = "package", idField = "id",
-      apiKey = Some("test-key"), maxRetries = retries,
-      retryBaseMs = 1L)
+      apiKey = Some("test-key"))
 
   test("create set lands; replayed create falls through to update (idempotent by guid)") {
     import spark.implicits._
@@ -140,7 +139,7 @@ class HttpSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ckan = new FakeCkan("id")
     try {
       ckan.failNext.set(2)
-      sinkFor(ckan, retries = 3).create(Seq(("r", "v")).toDF("id", "val"))
+      sinkFor(ckan).create(Seq(("r", "v")).toDF("id", "val"))
       assert(ckan.store.containsKey("r"))
       // 2 burned 503s + 1 success, all on the create endpoint
       assert(ckan.hitCount("create") === 3)
@@ -153,7 +152,7 @@ class HttpSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       ckan.failNext.set(100)
       val e = intercept[Exception] {
-        sinkFor(ckan, retries = 2).create(Seq(("x", "v")).toDF("id", "val"))
+        sinkFor(ckan).create(Seq(("x", "v")).toDF("id", "val"))
       }
       def causes(t: Throwable): Seq[Throwable] =
         if (t == null) Nil else t +: causes(t.getCause)
@@ -171,7 +170,7 @@ class HttpSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ckan = new FakeCkan("o_orderkey")
     try {
       val sink = HttpSink(ckan.url, entity = "package",
-        idField = "o_orderkey", maxRetries = 2, retryBaseMs = 1L)
+        idField = "o_orderkey")
       import spark.implicits._
       import org.apache.spark.sql.functions.col
       // the target starts empty: every published package is a create
@@ -201,6 +200,21 @@ class HttpSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(actions.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
           "applyActions evicted the caller's cache")
       } finally actions.unpersist()
+    } finally ckan.stop()
+  }
+
+  test("applyActions releases the frames it pinned on uncached inputs") {
+    import spark.implicits._
+    val ckan = new FakeCkan("id")
+    try {
+      spark.catalog.clearCache()
+      val packages = Seq(("a", "v"), ("b", "v")).toDF("id", "val")
+      val actions = Seq(("a", "create"), ("b", "update"), ("z", "delete"))
+        .toDF("key", "action")
+      SyncJob.applyActions(packages, actions, "id", sinkFor(ckan))
+      assert(ckan.store.keySet().asScala == Set("a", "b"))
+      assert(spark.sharedState.cacheManager.isEmpty,
+        "applyActions left a pinned frame in the CacheManager")
     } finally ckan.stop()
   }
 }

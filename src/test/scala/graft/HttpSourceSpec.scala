@@ -33,6 +33,8 @@ class HttpSourceSpec extends AnyFunSuite {
     val failNext = new AtomicInteger(0)
     /** When true, every request 404s (the contract-violation case). */
     @volatile var broken = false
+    /** When true, answers leave out `count`. */
+    @volatile var countless = false
 
     private def rec(i: Int): String =
       s"""{"id": $i, "name": "pkg_$i", "score": ${i % 7}}"""
@@ -51,9 +53,9 @@ class HttpSourceSpec extends AnyFunSuite {
         else if (failNext.getAndUpdate(x => math.max(0, x - 1)) > 0) 503
         else 200
       val rows = (off.toInt until math.min(n, (off + lim).toInt)).map(rec)
-      val body =
-        s"""{"count": $n, "results": [${rows.mkString(", ")}]}"""
-          .getBytes(StandardCharsets.UTF_8)
+      val count = if (countless) "" else s""""count": $n, """
+      val body = s"""{$count"results": [${rows.mkString(", ")}]}"""
+        .getBytes(StandardCharsets.UTF_8)
       ex.sendResponseHeaders(status, body.length)
       ex.getResponseBody.write(body)
       ex.close()
@@ -66,7 +68,7 @@ class HttpSourceSpec extends AnyFunSuite {
   test("recovers every record across pages with an inferred schema") {
     val srv = new FakeSearch(57)
     try {
-      val df = HttpSource(srv.url, pageSize = 10, retryBaseMs = 1L).load(spark)
+      val df = HttpSource(srv.url, pageSize = 10).load(spark)
       assert(df.columns.sorted.toSeq == Seq("id", "name", "score"))
       val rows = df.collect()
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
@@ -84,7 +86,7 @@ class HttpSourceSpec extends AnyFunSuite {
   test("a single-page corpus needs exactly probe + one page fetch") {
     val srv = new FakeSearch(3)
     try {
-      val df = HttpSource(srv.url, pageSize = 10, retryBaseMs = 1L).load(spark)
+      val df = HttpSource(srv.url, pageSize = 10).load(spark)
       assert(df.count() == 3)
       assert(srv.hits.get() == 2, "probe + one page, nothing more")
     } finally srv.stop()
@@ -93,7 +95,7 @@ class HttpSourceSpec extends AnyFunSuite {
   test("an empty remote is a legitimate harvest: zero rows, no crash") {
     val srv = new FakeSearch(0)
     try {
-      val df = HttpSource(srv.url, pageSize = 10, retryBaseMs = 1L).load(spark)
+      val df = HttpSource(srv.url, pageSize = 10).load(spark)
       assert(df.count() == 0)
       assert(srv.hits.get() == 1, "the probe alone decides an empty corpus")
     } finally srv.stop()
@@ -103,7 +105,7 @@ class HttpSourceSpec extends AnyFunSuite {
     val srv = new FakeSearch(25)
     try {
       srv.failNext.set(3)
-      val df = HttpSource(srv.url, pageSize = 10, retryBaseMs = 1L).load(spark)
+      val df = HttpSource(srv.url, pageSize = 10).load(spark)
       assert(df.count() == 25)
     } finally srv.stop()
   }
@@ -114,13 +116,35 @@ class HttpSourceSpec extends AnyFunSuite {
       srv.broken = true
       val before = srv.hits.get()
       val e = intercept[Exception] {
-        HttpSource(srv.url, pageSize = 10, maxRetries = 3, retryBaseMs = 1L)
-          .load(spark)
+        HttpSource(srv.url, pageSize = 10).load(spark)
       }
       def root(t: Throwable): Throwable =
         if (t.getCause == null) t else root(t.getCause)
       assert(root(e).getMessage.contains("returned 404"))
       assert(srv.hits.get() - before == 1, "4xx must not burn retries")
+    } finally srv.stop()
+  }
+
+  test("a probe answer without an integer count fails naming the endpoint") {
+    val srv = new FakeSearch(5)
+    try {
+      srv.countless = true
+      val e = intercept[java.io.IOException] {
+        HttpSource(srv.url, pageSize = 10).load(spark)
+      }
+      assert(e.getMessage.contains(s"${srv.url}/package_search"), e.getMessage)
+      assert(e.getMessage.contains("count"), e.getMessage)
+    } finally srv.stop()
+  }
+
+  test("load releases the page bodies it pinned") {
+    val srv = new FakeSearch(25)
+    try {
+      spark.catalog.clearCache()
+      val df = HttpSource(srv.url, pageSize = 10).load(spark)
+      assert(df.count() == 25)
+      assert(spark.sharedState.cacheManager.isEmpty,
+        "load left its page bodies in the CacheManager")
     } finally srv.stop()
   }
 }
