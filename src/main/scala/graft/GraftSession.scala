@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
 /** The one SparkSession factory for every main (Bench, Verify,
-  * BenchStreaming, Profile, PlanDump, BenchSyncJob, the generators and
+  * BenchStreaming, PlanDump, BenchSyncJob, the generators and
   * ProbeAtRest). A main chooses three values — master, shuffle partitions
   * and an optional `spark.sql.files.maxPartitionBytes` — and the factory
   * fixes the rest: UTC session time zone, no UI, WARN logging.

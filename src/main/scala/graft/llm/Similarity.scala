@@ -488,10 +488,13 @@ object Similarity {
     * join fanning each vector to k candidate structs, collapsed by a
     * map-side-partial struct max — one Exchange per assignment, per Lloyd
     * round) is kept as [[assignAgg]], the executable spec NearestSpec pins
-    * the native loop bit-identical against.
+    * the native loop bit-identical against — on vectors without NULL
+    * elements (a NULL dot product is skipped here, but competes in the
+    * aggregation form's struct max). An empty centroid table assigns
+    * nothing in both forms: its one empty-array row is not crossed.
     */
   private[graft] def assign(c: DataFrame, cents: DataFrame): DataFrame =
-    c.crossJoin(broadcast(centsArr(cents)))
+    c.crossJoin(broadcast(centsArr(cents).filter(size(col("cs")) > 0)))
       .select(col("vec_id"), col("v"), col("nv"),
         graft.functions.NearestCentroid(col("v"), col("nv"), col("cs"))
           .as("cid"))

@@ -8,7 +8,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * so the graft library reaches it through this one-file subpackage of
   * `org.apache.spark.sql` — the established pattern for libraries that ship
   * native expressions (the alternative, a SQL-string round-trip per call,
-  * would defeat the point of a codegen'd expression).
+  * would defeat the point of a codegen'd expression). The listener bus's
+  * drain and the CacheManager's entry count are reached the same way.
   */
 object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -27,4 +28,14 @@ object GraftBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       df.queryExecution.analyzed)
+
+  /** Block until every event already posted to `sc`'s listener bus has
+    * been delivered (`listenerBus` is private[spark]).
+    */
+  def drain(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
+  /** How many frames are cached in `spark`'s CacheManager (private[sql]). */
+  def cachedEntries(spark: org.apache.spark.sql.SparkSession): Int =
+    spark.sharedState.cacheManager.numCachedEntries
 }

@@ -24,7 +24,7 @@ class GraftSessionSpec extends AnyFunSuite {
     // Verify, BenchStreaming, GenText, GenScale, GenSkew, PlanDump, ProbeAtRest
     ("local[2]", 4, None) -> (Seq("spark.master" -> "local[2]",
       "spark.sql.shuffle.partitions" -> "4") ++ base),
-    // Bench, Profile
+    // Bench
     ("local[3]", 3, Some("4m")) -> (Seq("spark.master" -> "local[3]",
       "spark.sql.shuffle.partitions" -> "3",
       "spark.sql.files.maxPartitionBytes" -> "4m") ++ base),

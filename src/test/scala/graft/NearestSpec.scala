@@ -112,6 +112,14 @@ class NearestSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(winner == 0, s"tie must break to the smallest cid, got $winner")
   }
 
+  test("assign: an empty centroid table assigns nothing, as the aggregation form") {
+    val cents = corpus.filter(lit(false)).select(col("vec_id").cast("int").as("cid"),
+      col("v").as("centroid"), col("nv").as("cnorm"))
+    assert(Similarity.assignAgg(corpus, cents).count() == 0)
+    val got = Similarity.assign(corpus, cents).select("vec_id", "cid").collect()
+    assert(got.isEmpty, s"${got.length} rows, first: ${got.headOption}")
+  }
+
   test("an array<float> centroid or codebook fails analysis") {
     import graft.functions.{NearestCentroid, NearestCode}
     val v = typedLit(Seq(1.0, 0.0))
