@@ -7,9 +7,10 @@ import graft.llm.{Similarity, TextAnalysis}
 /** Build/probe split of the index-family queries for the bench: the
   * declared queries (`q_inverted_index`, `q_bm25_indexed`, `q_ivm_index`,
   * `q_embed_ivfpq`, `q_bpe_encode`) each REBUILD their index per
-  * invocation, so the raw bench line reports build+probe fused — but the
-  * deployment economics the library documents everywhere are
-  * build-once / probe-many. This module declares, per such query, which
+  * invocation (`q_bpe_encode` retrains its rules on every call), so the
+  * raw bench line reports build+probe fused — but the deployment
+  * economics the library documents everywhere are build-once /
+  * probe-many. This module declares, per such query, which
   * persisted artifacts the build half produces and how the probe half
   * serves off the FROZEN artifacts (parquet on disk — the real at-rest
   * form), so [[Bench]] can time and report the two costs separately
@@ -87,10 +88,10 @@ object BenchSplits {
   * that did NOT build the artifacts. The build/probe economics claim
   * silently assumes the frozen parquet is the COMPLETE serving state —
   * if a probe actually leaned on anything the build session left behind
-  * in the JVM (a cached frame, the BPE rule memo, a broadcast, a temp
-  * view), serving from a fresh process would diverge or crash.
+  * in the JVM (a cached frame, a broadcast, a temp view), serving from
+  * a fresh process would diverge or crash.
   * BenchSplitSpec forks this main in a NEW JVM (fresh SparkSession,
-  * empty caches and memos) over artifacts frozen by the test session and
+  * empty caches) over artifacts frozen by the test session and
   * pins probe-at-rest ≡ declared query.
   *
   * Args: artifactDir sfDir outDir — writes each probe's result to

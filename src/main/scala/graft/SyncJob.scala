@@ -23,7 +23,8 @@ object SyncJob {
   /** `errors` is the per-object error side-channel (the harvest
     * framework's `_save_object_error` accounting): staged items that
     * could not import — `(guid, error)` — reported while the job
-    * CONTINUES over the importable rest.
+    * CONTINUES over the importable rest. `packages` is unordered: the
+    * classify and the push join on the key and never read row order.
     */
   final case class Result(packages: DataFrame, actions: DataFrame,
       errors: DataFrame)
@@ -38,7 +39,6 @@ object SyncJob {
     val (ok, errors) =
       SyncPipeline.importFromStagingWithErrors(s, dir, stagingDir)
     val packages = SyncPipeline.assembled(s, dir, Some(ok.drop("guid")))
-      .orderBy("o_orderkey")
     val actions = SyncPipeline.classifyAgainst(packages, target, "o_orderkey",
       owned = col("extras_kodas").isNotNull)
     Result(packages, actions, errors)

@@ -14,18 +14,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * predicate pushdown happen at the scan, and dimension tables stay
   * broadcast-sized relative to facts.
   */
-final case class Tables(
-    region: DataFrame,
-    nation: DataFrame,
-    customer: DataFrame,
-    supplier: DataFrame,
-    part: DataFrame,
-    orders: DataFrame,
-    lineitem: DataFrame,
-    events: DataFrame,
-    documents: DataFrame,
-    embeddings: DataFrame)
-
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
@@ -86,17 +74,4 @@ object Tables {
       spark.read.parquet(s"$sfDir/$name.parquet")
     }
   }
-
-  /** Load the whole star schema from a scale-factor directory. */
-  def apply(spark: SparkSession, sfDir: String): Tables = Tables(
-    region = table(spark, sfDir, "region"),
-    nation = table(spark, sfDir, "nation"),
-    customer = table(spark, sfDir, "customer"),
-    supplier = table(spark, sfDir, "supplier"),
-    part = table(spark, sfDir, "part"),
-    orders = table(spark, sfDir, "orders"),
-    lineitem = table(spark, sfDir, "lineitem"),
-    events = table(spark, sfDir, "events"),
-    documents = table(spark, sfDir, "documents"),
-    embeddings = table(spark, sfDir, "embeddings"))
 }

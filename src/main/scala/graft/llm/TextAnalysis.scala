@@ -857,11 +857,17 @@ object TextAnalysis {
     * back onto the vocabulary as a scalar. Per-round cost is independent
     * of corpus size once the vocabulary saturates, the same economics as
     * [[graft.ops.GraphOps]]'s fixpoints (one bounded shuffle per round,
-    * K rounds).
+    * K rounds). Training stops early, with fewer than K rules, once no
+    * adjacent symbol pair is left to merge (an empty corpus, or one of
+    * single-letter tokens, learns none).
+    *
+    * Each call is one training run: nothing is remembered across calls.
+    * A caller that encodes many times trains once here and hands the
+    * collected pairs to [[encodedVocabFrom]].
     */
   def bpeTrain(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    trainAndFreeze(s, dir)
+    train(s, dir)
       .toDF("round", "pair", "weight")
       .orderBy("round")
   }
@@ -889,144 +895,33 @@ object TextAnalysis {
   private def trainedRules(vocabFrame: DataFrame): Seq[(Int, String, Long)] = {
     var vocab = vocabFrame
       .select(col("freq"), symString(col("term")).as("ss"))
-    val rules = (1 to BpeTrainK).map { r =>
+    val rules = Seq.newBuilder[(Int, String, Long)]
+    var r = 1
+    var more = true
+    while (more && r <= BpeTrainK) {
       val top = vocab
         .select(explode(symPairs(col("ss"))).as("pair"), col("freq"))
         .groupBy(col("pair")).agg(sum(col("freq")).as("weight"))
         .orderBy(col("weight").desc, col("pair").asc)
-        .limit(1).collect()(0)
-      val (pair, weight) = (top.getString(0), top.getLong(1))
-      if (r < BpeTrainK) { // the last argmax needs no further rewrite
-        val prev = vocab
-        val next = vocab.select(col("freq"),
-          replace(col("ss"), lit(s" $pair "),
-            lit(" " + pair.replace(" ", "") + " ")).as("ss"))
-        vocab = next.cache()
-        vocab.count() // materialize before dropping the parent
-        if (r > 1) prev.unpersist() // round 1 reads the shared vocabFrame
+        .limit(1).collect()
+      more = top.nonEmpty // no pair left to merge: the table is complete
+      if (more) {
+        val pair = top(0).getString(0)
+        rules += ((r, pair, top(0).getLong(1)))
+        if (r < BpeTrainK) { // the last argmax needs no further rewrite
+          val prev = vocab
+          val next = vocab.select(col("freq"),
+            replace(col("ss"), lit(s" $pair "),
+              lit(" " + pair.replace(" ", "") + " ")).as("ss"))
+          vocab = next.cache()
+          vocab.count() // materialize before dropping the parent
+          if (r > 1) prev.unpersist() // round 1 reads the shared vocabFrame
+        }
       }
-      (r, pair, weight)
+      r += 1
     }
     vocab.unpersist()
-    rules
-  }
-
-  /** The FROZEN rule table — BPE training as a train-once / probe-many
-    * artifact (the [[bm25Index]]/[[bm25Indexed]] build/probe split applied
-    * to the tokenizer): the K learned rules are driver-local scalars, so
-    * the persisted form is a per-corpus memo rather than a parquet table,
-    * and every probe-side consumer ([[encodedVocab]] behind the declared
-    * encode/tokenize/fertility queries and the streaming twin) reads the
-    * frozen rules instead of re-running the K-round loop per invocation —
-    * a deployment never retrains its tokenizer per batch. Training is
-    * fully deterministic (argmax ordered weight desc, pair asc), so a memo
-    * hit is bit-identical to a retrain — LlmOpsSpec pins the identity
-    * through an explicit invalidate-and-retrain. [[bpeTrain]] (the
-    * declared BUILD query) always retrains — its bench line is the honest
-    * training cost — and refreshes the store it passes through.
-    */
-  private val ruleStore =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, String, Long)]]()
-
-  /** Memo key = canonical corpus path + an MD5 digest over the PER-FILE
-    * inventory (relative name, size, mtime for every file under
-    * documents.parquet, sorted), so REWRITING the data at the same path
-    * auto-invalidates the frozen rules. A per-file inventory is strictly
-    * stronger than the earlier max-mtime + total-length pair: an
-    * equal-length rewrite landing within the filesystem's mtime
-    * granularity still changes part-file names (Spark writes fresh
-    * part-UUIDs) or per-file sizes, so it re-keys rather than serving a
-    * stale tokenizer.
-    */
-  private def ruleKey(dir: String): String = {
-    val canonical =
-      try new java.io.File(dir).getCanonicalPath catch { case _: Exception => dir }
-    s"$canonical#${corpusDigest(dir)}"
-  }
-
-  /** Memo for [[corpusDigest]]: the full per-file inventory walk (the
-    * strong key) runs ONCE per (path, shallow stamp) — steady-state
-    * encode probes validate with ONE readdir of the corpus root
-    * (O(direct children): part names, sizes, mtimes, plus the root and
-    * per-child mtimes) instead of re-listing the whole tree per call.
-    * Against an object store holding a 100-TB corpus, a recursive
-    * listing per probe is a nontrivial metadata sweep; one directory
-    * listing is not. The shallow stamp catches both rewrite shapes:
-    * a flat overwrite replaces the part files (fresh UUID names → the
-    * child list changes), and a single-level dynamic-partition
-    * overwrite rewrites files INSIDE a partition directory (that
-    * directory's own mtime changes — it is a direct child). Residual
-    * blind spot: rewrites ≥ 2 partition levels deep change neither the
-    * root's nor a direct child's entry — [[invalidateRules]] is the
-    * explicit hook there (and the memo's docstring contract; the
-    * documents corpus is unpartitioned or one-level in every harness
-    * layout). Value = (shallow stamp at walk time, digest).
-    */
-  private val digestMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  /** Test hook: counts full inventory walks, so a spec can pin "one
-    * listing per freeze" rather than trusting the memo by inspection.
-    */
-  private[graft] val digestWalks = new java.util.concurrent.atomic.AtomicLong(0)
-
-  private def shallowStamp(root: java.io.File): String = {
-    val kids = root.listFiles() match {
-      case null => Array.empty[java.io.File]
-      case k => k
-    }
-    (s"<root>:${root.lastModified()}" +: kids.map(k =>
-      s"${k.getName}:${k.length()}:${k.lastModified()}"))
-      .sorted.mkString("|")
-  }
-
-  private def corpusDigest(dir: String): String = {
-    val root = new java.io.File(dir, "documents.parquet")
-    val stamp = shallowStamp(root)
-    val memo = digestMemo.get(dir)
-    if (memo != null && memo._1 == stamp) return memo._2
-    digestWalks.incrementAndGet()
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    def walk(f: java.io.File, rel: String): Unit =
-      if (f.isDirectory)
-        f.listFiles() match {
-          case null =>
-          case kids => kids.foreach(k => walk(k, s"$rel/${k.getName}"))
-        }
-      else entries += s"$rel:${f.length()}:${f.lastModified()}"
-    walk(root, "")
-    val md = java.security.MessageDigest.getInstance("MD5")
-    entries.sorted.foreach(e => md.update(e.getBytes("UTF-8")))
-    val digest = md.digest().map("%02x".format(_)).mkString
-    digestMemo.put(dir, (stamp, digest))
-    digest
-  }
-
-  /** Superseded rule tables for the same corpus path must not accumulate:
-    * each refreeze of a path evicts every other key for that path (the
-    * store would otherwise grow one K-rule entry per data rewrite for the
-    * lifetime of the JVM).
-    */
-  private def evictStale(canonicalKey: String): Unit = {
-    // the digest half is hex and cannot contain '#', but the PATH half
-    // can — split on the LAST '#' (the one ruleKey appended), or a path
-    // containing '#' would truncate the prefix and evict unrelated
-    // paths' rule tables
-    val prefix = canonicalKey.substring(0, canonicalKey.lastIndexOf('#') + 1)
-    val it = ruleStore.keySet().iterator()
-    while (it.hasNext) {
-      val k = it.next()
-      if (k.startsWith(prefix) && k != canonicalKey) it.remove()
-    }
-  }
-
-  /** Drop every frozen rule table AND the digest memo (test hook: forces
-    * the next consumer to re-list and retrain, so specs can pin
-    * memo ≡ retrain).
-    */
-  private[graft] def invalidateRules(): Unit = {
-    ruleStore.clear()
-    digestMemo.clear()
+    rules.result()
   }
 
   /** One training run over the `dir` corpus's vocabulary. */
@@ -1034,33 +929,6 @@ object TextAnalysis {
     val vocab = vocabTable(s, dir).cache()
     val rules = trainedRules(vocab)
     vocab.unpersist() // training consumed it; probes re-derive
-    rules
-  }
-
-  /** Run the training loop and (re)freeze its rule table for `dir`. */
-  private def trainAndFreeze(s: SparkSession, dir: String): Seq[(Int, String, Long)] = {
-    val rules = train(s, dir)
-    val key = ruleKey(dir)
-    ruleStore.put(key, rules)
-    evictStale(key)
-    rules
-  }
-
-  /** The frozen rules for `dir` — trains on first touch, probes after.
-    * Eviction of superseded keys runs ONLY when this call actually
-    * trained: a pure cache hit must not pay a keySet scan per encode
-    * call, and a racing caller holding a just-stale digest must not be
-    * able to evict a concurrently-frozen fresh entry (which would force
-    * a redundant retrain — no wrong results, just churn).
-    */
-  def frozenRules(s: SparkSession, dir: String): Seq[(Int, String, Long)] = {
-    val key = ruleKey(dir)
-    var trained = false
-    val rules = ruleStore.computeIfAbsent(key, _ => {
-      trained = true
-      train(s, dir)
-    })
-    if (trained) evictStale(key)
     rules
   }
 
@@ -1077,7 +945,7 @@ object TextAnalysis {
     * corpus (the corpus re-join is a broadcast of this table when
     * needed); the K learned rules are driver-local scalars, so the fold
     * unrolls into ONE static K-step replace chain — a plain codegen'd
-    * projection over the shared cached vocabulary, no join, no
+    * projection over the vocabulary, no join, no
     * higher-order-function state. Per-term work is a row-local K-step
     * string fold.
     */
@@ -1087,31 +955,27 @@ object TextAnalysis {
       .limit(VocabTopN)
 
   /** The full encoded vocabulary (term, freq, encoded, n_syms) — the
-    * trained tokenizer as a TABLE (the persisted artifact a deployment
-    * freezes), unlimited and unordered; [[bpeEncode]] declares its top
-    * slice, [[bpeTokenizeCorpus]] broadcasts all of it, and
-    * [[graft.streaming.StreamOps.bpeTokenizeStream]] probes it
-    * stream-static.
+    * trained tokenizer as a TABLE, unlimited and unordered; [[bpeEncode]]
+    * declares its top slice, [[bpeTokenizeCorpus]] broadcasts all of it,
+    * and [[graft.streaming.StreamOps.bpeTokenizeStream]] probes it
+    * stream-static. Each call runs one training pass (eagerly, before
+    * the returned plan exists), as every other index family rebuilds per
+    * call; a caller that probes many times trains once with [[bpeTrain]]
+    * and holds the rules for [[encodedVocabFrom]].
     */
-  def encodedVocab(s: SparkSession, dir: String): DataFrame = {
-    // the K learned rules come from the FROZEN store (train-once /
-    // probe-many — [[frozenRules]]); resolve them BEFORE building the
-    // vocab projection so a cold store's training pass does not
-    // interleave with this plan's cache.
-    val rules = frozenRules(s, dir)
-    encodedVocabFrom(s, dir, rules.map(_._2))
-  }
+  def encodedVocab(s: SparkSession, dir: String): DataFrame =
+    encodedVocabFrom(s, dir, train(s, dir).map(_._2))
 
   /** [[encodedVocab]] from an EXPLICIT rule list (pair strings in learned
-    * order) — the probe half a deployment runs against a persisted rule
-    * table it read back (the bench's build/probe split collects the
-    * frozen 8-row artifact and hands the pairs here). The fold unrolls
+    * order) — the probe half a deployment runs against a rule table it
+    * holds (the bench's build/probe split collects [[bpeTrain]]'s 8-row
+    * artifact from parquet and hands the pairs here). The fold unrolls
     * into one static K-step replace chain — a plain codegen'd projection,
     * no join, no higher-order-function state.
     */
   def encodedVocabFrom(s: SparkSession, dir: String, pairs: Seq[String]): DataFrame = {
     // NO pin here: this projection reads the vocabulary exactly once
-    // (training, behind [[frozenRules]], caches its own scan)
+    // (training caches its own scan)
     val vocab = vocabTable(s, dir)
     val encoded = pairs
       .foldLeft(symString(col("term"))) { case (acc, pair) =>

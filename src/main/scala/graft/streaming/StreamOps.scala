@@ -484,10 +484,12 @@ object StreamOps {
   }
 
   /** Streaming form of [[graft.llm.TextAnalysis.bpeTokenizeCorpus]]:
-    * incoming documents tokenize against the FROZEN encoded vocabulary
-    * ([[graft.llm.TextAnalysis.encodedVocab]] — the persisted tokenizer
-    * artifact) via a stateless stream-static join, emitting one
-    * (doc_id, term, n_syms) row per token in append mode.
+    * incoming documents tokenize against an encoded vocabulary the caller
+    * built once and holds ([[graft.llm.TextAnalysis.encodedVocab]], or
+    * [[graft.llm.TextAnalysis.encodedVocabFrom]] over a held
+    * [[graft.llm.TextAnalysis.bpeTrain]] table) via a stateless
+    * stream-static join, emitting one (doc_id, term, n_syms) row per
+    * token in append mode.
     *
     * Statelessness is load-bearing, and it shapes the contract: the
     * batch form's per-doc collapse is a streaming AGGREGATION (stateful,
@@ -495,7 +497,7 @@ object StreamOps {
     * TOKEN-LEVEL rows — the actual input a training-data writer consumes
     * — and per-doc counts are a downstream batch fold (the spec pins
     * that fold equal to the batch operator). An out-of-vocabulary token
-    * (possible on a stream — the frozen vocabulary only saturates the
+    * (possible on a stream — the held vocabulary only saturates the
     * BASE corpus) simply emits no row, the same drop-unknown contract as
     * the OOV operator's membership join.
     */

@@ -5,8 +5,9 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Bench]]'s timed run counts the cache entries a query leaves behind,
-  * and a Bench run ends with its per-query lines and then the compact
-  * total, after the full line that carries the streaming section.
+  * repeated runs of a query do the same work, and a Bench run ends with
+  * its per-query lines and then the compact total, after the full line
+  * that carries the streaming section.
   */
 class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -33,6 +34,22 @@ class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(clean.metrics.jobs > 0 && clean.metrics.counters.tasks > 0)
     val failed = Bench.timed(spark, metrics, "failed")(sys.error("boom"))
     assert(failed.sec.isEmpty)
+  }
+
+  test("repeated timed runs of a query do the same work: q_bpe_encode retrains each run") {
+    val dir = java.nio.file.Files.createTempDirectory("bench_same_work").toString
+    spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .write.parquet(s"$dir/documents.parquet")
+    val metrics = Metrics.attach(spark.sparkContext)
+    def run() = Bench.timed(spark, metrics, "q_bpe_encode") {
+      SparkEntry.queries("q_bpe_encode")(spark, dir)
+        .write.format("noop").mode("overwrite").save()
+    }
+    val (first, second) = (run(), run())
+    assert(first.sec.nonEmpty && second.sec.nonEmpty)
+    assert(first.metrics.jobs > 0)
+    assert(second.metrics.jobs == first.metrics.jobs,
+      "the second run did less work than the first")
   }
 
   test("the per-query lines follow the full line and the compact total is last") {

@@ -22,10 +22,6 @@ class BenchSplitSpec extends AnyFunSuite {
 
   test("every probe over frozen parquet artifacts equals its declared query") {
     val dir = java.nio.file.Files.createTempDirectory("split_spec").toString
-    // the declared q_bpe_encode result must come from the SAME training
-    // run the build group freezes — force a cold store so the comparison
-    // cannot silently ride a memo from an earlier suite
-    graft.llm.TextAnalysis.invalidateRules()
     val groups = BenchSplits.probes.values.map(_.group).toSeq.distinct.sorted
     groups.foreach { g =>
       BenchSplits.builds(g)(spark, sf).foreach { case (art, df) =>
@@ -48,7 +44,6 @@ class BenchSplitSpec extends AnyFunSuite {
     // freeze artifacts in THIS session...
     val dir = java.nio.file.Files.createTempDirectory("at_rest_art").toString
     val out = java.nio.file.Files.createTempDirectory("at_rest_out").toString
-    graft.llm.TextAnalysis.invalidateRules()
     BenchSplits.probes.values.map(_.group).toSeq.distinct.sorted.foreach { g =>
       BenchSplits.builds(g)(spark, sf).foreach { case (art, df) =>
         df.write.mode("overwrite").parquet(s"$dir/$art")
@@ -56,9 +51,9 @@ class BenchSplitSpec extends AnyFunSuite {
       spark.catalog.clearCache()
     }
     // ...then probe them from a NEW JVM (graft.ProbeAtRest): fresh
-    // SparkSession, empty block-manager, empty rule memo — if any probe
-    // depended on state the build left in this JVM rather than on the
-    // parquet alone, the at-rest run would diverge or die
+    // SparkSession, empty block-manager — if any probe depended on state
+    // the build left in this JVM rather than on the parquet alone, the
+    // at-rest run would diverge or die
     val cmd = Seq(
       s"${System.getProperty("java.home")}/bin/java") ++ GraftSession.addOpens ++ Seq(
       "-Xmx2g", "-cp", System.getProperty("java.class.path"),

@@ -543,53 +543,48 @@ class LlmOpsSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
-  test("bpe frozen rule store: a memo probe is bit-identical to a retrain") {
-    // cold store: the first consumer trains and freezes
-    TextAnalysis.invalidateRules()
-    val cold = TextAnalysis.bpeEncode(spark, sf).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getInt(3)))
-    spark.catalog.clearCache()
-    // warm store: the probe path must reproduce the cold output exactly
-    val warm = TextAnalysis.bpeEncode(spark, sf).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getInt(3)))
-    assert(warm.toSeq == cold.toSeq, "warm-store encode diverged from cold")
-    // the declared BUILD query retrains and refreezes — and determinism
-    // makes the refrozen table identical to what the probe used
-    val retrained = TextAnalysis.bpeTrain(spark, sf).collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
-    val frozen = TextAnalysis.frozenRules(spark, sf)
-    assert(frozen == retrained.toSeq, "frozen store diverged from retrain")
-    spark.catalog.clearCache()
-  }
-
-  test("corpus digest memo: one listing per freeze, rewrite re-lists and re-keys") {
-    // a writable copy of the corpus, so a rewrite can be staged without
-    // touching the read-only testdata
-    val tmp = java.nio.file.Files.createTempDirectory("graft_digest").toString
+  test("bpe training reads the corpus as it is now: a rewrite at the same path retrains") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_bpe_rewrite").toString
+    def rules(dir: String) = TextAnalysis.bpeTrain(spark, dir).collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
     Tables.table(spark, sf, "documents").write.mode("overwrite")
       .parquet(s"$tmp/documents.parquet")
-    TextAnalysis.invalidateRules()
-    val w0 = TextAnalysis.digestWalks.get()
-    val r1 = TextAnalysis.frozenRules(spark, tmp)
-    assert(TextAnalysis.digestWalks.get() - w0 == 1,
-      "the freeze should list the corpus exactly once")
-    // steady-state probes: cache hits validate with an O(1) stat, no
-    // re-listing of the tree
-    val r2 = TextAnalysis.frozenRules(spark, tmp)
-    val r3 = TextAnalysis.frozenRules(spark, tmp)
-    assert(TextAnalysis.digestWalks.get() - w0 == 1,
-      "a steady-state probe re-listed the corpus")
-    assert(r2 == r1 && r3 == r1)
-    // rewriting the data at the same path replaces the part files (fresh
-    // UUIDs + new root mtime): the memo must detect it, re-list once, and
-    // retrain on the changed corpus rather than serve the stale tokenizer
+    val full = rules(tmp)
+    assert(full == rules(sf))
+    // rewriting the data at the same path: the next training run must see
+    // the rewritten corpus, not a table learned from the old one
     Tables.table(spark, sf, "documents")
       .filter(col("doc_id") % 2 === 0).write.mode("overwrite")
       .parquet(s"$tmp/documents.parquet")
-    val r4 = TextAnalysis.frozenRules(spark, tmp)
-    assert(TextAnalysis.digestWalks.get() - w0 == 2,
-      "the rewrite should force exactly one fresh listing")
-    assert(r4 != r1, "rewritten corpus served the stale rule table")
+    val half = rules(tmp)
+    assert(half != full, "rewritten corpus served the old rule table")
+    assert(half.length == TextAnalysis.BpeTrainK)
+    spark.catalog.clearCache()
+  }
+
+  /** A `documents` table holding `texts` in a fresh directory. */
+  private def corpusOf(texts: Seq[String]): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_bpe_corpus").toString
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t, "en") }
+      .toDF("doc_id", "text", "lang")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  test("bpe on an empty corpus learns no rules and encodes nothing") {
+    val dir = corpusOf(Seq.empty)
+    assert(TextAnalysis.bpeTrain(spark, dir).collect().isEmpty)
+    assert(TextAnalysis.bpeEncode(spark, dir).collect().isEmpty)
+    spark.catalog.clearCache()
+  }
+
+  test("bpe on single-letter tokens learns no rules and encodes each term as itself") {
+    val dir = corpusOf(Seq("a b a c", "b a", "c"))
+    assert(TextAnalysis.bpeTrain(spark, dir).collect().isEmpty)
+    val enc = TextAnalysis.bpeEncode(spark, dir).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getInt(3))).toSeq
+    assert(enc == Seq(("a", 3L, "a", 1), ("b", 2L, "b", 1), ("c", 2L, "c", 1)))
     spark.catalog.clearCache()
   }
 

@@ -467,13 +467,13 @@ class PlanSpec extends AnyFunSuite {
 
   test("bpe encode: unrolled literal fold, no join, single uncached scan") {
     val p = plan("q_bpe_encode")
-    // the learned rules come from the FROZEN store as driver-local
+    // the learned rules come from a training run as driver-local
     // literals: the encode must be a plain projection — no join of any
     // kind between rules and vocabulary
     assert(!p.contains("Join") && !p.contains("CartesianProduct"),
       s"rule application must be a literal projection, not a join:\n${p.take(1200)}")
     // since the train/encode split, this plan has exactly ONE consumer of
-    // the vocabulary (training runs behind frozenRules on its own scan) —
+    // the vocabulary (training runs first, on its own cached scan) —
     // a cache here would be pure pinned overhead, so its ABSENCE is the
     // pinned property now, along with the single corpus scan + heap top-K
     assert(!p.contains("InMemoryTableScan"),
