@@ -165,7 +165,7 @@ object BenchStreaming {
       s"${e._4}:${(e._5 * 100).toLong / 500}:${e._2.getTime / 86400000L}"))
     val nDigests = digests.map(_._2).distinct.size.toLong
 
-    // views/clicks split for the interval twins
+    // views/clicks split for the interval-join twin
     val views = events.filter(_._4 == "view").map(e => (e._1, e._3, e._2))
     val clicks = events.filter(_._4 == "click").map(e => (e._1, e._3, e._2))
 
@@ -315,14 +315,6 @@ object BenchStreaming {
         chunked(views), Seq("event_id", "user_id", "ts"),
         chunked(clicks), Seq("event_id", "user_id", "ts"),
         StreamOps.intervalJoinStream,
-        views.size + clicks.size - 1,
-        "watermark evicts: buffered rows < total input")),
-      "attribution" -> (() => measure2(
-        chunked(views.map(v => (v._1, v._2, v._3))),
-        Seq("view_id", "user_id", "view_ts"),
-        chunked(clicks.map(c => (c._1, c._2, c._3))),
-        Seq("click_id", "c_user", "click_ts"),
-        (v, c) => StreamOps.attributionStream(v, c),
         views.size + clicks.size - 1,
         "watermark evicts: buffered rows < total input")))
 

@@ -194,8 +194,7 @@ object GraftCatalog {
       .createOrReplaceTempView("erasure_report")
     graft.ops.IncrementalOps.ivmSketch(spark, sfDir)
       .createOrReplaceTempView("ivm_sketch")
-    graft.ops.IntervalOps.firstTouchAttribution(spark, sfDir,
-        windowSeconds = graft.ops.IntervalOps.FirstTouchWindowSeconds)
+    graft.ops.IntervalOps.firstTouchAttribution(spark, sfDir)
       .createOrReplaceTempView("first_touch_attr")
     graft.ops.AnalyticsOps.funnelLatency(spark, sfDir)
       .createOrReplaceTempView("funnel_latency")

@@ -12,6 +12,10 @@ package graft
   * the optimization rounds' evidence files (`plans/r13/<q>_before.txt`).
   * Formatted mode shows what the executed-plan toString hides: scan
   * PushedFilters/ReadSchema, join build sides, exchange partitioning.
+  *
+  * The cache is cleared after each query, as Verify and Bench do, so a
+  * dumped plan never reads what an earlier query left pinned.
+  * `tools/plandiff.py` compares two dump directories.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -35,6 +39,7 @@ object PlanDump {
             java.nio.file.Paths.get(s"$dir/$n$suffix"),
             plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
           println(s"[plandump] wrote $dir/$n$suffix")
+          spark.catalog.clearCache()
         }
       case None =>
         names.foreach { n =>
@@ -42,6 +47,7 @@ object PlanDump {
           println("```")
           println(SparkEntry.queries(n)(spark, sfDir).queryExecution.executedPlan.toString.trim)
           println("```")
+          spark.catalog.clearCache()
         }
     }
     spark.stop()

@@ -215,11 +215,7 @@ object SparkEntry {
         CoreOps.RangeFrameMicros)
     }),
     "q_j9_interval" -> ((s, dir) => IntervalOps.viewClickAttribution(s, dir)),
-    "q_j9b_first_touch" -> ((s, dir) =>
-      // day-long consideration window (rationale + the single source of
-      // truth for all three sites: IntervalOps.FirstTouchWindowSeconds)
-      IntervalOps.firstTouchAttribution(s, dir,
-        windowSeconds = IntervalOps.FirstTouchWindowSeconds)),
+    "q_j9b_first_touch" -> (IntervalOps.firstTouchAttribution _),
     "q_funnel_latency" -> (graft.ops.AnalyticsOps.funnelLatency _),
     "q_w4_sliding" -> (StreamOps.slidingCounts _),
     "q_w2_tumbling" -> (StreamOps.tumblingCounts _),

@@ -19,6 +19,13 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Guards the scoped nanosAsLong conf flip in [[table]]: the session
+    * conf is shared, so two concurrent `table(_, _, "events")` calls
+    * (parallel test suites, streaming+batch on one session) could otherwise
+    * race the restore and leave the flag flipped for unrelated reads.
+    */
+  private val nanosConfLock = new Object
+
   /** Read one table from a scale-factor directory.
     *
     * `events.ts` is written as Parquet TIMESTAMP(NANOS), which Spark 4 has
@@ -26,13 +33,6 @@ object Tables {
     * and surface a proper micros `TimestampType` column, so downstream
     * window/stream operators see a real timestamp.
     */
-  /** Guards the scoped nanosAsLong conf flip below: the session conf is
-    * shared, so two concurrent `table(_, _, "events")` calls (parallel test
-    * suites, streaming+batch on one session) could otherwise race the
-    * restore and leave the flag flipped for unrelated reads.
-    */
-  private val nanosConfLock = new Object
-
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     if (name == "events") {
       // scoped conf flip: needed only while the footer schema is inferred

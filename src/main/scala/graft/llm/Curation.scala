@@ -423,10 +423,8 @@ object Curation {
     * is never shuffled and never sees a window.
     */
   def sourceMixTemperature(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").filter(col("source").rlike("src[0-9]+"))
-      .join(broadcast(mixTempRates(s, dir)), Seq("source"))
-      .filter(mixTempKeep)
-      .select(col("doc_id"), col("source"), col("mix_weight"), col("keep_bp"))
+    graft.streaming.StreamOps.mixTempStream(t(s, dir, "documents"),
+        mixTempRates(s, dir))
       .orderBy("doc_id")
 
   /** The tiny per-source rate frame the temperature mix broadcasts:

@@ -311,19 +311,22 @@ object Sketches {
       .orderBy(col("exact_freq").desc, col("term"))
       .limit(CmsProbeK)
     probes.crossJoin(sk)
-      .select(col("term"), cmsProbe.as("est_freq"), col("exact_freq"),
-        (cmsProbe - col("exact_freq")).as("overcount"))
+      .select(col("term"), cmsProbe(col("term")).as("est_freq"), col("exact_freq"),
+        (cmsProbe(col("term")) - col("exact_freq")).as("overcount"))
       .orderBy("term")
   }
 
-  /** The min-of-d-counters point estimate read from a broadcast `cms`
-    * column for the current row's `term` — shared by [[cmsTermFreq]] and
-    * [[cmsTopK]] so the probe arithmetic has one definition.
+  /** The min-of-d-counters point estimate of `term` read from the
+    * current row's `cms` matrix — shared by [[cmsTermFreq]], [[cmsTopK]]
+    * and the per-window stream monitor
+    * ([[graft.streaming.StreamOps.cmsPerWindowStream]]) so the probe
+    * arithmetic has one definition.
     */
-  private def cmsProbe: org.apache.spark.sql.Column =
+  private[graft] def cmsProbe(term: org.apache.spark.sql.Column)
+      : org.apache.spark.sql.Column =
     least((0 until CmsD).map(i =>
       element_at(col("cms"),
-        (md5Long(concat(lit(s"cms$i:"), col("term"))) % CmsW).cast("int")
+        (md5Long(concat(lit(s"cms$i:"), term)) % CmsW).cast("int")
           + lit(i * CmsW) + lit(1))): _*)
 
   /** Heavy hitters kept by [[cmsTopK]]. */
@@ -358,8 +361,8 @@ object Sketches {
       .groupBy(col("term"))
       .agg(count(lit(1)).as("exact_freq"))
     vocab.crossJoin(sk)
-      .select(col("term"), cmsProbe.as("est_freq"), col("exact_freq"),
-        (cmsProbe - col("exact_freq")).as("overcount"))
+      .select(col("term"), cmsProbe(col("term")).as("est_freq"), col("exact_freq"),
+        (cmsProbe(col("term")) - col("exact_freq")).as("overcount"))
       .orderBy(col("est_freq").desc, col("term"))
       .limit(CmsTopN)
   }

@@ -925,12 +925,8 @@ object TextAnalysis {
   }
 
   /** One training run over the `dir` corpus's vocabulary. */
-  private def train(s: SparkSession, dir: String): Seq[(Int, String, Long)] = {
-    val vocab = vocabTable(s, dir).cache()
-    val rules = trainedRules(vocab)
-    vocab.unpersist() // training consumed it; probes re-derive
-    rules
-  }
+  private def train(s: SparkSession, dir: String): Seq[(Int, String, Long)] =
+    Reuse.released(trainedRules(Reuse(vocabTable(s, dir))))
 
   /** The ENCODE half of the tokenizer story, consuming [[bpeTrain]]'s
     * rule table: each learned rule, in round order, rewrites every
@@ -1389,18 +1385,16 @@ object TextAnalysis {
   /** The PROBE half alone, over any prebuilt [[bm25Index]]-shaped frame —
     * what a serving tier runs against the PERSISTED index (the bench's
     * build/probe split hands it the frozen parquet): broadcast query
-    * terms prune the posting table, row-local scoring, one per-(query,
-    * doc) sum. Zero text scans.
+    * terms prune the posting table, row-local scoring
+    * ([[graft.streaming.StreamOps.bm25ProbeStream]], the stream probe's
+    * own join), one per-(query, doc) sum. Zero text scans.
     */
   def bm25Probe(s: SparkSession, index: DataFrame): DataFrame = {
     import s.implicits._
     val qterms = broadcast(
       Bm25Queries.flatMap { case (q, ts) => ts.map(t => (q, t)) }
         .toDF("query_id", "term"))
-    bm25Collapse(
-      index
-        .join(qterms, Seq("term"))
-        .select(col("query_id"), col("doc_id"), bm25TermScore.as("s9")))
+    bm25Collapse(graft.streaming.StreamOps.bm25ProbeStream(qterms, index))
   }
 
   /** Adjacent word pairs of a token array — the order-sensitive bigram

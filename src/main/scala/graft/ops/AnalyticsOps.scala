@@ -233,32 +233,19 @@ object AnalyticsOps {
     * and last are defined by the TOTAL order (ts micros, event_id), so
     * ties on the timestamp cannot flip the bar cross-engine.
     *
-    * Shape: ONE shuffle on the (type, hour) bar key; `row_number` and the
-    * whole-partition `count` share the same partitioning (the unordered
-    * count window needs no extra sort pass), and the final collapse
-    * reuses it too. Open/close fall out of the ordered pass as
-    * conditional aggregates — no self-join back onto the bar, no
-    * arg_min/arg_max whose tie rule would be engine-private.
+    * The body is the stream twin [[graft.streaming.StreamOps.ohlcStream]]
+    * over the table: ONE shuffle on the (window, type) bar key, open/close
+    * as `min_by`/`max_by` aggregates on the total order (no window pass,
+    * no self-join back onto the bar); the hour index is the window start
+    * in [[OhlcBucketUs]] units.
     */
-  def ohlcResample(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-      .select(col("event_type"), unix_micros(col("ts")).as("us"),
-        col("event_id"), cents(col("value")).as("cents"))
-      .withColumn("hr", expr(s"us div $OhlcBucketUs"))
-    val part = Window.partitionBy(col("event_type"), col("hr"))
-    val wo = part.orderBy(col("us").asc, col("event_id").asc)
-    ev.withColumn("rn", row_number().over(wo))
-      .withColumn("cnt", count(lit(1)).over(part))
-      .groupBy(col("event_type"), col("hr"))
-      .agg(
-        max(when(col("rn") === 1, col("cents"))).as("open_cents"),
-        max(col("cents")).as("high_cents"),
-        min(col("cents")).as("low_cents"),
-        max(when(col("rn") === col("cnt"), col("cents"))).as("close_cents"),
-        count(lit(1)).as("n_events"),
-        sum(col("cents")).as("vol_cents"))
+  def ohlcResample(s: SparkSession, dir: String): DataFrame =
+    graft.streaming.StreamOps.ohlcStream(t(s, dir, "events"))
+      .select(col("event_type"),
+        expr(s"unix_micros(window_start) div $OhlcBucketUs").as("hr"),
+        col("open_cents"), col("high_cents"), col("low_cents"),
+        col("close_cents"), col("n_events"), col("vol_cents"))
       .orderBy("event_type", "hr")
-  }
 
   /** Winsorization band, in percent: clip below the p05 and above the p95
     * rank values.

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.{table => t}
 
@@ -20,71 +20,89 @@ import graft.Tables.{table => t}
   */
 object IntervalOps {
 
-  /** Generic core: views (view_id, user_id, v_us) ⋈ clicks (click_id,
-    * c_user, c_us) on the user key, click strictly after the view and
-    * within `windowMicros` of it (inclusive upper bound), with the
+  /** The view side of an events-shaped frame: (view_id, user_id, v_ts). */
+  private[graft] def viewSide(ev: DataFrame): DataFrame =
+    ev.select(col("event_id").as("view_id"), col("user_id"),
+      col("ts").as("v_ts"))
+
+  /** The click side of an events-shaped frame: (click_id, c_user, c_ts). */
+  private[graft] def clickSide(ev: DataFrame): DataFrame =
+    ev.select(col("event_id").as("click_id"), col("user_id").as("c_user"),
+      col("ts").as("c_ts"))
+
+  /** The ONE view→click event-time predicate: every (view, click) pair of
+    * the same user with the click strictly after the view and at most
+    * `windowUs` after it (inclusive upper bound). Timestamps hold epoch
+    * micros; `+ INTERVAL` adds the sub-day part exactly and whole days in
+    * the session time zone, so in the UTC every graft session runs in the
+    * bounds are exact. The predicate stays on the watermarked timestamp
+    * columns because that is the form a stream-stream join can evict
+    * state by. Serves the stream twin
+    * ([[graft.streaming.StreamOps.intervalJoinStream]], hence
+    * [[viewClickAttribution]]), [[firstTouchAttribution]] and
+    * [[intervalJoinMicros]].
+    */
+  private[graft] def pairs(views: DataFrame, clicks: DataFrame,
+      windowUs: Long): DataFrame =
+    views.join(clicks,
+      col("user_id") === col("c_user") &&
+        col("c_ts") > col("v_ts") &&
+        col("c_ts") <= col("v_ts") + expr(s"INTERVAL $windowUs MICROSECONDS"))
+
+  /** Whole seconds from a pair's view to its click, floored. */
+  private[graft] val delaySeconds: Column =
+    floor((unix_micros(col("c_ts")) - unix_micros(col("v_ts")))
+      / lit(1000000L)).as("delay_s")
+
+  /** [[pairs]] over micros columns: views (view_id, user_id, v_us) ⋈
+    * clicks (click_id, c_user, c_us) within `windowMicros`, with the
     * floor-second delay. Property-pinned against a naive all-pairs
     * reference on boundary-dense inputs (IntervalProps).
     */
   def intervalJoinMicros(views: DataFrame, clicks: DataFrame,
       windowMicros: Long): DataFrame =
-    views.join(clicks,
-        col("user_id") === col("c_user") &&
-          col("c_us") > col("v_us") &&
-          col("c_us") <= col("v_us") + lit(windowMicros))
-      .select(col("view_id"), col("click_id"), col("user_id"),
-        floor((col("c_us") - col("v_us")) / lit(1000000L)).as("delay_s"))
+    pairs(views.withColumn("v_ts", timestamp_micros(col("v_us"))),
+        clicks.withColumn("c_ts", timestamp_micros(col("c_us"))), windowMicros)
+      .select(col("view_id"), col("click_id"), col("user_id"), delaySeconds)
 
-  /** Every click by the same user strictly after a view and within
-    * `windowSeconds` of it, with the floor-second delay.
+  /** `q_j9_interval`: every click by the same user strictly after a view
+    * and within [[graft.streaming.StreamOps.IntervalJoinWindowSeconds]]
+    * of it, with the floor-second delay — the stream twin over the table.
     */
-  def viewClickAttribution(s: SparkSession, dir: String,
-      windowSeconds: Long = 600L): DataFrame = {
+  def viewClickAttribution(s: SparkSession, dir: String): DataFrame = {
     val ev = t(s, dir, "events")
-    val views = ev.filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id"),
-        unix_micros(col("ts")).as("v_us"))
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-        unix_micros(col("ts")).as("c_us"))
-    intervalJoinMicros(views, clicks, windowSeconds * 1000000L)
+    graft.streaming.StreamOps.intervalJoinStream(
+        ev.filter(col("event_type") === "view"),
+        ev.filter(col("event_type") === "click"))
       .orderBy("view_id", "click_id")
   }
 
+  /** The declared `q_j9b_first_touch` consideration window: a DAY — at the
+    * fixture's event density the 10-minute j9 window never yields a
+    * multi-candidate click, which would make the first-touch argmin
+    * vacuous (139 multi-candidate clicks at sf0.01 with a day). One
+    * constant feeds the operator, the GraftCatalog view and the SQL
+    * oracle (as micros) so an edit cannot desync the three sites.
+    */
+  val FirstTouchWindowSeconds = 86400L
+
   /** FIRST-TOUCH attribution — the credit-assignment policy on top of
-    * [[viewClickAttribution]]'s candidate pairs: each click credits the
-    * EARLIEST view inside its window (marketing's "what started the
+    * [[pairs]]: each click credits the EARLIEST view inside its
+    * [[FirstTouchWindowSeconds]] window (marketing's "what started the
     * journey", vs the pair table's every-candidate reading; last-touch is
     * the same argmin with the order flipped). The argmin runs as one
     * `min_by` aggregate over the pair table under the unique
     * (v_us, view_id) order — an aggregate, not a window: no per-click
     * sort, map-side-combinable, the arg-min-by-struct device.
     */
-  /** The declared `q_j9b_first_touch` consideration window: a DAY — at the
-    * fixture's event density the 10-minute j9 window never yields a
-    * multi-candidate click, which would make the first-touch argmin
-    * vacuous (139 multi-candidate clicks at sf0.01 with a day). One
-    * constant feeds the registry lambda, the GraftCatalog view mount, and
-    * the SQL oracle (as micros) so an edit cannot desync the three sites.
-    */
-  val FirstTouchWindowSeconds = 86400L
-
-  def firstTouchAttribution(s: SparkSession, dir: String,
-      windowSeconds: Long = 600L): DataFrame = {
+  def firstTouchAttribution(s: SparkSession, dir: String): DataFrame = {
     val ev = t(s, dir, "events")
-    val views = ev.filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id"),
-        unix_micros(col("ts")).as("v_us"))
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-        unix_micros(col("ts")).as("c_us"))
-    val pairs = views.join(clicks,
-        col("user_id") === col("c_user") &&
-          col("c_us") > col("v_us") &&
-          col("c_us") <= col("v_us") + lit(windowSeconds * 1000000L))
-      .select(col("click_id"), col("user_id"), col("c_us"),
-        col("view_id"), col("v_us"))
-    pairs
+    pairs(viewSide(ev.filter(col("event_type") === "view")),
+        clickSide(ev.filter(col("event_type") === "click")),
+        FirstTouchWindowSeconds * 1000000L)
+      .select(col("click_id"), col("user_id"),
+        unix_micros(col("c_ts")).as("c_us"), col("view_id"),
+        unix_micros(col("v_ts")).as("v_us"))
       .groupBy(col("click_id"))
       .agg(
         // constant per click group; max (order-insensitive) rather than

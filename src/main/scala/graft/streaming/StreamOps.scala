@@ -13,11 +13,39 @@ import java.sql.Timestamp
   * training-data pipeline needs over the `events` stream: watermarked
   * tumbling-window aggregation and stateful sessionization.
   *
-  * Each operator exists twice with identical semantics:
-  *  - a batch DataFrame form (declared in SparkEntry.queries, DuckDB-checked)
-  *  - a streaming form over any readStream source (unit-tested with a memory
-  *    stream; at scale the same code runs on Kafka/file sources with
-  *    checkpointing, and the batch form is its backfill)
+  * Each streaming operator is the live form of a declared batch query
+  * (declared in SparkEntry.queries, DuckDB-checked). Where the two compute
+  * the same rows there is ONE frame-level body, and the batch query is that
+  * body applied to the table, then its ORDER BY and output projection; on a
+  * batch frame Spark's `EliminateEventTimeWatermark` drops the watermark.
+  * One body serves both forms of:
+  *  - tumbling counts ([[tumblingCounts]] over [[tumblingCountsStream]]),
+  *  - the per-window KMV sketch ([[distinctPerWindow]]'s sketch half is
+  *    [[distinctPerWindowStream]]; the exact count(DISTINCT) beside it is
+  *    batch-only, its state being unbounded),
+  *  - OHLC bars ([[graft.ops.AnalyticsOps.ohlcResample]] over [[ohlcStream]]),
+  *  - the temperature mix ([[graft.llm.Curation.sourceMixTemperature]]
+  *    over [[mixTempStream]]),
+  *  - the BM25 probe ([[graft.llm.TextAnalysis.bm25Probe]]'s scoring join is
+  *    [[bm25ProbeStream]]),
+  *  - the view→click interval join ([[graft.ops.IntervalOps]]' one
+  *    predicate under [[intervalJoinStream]], `q_j9_interval` and
+  *    `q_j9b_first_touch`),
+  *  - the CMS point probe ([[graft.llm.Sketches.cmsProbe]]).
+  *
+  * The other twins keep a body of their own because the two forms are
+  * different algorithms: [[langidStream]] scores each row against literal
+  * profiles where the batch form joins a broadcast profile table; the
+  * `flatMapGroupsWithState` twins carry per-key state where the batch
+  * forms run windows over whole partitions; [[histQuantilesStream]] bins
+  * event cents per window where the batch form bins document lengths per
+  * language beside the exact rank. The remaining probes emit per-row
+  * values against a frozen artifact and leave the per-key fold, stateful
+  * on a non-time key, to a downstream batch step.
+  *
+  * Each pair is pinned stream ≡ batch in StreamOpsSpec; at scale the same
+  * streaming code runs on Kafka/file sources with checkpointing, and the
+  * batch form is its backfill.
   */
 object StreamOps {
 
@@ -25,15 +53,11 @@ object StreamOps {
 
   // ---- batch forms (oracle-checked) -------------------------------------
 
-  /** Tumbling 1-hour windows per event type: count + exact value cents. */
+  /** Tumbling 1-hour windows per event type: count + exact value cents —
+    * [[tumblingCountsStream]] over the table.
+    */
   def tumblingCounts(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(
-        window(col("ts"), "1 hour").getField("start").as("window_start"),
-        col("event_type"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        sum(round(col("value") * 100).cast("bigint")).as("value_cents"))
+    tumblingCountsStream(t(s, dir, "events"))
       .orderBy("window_start", "event_type")
 
   /** Sliding 1-hour windows every 30 minutes: each event lands in two
@@ -53,30 +77,24 @@ object StreamOps {
     * bounded O(k) state is exactly what an unbounded stream's state store
     * needs, where exact count(DISTINCT) state grows with the key space.
     * The hash is the engine-portable md5 ([[TextHash.md5Long]] shape), so
-    * the oracle pins sketch size, kth hash, and estimate per window.
+    * the oracle pins sketch size, kth hash, and estimate per window. The
+    * sketch half is [[distinctPerWindowStream]] over the table.
     */
   def distinctPerWindow(s: SparkSession, dir: String): DataFrame = {
-    val k = graft.llm.Sketches.KmvK
-    val h = graft.llm.Sketches.kmvHash(col("user_id"))
-    val windowed = t(s, dir, "events")
-      .select(window(col("ts"), "1 hour").getField("start").as("window_start"),
-        h.as("h"), col("user_id"))
+    val ev = t(s, dir, "events")
     // sketch and exact aggregate SEPARATELY (the fused form triggers
     // Spark's distinct-rewrite, building sketch state per distinct key —
     // see Sketches.kmvDistinct) and join over the handful of window rows
-    val sketch = windowed.groupBy(col("window_start"))
-      .agg(graft.functions.KMinValues(col("h"), k).as("kmv"))
-    val exact = windowed.groupBy(col("window_start"))
+    val exact = ev
+      .groupBy(window(col("ts"), "1 hour").getField("start").as("window_start"))
       .agg(countDistinct(col("user_id")).as("exact_users"))
-    sketch.join(broadcast(exact), Seq("window_start"))
-      .select(col("window_start"),
-        size(col("kmv")).as("n_hashes"),
-        graft.llm.Sketches.kmvEstimate(col("kmv")).as("est_users"),
+    distinctPerWindowStream(ev).join(broadcast(exact), Seq("window_start"))
+      .select(col("window_start"), col("n_hashes"), col("est_users"),
         col("exact_users"))
       .orderBy("window_start")
   }
 
-  /** The streaming form of [[distinctPerWindow]]: watermarked tumbling
+  /** The sketch half of [[distinctPerWindow]]: watermarked tumbling
     * windows, KMV sketch per window — per-window state is ≤ k longs
     * regardless of stream cardinality, and windows older than the
     * watermark are evicted. (The exact column is deliberately absent
@@ -218,35 +236,27 @@ object StreamOps {
     * windows. Spec pins stream ≡ the batch matrix window-for-window.
     */
   def cmsPerWindowStream(events: DataFrame): DataFrame = {
-    import graft.llm.Sketches.{cmsBuckets, CmsD, CmsW}
-    import graft.llm.TextHash.md5Long
-    def probe(tpe: String) =
-      least((0 until CmsD).map(i =>
-        element_at(col("cms"),
-          (md5Long(concat(lit(s"cms$i:"), lit(tpe))) % CmsW).cast("int")
-            + lit(i * CmsW) + lit(1))): _*)
+    import graft.llm.Sketches.{cmsBuckets, cmsProbe, CmsD, CmsW}
     events
       .withWatermark("ts", "2 hours")
       .select(col("ts"), cmsBuckets(col("event_type")).as("bk"))
       .groupBy(window(col("ts"), "1 hour"))
       .agg(graft.functions.CmsSketch(col("bk"), CmsD, CmsW).as("cms"))
       .select(col("window.start").as("window_start") +:
-        DqEventTypes.map(tpe => probe(tpe).as(s"est_$tpe")): _*)
+        DqEventTypes.map(tpe => cmsProbe(lit(tpe)).as(s"est_$tpe")): _*)
   }
 
-  /** Watermarked OHLC bars — the streaming twin of
+  /** Watermarked OHLC bars, the body of
     * [[graft.ops.AnalyticsOps.ohlcResample]]: per (event_type, 1-hour
     * window) open/high/low/close integer cents plus count/volume, with
-    * open/close selected by `min_by`/`max_by` under the SAME
-    * (epoch-micros, event_id) total order the batch form sorts by, so a
-    * timestamp tie picks the identical event in both forms. All six
+    * open/close selected by `min_by`/`max_by` under the
+    * (epoch-micros, event_id) total order, so a timestamp tie picks the
+    * same event on every engine and in every arrival order. All six
     * aggregates are declarative and associative — per-bar state is a few
     * longs plus the two ordering keys, merged across partial
-    * aggregations; the watermark evicts closed bars, bounding the state
-    * store at O(open bars). The batch form reads the extremes off one
-    * sorted window pass instead (row_number against the partition count)
-    * — same answer, proved by the spec's replay; `min_by` is the
-    * streaming-friendly formulation because it never needs the sort.
+    * aggregations (the struct keys make Spark plan a sort aggregate, not
+    * a hash aggregate); the watermark evicts closed bars, bounding the
+    * state store at O(open bars).
     */
   def ohlcStream(events: DataFrame): DataFrame = {
     val ord = struct(unix_micros(col("ts")).as("us"), col("event_id"))
@@ -346,31 +356,6 @@ object StreamOps {
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("digest")
 
-  /** Stream-stream interval join (the streaming form of
-    * [[graft.ops.IntervalOps.viewClickAttribution]]): clicks join views of
-    * the same user arriving strictly after the view and within `window` of
-    * it. Watermarks on BOTH sides plus the event-time range in the join
-    * condition are what make this runnable on unbounded streams: Spark can
-    * prove a buffered view can no longer match once the click watermark
-    * passes `view_ts + window`, and evicts it — state stays O(activity in
-    * the window), never O(stream).
-    *
-    * Input schemas: views (view_id, user_id, view_ts), clicks
-    * (click_id, c_user, click_ts).
-    */
-  def attributionStream(views: DataFrame, clicks: DataFrame,
-      window: String = "10 minutes"): DataFrame = {
-    val v = views.withWatermark("view_ts", window)
-    val c = clicks.withWatermark("click_ts", window)
-    v.join(c,
-      col("user_id") === col("c_user") &&
-        col("click_ts") > col("view_ts") &&
-        col("click_ts") <= col("view_ts") + expr(s"INTERVAL $window"))
-      .select(col("view_id"), col("click_id"), col("user_id"),
-        floor((unix_micros(col("click_ts")) - unix_micros(col("view_ts"))) /
-          lit(1000000L)).as("delay_s"))
-  }
-
   /** Streaming incremental near-dup dedup — the stream-static form of
     * [[graft.llm.Dedup.incrementalDedup]]: incoming documents (doc_id,
     * text) probe the corpus's persisted MinHash index
@@ -420,11 +405,11 @@ object StreamOps {
       .filter(col("est_jac") >= JaccardThreshold)
   }
 
-  /** Streaming form of [[graft.llm.Curation.sourceMixTemperature]]: the
-    * per-source rates are FROZEN from a corpus snapshot
-    * ([[graft.llm.Curation.mixTempRates]]) and probed as a stream-static
-    * broadcast lookup per micro-batch; the keep/drop itself is the same
-    * row-local md5-bucket predicate as the batch form. Stateless,
+  /** The temperature mix, the body of
+    * [[graft.llm.Curation.sourceMixTemperature]]: the per-source rates
+    * ([[graft.llm.Curation.mixTempRates]]; FROZEN from a corpus snapshot
+    * on a stream) are a broadcast lookup, and the keep/drop is a
+    * row-local md5-bucket predicate. On a stream it is stateless,
     * append-mode, no watermark — incoming documents are admitted at scan
     * speed against the frozen mixture. (Re-freezing the rates as the
     * corpus drifts is an orchestration choice, exactly like the persisted
@@ -509,8 +494,9 @@ object StreamOps {
         Seq("term"))
       .select(col("doc_id"), col("term"), col("n_syms"))
 
-  /** Streaming form of [[graft.llm.TextAnalysis.bm25Indexed]] — the
-    * serving path of the retrieval tier: a stream of queries
+  /** The scoring join of [[graft.llm.TextAnalysis.bm25Probe]] (hence
+    * [[graft.llm.TextAnalysis.bm25Indexed]]) — the serving path of the
+    * retrieval tier: a stream of queries
     * (query_id, term) probes the FROZEN inverted index
     * ([[graft.llm.TextAnalysis.bm25Index]], the persisted posting table)
     * via ONE stateless stream-static equi-join on term, emitting each
@@ -519,11 +505,12 @@ object StreamOps {
     * The index's denormalization is what makes this a single join: df and
     * the corpus scalars (N, Σdl) ride every posting row, so the score
     * ([[graft.llm.TextAnalysis.bm25TermScore]] — the same one definition
-    * the batch forms use) is row-local after the probe; nothing else is
-    * looked up from inside the stream. The per-(query, doc) sum and the
-    * top-k rank are aggregations on non-time keys — stateful in a stream —
-    * so they stay a downstream batch fold, and the spec pins that fold
-    * equal to the batch [[graft.llm.TextAnalysis.bm25Indexed]] rows. On a
+    * [[graft.llm.TextAnalysis.bm25TopDocs]] uses) is row-local after the
+    * probe; nothing else is looked up from inside the stream. The
+    * per-(query, doc) sum and the top-k rank are aggregations on non-time
+    * keys — stateful in a stream — so they stay a downstream batch fold,
+    * and the spec pins that fold equal to the batch
+    * [[graft.llm.TextAnalysis.bm25Indexed]] rows. On a
     * deployment the static side is bucketed by term, so each micro-batch
     * probe prunes to its query terms' posting lists.
     */
@@ -668,43 +655,31 @@ object StreamOps {
       .select(col("window.start").as("window_start"), col("event_type"),
         col("bin"), col("n"))
 
-  /** Attribution window of the stream-stream interval join, matching the
-    * batch default ([[graft.ops.IntervalOps.viewClickAttribution]]'s
-    * 600 s).
+  /** Attribution window of the view→click interval join: the stream twin
+    * and `q_j9_interval` ([[graft.ops.IntervalOps.viewClickAttribution]]).
     */
   val IntervalJoinWindowSeconds = 600L
 
-  /** Streaming form of [[graft.ops.IntervalOps.viewClickAttribution]]
-    * (q_j9_interval) — the STREAM-STREAM event-time range join, the one
-    * Structured Streaming join mode the stream-static twins don't
-    * exercise: two live streams (views, clicks) join per user on
-    * `v_ts < c_ts <= v_ts + window`, each side watermarked so the engine
-    * can bound the join state — a view is held only until the watermark
-    * passes the end of its attribution window, a click until its own
-    * event time ages out; without BOTH watermarks and the two-sided time
-    * constraint the state would grow forever, which is why the range
-    * condition is part of the JOIN predicate rather than a post-filter.
-    * Emits the same (view_id, click_id, user_id, delay_s) rows as the
-    * batch operator in append mode; the spec replays a batch of real
-    * events through both and pins row equality.
+  /** The view→click interval join, the body of `q_j9_interval`
+    * ([[graft.ops.IntervalOps.viewClickAttribution]]) — the
+    * STREAM-STREAM event-time range join, the one Structured Streaming
+    * join mode the stream-static twins don't exercise: two live streams
+    * (views, clicks; schema (event_id, user_id, ts)) join per user on
+    * [[graft.ops.IntervalOps.pairs]]' `v_ts < c_ts <= v_ts + window`,
+    * each side watermarked so the engine can bound the join state — a
+    * view is held only until the watermark passes the end of its
+    * attribution window, a click until its own event time ages out;
+    * without BOTH watermarks and the two-sided time constraint the state
+    * would grow forever, which is why the range condition is part of the
+    * JOIN predicate rather than a post-filter. Emits
+    * (view_id, click_id, user_id, delay_s) in append mode.
     */
   def intervalJoinStream(views: DataFrame, clicks: DataFrame): DataFrame = {
-    val v = views
-      .select(col("event_id").as("view_id"), col("user_id"),
-        col("ts").as("v_ts"))
-      .withWatermark("v_ts", "1 hour")
-    val c = clicks
-      .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", "1 hour")
-    v.join(c,
-        col("user_id") === col("c_user") &&
-          col("c_ts") > col("v_ts") &&
-          col("c_ts") <= col("v_ts") +
-            expr(s"INTERVAL $IntervalJoinWindowSeconds SECONDS"))
-      .select(col("view_id"), col("click_id"), col("user_id"),
-        floor((unix_micros(col("c_ts")) - unix_micros(col("v_ts")))
-          / lit(1000000L)).as("delay_s"))
+    import graft.ops.IntervalOps.{clickSide, delaySeconds, pairs, viewSide}
+    pairs(viewSide(views).withWatermark("v_ts", "1 hour"),
+        clickSide(clicks).withWatermark("c_ts", "1 hour"),
+        IntervalJoinWindowSeconds * 1000000L)
+      .select(col("view_id"), col("click_id"), col("user_id"), delaySeconds)
   }
 
   /** Incremental sync via foreachBatch (SURVEY.md §2.9: the batch

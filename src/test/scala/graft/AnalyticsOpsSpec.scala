@@ -457,7 +457,7 @@ class AnalyticsOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     }.sortBy(_._1).toSeq
     val got = graft.ops.IntervalOps
-      .firstTouchAttribution(spark, dir, windowSeconds = 86400L).collect()
+      .firstTouchAttribution(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toSeq
     assert(got == want && got.nonEmpty)

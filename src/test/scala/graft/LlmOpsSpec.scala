@@ -562,6 +562,19 @@ class LlmOpsSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
+  test("bpe training keeps a vocabulary the caller pinned") {
+    spark.catalog.clearCache()
+    // bpeMergeStep pins the vocabulary through Reuse outside any scope,
+    // so the pin is the caller's; bpePairs reads that same plan unpinned
+    TextAnalysis.bpeMergeStep(spark, sf)
+    def pinned = TextAnalysis.bpePairs(spark, sf)
+      .queryExecution.executedPlan.toString.contains("InMemoryTableScan")
+    assert(pinned)
+    assert(TextAnalysis.bpeTrain(spark, sf).collect().nonEmpty)
+    assert(pinned, "training dropped the caller's vocabulary pin")
+    spark.catalog.clearCache()
+  }
+
   /** A `documents` table holding `texts` in a fresh directory. */
   private def corpusOf(texts: Seq[String]): String = {
     import spark.implicits._

@@ -612,11 +612,11 @@ class PlanSpec extends AnyFunSuite {
 
   // ---- round-7 guards ------------------------------------------------------
 
-  test("ohlc bars: window pass and collapse share ONE hash exchange") {
+  test("ohlc bars: the bar aggregate is ONE hash exchange") {
     val p = plan("q_w9_ohlc")
     val hashEx = "Exchange hashpartitioning".r.findAllIn(p).length
     assert(hashEx == 1,
-      s"ordered pass and bar aggregate must reuse one (type, hr) shuffle, got $hashEx:\n$p")
+      s"the min_by/max_by bar aggregate must need one (window, type) shuffle, got $hashEx:\n$p")
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"))
   }
 
@@ -735,6 +735,18 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("InMemoryTableScan"),
       "the shingle pipeline must be computed once and cached")
     spark.catalog.clearCache()
+  }
+
+  test("batch queries over a stream twin's body plan without the watermark") {
+    // the twin's withWatermark is dropped by EliminateEventTimeWatermark on
+    // a batch frame; the shared bodies rely on that rule
+    for (q <- Seq("q_w2_tumbling", "q_w5_distinct", "q_w9_ohlc",
+        "q_j9_interval", "q_j9b_first_touch")) {
+      val p = SparkEntry.queries(q)(spark, sf).queryExecution.optimizedPlan
+      assert(p.collect {
+        case w: org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark => w
+      }.isEmpty, s"$q still carries an EventTimeWatermark:\n$p")
+    }
   }
 
   test("first touch: the argmin is an aggregate over the pair join, no window") {

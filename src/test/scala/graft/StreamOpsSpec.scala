@@ -90,7 +90,7 @@ class StreamOpsSpec extends AnyFunSuite {
       .map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7)))
     // batch definition replayed: sort each bar by (us, event_id), open =
-    // head, close = last (AnalyticsOps.ohlcResample's window form)
+    // head, close = last (the definition AnalyticsOpsSpec replays)
     assert(got.toList == List(
       ("2024-01-01 10:00:00.0", "click", 900L, 900L, 50L, 50L, 4L, 1500L),
       ("2024-01-01 10:00:00.0", "view", 200L, 200L, 200L, 200L, 1L, 200L)))
@@ -156,7 +156,7 @@ class StreamOpsSpec extends AnyFunSuite {
       (9L, "2024-01-01 10:00:00.0", 1L)))
   }
 
-  test("attributionStream matches the batch interval join on a replayed stream") {
+  test("intervalJoinStream keeps the window boundaries on a replayed stream") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     // views/clicks for two users; one click outside the 10-minute window,
@@ -174,9 +174,9 @@ class StreamOpsSpec extends AnyFunSuite {
     val cMem = MemoryStream[(Long, Long, Timestamp)]
     vMem.addData(views)
     cMem.addData(clicks)
-    val q = StreamOps.attributionStream(
-        vMem.toDF.toDF("view_id", "user_id", "view_ts"),
-        cMem.toDF.toDF("click_id", "c_user", "click_ts"))
+    val q = StreamOps.intervalJoinStream(
+        vMem.toDF.toDF("event_id", "user_id", "ts"),
+        cMem.toDF.toDF("event_id", "user_id", "ts"))
       .writeStream.format("memory").queryName("attribution")
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
