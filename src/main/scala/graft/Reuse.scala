@@ -13,9 +13,11 @@ import scala.util.DynamicVariable
   * outlive any caller that could clear them. `cache()` never changes a
   * logical plan, so a view plans the same after the release, uncached.
   *
-  * Eager loops that cache and unpersist inside one function (the graph
-  * and component fixpoints, MMR, BPE and perceptron training) release
-  * their own frames.
+  * An eager loop that pins frames for the length of one call (the graph
+  * and component fixpoints, MMR and perceptron training) runs inside
+  * [[released]], so a frame its caller already pinned stays pinned and a
+  * throw mid-loop still releases; BPE training's rolling vocabulary
+  * releases each generation as the next one materializes.
   */
 object Reuse {
 

@@ -210,8 +210,9 @@ object SyncPipeline {
     * classifier PLAN — but they are returned lazily, so a caller that
     * ACTIONS both pays two staging scans (and two JSON parses); a caller
     * on the both-sides path should persist the frames it is about to
-    * consume (the standing caller-owns-the-cache contract — the library
-    * never pins a cache inside a returned frame).
+    * consume. Neither frame holds a pin: [[Reuse]] pins only a frame that
+    * one returned plan reads more than once, and each of these plans reads
+    * the classifier once.
     */
   def importFromStagingWithErrors(s: SparkSession, dir: String,
       stagingDir: String): (DataFrame, DataFrame) = {
@@ -293,9 +294,15 @@ object SyncPipeline {
     * source side the harvest; neither is collected, and the emitted
     * action set holds only changed keys (small by the merge's nature), so
     * [[graft.SyncJob.applyActions]] can broadcast it back.
+    *
+    * A zero-column target (what [[graft.sources.HttpSource.load]] returns
+    * for an empty remote: no record to infer a schema from) holds no key,
+    * so every source key is a `create`, as against an empty typed target.
     */
   def classifyAgainst(source: DataFrame, target: DataFrame, key: String,
       owned: Column): DataFrame = {
+    if (target.columns.isEmpty)
+      return source.select(col(key).as("key"), lit("create").as("action"))
     val shared = source.columns.filter(c =>
       c != key && target.columns.contains(c)).toSeq
     val docType = org.apache.spark.sql.types.StructType(

@@ -543,34 +543,6 @@ object Dedup {
     bandedHammingPairs(sk, BandPlan(64, blocks, Simhash64MaxHamming))
   }
 
-  /** Verify-workload diagnostic for the width bench: Σ_bucket C(c,2) over
-    * a plan's (band_idx, key, lang) buckets — the EXACT number of
-    * within-bucket comparisons the banded self-join performs, i.e. the
-    * quantity the n²/2^keyBits saturation arithmetic bounds. Returned
-    * analytically (one groupBy-count + sum), so the saturation curve can
-    * be read without paying the join it predicts.
-    */
-  private[graft] def simhash64BandComparisons(
-      s: SparkSession, dir: String, blocks: Int): Long = {
-    val sk = t(s, dir, "documents")
-      .select(col("doc_id"), col("lang"),
-        graft.functions.Simhash64Sketch(tokens(col("text"))).as("sh"))
-      .filter(col("sh").isNotNull)
-    bandKeys(sk, BandPlan(64, blocks, Simhash64MaxHamming))
-      .groupBy(col("band_idx"), col("key"), col("lang")).count()
-      .agg(sum(col("count") * (col("count") - 1) / 2).cast("long"))
-      .head().getLong(0)
-  }
-
-  /** [[simhash64BandComparisons]] for the 32-bit tier's degenerate plan —
-    * the saturated baseline column of the width table.
-    */
-  private[graft] def simhash32BandComparisons(s: SparkSession, dir: String): Long =
-    bandKeys(simhashTable(s, dir), Simhash32Plan)
-      .groupBy(col("band_idx"), col("key"), col("lang")).count()
-      .agg(sum(col("count") * (col("count") - 1) / 2).cast("long"))
-      .head().getLong(0)
-
   /** Per-doc SimHash sketch (the sketch itself, for oracle-pinning the
     * bit-vote arithmetic independent of the pairing policy).
     */
@@ -689,7 +661,7 @@ object Dedup {
   }
 
   private def connectedComponentsImpl(
-      nodes: DataFrame, pairs: DataFrame): DataFrame = {
+      nodes: DataFrame, pairs: DataFrame): DataFrame = Reuse.released {
     val symmetrized = pairs
       .union(pairs.select(col("b_id"), col("a_id")))
       .toDF("src", "dst")
@@ -732,10 +704,9 @@ object Dedup {
     // multiply the job's shuffle volume by the round count. In the
     // broadcast regime that layout is never consulted (the label side
     // broadcasts), so the up-front shuffle would be pure waste.
-    val edges = (
+    val edges = Reuse(
       if (prevSum._2 <= broadcastableRows) symmetrized
-      else symmetrized.repartition(col("src"))
-    ).cache()
+      else symmetrized.repartition(col("src")))
     var converged = false
     while (!converged) {
       val viaNeighbors = edges
@@ -792,7 +763,6 @@ object Dedup {
         labels = next
       }
     }
-    edges.unpersist()
     labels
   }
 

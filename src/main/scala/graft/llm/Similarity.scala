@@ -183,19 +183,18 @@ object Similarity {
     new java.util.concurrent.atomic.AtomicInteger(0)
 
   def mmrDiversify(s: SparkSession, dir: String, k: Int = MmrK,
-      candidates: Int = MmrCandidates): DataFrame = {
+      candidates: Int = MmrCandidates): DataFrame = Reuse.released {
     val c = corpus(s, dir)
     val queries = broadcast(
       c.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nv").as("nq")))
-    val cand = c.join(queries, col("vec_id") =!= col("q_id"))
+    val cand = Reuse(c.join(queries, col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
         round(cosPre(dot(col("qv"), col("v")), col("nq"), col("nv")), 9).as("rel"))
       .withColumn("crk", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("rel").desc, col("vec_id"))))
       .filter(col("crk") <= candidates)
-      .select(col("q_id"), col("vec_id"), col("rel"))
-      .cache()
+      .select(col("q_id"), col("vec_id"), col("rel")))
     // candidate-pair similarity matrix: MmrCandidates² rows per query,
     // vectors re-attached by broadcast of the tiny candidate set — the
     // corpus streams, it never shuffles
@@ -205,12 +204,11 @@ object Similarity {
       col("v").as("av"), col("nv").as("na"))
     val b = cv.select(col("q_id").as("bq"), col("vec_id").as("b_id"),
       col("v").as("bv"), col("nv").as("nb"))
-    val pairs = a.join(broadcast(b),
+    val pairs = Reuse(a.join(broadcast(b),
         col("q_id") === col("bq") && col("a_id") =!= col("b_id"))
       .select(col("q_id"), col("a_id"), col("b_id"),
         round(cosPre(dot(col("av"), col("bv")), col("na"), col("nb")), 9)
-          .as("sim"))
-      .cache()
+          .as("sim")))
     val wPick = Window.partitionBy(col("q_id"))
       .orderBy(col("mmr").desc, col("vec_id"))
     def pick(scored: DataFrame, rank: Int): DataFrame =
@@ -257,8 +255,6 @@ object Similarity {
       }
     }
     lastMmrRounds.set(executed)
-    cand.unpersist()
-    pairs.unpersist()
     selected
       .select(col("q_id"), col("rank").cast("int").as("rank"),
         col("vec_id"), col("rel"), col("maxsim"), col("mmr"))

@@ -283,30 +283,6 @@ object TextAnalysis {
     3 -> Seq("spark", "stream", "vector", "window"))
   val Bm25TopK = 10
 
-  /** BM25-style top-k document retrieval for [[Bm25Queries]] — the
-    * term-based retrieval path next to the embedding stack
-    * ([[Similarity.bruteTopK]]/IVF/PQ), with every score EXACT:
-    *
-    *  - idf is the ODDS form `(2N−2df+1)/(2df+1)` — the argument of
-    *    BM25's `ln` with numerator and denominator cleared to integers.
-    *    Per-term it is the same monotone ordering as the log variant
-    *    (which would hang the oracle on libm ulp agreement — the
-    *    [[tfidfTopTerms]] reasoning); across terms it weighs rarity more
-    *    aggressively, a documented variant trade.
-    *  - the k1=1.2, b=0.75 saturation term is cleared to integers by
-    *    10·Σdl: `22·tf·Σdl / (10·tf·Σdl + 3·Σdl + 9·dl·N)`.
-    *
-    * Each per-term score is two correctly-rounded divisions of exact
-    * int64s and one exact double multiply, rounded to 9 dp; the per-doc
-    * sum runs in DECIMAL(20,9) (order-free), and ranking compares the
-    * DECIMAL. Shape: the explode is filtered by the broadcast query-term
-    * list BEFORE the tf aggregation (only matching terms shuffle), dl
-    * rides the exploded rows into `max(dl)` instead of joining a
-    * corpus-sized length table back per doc, df derives from tf, and the
-    * two corpus scalars (N, Σdl) broadcast from a single-row aggregate.
-    * Top-k per query is the rank-limit window (WindowGroupLimit) with
-    * doc_id tie-break.
-    */
   /** The exact integer-cleared BM25 per-term score over the denormalized
     * posting columns (tf, df, dl, n_docs, sum_dl) — ONE definition feeds
     * [[bm25TopDocs]], [[bm25Indexed]] and the stream probe
@@ -343,6 +319,30 @@ object TextAnalysis {
       .orderBy("query_id", "rk")
   }
 
+  /** BM25-style top-k document retrieval for [[Bm25Queries]] — the
+    * term-based retrieval path next to the embedding stack
+    * ([[Similarity.bruteTopK]]/IVF/PQ), with every score EXACT:
+    *
+    *  - idf is the ODDS form `(2N−2df+1)/(2df+1)` — the argument of
+    *    BM25's `ln` with numerator and denominator cleared to integers.
+    *    Per-term it is the same monotone ordering as the log variant
+    *    (which would hang the oracle on libm ulp agreement — the
+    *    [[tfidfTopTerms]] reasoning); across terms it weighs rarity more
+    *    aggressively, a documented variant trade.
+    *  - the k1=1.2, b=0.75 saturation term is cleared to integers by
+    *    10·Σdl: `22·tf·Σdl / (10·tf·Σdl + 3·Σdl + 9·dl·N)`.
+    *
+    * Each per-term score is two correctly-rounded divisions of exact
+    * int64s and one exact double multiply, rounded to 9 dp; the per-doc
+    * sum runs in DECIMAL(20,9) (order-free), and ranking compares the
+    * DECIMAL. Shape: the explode is filtered by the broadcast query-term
+    * list BEFORE the tf aggregation (only matching terms shuffle), dl
+    * rides the exploded rows into `max(dl)` instead of joining a
+    * corpus-sized length table back per doc, df derives from tf, and the
+    * two corpus scalars (N, Σdl) broadcast from a single-row aggregate.
+    * Top-k per query is the rank-limit window (WindowGroupLimit) with
+    * doc_id tie-break.
+    */
   def bm25TopDocs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = t(s, dir, "documents")

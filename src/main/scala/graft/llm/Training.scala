@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.Reuse
 import graft.Tables.{table => t}
 import TextHash.tokens
 
@@ -110,8 +111,8 @@ object Training {
     * the (w·x) probe adds one more 10³ factor — still clear. Beyond that
     * the same plan lifts to DECIMAL(38,0) unchanged.
     */
-  def perceptronTrain(s: SparkSession, dir: String): DataFrame = {
-    val rows = trainingRows(s, dir).cache()
+  def perceptronTrain(s: SparkSession, dir: String): DataFrame = Reuse.released {
+    val rows = Reuse(trainingRows(s, dir))
     var w = Vector.fill(FeatureNames.size)(0L)
     val hist = (1 to Epochs).map { epoch =>
       val wx = FeatureNames.zip(w)
@@ -129,7 +130,6 @@ object Training {
       (epoch, nMiss, w)
     }
     val out = hist.map { case (e, nm, wv) => (e, nm, wv(0), wv(1), wv(2), wv(3), wv(4)) }
-    rows.unpersist()
     import s.implicits._
     out.toDF("epoch", "n_miss", "w0", "w1", "w2", "w3", "w4")
       .orderBy("epoch")

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Reuse, Tables}
+import graft.{Reuse, SyncPipeline, Tables}
 
 /** Core relational operators from SURVEY.md §2.1-2.7, declared as
   * set-oriented DataFrame plans over the harness star schema
@@ -113,22 +113,19 @@ object CoreOps {
       .orderBy("c_custkey")
 
   /** J3/J4/A2/A6: bridge traversal — per order, the distinct sorted set of
-    * part names reached through lineitem (dataset→bridge→category analog).
-    * One shuffle (the groupBy); part-dim join is broadcast.
+    * part names reached through lineitem (dataset→bridge→category analog):
+    * a projection of the harvest's own [[SyncPipeline.orderGroups]] (column
+    * pruning drops its unused part-type aggregate). One shuffle (the
+    * groupBy); part-dim join is broadcast.
     */
   def j3BridgeGroups(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .select("l_orderkey", "l_partkey")
-      .join(broadcast(t(s, dir, "part").select("p_partkey", "p_name")),
-        col("l_partkey") === col("p_partkey"))
-      .groupBy(col("l_orderkey"))
-      .agg(array_sort(collect_set(col("p_name"))).as("gset"))
+    SyncPipeline.orderGroups(s, dir)
       // n_groups = |collect_set| — a second countDistinct agg would force
       // an Expand + extra aggregation pass for the same answer
       .select(
         col("l_orderkey"),
-        array_join(col("gset"), "|").as("groups"),
-        size(col("gset")).cast("long").as("n_groups"))
+        array_join(col("group_names"), "|").as("groups"),
+        size(col("group_names")).cast("long").as("n_groups"))
       .orderBy("l_orderkey")
 
   /** J6/SO3: left-semi (EXISTS) — customers having at least one order. */

@@ -197,10 +197,10 @@ object GraphOps {
   private[graft] val lastLpaRounds =
     new java.util.concurrent.atomic.AtomicInteger(0)
 
-  def labelPropagation(s: SparkSession, dir: String): DataFrame = {
+  def labelPropagation(s: SparkSession, dir: String): DataFrame = Reuse.released {
     val pairs = coPurchasePairs(s, dir)
       .select(col("pa"), col("pb"), col("supp").as("w"))
-    val sym = bothDirections(pairs, "pa", "pb", Seq("w")).cache()
+    val sym = Reuse(bothDirections(pairs, "pa", "pb", Seq("w")))
     var lab = sym.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
       .localCheckpoint(true)
@@ -234,12 +234,10 @@ object GraphOps {
     }
     lastLpaRounds.set(executed)
     val size = lab.groupBy(col("label")).agg(count(lit(1)).as("csize"))
-    val out = lab.join(size, "label")
+    lab.join(size, "label")
       .select(col("node").as("part"), col("label").as("community"),
         col("csize"))
       .orderBy("part")
-    sym.unpersist()
-    out
   }
 
   def pageRank(s: SparkSession, dir: String, iters: Int = PrIters): DataFrame = {
@@ -369,9 +367,9 @@ object GraphOps {
   private[graft] val lastBfsRounds =
     new java.util.concurrent.atomic.AtomicInteger(0)
 
-  def bfs(s: SparkSession, dir: String, rounds: Int = BfsRounds): DataFrame = {
+  def bfs(s: SparkSession, dir: String, rounds: Int = BfsRounds): DataFrame = Reuse.released {
     val base = coPurchaseEdges(s, dir)
-    val e = loopPartitioned(bothDirections(base, "pa", "pb"), "src").cache()
+    val e = Reuse(loopPartitioned(bothDirections(base, "pa", "pb"), "src"))
     var dist = e.agg(min(col("src")).as("node"))
       .select(col("node"), lit(0L).as("dist"))
       .localCheckpoint(true)
@@ -395,7 +393,6 @@ object GraphOps {
       nReached = n
     }
     lastBfsRounds.set(executed)
-    e.unpersist()
     dist.orderBy("node")
   }
 

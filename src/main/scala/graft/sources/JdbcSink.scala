@@ -8,15 +8,13 @@ import java.sql.{Connection, DriverManager, PreparedStatement}
   * 249-257,407`); the engine's equivalent writes set-oriented results back
   * over JDBC.
   *
-  * Three tiers, in preference order:
+  * Two tiers, in preference order:
   *  1. compute the create/update/delete sets in Spark
   *     ([[graft.SyncPipeline.classifyAgainst]]) and apply each with a plain
   *     append/delete — pure connector writes, fully parallel;
   *  2. `upsert` below — a row-atomic upsert statement batched per partition
   *     for targets where the merge must be atomic per row; the statement
-  *     shape is dialect-specific (see [[JdbcSink.Dialect]]);
-  *  3. stage-and-MERGE: `df.write.jdbc` to a staging table + one server-side
-  *     MERGE statement (best for targets with real set-oriented MERGE).
+  *     shape is dialect-specific (see [[JdbcSink.Dialect]]).
   *
   * Partition-parallel: every executor holds one connection and writes its
   * partition in `batchSize` chunks. Exercised end-to-end against embedded

@@ -2,10 +2,8 @@ package graft
 
 import java.time.{Instant, LocalDate, ZoneOffset}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.ops.{AnalyticsOps, GraphOps, IncrementalOps, MatchOps}
 
@@ -15,18 +13,9 @@ import graft.ops.{AnalyticsOps, GraphOps, IncrementalOps, MatchOps}
   * compared exactly. The DuckDB oracle pins cross-engine parity; these pin
   * the SEMANTICS against an independent implementation.
   */
-class AnalyticsOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AnalyticsOpsSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("analytics-ops-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def micros(t: java.sql.Timestamp): Long =
     t.getTime / 1000 * 1000000L + t.getNanos / 1000

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.AsofOps
 import java.sql.Timestamp
@@ -8,13 +7,7 @@ import java.sql.Timestamp
 /** As-of join edge semantics: inclusive equal-timestamp match, miss before
   * first right row, latest-wins across multiple right rows, key isolation.
   */
-class AsofSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AsofSpec extends AnyFunSuite with SharedSpark {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 

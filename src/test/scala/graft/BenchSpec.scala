@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Bench]]'s timed run counts the cache entries a query leaves behind,
@@ -9,18 +7,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * its per-query lines and then the compact total, after the full line
   * that carries the streaming section.
   */
-class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BenchSpec extends AnyFunSuite with SharedSpark {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val metrics = Metrics.attach(spark.sparkContext)
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit =
+    try spark.sparkContext.removeSparkListener(metrics) finally super.afterAll()
 
   test("a timed run reports the cache entries it left: 1 for a cached query, 0 for a clean one") {
-    val metrics = Metrics.attach(spark.sparkContext)
     def noop(cache: Boolean) = {
       val df = spark.range(100).selectExpr("id * 2 AS x")
       (if (cache) df.cache() else df).write.format("noop").mode("overwrite").save()
@@ -40,7 +34,6 @@ class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = java.nio.file.Files.createTempDirectory("bench_same_work").toString
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .write.parquet(s"$dir/documents.parquet")
-    val metrics = Metrics.attach(spark.sparkContext)
     def run() = Bench.timed(spark, metrics, "q_bpe_encode") {
       SparkEntry.queries("q_bpe_encode")(spark, dir)
         .write.format("noop").mode("overwrite").save()

@@ -10,13 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * otherwise the separately-reported probe line would be timing a
   * different computation than the one the correctness gate checks.
   */
-class BenchSplitSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BenchSplitSpec extends AnyFunSuite with SharedSpark {
 
   val sf = "/root/testdata/sf0.001"
 

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.functions.{BloomBuild, BloomContains, BloomHashOps}
 import graft.llm.Curation
@@ -13,23 +11,12 @@ import graft.llm.Curation
   * a sane false-positive rate at the declared sizing, and end-to-end
   * equality of the accelerated decontamination with the exact one.
   */
-class BloomFilterSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BloomFilterSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("bloom-filter-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    // the probe sits in the scan hot path: hard-fail if its generated code
-    // does not compile instead of silently falling back to interpretation
-    .config("spark.sql.codegen.fallback", "false")
-    .getOrCreate()
 
   private val Bits = 1 << 12
   private val K = 5
-
-  override def afterAll(): Unit = spark.stop()
 
   test("no false negatives: every inserted hash probes true, merged across partitions") {
     import spark.implicits._

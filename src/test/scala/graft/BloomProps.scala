@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
@@ -19,12 +18,7 @@ object BloomProps extends Properties("bloomFilter") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(20)
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("bloom-props")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = SharedSpark.session
 
   private val Bits = 1 << 10
   private val K = 4

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, rng}
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * all of them, and the invariants are asserted per row — same coverage as
   * per-sample forAll without paying one Spark job per sample.
   */
-class BulkInvariantSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BulkInvariantSpec extends AnyFunSuite with SharedSpark {
 
   private val messy: Gen[String] = Gen.frequency(
     3 -> Gen.asciiPrintableStr,

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.ChangeOps
@@ -10,13 +9,7 @@ import graft.ops.ChangeOps
   * list comparison over the NEW list's indices — an appended element is a
   * change, a dropped tail is not.
   */
-class ChangeOpsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ChangeOpsSpec extends AnyFunSuite with SharedSpark {
 
   /** Evaluate subsetChanged for one (old, new) pair of struct expressions. */
   private def changed(oldC: org.apache.spark.sql.Column,

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.functions.CharStats
 import graft.llm.TextAnalysis
@@ -14,19 +12,9 @@ import graft.llm.TextAnalysis
   * exercises — and the derived diversity signals must be the exact
   * integer ratios q_text_entropy's oracle recomputes.
   */
-class CharStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CharStatsSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("char-stats-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    // hard-fail if the native expression's generated code does not compile
-    .config("spark.sql.codegen.fallback", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def brute(s: String): (Int, Int, Int, Long) = {
     val counts = s.codePoints().toArray.groupBy(identity).map {

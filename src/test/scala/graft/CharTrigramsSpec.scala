@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.llm.TextAnalysis
 
@@ -11,20 +9,9 @@ import graft.llm.TextAnalysis
   * (including distinct ORDER) to the declarative chain it replaced —
   * that chain feeds q_text_langid's oracle-verified scores.
   */
-class CharTrigramsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CharTrigramsSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("char-trigrams-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    // hard-fail if the native expression's generated code does not compile
-    // (silent CodegenFallback keeps results green while voiding the point)
-    .config("spark.sql.codegen.fallback", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("native matches the HOF chain on adversarial inputs") {
     import spark.implicits._

@@ -6,11 +6,11 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, Executors
 import java.util.regex.Pattern
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.HttpSink
+import graft.sources.{HttpSink, HttpSource}
 
 /** CKAN action-API CALL-SEQUENCE conformance — the reference's e2e harvest
   * scenario (`/root/reference/tests/test_odgovlt.py:238-314`: run the
@@ -40,14 +40,7 @@ import graft.sources.HttpSink
   * reference's `was_changed` diffs against) → [[SyncJob.applyActions]]
   * through [[HttpSink]].
   */
-class CkanSinkSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CkanSinkSpec extends AnyFunSuite with SharedSpark {
 
   /** CKAN action fake with an ORDERED call log: POST {base}/{entity}_{verb}
     * appends (verb, id) and mutates the keyed store — the observable the
@@ -91,6 +84,21 @@ class CkanSinkSpec extends AnyFunSuite {
     Seq("create", "update", "delete").foreach { verb =>
       server.createContext(s"/api/3/action/${entity}_$verb", handle(verb)(_))
     }
+    // GET {base}/{entity}_search?offset=N&limit=M: the store's documents in
+    // the CKAN-search response shape, as [[HttpSource]] reads a remote back
+    server.createContext(s"/api/3/action/${entity}_search", (ex: HttpExchange) => {
+      import scala.jdk.CollectionConverters._
+      val params = Option(ex.getRequestURI.getQuery).getOrElse("").split("&")
+        .map(_.split("=", 2)).collect { case Array(k, v) => k -> v.toInt }.toMap
+      val off = params.getOrElse("offset", 0)
+      val page = store.values().asScala.toSeq.sorted
+        .slice(off, off + params.getOrElse("limit", 10))
+      val resp = s"""{"count":${store.size()},"results":[${page.mkString(",")}]}"""
+        .getBytes(StandardCharsets.UTF_8)
+      ex.sendResponseHeaders(200, resp.length)
+      ex.getResponseBody.write(resp)
+      ex.close()
+    })
     server.start()
     def stop(): Unit = server.stop(0)
 
@@ -186,6 +194,25 @@ class CkanSinkSpec extends AnyFunSuite {
       assert(!ckan.store.containsKey("999999001"))
       assert(ckan.store.containsKey("999999002"))
       assert(ckan.store.size() === sourceIds.size + 1)
+    } finally ckan.stop()
+  }
+
+  test("first harvest into an empty remote read back by HttpSource: one create per package") {
+    // an empty remote reads back as a zero-column frame (no record to
+    // infer a schema from); SyncJob.push must classify every key a create
+    val ckan = new LoggingCkan("o_orderkey")
+    val staging = java.nio.file.Files
+      .createTempDirectory("graft-ckan-cold").resolve("stage").toString
+    try {
+      val target = HttpSource(ckan.url).load(spark)
+      assert(target.columns.isEmpty)
+      val r = SyncJob.push(spark, dir, staging, target,
+        HttpSink(ckan.url, entity = "package", idField = "o_orderkey"))
+      val keys = r.packages.select("o_orderkey")
+        .collect().map(_.get(0).toString).toSeq.sorted
+      assert(keys.nonEmpty)
+      assert(ckan.callsByVerb === Map("create" -> keys))
+      assert(ckan.store.size() === keys.size)
     } finally ckan.stop()
   }
 

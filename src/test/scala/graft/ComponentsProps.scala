@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
 import graft.llm.Dedup
@@ -17,12 +16,7 @@ object ComponentsProps extends Properties("connectedComponents") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(15)
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("components-props")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = SharedSpark.session
 
   /** Reference: union by attaching the larger root under the smaller, so
     * every set's root is its minimum id.

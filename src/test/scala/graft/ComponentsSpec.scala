@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.llm.Dedup
 
@@ -11,17 +9,9 @@ import graft.llm.Dedup
   * pins exact values; this pins the graph properties that make the labels a
   * valid clustering).
   */
-class ComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ComponentsSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("components-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("labels cover every document, never exceed the doc_id, and are consistent across every near-dup pair") {
     val labels = Dedup.nearDupComponents(spark, dir).cache()

@@ -1,27 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.llm.Curation
 
 /** Corpus-curation invariants (the DuckDB oracles pin exact values; these
   * pin the semantic properties that make the operators usable).
   */
-class CurationSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CurationSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("curation-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("decontaminate excludes benchmark docs and flags genuine overlap") {
     val out = Curation.decontaminate(spark, dir).cache()

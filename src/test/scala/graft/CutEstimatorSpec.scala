@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.llm.TextAnalysis
 
@@ -14,18 +12,9 @@ import graft.llm.TextAnalysis
   * oracle pins the approx path's VALUES (quantile_disc picks the same rank
   * element); this spec pins its equivalence to the exact semantics.
   */
-class CutEstimatorSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CutEstimatorSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("cut-estimator-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("approx verdicts equal exact verdicts except exactly on the discrete boundary") {
     // the continuous quantile interpolates PAST the discrete P25 element

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Repo rule: every DECLARED query's top-level output schema is
   * atomic-only — no `array`/`map`/`struct` columns. The correctness gate
@@ -14,18 +12,9 @@ import org.scalatest.BeforeAndAfterAll
   * stays first-class INSIDE a query; at the declared boundary it projects
   * to scalars, canonical joined strings, JSON strings, or exploded rows.
   */
-class DeclaredSchemaSpec extends AnyFunSuite with BeforeAndAfterAll {
+class DeclaredSchemaSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("declared-schema-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("every declared query's top-level schema is atomic-only") {
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {

@@ -3,9 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.llm.Similarity
 
@@ -15,18 +13,9 @@ import graft.llm.Similarity
   * chain at the same default k — as the membership and independently
   * replays the sampling rule on top: own JDK md5, own hex, own rank.
   */
-class DiversitySampleSpec extends AnyFunSuite with BeforeAndAfterAll {
+class DiversitySampleSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("diversity-sample-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def md5hex(s: String): String =
     MessageDigest.getInstance("MD5")

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.llm.Similarity
 
@@ -11,20 +9,9 @@ import graft.llm.Similarity
   * double addition is order-sensitive, so this pins not just values but the
   * left-to-right accumulation the DuckDB oracles replay via list_reduce.
   */
-class DotProductSpec extends AnyFunSuite with BeforeAndAfterAll {
+class DotProductSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("dot-product-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    // hard-fail if the native expression's generated code does not compile
-    // (silent CodegenFallback keeps results green while voiding the point)
-    .config("spark.sql.codegen.fallback", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("bit-identical to the HOF fold over all corpus pairs (first 50)") {
     val c = Tables.table(spark, dir, "embeddings")

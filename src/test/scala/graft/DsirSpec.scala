@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.llm.Curation
 
@@ -13,18 +11,9 @@ import graft.llm.Curation
   * pool/selection set algebra, and the exactness preconditions the integer
   * arithmetic relies on.
   */
-class DsirSpec extends AnyFunSuite with BeforeAndAfterAll {
+class DsirSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("dsir-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   /** TextHash.md5Long re-derived without Spark: first 8 hex digits of md5
     * as an unsigned 32-bit value.

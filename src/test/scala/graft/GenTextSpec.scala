@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,13 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * isomorphism of the duplicate structure, and embedding isometry with
   * randomized cross-variant products.
   */
-class GenTextSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GenTextSpec extends AnyFunSuite with SharedSpark {
 
   val src = "/root/testdata/sf0.001"
 

@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The SQL surface: base tables, derived views, and native functions are
   * reachable from spark.sql after registration.
   */
-class GraftCatalogSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GraftCatalogSpec extends AnyFunSuite with SharedSpark {
 
   test("registered views and functions answer SQL end to end") {
     spark.catalog.clearCache()

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.ops.GraphOps
 
@@ -11,18 +9,9 @@ import graft.ops.GraphOps
   * integer ranks; these pin the recurrence itself (against a plain-Scala
   * replay) and the properties that make the numbers meaningful.
   */
-class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class GraphOpsSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graph-ops-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("pagerank replays exactly as a plain-Scala integer recurrence") {
     val got = GraphOps.pageRank(spark, dir).collect()

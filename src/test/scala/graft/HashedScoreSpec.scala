@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.functions.HashedScore
 import graft.llm.TextAnalysis
@@ -12,18 +10,7 @@ import graft.llm.TextAnalysis
   * element_at-fold chain value-for-value — that chain is the executable
   * specification behind the model-scoring oracles.
   */
-class HashedScoreSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("hashed-score-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    // hard-fail if the native expression's generated code does not compile
-    .config("spark.sql.codegen.fallback", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class HashedScoreSpec extends AnyFunSuite with SharedSpark {
 
   private def weightsLit =
     array(TextAnalysis.modelWeights.map(w => lit(w)): _*)

@@ -7,9 +7,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import java.util.regex.Pattern
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.sources.HttpSink
 import scala.jdk.CollectionConverters._
@@ -22,14 +20,7 @@ import scala.jdk.CollectionConverters._
   * bounded retry, and retry exhaustion, plus the full SyncJob.push wiring
   * on real testdata.
   */
-class HttpSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class HttpSinkSpec extends AnyFunSuite with SharedSpark {
 
   /** Minimal CKAN-action-API stand-in: POST {base}/{entity}_{verb}, state
     * keyed by the configured id field, CKAN-shaped status codes.

@@ -7,7 +7,6 @@ import java.util.concurrent.atomic.AtomicInteger
 import java.util.concurrent.ConcurrentHashMap
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.HttpSource
@@ -16,12 +15,7 @@ import graft.sources.HttpSource
   * full-corpus recovery across pages, schema inference, parallel task
   * fetch, retry-on-5xx, and hard failure on a 4xx contract violation.
   */
-class HttpSourceSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class HttpSourceSpec extends AnyFunSuite with SharedSpark {
 
   /** `GET {base}/package_search?offset=N&limit=M` over a fixed record
     * set, CKAN-search response shape.

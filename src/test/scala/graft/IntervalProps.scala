@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
 /** Randomized pin of the interval-join semantics against a naive reference:
@@ -14,12 +13,7 @@ object IntervalProps extends Properties("intervalJoin") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(15)
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("interval-props")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = SharedSpark.session
 
   private val WindowUs = 600L * 1000000L
 

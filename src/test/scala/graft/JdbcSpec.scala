@@ -1,7 +1,6 @@
 package graft
 
 import java.sql.DriverManager
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{JdbcSink, JdbcTables}
@@ -15,13 +14,7 @@ import graft.sources.{JdbcSink, JdbcTables}
   * against a stand-in engine (`/root/reference/tests/test_odgovlt.py:69`
   * uses in-memory SQLite for the MySQL source).
   */
-class JdbcSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class JdbcSpec extends AnyFunSuite with SharedSpark {
 
   private val url = "jdbc:derby:memory:graftjdbc;create=true"
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.llm.{Dedup, Similarity, TextAnalysis, TextHash}
@@ -9,13 +8,7 @@ import graft.llm.{Dedup, Similarity, TextAnalysis, TextHash}
   * (the DuckDB oracle pins exact values; these pin semantics: recall of
   * planted near-dups, sketch locality, ranking sanity).
   */
-class LlmOpsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LlmOpsSpec extends AnyFunSuite with SharedSpark {
 
   val sf = "/root/testdata/sf0.001"
 

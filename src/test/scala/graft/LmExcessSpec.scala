@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.llm.Curation
 
@@ -13,18 +11,9 @@ import graft.llm.Curation
   * integer log2 — no Spark columns in the loop), the grounding of `ce_ref`
   * in the already-decided [[Curation.lmScore]], and the ordered-quota rule.
   */
-class LmExcessSpec extends AnyFunSuite with BeforeAndAfterAll {
+class LmExcessSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("lm-excess-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   /** Both scorers re-derived in pure Scala: per-language (c12, c1, vocab)
     * over the trusted slice AND over the pool slice, then per pool

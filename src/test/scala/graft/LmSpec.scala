@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.llm.Curation
 
@@ -13,18 +11,9 @@ import graft.llm.Curation
   * log2 — no Spark columns), the add-one probability laws the integer
   * arithmetic encodes, and the tercile set algebra.
   */
-class LmSpec extends AnyFunSuite with BeforeAndAfterAll {
+class LmSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("lm-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   /** The whole scorer re-derived in pure Scala over the fixture corpus:
     * per-language trusted bigram/left/vocab counts, then per pool document

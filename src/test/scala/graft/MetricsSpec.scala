@@ -1,24 +1,18 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Metrics]] charges each job group exactly its own tasks, and a read
   * right after an action already holds every task of it.
   */
-class MetricsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class MetricsSpec extends AnyFunSuite with SharedSpark {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
   private var metrics: Metrics = _
 
   override def beforeAll(): Unit = metrics = Metrics.attach(spark.sparkContext)
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit =
+    try spark.sparkContext.removeSparkListener(metrics) finally super.afterAll()
 
   /** `spark.range(n).repartition(parts)` to the noop sink under group `g`. */
   private def shuffle(g: String, n: Long, parts: Int): Unit = {

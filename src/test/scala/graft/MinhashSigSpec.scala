@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.functions.MinhashSig
 import graft.llm.TextHash
@@ -14,19 +12,7 @@ import graft.llm.TextHash
   * separately pins the fold equal to the explode+aggregate form, so all
   * three formulations are tied together.
   */
-class MinhashSigSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("minhash-sig-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    // the signature sits on the scan hot path: hard-fail if its generated
-    // code does not compile
-    .config("spark.sql.codegen.fallback", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class MinhashSigSpec extends AnyFunSuite with SharedSpark {
 
   test("native matches the fold on adversarial gram arrays") {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.JdbcSink
@@ -11,13 +10,7 @@ import graft.sources.JdbcSink
   * the insert-if-absent bootstrap, and delete-by-key, each through the
   * real foreachPartition / bind-order / batching machinery.
   */
-class MySqlDialectSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MySqlDialectSpec extends AnyFunSuite with SharedSpark {
 
   private val url = FakeMySql.UrlPrefix + "mem"
 

@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.llm.Similarity
 
@@ -15,19 +14,9 @@ import graft.llm.Similarity
   * fixture corpus AND on adversarial inputs (exact ties, duplicated
   * centroids, rounding-boundary cosines).
   */
-class NearestSpec extends AnyFunSuite with BeforeAndAfterAll {
+class NearestSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("nearest-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    // hard-fail if the native expression's generated code does not compile
-    .config("spark.sql.codegen.fallback", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def corpus: DataFrame =
     Tables.table(spark, dir, "embeddings")

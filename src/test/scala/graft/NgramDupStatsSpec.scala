@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.functions.NgramDupStats
 import graft.llm.TextAnalysis
@@ -13,20 +11,9 @@ import graft.llm.TextHash.tokens
   * zipped-slices chain field-for-field — that chain is the executable
   * specification behind q_text_repetition's oracle.
   */
-class NgramDupStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class NgramDupStatsSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("ngram-dup-stats-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    // hard-fail if the native expression's generated code does not compile
-    // (silent CodegenFallback keeps results green while voiding the point)
-    .config("spark.sql.codegen.fallback", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("native matches the HOF chain on adversarial token arrays") {
     import spark.implicits._

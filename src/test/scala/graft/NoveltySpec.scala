@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.llm.Curation
 
@@ -11,18 +9,9 @@ import graft.llm.Curation
   * every pool document's score from the raw parquet (own tokenizer, own
   * shingling, own distinct), plus the grid laws the integer ratio encodes.
   */
-class NoveltySpec extends AnyFunSuite with BeforeAndAfterAll {
+class NoveltySpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("novelty-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   /** Mirrors TextHash.shingles3 exactly: distinct space-joined word
     * 3-grams; documents under 3 tokens get the `""` fallback (which the

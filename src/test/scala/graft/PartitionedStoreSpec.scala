@@ -2,10 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.sources.PartitionedStore
 
@@ -14,22 +12,15 @@ import graft.sources.PartitionedStore
   * incrementally writable. Asserted on the PLAN (PartitionFilters + the
   * files the scan actually selects), not just on results.
   */
-class PartitionedStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PartitionedStoreSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("partitioned-store-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private lazy val tmp = Files.createTempDirectory("graft_part").toString
 
-  override def afterAll(): Unit = {
-    spark.stop()
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-  }
+  override def afterAll(): Unit =
+    try org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+    finally super.afterAll()
 
   private def events = PartitionedStore.eventsWithDay(
     Tables.table(spark, dir, "events"))

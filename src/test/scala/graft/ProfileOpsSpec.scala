@@ -1,27 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.ops.ProfileOps
 
 /** One-pass profile invariants: the DuckDB oracle pins exact values; these
   * pin each stat against an independent recompute and the estimate class.
   */
-class ProfileOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ProfileOpsSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("profile-ops-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def joined = {
     val users = Tables.table(spark, dir, "customer")

@@ -2,7 +2,6 @@ package graft
 
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.llm.Similarity
@@ -21,15 +20,7 @@ import graft.llm.Similarity
   *    HALF_UP), own exact BigDecimal component sums, own left-to-right
   *    dot fold, own 9dp HALF_UP round — no Spark expression in the loop.
   */
-class PrototypePruneSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("prototype-prune-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PrototypePruneSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,30 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.llm.Similarity
 
 /** Int8 quantization invariants (the DuckDB oracle pins exact values; this
   * pins the properties that make the codes a usable compressed corpus).
   */
-class QuantizeSpec extends AnyFunSuite with BeforeAndAfterAll {
+class QuantizeSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("quantize-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    // hard-fail if the expression's generated code does not compile —
-    // silent CodegenFallback would keep results green while voiding the
-    // native-pass claim (exactly the bug a review pass caught here)
-    .config("spark.sql.codegen.fallback", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("codes stay in int8 range and reconstruction error is small") {
     val qz = Similarity.quantizedCorpus(spark, dir).cache()

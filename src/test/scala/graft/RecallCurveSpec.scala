@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,13 +24,7 @@ import graft.llm.Similarity
   * p4 → p8, s=10k on this fixture) — that dip is the measured fact the
   * curve artifact exists to show.
   */
-class RecallCurveSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RecallCurveSpec extends AnyFunSuite with SharedSpark {
 
   val dir = "/root/testdata/sf0.01"
   val k = Similarity.PqTopK

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.llm.TextAnalysis
@@ -9,13 +8,7 @@ import graft.llm.TextAnalysis
   * token docs) never exercises: 1- and 2-token documents, all-duplicate
   * documents, and the boundary of the keep verdict.
   */
-class RepetitionEdgeSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RepetitionEdgeSpec extends AnyFunSuite with SharedSpark {
 
   test("repetition handles sub-n-gram docs and exact duplicate runs") {
     import spark.implicits._

@@ -1,17 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel.NONE
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
-class ReuseSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2").getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ReuseSpec extends AnyFunSuite with SharedSpark {
 
   private def frame(n: Long) =
     spark.range(n).select((col("id") % 7).as("k"), col("id"))

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.functions.RollingFingerprint
 import graft.llm.TextHash
@@ -12,17 +10,7 @@ import graft.llm.TextHash
   * fold (TextHash.fingerprint) value-for-value — the fold is the
   * executable specification behind q_text_fingerprint's oracle.
   */
-class RollingFingerprintSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("rolling-fingerprint-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.codegen.fallback", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class RollingFingerprintSpec extends AnyFunSuite with SharedSpark {
 
   test("native matches the fold, including order sensitivity and nulls") {
     import spark.implicits._

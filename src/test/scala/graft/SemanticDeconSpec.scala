@@ -2,9 +2,7 @@ package graft
 
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.llm.Similarity
 
@@ -13,18 +11,9 @@ import graft.llm.Similarity
   * own 9dp HALF_UP round, own (cos DESC, e_id ASC) argmax — no Spark
   * expression in the loop.
   */
-class SemanticDeconSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SemanticDeconSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("semantic-decon-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def round9(x: Double): Double =
     new JBigDecimal(java.lang.Double.toString(x))

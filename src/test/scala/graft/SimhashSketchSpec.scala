@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.functions.SimhashSketch
 import graft.llm.TextHash
@@ -13,17 +11,7 @@ import graft.llm.TextHash
   * explode + 32 vote-sum aggregate table the dedup queries used to build —
   * value-for-value.
   */
-class SimhashSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("simhash-sketch-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.codegen.fallback", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SimhashSketchSpec extends AnyFunSuite with SharedSpark {
 
   test("native matches the fold on adversarial token arrays") {
     import spark.implicits._

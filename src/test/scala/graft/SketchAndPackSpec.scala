@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.functions.KMinValues
 import graft.llm.{Curation, Dedup, Sketches}
@@ -12,18 +10,9 @@ import graft.llm.{Curation, Dedup, Sketches}
   * dedup, and sequence packing (the DuckDB oracles pin exact values; these
   * pin the semantics that make them usable).
   */
-class SketchAndPackSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SketchAndPackSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("sketch-pack-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("kmin_values keeps the k smallest distinct hashes, merged across partitions") {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
@@ -20,12 +19,7 @@ object SketchProps extends Properties("sketchAggregates") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(15)
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("sketch-props")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = SharedSpark.session
 
   // ---- HLL -----------------------------------------------------------------
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.SlugTruncate
@@ -8,16 +7,7 @@ import graft.functions.SlugTruncate
 /** The native slug_truncate expression: codegen path, golden vector, null
   * handling, and the SQL-function registration surface.
   */
-class SlugTruncateSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // hard-fail if the native expression's generated code does not compile
-    // (silent CodegenFallback keeps results green while voiding the point)
-    .config("spark.sql.codegen.fallback", "false")
-    .getOrCreate()
+class SlugTruncateSpec extends AnyFunSuite with SharedSpark {
 
   test("native expression matches the reference algorithm on a column of rows") {
     import spark.implicits._

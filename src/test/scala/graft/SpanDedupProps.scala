@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
 import graft.llm.Dedup
@@ -17,13 +16,7 @@ object SpanDedupProps extends Properties("spanDedup") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(8)
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("span-dedup-props")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = SharedSpark.session
 
   private def reference(docs: Seq[(Long, String)]): Map[Long, (Int, String)] = {
     val seen = scala.collection.mutable.Set[String]()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
 import graft.llm.Dedup
@@ -22,13 +21,7 @@ object SubstrDedupProps extends Properties("substrDedup") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(8)
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("substr-dedup-props")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = SharedSpark.session
 
   private val K = Dedup.SubstrK
 

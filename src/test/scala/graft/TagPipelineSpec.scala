@@ -1,29 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** The native tag_pipeline expression must be element-for-element identical
   * to the declarative higher-order-function chain it replaced
   * ([[TextFunctions.packageTagsHof]]) — that chain is the executable spec,
   * already oracle-verified against DuckDB in q_sf5_package_tags.
   */
-class TagPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TagPipelineSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("tag-pipeline-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    // hard-fail if the native expression's generated code does not compile
-    // (silent CodegenFallback keeps results green while voiding the point)
-    .config("spark.sql.codegen.fallback", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def bothForms(input: Seq[String]): Seq[(Seq[String], Seq[String])] = {
     import spark.implicits._

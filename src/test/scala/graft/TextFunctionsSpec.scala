@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (`/root/reference/tests/test_odgovlt.py`), most importantly the slugify
   * truncation golden vector (tests/test_odgovlt.py:391-399).
   */
-class TextFunctionsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TextFunctionsSpec extends AnyFunSuite with SharedSpark {
 
   private def one(c: org.apache.spark.sql.Column): Any = {
     spark.range(1).select(c.as("v")).collect()(0).get(0)

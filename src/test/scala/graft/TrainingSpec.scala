@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.llm.{TextAnalysis, Training}
 
@@ -13,18 +11,9 @@ import graft.llm.{TextAnalysis, Training}
   * PR sweep must reproduce a naive threshold loop. The DuckDB oracle
   * pins cross-engine parity; these pin the SEMANTICS.
   */
-class TrainingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TrainingSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("training-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   // (doc_id, x0..x4, y) collected once
   private lazy val rows: Seq[(Long, Vector[Long], Long)] =
@@ -91,5 +80,15 @@ class TrainingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // sweep endpoints: the loosest threshold admits the whole corpus
     val last = got.last
     assert(last._2 == lbl.length.toLong && last._6 == Training.Ppm)
+  }
+
+  test("perceptronTrain leaves a caller's pin of its feature rows cached") {
+    val pinned = Training.trainingRows(spark, dir).cache()
+    try {
+      assert(pinned.count() > 0)
+      Training.perceptronTrain(spark, dir).collect()
+      assert(pinned.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "the training loop unpersisted the caller's pin")
+    } finally pinned.unpersist()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,7 +12,7 @@ import graft.functions.UnidecodeOps
   * fallback to combining-mark stripping, and the Latin repertoire to the
   * former translate-chain behavior (so the slug oracles stay byte-stable).
   */
-class UnidecodeSpec extends AnyFunSuite {
+class UnidecodeSpec extends AnyFunSuite with SharedSpark {
 
   private def uni(s: String): String =
     UnidecodeOps.ascii(UTF8String.fromString(s)).toString
@@ -58,12 +57,6 @@ class UnidecodeSpec extends AnyFunSuite {
   }
 
   // --- Column-level: the native expression inside whole-stage codegen ---
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("slugifyNorm over mixed scripts through the codegen path") {
     import spark.implicits._

@@ -2,10 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.ops.ZOrderOps
 
@@ -14,18 +12,9 @@ import graft.ops.ZOrderOps
   * envelopes on BOTH dimensions, so a 2-D box touches few files — is
   * measured, not asserted by vibes.
   */
-class ZOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ZOrderSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("zorder-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.codegen.fallback", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   /** Straight-line Morton reference: interleave bit by bit. */
   private def mortonRef(x: Long, y: Long): Long = {
