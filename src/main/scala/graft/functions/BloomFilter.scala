@@ -6,9 +6,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.GraftBridge
@@ -187,49 +186,13 @@ object BloomBuild {
   * negative (the probe count comes FROM the sketch's header word and the
   * position arithmetic is shared via [[BloomHashOps]], so probe and build
   * cannot disagree), false positives at the rate the build was sized for.
-  * Codegen'd: the probe sits in the hot path (every corpus shingle at scan
+  * Native: the probe sits in the hot path (every corpus shingle at scan
   * speed), so it must not break the whole-stage span the way a boxed UDF
   * would.
   */
-case class BloomContains(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "bloom_contains"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), LongType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"bloom_contains requires (array<bigint>, bigint), got ${l.simpleString} and ${r.simpleString}")
-    }
-
-  override def nullSafeEval(sketch: Any, hash: Any): Any =
-    BloomHashOps.contains(
-      sketch.asInstanceOf[ArrayData], hash.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (sketch, hash) =>
-      s"graft.functions.BloomHashOps.contains($sketch, $hash)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object BloomContains {
+object BloomContains extends NativeFunction("bloom_contains",
+    Seq(In.array(In.bigint), In.bigint), BooleanType, NullRule.Propagate,
+    "graft.functions.BloomHashOps.contains") {
   /** Column form: `BloomContains(sketchCol, hashCol)`. */
-  def apply(sketch: Column, hash: Column): Column =
-    GraftBridge.column(BloomContains(
-      GraftBridge.expression(sketch), GraftBridge.expression(hash)))
-
-  val info = new ExpressionInfo(classOf[BloomContains].getName, "bloom_contains")
-  val builder: Seq[Expression] => Expression = {
-    case Seq(sketch, hash) => BloomContains(sketch, hash)
-    case other => throw new IllegalArgumentException(
-      "bloom_contains(sketch ARRAY<BIGINT>, hash BIGINT) expects 2 arguments " +
-        s"(the sketch carries its own hash count), got ${other.size}")
-  }
-  val identifier: FunctionIdentifier = FunctionIdentifier("bloom_contains")
+  def apply(sketch: Column, hash: Column): Column = call(sketch, hash)
 }

@@ -1,11 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -22,58 +18,20 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Code points (not UTF-16 units) so the counts match codepoint-based
   * engines (DuckDB `substr`/`length`) on supplementary-plane text.
-  * NULL text → NULL struct (default unary null propagation); empty text
-  * → (0, 0, 0, 0L).
+  * NULL text → NULL struct; empty text → (0, 0, 0, 0L).
   */
-case class CharStats(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_chars", IntegerType, nullable = false),
-    StructField("n_distinct", IntegerType, nullable = false),
-    StructField("top_count", IntegerType, nullable = false),
-    StructField("sum_sq", LongType, nullable = false)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "char_stats"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"char_stats requires a string input, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(text: Any): Any =
-    CharStatsOps.run(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, text => {
-      val r = ctx.freshName("charstats")
-      s"""
-         |InternalRow $r = graft.functions.CharStatsOps.run($text);
-         |${ev.value} = $r;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object CharStats {
+object CharStats extends NativeFunction("char_stats", Seq(In.string),
+    StructType(Seq(
+      StructField("n_chars", IntegerType, nullable = false),
+      StructField("n_distinct", IntegerType, nullable = false),
+      StructField("top_count", IntegerType, nullable = false),
+      StructField("sum_sq", LongType, nullable = false))),
+    // declared nullable as before, though the kernel never returns null
+    NullRule.PropagateOrNull, "graft.functions.CharStatsOps.run") {
   /** DataFrame-API entry. */
-  def apply(c: Column): Column = {
-    import org.apache.spark.sql.graftbridge.GraftBridge
-    GraftBridge.column(CharStats(GraftBridge.expression(c)))
-  }
-
-  val info = new ExpressionInfo(classOf[CharStats].getName, "char_stats")
-  val builder: Seq[Expression] => Expression = {
-    case Seq(child) => CharStats(child)
-    case other => throw new IllegalArgumentException(
-      s"char_stats(text STRING) expects 1 argument, got ${other.size}")
-  }
-  val identifier: FunctionIdentifier = FunctionIdentifier("char_stats")
+  def apply(c: Column): Column = call(c)
 }
 
-/** Standalone object so generated code calls a plain static forwarder. */
 object CharStatsOps {
 
   import org.apache.spark.sql.catalyst.expressions.GenericInternalRow

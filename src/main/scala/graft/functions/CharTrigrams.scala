@@ -1,12 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Distinct character trigrams of the lowercased input — the language-ID
@@ -16,62 +12,22 @@ import org.apache.spark.unsafe.types.UTF8String
   * `split(lower(text), "")`) materializes a one-string-per-character array
   * and three shifted slices of it, all under interpreted (CodegenFallback)
   * higher-order lambdas — per document, per the thousands of characters in
-  * it. This expression walks the code points once. Semantics are pinned to
+  * it. The native walks the code points once. Semantics are pinned to
   * the declarative chain by CharTrigramsSpec: code-point windows (never
   * split surrogate pairs), `UTF8String.toLowerCase`, first-occurrence
   * distinct order, whole lowered text as the single fallback gram when the
   * input is shorter than three characters.
   */
-case class CharTrigrams(child: Expression) extends UnaryExpression {
-
-  // NULL input falls through the declarative chain's when/otherwise into the
-  // array(lower(text)) fallback, i.e. [NULL] — NOT a null result, so this
-  // expression must not null-propagate (and its elements are nullable)
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def nullable: Boolean = false
-  override def prettyName: String = "char_trigrams"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"char_trigrams requires a string input, got ${other.simpleString}")
-  }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-    CharTrigramsOps.run(child.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.{FalseLiteral, JavaCode}
-    val c = child.genCode(ctx)
-    val out = ctx.freshName("trigrams")
-    ev.copy(
-      code = code"""
-        ${c.code}
-        org.apache.spark.sql.catalyst.util.ArrayData $out =
-          graft.functions.CharTrigramsOps.run(${c.isNull} ? null : ${c.value});
-      """,
-      isNull = FalseLiteral,
-      value = JavaCode.variable(out, dataType))
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object CharTrigrams {
+object CharTrigrams extends NativeFunction("char_trigrams", Seq(In.string),
+    // NULL input falls through the declarative chain's when/otherwise into
+    // the array(lower(text)) fallback, i.e. [NULL] — NOT a null result, so
+    // the kernel sees the NULL (and the elements are nullable)
+    ArrayType(StringType, containsNull = true), NullRule.KernelSeesNull,
+    "graft.functions.CharTrigramsOps.run") {
   /** DataFrame-API entry. */
-  def apply(c: Column): Column = {
-    import org.apache.spark.sql.graftbridge.GraftBridge
-    GraftBridge.column(CharTrigrams(GraftBridge.expression(c)))
-  }
-
-  val info = new ExpressionInfo(classOf[CharTrigrams].getName, "char_trigrams")
-  val builder: Seq[Expression] => Expression = ch => CharTrigrams(ch.head)
-  val identifier: FunctionIdentifier = FunctionIdentifier("char_trigrams")
+  def apply(c: Column): Column = call(c)
 }
 
-/** Standalone object so generated code calls a plain static forwarder. */
 object CharTrigramsOps {
 
   def run(input: UTF8String): ArrayData = {

@@ -1,21 +1,16 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.DoubleType
 
 /** Left-to-right dot product of two double arrays — the inner loop of the
   * whole embedding family (SURVEY.md §2.11: cosine top-k, IVF routing,
-  * k-means assignment, hyperplane LSH bucketing), as one native codegen'd
-  * expression.
+  * k-means assignment, hyperplane LSH bucketing), as one native.
   *
   * The declarative form (`aggregate(zip_with(a, b, _*_), 0.0, _+_)`) is an
   * interpreted fold: two CodegenFallback lambdas and an intermediate array,
-  * evaluated per scored PAIR. This expression is the same arithmetic — double
+  * evaluated per scored PAIR. The native is the same arithmetic — double
   * products accumulated left to right from a 0.0 seed, so results are
   * bit-identical (DotProductSpec pins it) — in a primitive loop inside
   * whole-stage codegen.
@@ -25,70 +20,25 @@ import org.apache.spark.sql.types._
   * with nulls — both yield NULL. Equal-length empty arrays yield the 0.0
   * seed.
   */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+object DotProduct extends NativeFunction("dot_product",
+    Seq(In.array(In.double), In.array(In.double)), DoubleType,
+    NullRule.PropagateOrNull, "graft.functions.DotProductOps.run") {
+  /** DataFrame-API entry. */
+  def apply(a: Column, b: Column): Column = call(a, b)
+}
 
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "dot_product"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"dot_product requires two array<double> inputs, got ${l.simpleString} and ${r.simpleString}")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) return null
+/** The kernel of [[DotProduct]], also [[NearestOps]]' scoring fold. */
+object DotProductOps {
+  def run(a: ArrayData, b: ArrayData): java.lang.Double = {
+    val n = a.numElements()
+    if (n != b.numElements()) return null
     var s = 0.0
     var i = 0
     while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      s += x.getDouble(i) * y.getDouble(i)
+      if (a.isNullAt(i) || b.isNullAt(i)) return null
+      s += a.getDouble(i) * b.getDouble(i)
       i += 1
     }
     java.lang.Double.valueOf(s)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      s"""
-         |int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $s += $a.getDouble($i) * $b.getDouble($i);
-         |  }
-         |  if (!${ev.isNull}) { ${ev.value} = $s; }
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object DotProduct {
-  /** DataFrame-API entry. */
-  def apply(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.graftbridge.GraftBridge
-    GraftBridge.column(
-      DotProduct(GraftBridge.expression(a), GraftBridge.expression(b)))
-  }
-
-  val info = new ExpressionInfo(classOf[DotProduct].getName, "dot_product")
-  val builder: Seq[Expression] => Expression = ch => DotProduct(ch(0), ch(1))
-  val identifier: FunctionIdentifier = FunctionIdentifier("dot_product")
 }

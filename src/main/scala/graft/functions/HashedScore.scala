@@ -1,12 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Hashed-bag-of-words linear score: each token hashes (salted md5, first
@@ -18,79 +15,25 @@ import org.apache.spark.unsafe.types.UTF8String
   * The declarative form (an `aggregate` fold of
   * `element_at(weights, md5Long(salt || tok) % buckets + 1)`) is an
   * interpreted lambda per token with a per-token Column-expression md5;
-  * this expression walks the tokens once with a thread-local digest.
+  * the native walks the tokens once with a thread-local digest.
   * Semantics pinned by HashedScoreSpec against the HOF chain: any NULL
   * token (or a NULL array) nulls the whole sum — `acc + NULL` poisons the
   * fold — and an empty array yields the 0 seed.
   *
-  * The weight array rides as a child expression (a literal array in every
-  * caller — the broadcast model); the salt is a literal parameter so the
-  * generated code embeds it as a constant.
+  * The weight array rides as an input (a literal array in every caller —
+  * the broadcast model); the salt must be a plain-ASCII string literal, so
+  * the generated code holds it as a constant.
   */
-case class HashedScore(left: Expression, right: Expression, salt: String)
-    extends BinaryExpression {
-
-  require(salt.matches("[A-Za-z0-9:_.-]*"),
-    s"hashed_score salt must be plain ASCII (got '$salt')")
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "hashed_score"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(LongType, false)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (ArrayType(StringType, _), ArrayType(LongType, true)) =>
-        TypeCheckResult.TypeCheckFailure(
-          "hashed_score requires non-null weights (a literal array)")
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"hashed_score requires (array<string>, array<bigint>), got ${l.simpleString} and ${r.simpleString}")
-    }
-
-  override def nullSafeEval(toks: Any, weights: Any): Any =
-    HashedScoreOps.run(
-      toks.asInstanceOf[ArrayData], weights.asInstanceOf[ArrayData],
-      UTF8String.fromString(salt))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val saltRef = ctx.addReferenceObj("salt", UTF8String.fromString(salt))
-    nullSafeCodeGen(ctx, ev, (toks, weights) => {
-      val r = ctx.freshName("score")
-      s"""
-         |java.lang.Long $r =
-         |  graft.functions.HashedScoreOps.run($toks, $weights, $saltRef);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $r.longValue(); }
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object HashedScore {
+object HashedScore extends NativeFunction("hashed_score",
+    Seq(In.array(In.string), In("array<bigint not null>", _ == ArrayType(LongType, false)),
+      In("string literal [A-Za-z0-9:_.-]*", _.isInstanceOf[StringType],
+        Some(_.toString.matches("[A-Za-z0-9:_.-]*")))),
+    LongType, NullRule.PropagateOrNull, "graft.functions.HashedScoreOps.run") {
   /** DataFrame-API entry. */
-  def apply(toks: Column, weights: Column, salt: String): Column = {
-    import org.apache.spark.sql.graftbridge.GraftBridge
-    GraftBridge.column(HashedScore(
-      GraftBridge.expression(toks), GraftBridge.expression(weights), salt))
-  }
-
-  val info = new ExpressionInfo(classOf[HashedScore].getName, "hashed_score")
-  val builder: Seq[Expression] => Expression = {
-    case Seq(toks, weights, Literal(s: UTF8String, StringType)) =>
-      HashedScore(toks, weights, s.toString)
-    case other => throw new IllegalArgumentException(
-      "hashed_score(toks ARRAY<STRING>, weights ARRAY<BIGINT>, salt STRING literal) " +
-        s"expects 3 arguments with a literal salt, got ${other.map(_.sql).mkString(", ")}")
-  }
-  val identifier: FunctionIdentifier = FunctionIdentifier("hashed_score")
+  def apply(toks: Column, weights: Column, salt: String): Column =
+    call(toks, weights, lit(salt))
 }
 
-/** Standalone object so generated code calls a plain static forwarder. */
 object HashedScoreOps {
 
   def run(toks: ArrayData, weights: ArrayData, salt: UTF8String): java.lang.Long = {

@@ -1,13 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
 
 /** Row-local MinHash signature: one md5 per shingle, k affine mixes
   * `h·(2s+1) + s·12582917 mod p` taking running minima — the signature
@@ -28,50 +24,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * a NULL array yields NULL, an empty array yields the Long.MaxValue
   * seeds.
   */
-case class MinhashSig(child: Expression, k: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (k < 1) TypeCheckResult.TypeCheckFailure(
-      s"minhash_sig requires k >= 1, got $k")
-    else child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"minhash_sig requires an array<string> input, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(grams: Any): Any =
-    MinhashSigOps.run(grams.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, grams => {
-      s"${ev.value} = graft.functions.MinhashSigOps.run($grams, $k);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object MinhashSig {
+object MinhashSig extends NativeFunction("minhash_sig",
+    Seq(In.array(In.string),
+      In("int literal >= 1", _ == IntegerType, Some(_.asInstanceOf[Int] >= 1))),
+    ArrayType(LongType, containsNull = false), NullRule.Propagate,
+    "graft.functions.MinhashSigOps.run") {
   /** DataFrame-API entry. */
-  def apply(grams: Column, k: Int): Column = {
-    import org.apache.spark.sql.graftbridge.GraftBridge
-    GraftBridge.column(MinhashSig(GraftBridge.expression(grams), k))
-  }
-
-  val info = new ExpressionInfo(classOf[MinhashSig].getName, "minhash_sig")
-  val builder: Seq[Expression] => Expression = {
-    case Seq(grams, Literal(k: Int, IntegerType)) => MinhashSig(grams, k)
-    case other => throw new IllegalArgumentException(
-      "minhash_sig(grams ARRAY<STRING>, k INT literal) expects 2 arguments " +
-        s"with a literal k, got ${other.map(_.sql).mkString(", ")}")
-  }
-  val identifier: FunctionIdentifier = FunctionIdentifier("minhash_sig")
+  def apply(grams: Column, k: Int): Column = call(grams, lit(k))
 }
 
-/** Standalone object so generated code calls a plain static forwarder. */
 object MinhashSigOps {
 
   /** graft.llm.TextHash.MinhashPrime — referenced, not re-stated. */

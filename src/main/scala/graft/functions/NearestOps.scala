@@ -2,15 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Row-local nearest-centroid / nearest-code argmax — the assignment inner
   * loop of the whole k-means family (IVF membership, the Lloyd rounds,
-  * IVFPQ code assignment), as native codegen'd expressions.
+  * IVFPQ code assignment), as natives.
   *
   * These remove the assignment SHUFFLE, not just lambda overhead (the
   * MinhashSig evolution applied to clustering): the previous scale shape
@@ -24,7 +21,7 @@ import org.apache.spark.sql.types._
   *
   * Semantics are pinned by NearestSpec against the aggregation forms
   * (Similarity.assignAgg / pqAssignAgg, kept as the executable
-  * specification): identical dot-product fold (graft.functions.DotProduct's
+  * specification): identical dot-product fold ([[DotProductOps]]'
   * left-to-right loop), identical 9-dp HALF_UP rounding BEFORE the argmax
   * (Round9Ops mirrors Spark's Round on DoubleType), identical tie-break
   * (highest cosine then smallest cid / lowest distance then smallest code
@@ -49,52 +46,12 @@ object Round9Ops {
   * the smallest cid; returns the winning cid, or NULL when no candidate
   * survives (empty table — cannot occur on the declared tables).
   */
-case class NearestCentroid(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
-
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-  override def prettyName: String = "nearest_centroid"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(DoubleType, _), DoubleType,
-            ArrayType(StructType(Array(StructField(_, IntegerType, _, _),
-              StructField(_, ArrayType(DoubleType, _), _, _),
-              StructField(_, DoubleType, _, _))), _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, m, r) => TypeCheckResult.TypeCheckFailure(
-        "nearest_centroid requires (array<double>, double, " +
-          s"array<struct<int,array<double>,double>>), got ${l.simpleString}, " +
-          s"${m.simpleString}, ${r.simpleString}")
-    }
-
-  override def nullSafeEval(v: Any, nv: Any, cents: Any): Any =
-    NearestOps.nearestCentroid(v.asInstanceOf[ArrayData],
-      nv.asInstanceOf[Double], cents.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, nv, cents) => {
-      val res = ctx.freshName("best")
-      s"""
-         |Integer $res = graft.functions.NearestOps.nearestCentroid($v, $nv, $cents);
-         |if ($res == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $res.intValue(); }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-object NearestCentroid {
+object NearestCentroid extends NativeFunction("nearest_centroid",
+    Seq(In.array(In.double), In.double,
+      In.array(In.struct(In.int, In.array(In.double), In.double))),
+    IntegerType, NullRule.PropagateOrNull, "graft.functions.NearestOps.nearestCentroid") {
   /** DataFrame-API entry: (v, nv, cents) → cid. */
-  def apply(v: Column, nv: Column, cents: Column): Column = {
-    import org.apache.spark.sql.graftbridge.GraftBridge
-    GraftBridge.column(NearestCentroid(GraftBridge.expression(v),
-      GraftBridge.expression(nv), GraftBridge.expression(cents)))
-  }
+  def apply(v: Column, nv: Column, cents: Column): Column = call(v, nv, cents)
 }
 
 /** argmin over `books` (array<struct<code:int, cb:array<double>>>) of
@@ -102,72 +59,18 @@ object NearestCentroid {
   * same operation order), ties to the smallest code; returns
   * struct(code:int, d:double), or NULL on an empty table.
   */
-case class NearestCode(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("code", IntegerType, nullable = false),
-    StructField("d", DoubleType, nullable = false)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "nearest_code"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(StructType(Array(
-            StructField(_, IntegerType, _, _),
-            StructField(_, ArrayType(DoubleType, _), _, _))), _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        "nearest_code requires (array<double>, " +
-          s"array<struct<int,array<double>>>), got ${l.simpleString} and " +
-          s"${r.simpleString}")
-    }
-
-  override def nullSafeEval(sv: Any, books: Any): Any =
-    NearestOps.nearestCode(sv.asInstanceOf[ArrayData],
-      books.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (sv, books) => {
-      val res = ctx.freshName("best")
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow $res =
-         |  graft.functions.NearestOps.nearestCode($sv, $books);
-         |if ($res == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $res; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object NearestCode {
+object NearestCode extends NativeFunction("nearest_code",
+    Seq(In.array(In.double), In.array(In.struct(In.int, In.array(In.double)))),
+    StructType(Seq(
+      StructField("code", IntegerType, nullable = false),
+      StructField("d", DoubleType, nullable = false))),
+    NullRule.PropagateOrNull, "graft.functions.NearestOps.nearestCode") {
   /** DataFrame-API entry: (sv, books) → struct(code, d). */
-  def apply(sv: Column, books: Column): Column = {
-    import org.apache.spark.sql.graftbridge.GraftBridge
-    GraftBridge.column(NearestCode(GraftBridge.expression(sv),
-      GraftBridge.expression(books)))
-  }
+  def apply(sv: Column, books: Column): Column = call(sv, books)
 }
 
-/** Standalone object so generated code calls plain static forwarders. */
+/** The kernels of [[NearestCentroid]] and [[NearestCode]]. */
 object NearestOps {
-
-  /** DotProduct's exact left-to-right fold (null element → null). */
-  private def dot(a: ArrayData, b: ArrayData): java.lang.Double = {
-    val n = a.numElements()
-    if (n != b.numElements()) return null
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      s += a.getDouble(i) * b.getDouble(i)
-      i += 1
-    }
-    java.lang.Double.valueOf(s)
-  }
 
   def nearestCentroid(v: ArrayData, nv: Double,
       cents: ArrayData): Integer = {
@@ -181,7 +84,7 @@ object NearestOps {
         val row = cents.getStruct(i, 3)
         if (!row.isNullAt(0) && !row.isNullAt(1) && !row.isNullAt(2)) {
           val cid = row.getInt(0)
-          val d = dot(v, row.getArray(1))
+          val d = DotProductOps.run(v, row.getArray(1))
           if (d != null) {
             // the aggregation form's exact arithmetic: dot / (nv * cnorm),
             // rounded to 9 dp BEFORE the comparison
@@ -201,7 +104,7 @@ object NearestOps {
 
   def nearestCode(sv: ArrayData, books: ArrayData): InternalRow = {
     val n = books.numElements()
-    val dAA = dot(sv, sv)
+    val dAA = DotProductOps.run(sv, sv)
     if (dAA == null) return null
     var bestD = 0.0
     var bestCode = 0
@@ -213,8 +116,8 @@ object NearestOps {
         if (!row.isNullAt(0) && !row.isNullAt(1)) {
           val code = row.getInt(0)
           val cb = row.getArray(1)
-          val dBB = dot(cb, cb)
-          val dAB = dot(sv, cb)
+          val dBB = DotProductOps.run(cb, cb)
+          val dAB = DotProductOps.run(sv, cb)
           if (dBB != null && dAB != null) {
             // l2sq's exact operation order: (aa + bb) - (2.0 * ab), round 9
             val d = Round9Ops.round9(

@@ -1,14 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Within-document n-gram repetition statistics in ONE native pass:
   * `struct(n_tokens, dup_bigram_frac, dup_trigram_frac)` over a token
@@ -18,8 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * each gram array from zipped shifted slices under interpreted
   * (CodegenFallback) lambdas — and every REFERENCE to those arrays
   * (size, array_distinct, the guard) re-evaluates the whole chain after
-  * CollapseProject inlines it, multiplying the interpreted work ~4x. This
-  * expression walks the tokens once, counting distinct bigrams/trigrams in
+  * CollapseProject inlines it, multiplying the interpreted work ~4x. The
+  * native walks the tokens once, counting distinct bigrams/trigrams in
   * hash sets; as a codegen'd struct, downstream field extractions share
   * one evaluation via whole-stage-codegen subexpression elimination.
   * Semantics pinned element-for-element by NgramDupStatsSpec, including
@@ -27,66 +22,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * a NULL array is NULL; both guards fall through to 0.0), NULL tokens
   * null their grams (one NULL gram per array counts distinct).
   */
-case class NgramDupStats(child: Expression) extends UnaryExpression {
-
-  // n_tokens is nullable: on a NULL input array the HOF chain yields
-  // struct(NULL, 0.0, 0.0) — size(NULL) is NULL and both guards fall
-  // through to the 0.0 fallbacks
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_tokens", IntegerType, nullable = true),
-    StructField("dup_bigram_frac", DoubleType, nullable = false),
-    StructField("dup_trigram_frac", DoubleType, nullable = false)))
-  override def nullable: Boolean = false
-  override def prettyName: String = "ngram_dup_stats"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"ngram_dup_stats requires an array<string> input, got ${other.simpleString}")
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    NgramDupStatsOps.run(
-      if (v == null) null else v.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.{FalseLiteral, JavaCode}
-    val c = child.genCode(ctx)
-    val out = ctx.freshName("dupstats")
-    ev.copy(
-      code = code"""
-        ${c.code}
-        InternalRow $out =
-          graft.functions.NgramDupStatsOps.run(${c.isNull} ? null : ${c.value});
-      """,
-      isNull = FalseLiteral,
-      value = JavaCode.variable(out, dataType))
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object NgramDupStats {
+object NgramDupStats extends NativeFunction("ngram_dup_stats", Seq(In.array(In.string)),
+    // n_tokens is nullable: on a NULL input array the HOF chain yields
+    // struct(NULL, 0.0, 0.0) — size(NULL) is NULL and both guards fall
+    // through to the 0.0 fallbacks
+    StructType(Seq(
+      StructField("n_tokens", IntegerType, nullable = true),
+      StructField("dup_bigram_frac", DoubleType, nullable = false),
+      StructField("dup_trigram_frac", DoubleType, nullable = false))),
+    NullRule.KernelSeesNull, "graft.functions.NgramDupStatsOps.run") {
   /** DataFrame-API entry. */
-  def apply(c: Column): Column = {
-    import org.apache.spark.sql.graftbridge.GraftBridge
-    GraftBridge.column(NgramDupStats(GraftBridge.expression(c)))
-  }
-
-  val info = new ExpressionInfo(classOf[NgramDupStats].getName, "ngram_dup_stats")
-  val builder: Seq[Expression] => Expression = {
-    case Seq(child) => NgramDupStats(child)
-    case other => throw new IllegalArgumentException(
-      s"ngram_dup_stats(tokens ARRAY<STRING>) expects 1 argument, got ${other.size}")
-  }
-  val identifier: FunctionIdentifier = FunctionIdentifier("ngram_dup_stats")
+  def apply(c: Column): Column = call(c)
 }
 
-/** Standalone object so generated code calls a plain static forwarder. */
 object NgramDupStatsOps {
 
   import org.apache.spark.sql.catalyst.expressions.GenericInternalRow

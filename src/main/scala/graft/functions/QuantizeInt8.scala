@@ -1,10 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -27,55 +23,16 @@ import org.apache.spark.sql.types._
   * `list_reduce`, since 0.0 + d² is exact). All-zero vectors take scale 0
   * and zero codes rather than dividing by zero.
   */
-case class QuantizeInt8(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("q", ArrayType(IntegerType, containsNull = false), nullable = false),
-    StructField("err", DoubleType, nullable = false)))
-  // a null ELEMENT yields a NULL result (run returns null), independent of
-  // the child's own nullability — so this must always be nullable
-  override def nullable: Boolean = true
-  override def prettyName: String = "quantize_int8"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"quantize_int8 requires an array<double> input, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(value: Any): Any =
-    QuantizeInt8Ops.run(value.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("qz")
-      // typed local + explicit isNull: defineCodeGen would assign the
-      // method result into an InternalRow variable via the boxed return
-      // type and never propagate the null-element case
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow $r =
-         |  graft.functions.QuantizeInt8Ops.run($c);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object QuantizeInt8 {
+object QuantizeInt8 extends NativeFunction("quantize_int8", Seq(In.array(In.double)),
+    StructType(Seq(
+      StructField("q", ArrayType(IntegerType, containsNull = false), nullable = false),
+      StructField("err", DoubleType, nullable = false))),
+    // a null ELEMENT yields a NULL result (the kernel returns null)
+    NullRule.PropagateOrNull, "graft.functions.QuantizeInt8Ops.run") {
   /** DataFrame-API entry. */
-  def apply(c: Column): Column = {
-    import org.apache.spark.sql.graftbridge.GraftBridge
-    GraftBridge.column(QuantizeInt8(GraftBridge.expression(c)))
-  }
-
-  val info = new ExpressionInfo(classOf[QuantizeInt8].getName, "quantize_int8")
-  val builder: Seq[Expression] => Expression = ch => QuantizeInt8(ch.head)
-  val identifier: FunctionIdentifier = FunctionIdentifier("quantize_int8")
+  def apply(c: Column): Column = call(c)
 }
 
-/** Standalone object so generated code calls a plain static forwarder. */
 object QuantizeInt8Ops {
 
   def run(v: ArrayData): org.apache.spark.sql.catalyst.InternalRow = {

@@ -1,12 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.LongType
 
 /** Order-sensitive document fingerprint: the polynomial rolling hash
   * `fp = fold((acc·31 + md5Long(tok)) mod 2^31−1)` over the token
@@ -19,49 +15,13 @@ import org.apache.spark.sql.types._
   * poisons the accumulator (`acc·31 + NULL`) and nulls the result, a NULL
   * array yields NULL, an empty array yields the 0 seed.
   */
-case class RollingFingerprint(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "rolling_fingerprint"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"rolling_fingerprint requires an array<string> input, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(toks: Any): Any =
-    RollingFingerprintOps.run(toks.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, toks => {
-      val r = ctx.freshName("fp")
-      s"""
-         |java.lang.Long $r = graft.functions.RollingFingerprintOps.run($toks);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $r.longValue(); }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object RollingFingerprint {
+object RollingFingerprint extends NativeFunction("rolling_fingerprint",
+    Seq(In.array(In.string)), LongType, NullRule.PropagateOrNull,
+    "graft.functions.RollingFingerprintOps.run") {
   /** DataFrame-API entry. */
-  def apply(toks: Column): Column = {
-    import org.apache.spark.sql.graftbridge.GraftBridge
-    GraftBridge.column(RollingFingerprint(GraftBridge.expression(toks)))
-  }
-
-  val info =
-    new ExpressionInfo(classOf[RollingFingerprint].getName, "rolling_fingerprint")
-  val builder: Seq[Expression] => Expression = ch => RollingFingerprint(ch.head)
-  val identifier: FunctionIdentifier = FunctionIdentifier("rolling_fingerprint")
+  def apply(toks: Column): Column = call(toks)
 }
 
-/** Standalone object so generated code calls a plain static forwarder. */
 object RollingFingerprintOps {
 
   private val Mod = 2147483647L // 2^31 - 1, the fold's modulus

@@ -1,12 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.LongType
 
 /** Row-local 64-bit SimHash sketch — [[SimhashSketch]] at twice the
   * fingerprint width. Same construction (one md5 per token through the
@@ -27,41 +23,12 @@ import org.apache.spark.sql.types._
   * are the content-keyed LSH chains), but the practical corpus range
   * widens by three orders of magnitude.
   */
-case class Simhash64Sketch(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64_sketch"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"simhash64_sketch requires an array<string> input, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(toks: Any): Any =
-    Simhash64SketchOps.run(toks.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, toks =>
-      s"${ev.value} = graft.functions.Simhash64SketchOps.run($toks);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object Simhash64Sketch {
+object Simhash64Sketch extends NativeFunction("simhash64_sketch", Seq(In.array(In.string)),
+    LongType, NullRule.Propagate, "graft.functions.Simhash64SketchOps.run") {
   /** DataFrame-API entry. */
-  def apply(toks: Column): Column = {
-    import org.apache.spark.sql.graftbridge.GraftBridge
-    GraftBridge.column(Simhash64Sketch(GraftBridge.expression(toks)))
-  }
-
-  val info = new ExpressionInfo(classOf[Simhash64Sketch].getName, "simhash64_sketch")
-  val builder: Seq[Expression] => Expression = ch => Simhash64Sketch(ch.head)
-  val identifier: FunctionIdentifier = FunctionIdentifier("simhash64_sketch")
+  def apply(toks: Column): Column = call(toks)
 }
 
-/** Standalone object so generated code calls a plain static forwarder. */
 object Simhash64SketchOps {
 
   def run(toks: ArrayData): Long = {

@@ -1,13 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.LongType
 
 /** Row-local 32-bit SimHash sketch: one md5 per token, ±1 votes per bit,
   * bit set iff the vote sum is positive — the sketch builder of the whole
@@ -26,41 +21,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * .otherwise(-1)` branch), a NULL array yields NULL, an empty array
   * yields sketch 0 (all vote sums 0, no bit positive).
   */
-case class SimhashSketch(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash_sketch"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"simhash_sketch requires an array<string> input, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(toks: Any): Any =
-    SimhashSketchOps.run(toks.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, toks =>
-      s"${ev.value} = graft.functions.SimhashSketchOps.run($toks);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object SimhashSketch {
+object SimhashSketch extends NativeFunction("simhash_sketch", Seq(In.array(In.string)),
+    LongType, NullRule.Propagate, "graft.functions.SimhashSketchOps.run") {
   /** DataFrame-API entry. */
-  def apply(toks: Column): Column = {
-    import org.apache.spark.sql.graftbridge.GraftBridge
-    GraftBridge.column(SimhashSketch(GraftBridge.expression(toks)))
-  }
-
-  val info = new ExpressionInfo(classOf[SimhashSketch].getName, "simhash_sketch")
-  val builder: Seq[Expression] => Expression = ch => SimhashSketch(ch.head)
-  val identifier: FunctionIdentifier = FunctionIdentifier("simhash_sketch")
+  def apply(toks: Column): Column = call(toks)
 }
 
-/** Standalone object so generated code calls a plain static forwarder. */
 object SimhashSketchOps {
 
   def run(toks: ArrayData): Long = {

@@ -3,12 +3,8 @@ package graft.functions
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression for the reference's tag pipeline
@@ -21,51 +17,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * per element AND materializes an intermediate array, on the package
   * assembly hot path (three declared queries). This expression runs the
   * whole pipeline in one compiled pass per row with precompiled regexes and
-  * participates in whole-stage codegen, like [[SlugTruncate]] and
-  * [[JsonProject]].
+  * participates in whole-stage codegen.
   *
   * Semantics are pinned element-for-element to the declarative chain by
   * TagPipelineSpec: space-only trim (Spark `trim`), code-point-aware
   * `substring`/`length`, `UTF8String.toLowerCase` for both the fixcase
   * head and the tag body, Unicode `\W` classes.
   */
-case class TagPipeline(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "tag_pipeline"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"tag_pipeline requires a string input, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(value: Any): Any =
-    TagPipelineOps.run(value.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TagPipelineOps.run($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object TagPipeline {
+object TagPipeline extends NativeFunction("tag_pipeline", Seq(In.string),
+    ArrayType(StringType, containsNull = false), NullRule.Propagate,
+    "graft.functions.TagPipelineOps.run") {
   /** DataFrame-API entry: `TagPipeline(col)`. */
-  def apply(c: Column): Column = {
-    import org.apache.spark.sql.graftbridge.GraftBridge
-    GraftBridge.column(TagPipeline(GraftBridge.expression(c)))
-  }
-
-  val info = new ExpressionInfo(classOf[TagPipeline].getName, "tag_pipeline")
-  val builder: Seq[Expression] => Expression = ch => TagPipeline(ch.head)
-  val identifier: FunctionIdentifier = FunctionIdentifier("tag_pipeline")
+  def apply(c: Column): Column = call(c)
 }
 
-/** The pipeline body, in a standalone object so generated code reaches it
-  * through a plain static forwarder (same pattern as
-  * `graft.TextFunctions.truncateSlug` in [[SlugTruncate]]'s codegen).
-  */
+/** The pipeline body: the kernel of [[TagPipeline]]. */
 object TagPipelineOps {
 
   private val Fixcase = Pattern.compile("^\\p{Lu}\\p{Ll}")

@@ -2,11 +2,7 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** ASCII transliteration — the engine's `unidecode` analog
@@ -25,8 +21,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * unchanged and die at slugify's `[^\w\s-]` strip — Java's ASCII `\w`
   * gives exactly Python-unidecode's drop-unknown end state.
   *
-  * A native UnaryExpression with `doGenCode` (static call, no boxing):
-  * the slug pipeline runs at scan speed inside whole-stage codegen.
+  * A native (static call, no boxing): the slug pipeline runs at scan
+  * speed inside whole-stage codegen.
   */
 object UnidecodeOps {
 
@@ -117,29 +113,5 @@ object UnidecodeOps {
   }
 }
 
-case class Unidecode(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"unidecode expects a string column, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "unidecode"
-
-  override def nullSafeEval(s: Any): Any =
-    UnidecodeOps.ascii(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, s => s"graft.functions.UnidecodeOps.ascii($s)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object Unidecode {
-  val info = new ExpressionInfo(classOf[Unidecode].getName, "unidecode")
-  val builder: Seq[Expression] => Expression = ch => Unidecode(ch.head)
-  val identifier: FunctionIdentifier = FunctionIdentifier("unidecode")
-}
+object Unidecode extends NativeFunction("unidecode", Seq(In.string), StringType,
+  NullRule.Propagate, "graft.functions.UnidecodeOps.ascii")

@@ -1,12 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Distinct word 3-gram shingles of a token array — the feature extractor
@@ -17,62 +13,22 @@ import org.apache.spark.unsafe.types.UTF8String
   * The declarative form ([[graft.llm.TextHash.shingles3Hof]]) zips
   * three shifted slices of the token array under interpreted
   * (CodegenFallback) lambdas, allocating two intermediate arrays per row.
-  * This expression walks the tokens once. Semantics pinned by
+  * The native walks the tokens once. Semantics pinned by
   * WordShinglesSpec: space-joined triples, first-occurrence distinct order,
   * a single empty-string shingle for arrays shorter than 3 (so downstream
   * signatures stay well-defined), and `concat`'s null propagation (a null
   * token nulls the shingles it appears in).
   */
-case class WordShingles(child: Expression) extends UnaryExpression {
-
-  // NULL input falls through the declarative chain's when/otherwise into
-  // the array('') fallback (size(NULL) = -1 under legacy sizeOfNull) — so
-  // this expression must not null-propagate
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def nullable: Boolean = false
-  override def prettyName: String = "word_shingles"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"word_shingles requires an array<string> input, got ${other.simpleString}")
-  }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-    WordShinglesOps.run(child.eval(input).asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.{FalseLiteral, JavaCode}
-    val c = child.genCode(ctx)
-    val out = ctx.freshName("shingles")
-    ev.copy(
-      code = code"""
-        ${c.code}
-        org.apache.spark.sql.catalyst.util.ArrayData $out =
-          graft.functions.WordShinglesOps.run(${c.isNull} ? null : ${c.value});
-      """,
-      isNull = FalseLiteral,
-      value = JavaCode.variable(out, dataType))
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object WordShingles {
+object WordShingles extends NativeFunction("word_shingles", Seq(In.array(In.string)),
+    // NULL input falls through the declarative chain's when/otherwise into
+    // the array('') fallback (size(NULL) = -1 under legacy sizeOfNull) — so
+    // the kernel sees the NULL
+    ArrayType(StringType, containsNull = true), NullRule.KernelSeesNull,
+    "graft.functions.WordShinglesOps.run") {
   /** DataFrame-API entry. */
-  def apply(c: Column): Column = {
-    import org.apache.spark.sql.graftbridge.GraftBridge
-    GraftBridge.column(WordShingles(GraftBridge.expression(c)))
-  }
-
-  val info = new ExpressionInfo(classOf[WordShingles].getName, "word_shingles")
-  val builder: Seq[Expression] => Expression = ch => WordShingles(ch.head)
-  val identifier: FunctionIdentifier = FunctionIdentifier("word_shingles")
+  def apply(c: Column): Column = call(c)
 }
 
-/** Standalone object so generated code calls a plain static forwarder. */
 object WordShinglesOps {
 
   private val Empty = UTF8String.fromString("")
