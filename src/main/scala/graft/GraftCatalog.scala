@@ -10,6 +10,112 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftCatalog {
 
+  /** View name → the [[SparkEntry.queries]] entry it mounts. A view is its
+    * declared query; a query whose plan construction runs a fixpoint loop
+    * has no view.
+    */
+  val Views: Seq[(String, String)] = Seq(
+    "package_flat" -> "q_p4_package_flat",
+    "merge_actions" -> "q_k3_merge_actions",
+    "category_tree" -> "q_j5_tree",
+    "group_docs" -> "q_p3_group_docs",
+    "tfidf_top_terms" -> "q_text_tfidf",
+    "sample_split" -> "q_sample_split",
+    "decontaminated" -> "q_decontaminate",
+    "source_mix" -> "q_source_mix",
+    "source_mix_temp" -> "q_source_mix_temp",
+    "semdedup" -> "q_semdedup",
+    "curated_corpus" -> "q_pipeline_curate",
+    "retrieve_rerank" -> "q_retrieve_rerank",
+    "hll_distinct" -> "q_sketch_hll",
+    "cms_term_freq" -> "q_sketch_cms",
+    "sketch_overlap" -> "q_sketch_overlap",
+    "table_profile" -> "q_profile_table",
+    "pagerank" -> "q_pagerank",
+    "scd2_history" -> "q_a7d_scd2",
+    "gap_fill" -> "q_w6_gap_fill",
+    "moving_avg" -> "q_w7_moving_avg",
+    "ivm_agg" -> "q_ivm_agg",
+    "hard_negatives" -> "q_embed_hardneg",
+    "bpe_encoded" -> "q_bpe_encode",
+    "oov_rate" -> "q_text_oov",
+    "funnel_stages" -> "q_funnel",
+    "cohort_retention" -> "q_cohort_retention",
+    "weighted_sample" -> "q_sample_weighted",
+    "length_outliers" -> "q_text_outlier",
+    "copurchase_triangles" -> "q_graph_triangles",
+    "fuzzy_name_match" -> "q_fuzzy_match",
+    "ivm_join" -> "q_ivm_join",
+    "inverted_index" -> "q_inverted_index",
+    "bm25_indexed" -> "q_bm25_indexed",
+    "collocations" -> "q_cooc_lift",
+    "bigram_lm" -> "q_bigram_lm",
+    "embed_rp" -> "q_embed_rp",
+    "ivm_index" -> "q_ivm_index",
+    "pareto_front" -> "q_pareto_front",
+    "ohlc_bars" -> "q_w9_ohlc",
+    "dq_checks" -> "q_dq_checks",
+    "hist_quantiles" -> "q_sketch_histquant",
+    "tfidf_neighbors" -> "q_tfidf_neighbors",
+    "winsorized" -> "q_winsorize",
+    "skipgrams" -> "q_skipgrams",
+    "negative_samples" -> "q_negsample",
+    "anomaly_mad" -> "q_anomaly_mad",
+    "interp_fill" -> "q_w10_interp",
+    "dq_drift" -> "q_dq_drift",
+    "vocab_coverage" -> "q_vocab_coverage",
+    "zorder_prune" -> "q_zorder_prune",
+    "unpivoted_counts" -> "q_a14_unpivot",
+    "snapshot_reconciliation" -> "q_j12_full_outer",
+    "node_similarity" -> "q_graph_jaccard",
+    "ivm_zonemap" -> "q_ivm_zonemap",
+    "weighted_median" -> "q_w11_weighted_median",
+    "pr_curve" -> "q_model_pr_curve",
+    "cms_topk" -> "q_sketch_cms_topk",
+    "rrf_fusion" -> "q_retrieve_rrf",
+    "maxsim_results" -> "q_retrieve_maxsim",
+    "grouping_sets_report" -> "q_a15_grouping_sets",
+    "epoch_shuffle" -> "q_epoch_shuffle",
+    "bpe_fertility" -> "q_bpe_fertility",
+    "basket_rules" -> "q_basket_rules",
+    "rfm_segments" -> "q_rfm_segments",
+    "cal_spine" -> "q_cal_spine",
+    "privacy_kanon" -> "q_privacy_kanon",
+    "containment_pairs" -> "q_dedup_containment",
+    "asof_tolerance" -> "q_j8b_asof_tol",
+    "range_frame_1h" -> "q_w15_range_frame",
+    "flagship_revenue" -> "q_flagship_revenue",
+    "langid_confusion" -> "q_langid_confusion",
+    "curate_budget" -> "q_curate_budget",
+    "erasure_report" -> "q_privacy_erasure",
+    "ivm_sketch" -> "q_ivm_sketch",
+    "first_touch_attr" -> "q_j9b_first_touch",
+    "funnel_latency" -> "q_funnel_latency",
+    "dow_seasonality" -> "q_seasonality",
+    "pixel_stats" -> "q_mm_pixels",
+    "sync_errors" -> "q_sync_errors",
+    "pixel_rgb_stats" -> "q_mm_pixels_rgb",
+    "audio_stats" -> "q_mm_audio",
+    "resize_stats" -> "q_mm_resize",
+    "video_frame_stats" -> "q_mm_video",
+    "dsir_weights" -> "q_dsir_weights",
+    "dsir_selected" -> "q_dsir_select",
+    "ann_eval" -> "q_ann_eval",
+    "text_drift" -> "q_text_drift",
+    "substr_ranges" -> "q_dedup_substr_ranges",
+    "substr_trimmed" -> "q_dedup_substr_trim",
+    "substr_stats" -> "q_dedup_substr_stats",
+    "prototype_prune" -> "q_prototype_prune",
+    "lm_scores" -> "q_lm_score",
+    "lm_buckets" -> "q_lm_buckets",
+    "lm_profile" -> "q_lm_profile",
+    "lm_budget_selected" -> "q_token_budget",
+    "quality_pipeline" -> "q_pipeline_quality",
+    "lm_excess_selected" -> "q_lm_excess",
+    "ngram_novelty" -> "q_ngram_novelty",
+    "diversity_sample" -> "q_diversity_sample",
+    "semantic_decon" -> "q_semantic_decon")
+
   /** Register base tables, derived views, and functions on the session.
     * The views pin nothing: they mount inside [[Reuse.released]].
     */
@@ -17,250 +123,9 @@ object GraftCatalog {
     Tables.names.foreach { n =>
       Tables.table(spark, sfDir, n).createOrReplaceTempView(n)
     }
-    SyncPipeline.packageFlat(spark, sfDir).createOrReplaceTempView("package_flat")
-    SyncPipeline.mergeActions(spark, sfDir).createOrReplaceTempView("merge_actions")
-    // the two tree views DO run eager jobs at registration (treeWalk's
-    // per-level localCheckpoint + isEmpty) — the accepted exception to
-    // the lazy-mount rule below: the loop is bounded by tree DEPTH over
-    // DIMENSION-sized tables (a few tiny jobs), unlike the corpus-sized
-    // fixpoints (components/kCore/bfs) that stay unmounted
-    graft.ops.HierarchyOps.j5Tree(spark, sfDir).createOrReplaceTempView("category_tree")
-    graft.ops.HierarchyOps.groupDocs(spark, sfDir)
-      .createOrReplaceTempView("group_docs")
-    // lazy plans only: nearDupComponents is deliberately NOT mounted — its
-    // iterative loop runs Spark jobs eagerly, which a view registration
-    // must not do; call it directly when needed
-    graft.llm.TextAnalysis.tfidfTopTerms(spark, sfDir)
-      .createOrReplaceTempView("tfidf_top_terms")
-    graft.llm.TextAnalysis.trainValSplit(spark, sfDir)
-      .createOrReplaceTempView("sample_split")
-    graft.llm.Curation.decontaminate(spark, sfDir)
-      .createOrReplaceTempView("decontaminated")
-    graft.llm.Curation.sourceMix(spark, sfDir)
-      .createOrReplaceTempView("source_mix")
-    graft.llm.Curation.sourceMixTemperature(spark, sfDir)
-      .createOrReplaceTempView("source_mix_temp")
-    // k pinned: auto-sizing (k = None) counts the corpus — an eager job
-    // a view registration must not run; the fixture-fixed k is identical
-    // at any mounted harness scale ≤ sf0.1
-    graft.llm.Similarity.semDedup(spark, sfDir,
-      k = Some(graft.llm.Similarity.KmeansK))
-      .createOrReplaceTempView("semdedup")
-    graft.llm.Curation.pipelineCurate(spark, sfDir)
-      .createOrReplaceTempView("curated_corpus")
-    graft.llm.Similarity.retrieveRerank(spark, sfDir)
-      .createOrReplaceTempView("retrieve_rerank")
-    // round-6 additions — all lazy plans (pageRank's loop only BUILDS the
-    // plan; the eagerly-iterating components stays unmounted)
-    graft.llm.Sketches.hllDistinct(spark, sfDir)
-      .createOrReplaceTempView("hll_distinct")
-    graft.llm.Sketches.cmsTermFreq(spark, sfDir)
-      .createOrReplaceTempView("cms_term_freq")
-    graft.llm.Sketches.kmvOverlap(spark, sfDir)
-      .createOrReplaceTempView("sketch_overlap")
-    graft.ops.ProfileOps.profileTable(spark, sfDir)
-      .createOrReplaceTempView("table_profile")
-    graft.ops.GraphOps.pageRank(spark, sfDir)
-      .createOrReplaceTempView("pagerank")
-    graft.ops.ChangeOps.scd2History(spark, sfDir)
-      .createOrReplaceTempView("scd2_history")
-    graft.ops.AsofOps.gapFill(spark, sfDir)
-      .createOrReplaceTempView("gap_fill")
-    graft.ops.CoreOps.w7MovingAvg(spark, sfDir)
-      .createOrReplaceTempView("moving_avg")
-    graft.ops.IncrementalOps.ivmMergeAgg(spark, sfDir)
-      .createOrReplaceTempView("ivm_agg")
-    // k pinned for the same no-eager-jobs reason as the semdedup mount
-    graft.llm.Similarity.hardNegatives(spark, sfDir,
-      k = Some(graft.llm.Similarity.KmeansK))
-      .createOrReplaceTempView("hard_negatives")
-    graft.llm.TextAnalysis.bpeEncode(spark, sfDir)
-      .createOrReplaceTempView("bpe_encoded")
-    graft.llm.TextAnalysis.oovRate(spark, sfDir)
-      .createOrReplaceTempView("oov_rate")
-    // analytics batch — all lazy plans
-    graft.ops.AnalyticsOps.funnelStages(spark, sfDir)
-      .createOrReplaceTempView("funnel_stages")
-    graft.ops.AnalyticsOps.cohortRetention(spark, sfDir)
-      .createOrReplaceTempView("cohort_retention")
-    graft.ops.AnalyticsOps.weightedSample(spark, sfDir)
-      .createOrReplaceTempView("weighted_sample")
-    graft.ops.AnalyticsOps.lengthOutliers(spark, sfDir)
-      .createOrReplaceTempView("length_outliers")
-    graft.ops.GraphOps.triangles(spark, sfDir)
-      .createOrReplaceTempView("copurchase_triangles")
-    graft.ops.MatchOps.fuzzyNameMatch(spark, sfDir)
-      .createOrReplaceTempView("fuzzy_name_match")
-    graft.ops.IncrementalOps.ivmJoin(spark, sfDir)
-      .createOrReplaceTempView("ivm_join")
-    // retrieval-index tier — lazy plans
-    graft.llm.TextAnalysis.invertedIndex(spark, sfDir)
-      .createOrReplaceTempView("inverted_index")
-    graft.llm.TextAnalysis.bm25Indexed(spark, sfDir)
-      .createOrReplaceTempView("bm25_indexed")
-    graft.llm.TextAnalysis.collocations(spark, sfDir)
-      .createOrReplaceTempView("collocations")
-    graft.llm.TextAnalysis.bigramCommonness(spark, sfDir)
-      .createOrReplaceTempView("bigram_lm")
-    // leakageSafeSplit stays unmounted like the components it composes
-    // (its fixpoint runs Spark jobs eagerly - the view contract forbids it)
-    graft.llm.Similarity.randomProjection(spark, sfDir)
-      .createOrReplaceTempView("embed_rp")
-    graft.llm.TextAnalysis.ivmIndex(spark, sfDir)
-      .createOrReplaceTempView("ivm_index")
-    // round-7 batch — lazy plans; kCore stays UNMOUNTED (its per-round
-    // localCheckpoint runs Spark jobs eagerly, the same exclusion as the
-    // components fixpoint)
-    graft.ops.AnalyticsOps.paretoFront(spark, sfDir)
-      .createOrReplaceTempView("pareto_front")
-    graft.ops.AnalyticsOps.ohlcResample(spark, sfDir)
-      .createOrReplaceTempView("ohlc_bars")
-    graft.ops.ProfileOps.dqChecks(spark, sfDir)
-      .createOrReplaceTempView("dq_checks")
-    graft.llm.Sketches.histQuantiles(spark, sfDir)
-      .createOrReplaceTempView("hist_quantiles")
-    graft.llm.TextAnalysis.docNeighbors(spark, sfDir)
-      .createOrReplaceTempView("tfidf_neighbors")
-    // bfs stays unmounted with kCore (eager per-round checkpoints)
-    graft.ops.AnalyticsOps.winsorize(spark, sfDir)
-      .createOrReplaceTempView("winsorized")
-    graft.llm.TextAnalysis.skipgrams(spark, sfDir)
-      .createOrReplaceTempView("skipgrams")
-    graft.llm.TextAnalysis.negativeSamples(spark, sfDir)
-      .createOrReplaceTempView("negative_samples")
-    graft.ops.AnalyticsOps.anomalyMad(spark, sfDir)
-      .createOrReplaceTempView("anomaly_mad")
-    graft.ops.AsofOps.interpFill(spark, sfDir)
-      .createOrReplaceTempView("interp_fill")
-    graft.ops.ProfileOps.dqDrift(spark, sfDir)
-      .createOrReplaceTempView("dq_drift")
-    graft.llm.TextAnalysis.vocabCoverage(spark, sfDir)
-      .createOrReplaceTempView("vocab_coverage")
-    graft.ops.ZOrderOps.zorderPrune(spark, sfDir)
-      .createOrReplaceTempView("zorder_prune")
-    graft.ops.CoreOps.a14Unpivot(spark, sfDir)
-      .createOrReplaceTempView("unpivoted_counts")
-    graft.ops.CoreOps.j12FullOuter(spark, sfDir)
-      .createOrReplaceTempView("snapshot_reconciliation")
-    graft.ops.GraphOps.nodeSimilarity(spark, sfDir)
-      .createOrReplaceTempView("node_similarity")
-    graft.ops.ZOrderOps.ivmZonemap(spark, sfDir)
-      .createOrReplaceTempView("ivm_zonemap")
-    // dedupCanonical and entityResolve stay unmounted with the components
-    // fixpoint they compose (eager jobs, the standing view-contract
-    // exclusion)
-    // training/eval + retrieval-fusion batch — lazy plans;
-    // perceptronTrain (per-epoch scalar collects) and mmrDiversify
-    // (per-round localCheckpoint) stay unmounted with kCore/BFS
-    graft.ops.AnalyticsOps.weightedMedian(spark, sfDir)
-      .createOrReplaceTempView("weighted_median")
-    graft.llm.Training.prCurve(spark, sfDir)
-      .createOrReplaceTempView("pr_curve")
-    graft.llm.Sketches.cmsTopK(spark, sfDir)
-      .createOrReplaceTempView("cms_topk")
-    graft.llm.Similarity.rrfFusion(spark, sfDir)
-      .createOrReplaceTempView("rrf_fusion")
-    graft.llm.Similarity.maxSimLate(spark, sfDir)
-      .createOrReplaceTempView("maxsim_results")
-    // batch 2 — lazy plans; labelPropagation stays unmounted with
-    // kCore/BFS/MMR (eager per-round checkpoints)
-    graft.ops.AnalyticsOps.a15GroupingSets(spark, sfDir)
-      .createOrReplaceTempView("grouping_sets_report")
-    graft.llm.Curation.epochShuffle(spark, sfDir)
-      .createOrReplaceTempView("epoch_shuffle")
-    graft.llm.TextAnalysis.bpeFertility(spark, sfDir)
-      .createOrReplaceTempView("bpe_fertility")
-    graft.ops.AnalyticsOps.basketRules(spark, sfDir)
-      .createOrReplaceTempView("basket_rules")
-    graft.ops.AnalyticsOps.rfmSegments(spark, sfDir)
-      .createOrReplaceTempView("rfm_segments")
-    graft.ops.CoreOps.calSpine(spark, sfDir)
-      .createOrReplaceTempView("cal_spine")
-    graft.ops.PrivacyOps.kAnonymity(spark, sfDir)
-      .createOrReplaceTempView("privacy_kanon")
-    graft.llm.Dedup.containmentPairs(spark, sfDir)
-      .createOrReplaceTempView("containment_pairs")
-    graft.ops.AsofOps.asofClickTol(spark, sfDir)
-      .createOrReplaceTempView("asof_tolerance")
-    graft.ops.CoreOps.w15RangeFrame(spark, sfDir)
-      .createOrReplaceTempView("range_frame_1h")
-    graft.ops.AnalyticsOps.flagshipRevenue(spark, sfDir)
-      .createOrReplaceTempView("flagship_revenue")
-    graft.llm.TextAnalysis.langIdConfusion(spark, sfDir)
-      .createOrReplaceTempView("langid_confusion")
-    graft.llm.Curation.curateBudget(spark, sfDir)
-      .createOrReplaceTempView("curate_budget")
-    graft.ops.PrivacyOps.erasurePropagation(spark, sfDir)
-      .createOrReplaceTempView("erasure_report")
-    graft.ops.IncrementalOps.ivmSketch(spark, sfDir)
-      .createOrReplaceTempView("ivm_sketch")
-    graft.ops.IntervalOps.firstTouchAttribution(spark, sfDir)
-      .createOrReplaceTempView("first_touch_attr")
-    graft.ops.AnalyticsOps.funnelLatency(spark, sfDir)
-      .createOrReplaceTempView("funnel_latency")
-    graft.ops.CoreOps.seasonality(spark, sfDir)
-      .createOrReplaceTempView("dow_seasonality")
-    // round-8 additions — both lazy plans (the pixel decode's
-    // mapPartitions and the error classifier build no jobs at mount time)
-    graft.ops.MultimodalOps.mmPixels(spark, sfDir)
-      .createOrReplaceTempView("pixel_stats")
-    SyncPipeline.syncErrors(spark, sfDir)
-      .createOrReplaceTempView("sync_errors")
-    // round-9: the color/JPEG decode tier — lazy mapPartitions plan
-    graft.ops.MultimodalOps.mmPixelsRgb(spark, sfDir)
-      .createOrReplaceTempView("pixel_rgb_stats")
-    // round-10: audio (WAVE/PCM) and real-resize tiers — lazy plans too
-    graft.ops.MultimodalOps.mmAudio(spark, sfDir)
-      .createOrReplaceTempView("audio_stats")
-    graft.ops.MultimodalOps.mmResize(spark, sfDir)
-      .createOrReplaceTempView("resize_stats")
-    // round-10 continuation: the multi-frame (animated GIF) tier
-    graft.ops.MultimodalOps.mmVideo(spark, sfDir)
-      .createOrReplaceTempView("video_frame_stats")
-    // round-13 continuation: DSIR selection + retrieval-quality eval —
-    // lazy plans
-    graft.llm.Curation.dsirWeights(spark, sfDir)
-      .createOrReplaceTempView("dsir_weights")
-    graft.llm.Curation.dsirSelect(spark, sfDir)
-      .createOrReplaceTempView("dsir_selected")
-    graft.llm.Similarity.annEval(spark, sfDir)
-      .createOrReplaceTempView("ann_eval")
-    graft.llm.Curation.textDrift(spark, sfDir)
-      .createOrReplaceTempView("text_drift")
-    // round-13 continuation: duplicated-substring family + prototype
-    // pruning — all lazy plans; k pinned on the prune for the same
-    // no-eager-jobs reason as the semdedup mount
-    graft.llm.Dedup.substrRanges(spark, sfDir)
-      .createOrReplaceTempView("substr_ranges")
-    graft.llm.Dedup.substrTrim(spark, sfDir)
-      .createOrReplaceTempView("substr_trimmed")
-    graft.llm.Dedup.substrStats(spark, sfDir)
-      .createOrReplaceTempView("substr_stats")
-    graft.llm.Similarity.prototypePrune(spark, sfDir,
-      k = Some(graft.llm.Similarity.KmeansK))
-      .createOrReplaceTempView("prototype_prune")
-    // round-13 continuation: CCNet LM-perplexity filter — lazy plans
-    graft.llm.Curation.lmScore(spark, sfDir)
-      .createOrReplaceTempView("lm_scores")
-    graft.llm.Curation.lmBuckets(spark, sfDir)
-      .createOrReplaceTempView("lm_buckets")
-    graft.llm.Curation.lmProfile(spark, sfDir)
-      .createOrReplaceTempView("lm_profile")
-    graft.llm.Curation.tokenBudgetSelect(spark, sfDir)
-      .createOrReplaceTempView("lm_budget_selected")
-    graft.llm.Curation.pipelineQuality(spark, sfDir)
-      .createOrReplaceTempView("quality_pipeline")
-    // round-13 continuation: excess-surprise / novelty / balanced-sample /
-    // semantic-decon selection tier — lazy plans
-    graft.llm.Curation.lmExcess(spark, sfDir)
-      .createOrReplaceTempView("lm_excess_selected")
-    graft.llm.Curation.ngramNovelty(spark, sfDir)
-      .createOrReplaceTempView("ngram_novelty")
-    graft.llm.Similarity.diversitySample(spark, sfDir,
-      k = Some(graft.llm.Similarity.KmeansK))
-      .createOrReplaceTempView("diversity_sample")
-    graft.llm.Similarity.semanticDecontaminate(spark, sfDir)
-      .createOrReplaceTempView("semantic_decon")
+    Views.foreach { case (view, q) =>
+      SparkEntry.queries(q)(spark, sfDir).createOrReplaceTempView(view)
+    }
     registerFunctions(spark)
   }
 

@@ -48,11 +48,18 @@ object BloomHashOps {
     * `sketch` is [[BloomBuild]]'s output: word 0 carries the hash count the
     * filter was BUILT with (the probe must never choose its own k — a
     * larger k would test bits the build never set and manufacture false
-    * negatives), words 1.. are the bitset.
+    * negatives), words 1.. are the bitset. A sketch of any other shape
+    * (fewer than 2 words, or a hash count outside 1..Int.MaxValue) fails
+    * rather than probing out of its bounds.
     */
   def contains(sketch: ArrayData, h: Long): Boolean = {
-    val numHashes = sketch.getLong(0).toInt
-    val numBits = (sketch.numElements() - 1) * 64
+    val words = sketch.numElements()
+    val k = if (words > 0) sketch.getLong(0) else 0L
+    if (words < 2 || k < 1 || k > Int.MaxValue) throw new IllegalArgumentException(
+      s"bloom_contains: not a bloom_build sketch ($words words, hash count $k); " +
+        "a sketch is a hash count >= 1 followed by at least 1 bitset word")
+    val numHashes = k.toInt
+    val numBits = (words - 1) * 64
     var i = 0
     while (i < numHashes) {
       val pos = position(h, i, numBits)

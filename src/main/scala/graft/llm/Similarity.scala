@@ -176,14 +176,16 @@ object Similarity {
     * comparison; `2·rel − maxsim` is one exact IEEE subtract of those
     * rounded doubles — identical in any engine.
     */
-  /** Greedy rounds actually executed by the last [[mmrDiversify]] call
-    * (convergence-skip observability — the GraphOps device).
-    */
-  private[graft] val lastMmrRounds =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
   def mmrDiversify(s: SparkSession, dir: String, k: Int = MmrK,
-      candidates: Int = MmrCandidates): DataFrame = Reuse.released {
+      candidates: Int = MmrCandidates): DataFrame =
+    mmrDiversifyCounted(s, dir, k, candidates)._1
+
+  /** [[mmrDiversify]] with the greedy rounds it executed (convergence-skip
+    * observability, as `GraphOps.kCoreCounted`).
+    */
+  private[graft] def mmrDiversifyCounted(s: SparkSession, dir: String,
+      k: Int = MmrK, candidates: Int = MmrCandidates)
+      : (DataFrame, Int) = Reuse.released {
     val c = corpus(s, dir)
     val queries = broadcast(
       c.filter(col("vec_id") < NQueries)
@@ -246,7 +248,7 @@ object Similarity {
           .select(rem("q_id"), col("vec_id"), col("rel"), col("maxsim"),
             (col("rel") * 2 - col("maxsim")).as("mmr"))
         // the probing round COUNTS even when it picks nothing — it ran
-        // the joins and the emptiness action (the GraphOps counters'
+        // the joins and the emptiness action (the GraphOps round counts'
         // convention: the fixpoint-detecting no-op round is executed)
         executed += 1
         val picked = pick(scored, r).localCheckpoint()
@@ -254,11 +256,10 @@ object Similarity {
         else selected = selected.union(picked).localCheckpoint()
       }
     }
-    lastMmrRounds.set(executed)
-    selected
+    (selected
       .select(col("q_id"), col("rank").cast("int").as("rank"),
         col("vec_id"), col("rel"), col("maxsim"), col("mmr"))
-      .orderBy("q_id", "rank")
+      .orderBy("q_id", "rank"), executed)
   }
 
   /** Per-list depth fed into [[rrfFusion]] / the standard RRF damping
@@ -593,11 +594,9 @@ object Similarity {
       if (r * r < k) r + 1 else r
     }
 
-  /** Resolve the pair-scanners' cluster count: `Some(k)` is caller-fixed
-    * (the lazy-mount path — GraftCatalog's view contract forbids eager
-    * jobs at registration, and the corpus count IS one); `None` sizes
-    * from the corpus (one metadata-cheap parquet count — footer row
-    * counts, not a data scan).
+  /** Resolve the pair-scanners' cluster count: `Some(k)` is caller-fixed;
+    * `None` sizes from the corpus (one metadata-cheap parquet count —
+    * footer row counts, not a data scan).
     */
   private def resolvePairK(c: DataFrame, k: Option[Int]): Int =
     k.getOrElse(pairClusterK(c.count()))

@@ -191,13 +191,14 @@ object GraphOps {
     * union), so the uncheckpointed chain would re-derive earlier rounds
     * ~2^r times (the MMR lesson).
     */
-  /** Vote rounds actually executed by the last [[labelPropagation]] call
-    * (convergence-skip observability, the [[lastKCoreRounds]] device).
-    */
-  private[graft] val lastLpaRounds =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  def labelPropagation(s: SparkSession, dir: String): DataFrame =
+    labelPropagationCounted(s, dir)._1
 
-  def labelPropagation(s: SparkSession, dir: String): DataFrame = Reuse.released {
+  /** [[labelPropagation]] with the vote rounds it executed
+    * (convergence-skip observability).
+    */
+  private[graft] def labelPropagationCounted(s: SparkSession, dir: String)
+      : (DataFrame, Int) = Reuse.released {
     val pairs = coPurchasePairs(s, dir)
       .select(col("pa"), col("pb"), col("supp").as("w"))
     val sym = Reuse(bothDirections(pairs, "pa", "pb", Seq("w")))
@@ -232,12 +233,11 @@ object GraphOps {
         lab = next
       }
     }
-    lastLpaRounds.set(executed)
     val size = lab.groupBy(col("label")).agg(count(lit(1)).as("csize"))
-    lab.join(size, "label")
+    (lab.join(size, "label")
       .select(col("node").as("part"), col("label").as("community"),
         col("csize"))
-      .orderBy("part")
+      .orderBy("part"), executed)
   }
 
   def pageRank(s: SparkSession, dir: String, iters: Int = PrIters): DataFrame = {
@@ -301,15 +301,15 @@ object GraphOps {
     * previous twice) — the same lineage discipline as the >8-iteration
     * PageRank path, materializing a strictly shrinking frame.
     */
-  /** Peel rounds actually executed by the last [[kCore]] call —
-    * observability for the convergence-skip (spec-pinned to beat the
-    * fixed [[KCoreRounds]] unroll on the fixture).
-    */
-  private[graft] val lastKCoreRounds =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
   def kCore(s: SparkSession, dir: String, k: Int = KCoreK,
-      rounds: Int = KCoreRounds): DataFrame = {
+      rounds: Int = KCoreRounds): DataFrame = kCoreCounted(s, dir, k, rounds)._1
+
+  /** [[kCore]] with the peel rounds it executed — observability for the
+    * convergence-skip (spec-pinned to beat the fixed [[KCoreRounds]]
+    * unroll on the fixture).
+    */
+  private[graft] def kCoreCounted(s: SparkSession, dir: String,
+      k: Int = KCoreK, rounds: Int = KCoreRounds): (DataFrame, Int) = {
     val base = coPurchaseEdges(s, dir)
     var e = loopPartitioned(bothDirections(base, "pa", "pb"), "src")
       .localCheckpoint(true)
@@ -334,9 +334,8 @@ object GraphOps {
       if (n == nEdges) done = true
       nEdges = n
     }
-    lastKCoreRounds.set(executed)
-    e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      .orderBy("node")
+    (e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+      .orderBy("node"), executed)
   }
 
   /** Fixed BFS round count: the support-pruned co-purchase graph is dense
@@ -361,13 +360,14 @@ object GraphOps {
     * doubles per round, the kCore discipline). Unreached nodes are absent
     * rather than ∞ — the frame stays O(reached).
     */
-  /** Frontier rounds actually executed by the last [[bfs]] call
-    * (convergence-skip observability, the [[lastKCoreRounds]] device).
-    */
-  private[graft] val lastBfsRounds =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  def bfs(s: SparkSession, dir: String, rounds: Int = BfsRounds): DataFrame =
+    bfsCounted(s, dir, rounds)._1
 
-  def bfs(s: SparkSession, dir: String, rounds: Int = BfsRounds): DataFrame = Reuse.released {
+  /** [[bfs]] with the frontier rounds it executed (convergence-skip
+    * observability, as [[kCoreCounted]]).
+    */
+  private[graft] def bfsCounted(s: SparkSession, dir: String,
+      rounds: Int = BfsRounds): (DataFrame, Int) = Reuse.released {
     val base = coPurchaseEdges(s, dir)
     val e = Reuse(loopPartitioned(bothDirections(base, "pa", "pb"), "src"))
     var dist = e.agg(min(col("src")).as("node"))
@@ -392,8 +392,7 @@ object GraphOps {
       if (n == nReached) done = true
       nReached = n
     }
-    lastBfsRounds.set(executed)
-    dist.orderBy("node")
+    (dist.orderBy("node"), executed)
   }
 
   /** Hub ceiling for [[nodeSimilarity]]: nodes above this degree leave the

@@ -43,10 +43,10 @@ object SequenceOps {
   /** Top paths to keep. */
   val PathTopK = 20
 
-  /** Session path mining: sessionize each user stream (the
-    * [[StreamOps.SessionGapMinutes]] gap rule shared with
-    * `q_w3_sessionize`), join each session's event types in (ts, event_id)
-    * order into a path string, and count the most frequent paths.
+  /** Session path mining: sessionize each user stream by
+    * [[StreamOps.sessionId]] (the `q_w3_sessionize` gap rule), join each
+    * session's event types in (ts, event_id) order into a path string, and
+    * count the most frequent paths.
     *
     * Shape: the session window and the per-session collapse share one
     * user shuffle; paths aggregate map-side-combined on the path string;
@@ -56,18 +56,10 @@ object SequenceOps {
     * in shared-precision epoch micros (the j8/j9 convention) so both
     * engines sequence sub-millisecond data identically.
     */
-  def sessionPaths(s: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
-    // the gap compares TRUNCATED SECONDS (us DIV 1e6), matching the
-    // oracle's date_diff('second', …) boundary-crossing count and the
-    // q_w3_sessionize gap rule — ordering is micros, gap stays seconds
-    val sec = expr("us DIV 1000000")
-    val newSession = when(
-      sec - lag(sec, 1).over(byUser)
-        > StreamOps.SessionGapMinutes * 60L, 1L).otherwise(lit(0L))
+  def sessionPaths(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "events")
       .withColumn("us", unix_micros(col("ts")))
-      .withColumn("session_id", sum(newSession).over(byUser))
+      .withColumn("session_id", StreamOps.sessionId)
       .groupBy(col("user_id"), col("session_id"))
       .agg(array_join(
         transform(
@@ -78,5 +70,4 @@ object SequenceOps {
       .agg(count(lit(1)).as("n_sessions"))
       .orderBy(col("n_sessions").desc, col("path").asc)
       .limit(PathTopK)
-  }
 }

@@ -308,26 +308,34 @@ object StreamOps {
         (col("v_null_user") + col("v_domain") + col("v_range") === 0L)
           .as("pass"))
 
-  /** Gap-based sessionization as a batch window computation: a new session
-    * starts when the gap to the previous event of the same user exceeds
-    * 30 minutes; session id = running count of session starts.
+  /** The session of an event over (user_id, ts, event_id): a new session
+    * starts when the gap to the user's previous event, in whole seconds
+    * (the oracles' `date_diff('second', …)` boundary count), exceeds
+    * [[SessionGapMinutes]]; the id is the running count of session starts
+    * in (ts, event_id) order.
     */
-  def sessionizeBatch(s: SparkSession, dir: String): DataFrame = {
+  def sessionId: Column = {
     val byUser = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
     val newSession = when(
       col("ts").cast("long") -
         lag(col("ts"), 1).over(byUser).cast("long") > SessionGapMinutes * 60L,
       1L).otherwise(lit(0L))
+    sum(newSession).over(byUser)
+  }
+
+  /** Gap-based sessionization as a batch window computation: one row per
+    * [[sessionId]] of each user.
+    */
+  def sessionizeBatch(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "events")
-      .withColumn("session_id", sum(newSession).over(byUser))
+      .withColumn("session_id", sessionId)
       .groupBy(col("user_id"), col("session_id"))
       .agg(
         count(lit(1)).as("n_events"),
         min(col("ts")).as("session_start"),
         max(col("ts")).as("session_end"))
       .orderBy("user_id", "session_id")
-  }
 
   // ---- streaming forms ---------------------------------------------------
 

@@ -89,7 +89,8 @@ class GraphOpsSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("kcore replays exactly as a plain-Scala peel and has converged") {
-    val got = GraphOps.kCore(spark, dir).collect()
+    val (core, executed) = GraphOps.kCoreCounted(spark, dir)
+    val got = core.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     spark.catalog.clearCache()
 
@@ -130,9 +131,9 @@ class GraphOpsSpec extends AnyFunSuite with SharedSpark {
       s"peel had not converged within ${GraphOps.KCoreRounds} rounds")
     // convergence-skip: the engine stops at the first no-op round (the
     // round the replay detected convergence on) instead of the full unroll
-    assert(GraphOps.lastKCoreRounds.get == converged,
-      s"executed ${GraphOps.lastKCoreRounds.get} rounds, fixpoint at $converged")
-    assert(GraphOps.lastKCoreRounds.get < GraphOps.KCoreRounds,
+    assert(executed == converged,
+      s"executed $executed rounds, fixpoint at $converged")
+    assert(executed < GraphOps.KCoreRounds,
       "no measured round reduction on the fixture")
     // and a converged core is a real k-core: every node keeps >= k edges
     assert(want.values.forall(_ >= GraphOps.KCoreK))
@@ -140,7 +141,8 @@ class GraphOpsSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("bfs replays plain-Scala frontier expansion and has converged") {
-    val got = GraphOps.bfs(spark, dir).collect()
+    val (reached, executed) = GraphOps.bfsCounted(spark, dir)
+    val got = reached.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     spark.catalog.clearCache()
     val li: Seq[(Long, Long)] = Tables.table(spark, dir, "lineitem")
@@ -171,9 +173,9 @@ class GraphOpsSpec extends AnyFunSuite with SharedSpark {
     // converged inside the unroll, and the whole component was reached
     assert(dist == prev, "BFS had not converged within BfsRounds")
     // convergence-skip: stop at the first no-op round, not the full unroll
-    assert(GraphOps.lastBfsRounds.get == fixpoint,
-      s"executed ${GraphOps.lastBfsRounds.get} rounds, fixpoint at $fixpoint")
-    assert(GraphOps.lastBfsRounds.get < GraphOps.BfsRounds,
+    assert(executed == fixpoint,
+      s"executed $executed rounds, fixpoint at $fixpoint")
+    assert(executed < GraphOps.BfsRounds,
       "no measured round reduction on the fixture")
     assert(got.size > 1 && got(source) == 0L)
     // every edge respects the triangle inequality |d(u) - d(v)| <= 1
@@ -230,7 +232,8 @@ class GraphOpsSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("label propagation replays plain-Scala synchronous rounds exactly") {
-    val got = GraphOps.labelPropagation(spark, dir).collect()
+    val (labels, executed) = GraphOps.labelPropagationCounted(spark, dir)
+    val got = labels.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     spark.catalog.clearCache()
     // independent graph build (same support-pruned co-purchase edges)
@@ -265,8 +268,8 @@ class GraphOpsSpec extends AnyFunSuite with SharedSpark {
     // convergence-skip: the engine executes exactly up to the first
     // no-change round (or the full unroll if labels were still moving)
     val expectRounds = if (fixpoint > 0) fixpoint else GraphOps.LpaRounds
-    assert(GraphOps.lastLpaRounds.get == expectRounds,
-      s"executed ${GraphOps.lastLpaRounds.get} rounds, expected $expectRounds")
+    assert(executed == expectRounds,
+      s"executed $executed rounds, expected $expectRounds")
     val sizes = lab.values.groupBy(identity).map { case (l, vs) => l -> vs.size.toLong }
     val want = lab.toSeq.map { case (v, l) => (v, l, sizes(l)) }
       .sortBy(_._1)

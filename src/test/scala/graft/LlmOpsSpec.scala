@@ -217,7 +217,8 @@ class LlmOpsSpec extends AnyFunSuite with SharedSpark {
       }
       sel
     }.sortBy(t => (t._1, t._2))
-    val got = Similarity.mmrDiversify(spark, sf).collect()
+    val (picked, executed) = Similarity.mmrDiversifyCounted(spark, sf)
+    val got = picked.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3),
         r.getDouble(4), r.getDouble(5))).toSeq
     assert(got == want)
@@ -230,17 +231,18 @@ class LlmOpsSpec extends AnyFunSuite with SharedSpark {
     }
     assert(departed, "MMR never re-ordered anything — the fixture is vacuous")
     // at the declared pool (candidates > k) every round picks — no skip
-    assert(Similarity.lastMmrRounds.get == Similarity.MmrK)
+    assert(executed == Similarity.MmrK)
     // convergence-skip: with the candidate pool SMALLER than k, the
     // greedy exhausts and the remaining rounds must be skipped — output
     // is the complete per-query pool, rank-contiguous
-    val small = Similarity.mmrDiversify(spark, sf, k = Similarity.MmrK,
-        candidates = 2).collect()
+    val (exhausted, smallExecuted) = Similarity.mmrDiversifyCounted(spark, sf,
+      k = Similarity.MmrK, candidates = 2)
+    val small = exhausted.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     // 2 productive rounds + the empty probing round that detects
     // exhaustion (the GraphOps counting convention) — rounds 4..5 skip
-    assert(Similarity.lastMmrRounds.get == 3,
-      s"executed ${Similarity.lastMmrRounds.get} rounds on an exhausted pool")
+    assert(smallExecuted == 3,
+      s"executed $smallExecuted rounds on an exhausted pool")
     val perQ = small.groupBy(_._1)
     assert(perQ.nonEmpty && perQ.values.forall(rs =>
       rs.map(_._2).sorted.toSeq == (1 to 2).toSeq),

@@ -238,6 +238,29 @@ class NativeFunctionsSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  /** Sketches `bloom_build` never makes: no words, no bitset word, a hash
+    * count below 1, and one past `Int.MaxValue`.
+    */
+  private val badSketches = Seq(Seq.empty[Long], Seq(1L), Seq(0L, -1L),
+    Seq(-3L, -1L), Seq(1L << 32, -1L))
+
+  Seq("interpreted" -> false, "generated" -> true).foreach { case (mode, generated) =>
+    test(s"bloom_contains: a sketch bloom_build did not make fails with a message, $mode") {
+      val c = cases.find(_.name == "bloom_contains").get
+      for (sketch <- badSketches; literal <- Seq(false, true)) {
+        val call: Seq[Column] => Column = {
+          case Seq(a, b) => BloomContains(if (literal) typedlit(sketch) else a, b)
+        }
+        val err = intercept[Exception](
+          run(c.copy(rows = Seq(Row(sketch, 7L))), call, generated))
+        val messages = Iterator.iterate[Throwable](err)(_.getCause)
+          .takeWhile(_ != null).flatMap(e => Option(e.getMessage))
+        assert(messages.exists(_.contains("bloom_contains: not a bloom_build sketch")),
+          s"sketch $sketch, literal = $literal: $err")
+      }
+    }
+  }
+
   test("slug_truncate: SQL with wrong-typed arguments fails analysis") {
     GraftCatalog.registerFunctions(spark)
     val err = intercept[AnalysisException](spark.sql("SELECT slug_truncate(1, 2)"))
