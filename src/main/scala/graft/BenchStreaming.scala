@@ -170,29 +170,22 @@ object BenchStreaming {
     val clicks = events.filter(_._4 == "click").map(e => (e._1, e._3, e._2))
 
     // ---- frozen serving artifacts (built in batch, as deployed) ----
+    // each with the twin that probes it: only the artifacts whose twins are
+    // selected get built (and materialized OUTSIDE the timed replays)
     def artifacts = Seq(
-      "anomaly" -> (() => graft.ops.AnalyticsOps.madStats(s, sfDir).cache()),
-      "drift" -> (() => graft.ops.ProfileOps.driftBounds(s, sfDir).cache()),
-      "mixtemp" -> (() => graft.llm.Curation.mixTempRates(s, sfDir).cache()),
-      "bm25" -> (() => graft.llm.TextAnalysis.bm25Index(s, sfDir).cache()),
-      "bpe" -> (() => graft.llm.TextAnalysis.encodedVocab(s, sfDir).cache()),
-      "minhash" -> (() => graft.llm.Dedup.minhashIndex(
+      ("anomaly", "anomaly_probe", () => graft.ops.AnalyticsOps.madStats(s, sfDir).cache()),
+      ("drift", "drift_counts", () => graft.ops.ProfileOps.driftBounds(s, sfDir).cache()),
+      ("mixtemp", "mix_temperature", () => graft.llm.Curation.mixTempRates(s, sfDir).cache()),
+      ("bm25", "bm25_probe", () => graft.llm.TextAnalysis.bm25Index(s, sfDir).cache()),
+      ("bpe", "bpe_tokenize", () => graft.llm.TextAnalysis.encodedVocab(s, sfDir).cache()),
+      ("minhash", "incremental_dedup", () => graft.llm.Dedup.minhashIndex(
         Tables.table(s, sfDir, "documents").select(col("doc_id"), col("text"))).cache()),
-      "driftprobs" -> (() => graft.llm.Curation.driftBaseProbs(s, sfDir).cache()),
-      "lmc12" -> (() => graft.llm.Curation.lmModel(s, sfDir)._1.cache()),
-      "lmc1" -> (() => graft.llm.Curation.lmModel(s, sfDir)._2.cache()),
-      "lmvx" -> (() => graft.llm.Curation.lmModel(s, sfDir)._3.cache()),
-      "noveltyref" -> (() => graft.llm.Curation.noveltyRef(s, sfDir).cache()))
-    // only the artifacts whose twins are selected get built (and
-    // materialized OUTSIDE the timed replays)
-    val artTwin = Map("anomaly" -> "anomaly_probe", "drift" -> "drift_counts",
-      "mixtemp" -> "mix_temperature", "bm25" -> "bm25_probe",
-      "bpe" -> "bpe_tokenize", "minhash" -> "incremental_dedup",
-      "driftprobs" -> "text_drift_probe",
-      "lmc12" -> "lm_probe", "lmc1" -> "lm_probe", "lmvx" -> "lm_probe",
-      "noveltyref" -> "novelty_probe")
-    val art = artifacts.filter { case (k, _) => selected(artTwin(k)) }
-      .map { case (k, f) => k -> f() }.toMap
+      ("driftprobs", "text_drift_probe", () => graft.llm.Curation.driftBaseProbs(s, sfDir).cache()),
+      ("lmc12", "lm_probe", () => graft.llm.Curation.lmModel(s, sfDir)._1.cache()),
+      ("lmc1", "lm_probe", () => graft.llm.Curation.lmModel(s, sfDir)._2.cache()),
+      ("lmvx", "lm_probe", () => graft.llm.Curation.lmModel(s, sfDir)._3.cache()),
+      ("noveltyref", "novelty_probe", () => graft.llm.Curation.noveltyRef(s, sfDir).cache()))
+    val art = artifacts.collect { case (k, twin, f) if selected(twin) => k -> f() }.toMap
     val needSem = selected("semdedup_probe")
     val (semCents, semBase) =
       if (!needSem) (null: DataFrame, null: DataFrame)

@@ -1,17 +1,8 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.GraftBridge
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, BooleanType, LongType}
 
 /** Shared bit-position derivation for the Bloom filter pair
   * ([[BloomBuild]] / [[BloomContains]]): the k probe positions of a
@@ -91,54 +82,38 @@ object BloomHashOps {
   * Like [[KMinValues]], the input is an ALREADY-HASHED long (hash outside,
   * in codegen); NULLs are skipped.
   */
-case class BloomBuild(
-    child: Expression,
-    numBits: Int,
-    numHashes: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]]
-  with UnaryLike[Expression] {
+object BloomBuild extends NativeAggregate[Array[Long]]("bloom_build",
+    Seq(In.bigint, In.intLiteral("multiple of 64 >= 64", b => b >= 64 && b % 64 == 0),
+      In.intLiteral(">= 1", _ >= 1)),
+    ArrayType(LongType, containsNull = false),
+    { case Seq(numBits, numHashes) => new BloomKernel(numBits, numHashes) }) {
+  /** Column form: `BloomBuild(hashCol, numBits, numHashes)`. */
+  def apply(c: Column, numBits: Int, numHashes: Int): Column = call(c, numBits, numHashes)
+}
 
-  override def prettyName: String = "bloom_build"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
+/** The Bloom buffer: the header-free `numBits/64`-word bitset. */
+final class BloomKernel(numBits: Int, numHashes: Int) extends SketchKernel[Array[Long]] {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (numBits < 64 || numBits % 64 != 0) TypeCheckResult.TypeCheckFailure(
-      s"bloom_build requires numBits to be a positive multiple of 64, got $numBits")
-    else if (numHashes < 1) TypeCheckResult.TypeCheckFailure(
-      s"bloom_build requires numHashes >= 1, got $numHashes")
-    else child.dataType match {
-      case LongType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"bloom_build requires a bigint input (pre-hashed), got ${other.simpleString}")
-    }
+  def empty: Array[Long] = new Array[Long](numBits / 64)
 
-  override def createAggregationBuffer(): Array[Long] =
-    new Array[Long](numBits / 64)
-
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val h = v.asInstanceOf[Long]
-      var i = 0
-      while (i < numHashes) {
-        val pos = BloomHashOps.position(h, i, numBits)
-        buf((pos >>> 6).toInt) |= 1L << (pos & 63)
-        i += 1
-      }
+  def add(buf: Array[Long], value: Any): Array[Long] = {
+    val h = value.asInstanceOf[Long]
+    var i = 0
+    while (i < numHashes) {
+      val pos = BloomHashOps.position(h, i, numBits)
+      buf((pos >>> 6).toInt) |= 1L << (pos & 63)
+      i += 1
     }
     buf
   }
 
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+  def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
     var i = 0
     while (i < a.length) { a(i) |= b(i); i += 1 }
     a
   }
 
-  override def eval(buf: Array[Long]): Any = {
+  def result(buf: Array[Long]): Any = {
     // header word 0 = numHashes; the aggregation BUFFER stays header-free
     // (merge is a plain word-wise OR)
     val out = new Array[Long](buf.length + 1)
@@ -147,45 +122,8 @@ case class BloomBuild(
     new GenericArrayData(out)
   }
 
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * buf.length)
-    var i = 0
-    while (i < buf.length) { bb.putLong(buf(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val out = new Array[Long](bytes.length / 8)
-    var i = 0
-    while (i < out.length) { out(i) = bb.getLong; i += 1 }
-    out
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): BloomBuild =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BloomBuild =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): BloomBuild =
-    copy(child = newChild)
-}
-
-object BloomBuild {
-  /** Column form: `BloomBuild(hashCol, numBits, numHashes)`. */
-  def apply(c: Column, numBits: Int, numHashes: Int): Column =
-    GraftBridge.column(
-      new BloomBuild(GraftBridge.expression(c), numBits, numHashes)
-        .toAggregateExpression())
-
-  val info = new ExpressionInfo(classOf[BloomBuild].getName, "bloom_build")
-  val builder: Seq[Expression] => Expression = {
-    case Seq(child, Literal(bits: Int, IntegerType), Literal(k: Int, IntegerType)) =>
-      new BloomBuild(child, bits, k)
-    case other => throw new IllegalArgumentException(
-      "bloom_build(hash BIGINT, numBits INT literal, numHashes INT literal) " +
-        s"expects 3 arguments with literal sizes, got ${other.map(_.sql).mkString(", ")}")
-  }
-  val identifier: FunctionIdentifier = FunctionIdentifier("bloom_build")
+  def toBytes(buf: Array[Long]): Array[Byte] = SketchAggregate.toBytes(buf)
+  def fromBytes(bytes: Array[Byte]): Array[Long] = SketchAggregate.fromBytes(bytes)
 }
 
 /** Bloom membership probe: true iff every probe bit of the (pre-hashed)

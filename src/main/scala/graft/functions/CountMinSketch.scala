@@ -1,17 +1,8 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.GraftBridge
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Count-min sketch (Cormode & Muthukrishnan, "An improved data stream
   * summary: the count-min sketch and its applications", J. Algorithms
@@ -37,99 +28,47 @@ import org.apache.spark.sql.types._
   *
   * Output: the flat row-major `d·w` counter matrix.
   */
-case class CmsSketch(
-    child: Expression,
-    d: Int,
-    w: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]]
-  with UnaryLike[Expression] {
+object CmsSketch extends NativeAggregate[Array[Long]]("cms_sketch",
+    Seq(In.array(In.int), In.intLiteral(">= 1", _ >= 1), In.intLiteral(">= 2", _ >= 2)),
+    ArrayType(LongType, containsNull = false),
+    { case Seq(d, w) => new CmsKernel(d, w) }) {
+  /** Column form: `CmsSketch(bucketsCol, d, w)` → flat d·w counter matrix. */
+  def apply(c: Column, d: Int, w: Int): Column = call(c, d, w)
+}
 
-  override def prettyName: String = "cms_sketch"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
+/** The CMS buffer: the row-major `d × w` counter matrix. */
+final class CmsKernel(d: Int, w: Int) extends SketchKernel[Array[Long]] {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (d < 1 || w < 2) TypeCheckResult.TypeCheckFailure(
-      s"cms_sketch requires d >= 1 and w >= 2, got d=$d w=$w")
-    else child.dataType match {
-      case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"cms_sketch requires array<int> bucket indices, got ${other.simpleString}")
-    }
+  def empty: Array[Long] = new Array[Long](d * w)
 
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](d * w)
-
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val arr = v.asInstanceOf[ArrayData]
-      if (arr.numElements() != d) throw new IllegalArgumentException(
-        s"cms_sketch: expected $d bucket indices, got ${arr.numElements()}")
-      var i = 0
-      while (i < d) {
-        // a null slot would read as bucket 0 from unsafe storage and
-        // silently corrupt a counter — same fail-loudly contract as the
-        // arity and range guards
-        if (arr.isNullAt(i)) throw new IllegalArgumentException(
-          s"cms_sketch: null bucket index in row $i")
-        val b = arr.getInt(i)
-        if (b < 0 || b >= w) throw new IllegalArgumentException(
-          s"cms_sketch: bucket $b outside [0, $w) in row $i")
-        buf(i * w + b) += 1L
-        i += 1
-      }
+  def add(buf: Array[Long], value: Any): Array[Long] = {
+    val arr = value.asInstanceOf[ArrayData]
+    if (arr.numElements() != d) throw new IllegalArgumentException(
+      s"cms_sketch: expected $d bucket indices, got ${arr.numElements()}")
+    var i = 0
+    while (i < d) {
+      // a null slot would read as bucket 0 from unsafe storage and
+      // silently corrupt a counter — same fail-loudly contract as the
+      // arity and range guards
+      if (arr.isNullAt(i)) throw new IllegalArgumentException(
+        s"cms_sketch: null bucket index in row $i")
+      val b = arr.getInt(i)
+      if (b < 0 || b >= w) throw new IllegalArgumentException(
+        s"cms_sketch: bucket $b outside [0, $w) in row $i")
+      buf(i * w + b) += 1L
+      i += 1
     }
     buf
   }
 
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+  def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
     var i = 0
     while (i < a.length) { a(i) += b(i); i += 1 }
     a
   }
 
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf.clone())
+  def result(buf: Array[Long]): Any = new GenericArrayData(buf.clone())
 
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * buf.length)
-    var i = 0
-    while (i < buf.length) { bb.putLong(buf(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val buf = new Array[Long](bytes.length / 8)
-    var i = 0
-    while (i < buf.length) { buf(i) = bb.getLong; i += 1 }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CmsSketch =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CmsSketch =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): CmsSketch =
-    copy(child = newChild)
-}
-
-object CmsSketch {
-  /** Column form: `CmsSketch(bucketsCol, d, w)` → flat d·w counter matrix. */
-  def apply(c: Column, d: Int, w: Int): Column =
-    GraftBridge.column(
-      new CmsSketch(GraftBridge.expression(c), d, w).toAggregateExpression())
-
-  val info = new ExpressionInfo(classOf[CmsSketch].getName, "cms_sketch")
-  val builder: Seq[Expression] => Expression = {
-    case Seq(child, IntLit(d), IntLit(w)) =>
-      new CmsSketch(child, d, w)
-    case other if other.size != 3 => throw new IllegalArgumentException(
-      s"cms_sketch(buckets ARRAY<INT>, d INT literal, w INT literal) expects 3 arguments, got ${other.size}")
-    case other => throw new IllegalArgumentException(
-      s"cms_sketch: d and w must be INT literals, got ${other.drop(1).map(_.sql).mkString(", ")}")
-  }
-  val identifier: FunctionIdentifier = FunctionIdentifier("cms_sketch")
-
+  def toBytes(buf: Array[Long]): Array[Byte] = SketchAggregate.toBytes(buf)
+  def fromBytes(bytes: Array[Byte]): Array[Long] = SketchAggregate.fromBytes(bytes)
 }

@@ -23,15 +23,14 @@ object GraftExtensions {
     HashedScore, MinhashSig, SimhashSketch, Simhash64Sketch, RollingFingerprint,
     Unidecode, CharStats)
 
+  /** The sketch aggregates, all with a SQL name. */
+  val aggregates: Seq[NativeAggregate[_]] = Seq(KMinValues, HllRegisters, CmsSketch, BloomBuild)
+
   /** Every native SQL function as `(identifier, info, builder)`: the one
     * list both the extension and [[graft.GraftCatalog.registerFunctions]]
     * register.
     */
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
-    scalars.map(f => (f.identifier, f.info, f.builder)) ++ Seq(
-      (JsonProject.identifier, JsonProject.info, JsonProject.builder),
-      (KMinValues.identifier, KMinValues.info, KMinValues.builder),
-      (HllRegisters.identifier, HllRegisters.info, HllRegisters.builder),
-      (CmsSketch.identifier, CmsSketch.info, CmsSketch.builder),
-      (BloomBuild.identifier, BloomBuild.info, BloomBuild.builder))
+    (scalars ++ aggregates).map(f => (f.identifier, f.info, f.builder)) :+
+      ((JsonProject.identifier, JsonProject.info, JsonProject.builder))
 }

@@ -1,15 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.GraftBridge
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, IntegerType}
 
 /** HyperLogLog register table over a 32-bit hash (Flajolet et al., "Hyper-
   * LogLog: the analysis of a near-optimal cardinality estimation algorithm",
@@ -37,89 +30,51 @@ import org.apache.spark.sql.types._
   * (count-distinct semantics). Output: the full `m`-element register array
   * (empty buckets as 0), bucket order.
   */
-case class HllRegisters(
-    child: Expression,
-    p: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]]
-  with UnaryLike[Expression] {
+object HllRegisters extends NativeAggregate[Array[Byte]]("hll_registers",
+    Seq(In.bigint, In.intLiteral("in [2, 16]", p => p >= 2 && p <= 16)),
+    ArrayType(IntegerType, containsNull = false),
+    { case Seq(p) => new HllKernel(p) }) {
+  /** Column form: `HllRegisters(hashCol, p)` → 2^p-element register array. */
+  def apply(c: Column, p: Int): Column = call(c, p)
+}
+
+/** The HLL buffer: one byte register per bucket, `m = 2^p` of them. */
+final class HllKernel(p: Int) extends SketchKernel[Array[Byte]] {
 
   private val m = 1 << p
   private val w = 32 - p
   private val suffixMask = (1L << w) - 1
 
-  override def prettyName: String = "hll_registers"
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = false
+  def empty: Array[Byte] = new Array[Byte](m)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (p < 2 || p > 16) TypeCheckResult.TypeCheckFailure(
-      s"hll_registers requires 2 <= p <= 16, got $p")
-    else child.dataType match {
-      case LongType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"hll_registers requires a bigint input (pre-hashed), got ${other.simpleString}")
-    }
-
-  override def createAggregationBuffer(): Array[Byte] = new Array[Byte](m)
-
-  override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val h = v.asInstanceOf[Long]
-      if (h < 0L || h >= (1L << 32)) throw new IllegalArgumentException(
-        s"hll_registers: hash $h outside the 32-bit contract [0, 2^32)")
-      val bucket = (h >>> w).toInt
-      val suffix = h & suffixMask
-      // rank = leftmost-1-bit position in the w-bit suffix (1-indexed);
-      // all-zero suffix = w+1. 64 - numberOfLeadingZeros is the bit length.
-      val rank =
-        if (suffix == 0L) w + 1
-        else w + 1 - (64 - java.lang.Long.numberOfLeadingZeros(suffix))
-      if (rank > buf(bucket)) buf(bucket) = rank.toByte
-    }
+  def add(buf: Array[Byte], value: Any): Array[Byte] = {
+    val h = value.asInstanceOf[Long]
+    if (h < 0L || h >= (1L << 32)) throw new IllegalArgumentException(
+      s"hll_registers: hash $h outside the 32-bit contract [0, 2^32)")
+    val bucket = (h >>> w).toInt
+    val suffix = h & suffixMask
+    // rank = leftmost-1-bit position in the w-bit suffix (1-indexed);
+    // all-zero suffix = w+1. 64 - numberOfLeadingZeros is the bit length.
+    val rank =
+      if (suffix == 0L) w + 1
+      else w + 1 - (64 - java.lang.Long.numberOfLeadingZeros(suffix))
+    if (rank > buf(bucket)) buf(bucket) = rank.toByte
     buf
   }
 
-  override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
+  def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
     var i = 0
     while (i < m) { if (b(i) > a(i)) a(i) = b(i); i += 1 }
     a
   }
 
-  override def eval(buf: Array[Byte]): Any = {
+  def result(buf: Array[Byte]): Any = {
     val out = new Array[Int](m)
     var i = 0
     while (i < m) { out(i) = buf(i); i += 1 }
     new GenericArrayData(out)
   }
 
-  override def serialize(buf: Array[Byte]): Array[Byte] = buf
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes.clone()
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HllRegisters =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HllRegisters =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): HllRegisters =
-    copy(child = newChild)
-}
-
-object HllRegisters {
-  /** Column form: `HllRegisters(hashCol, p)` → 2^p-element register array. */
-  def apply(c: Column, p: Int): Column =
-    GraftBridge.column(
-      new HllRegisters(GraftBridge.expression(c), p).toAggregateExpression())
-
-  val info = new ExpressionInfo(classOf[HllRegisters].getName, "hll_registers")
-  val builder: Seq[Expression] => Expression = {
-    case Seq(child, IntLit(p)) => new HllRegisters(child, p)
-    case other if other.size != 2 => throw new IllegalArgumentException(
-      s"hll_registers(hash BIGINT, p INT literal) expects 2 arguments, got ${other.size}")
-    case other => throw new IllegalArgumentException(
-      s"hll_registers: p must be an INT literal, got ${other(1).sql}")
-  }
-  val identifier: FunctionIdentifier = FunctionIdentifier("hll_registers")
-
+  def toBytes(buf: Array[Byte]): Array[Byte] = buf
+  def fromBytes(bytes: Array[Byte]): Array[Byte] = bytes.clone()
 }

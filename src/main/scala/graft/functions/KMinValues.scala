@@ -1,17 +1,10 @@
 package graft.functions
 
-import java.nio.ByteBuffer
+import java.util.TreeSet
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.GraftBridge
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** KMV (k-minimum-values) distinct-count sketch: keeps the `k` smallest
   * DISTINCT hash values seen, from which `|D| ≈ (k-1) · M / h_(k)` estimates
@@ -36,31 +29,19 @@ import org.apache.spark.sql.types._
   * (fewer iff the group has fewer distinct hashes — then the sketch IS the
   * exact distinct set).
   */
-case class KMinValues(
-    child: Expression,
-    k: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[java.util.TreeSet[java.lang.Long]]
-  with UnaryLike[Expression] {
+object KMinValues extends NativeAggregate[TreeSet[java.lang.Long]]("kmin_values",
+    Seq(In.bigint, In.intLiteral(">= 2", _ >= 2)), ArrayType(LongType, containsNull = false),
+    { case Seq(k) => new KMinValuesKernel(k) }) {
+  /** Column form: `KMinValues(hashCol, k)` → ascending array of ≤ k hashes. */
+  def apply(c: Column, k: Int): Column = call(c, k)
+}
 
-  override def prettyName: String = "kmin_values"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
+/** The KMV buffer: the at most `k` smallest distinct hashes seen. */
+final class KMinValuesKernel(k: Int) extends SketchKernel[TreeSet[java.lang.Long]] {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (k < 2) TypeCheckResult.TypeCheckFailure(
-      s"kmin_values requires k >= 2, got $k")
-    else child.dataType match {
-      case LongType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"kmin_values requires a bigint input (pre-hashed), got ${other.simpleString}")
-    }
+  def empty: TreeSet[java.lang.Long] = new TreeSet[java.lang.Long]()
 
-  override def createAggregationBuffer(): java.util.TreeSet[java.lang.Long] =
-    new java.util.TreeSet[java.lang.Long]()
-
-  private def insert(buf: java.util.TreeSet[java.lang.Long], v: Long): Unit = {
+  private def insert(buf: TreeSet[java.lang.Long], v: Long): Unit = {
     if (buf.size < k) { buf.add(v); () }
     else if (v < buf.last) {
       // add() returning false = v already present; the cap is unchanged
@@ -68,69 +49,32 @@ case class KMinValues(
     }
   }
 
-  override def update(
-      buf: java.util.TreeSet[java.lang.Long],
-      input: InternalRow): java.util.TreeSet[java.lang.Long] = {
-    val v = child.eval(input)
-    if (v != null) insert(buf, v.asInstanceOf[Long])
+  def add(buf: TreeSet[java.lang.Long], value: Any): TreeSet[java.lang.Long] = {
+    insert(buf, value.asInstanceOf[Long])
     buf
   }
 
-  override def merge(
-      a: java.util.TreeSet[java.lang.Long],
-      b: java.util.TreeSet[java.lang.Long]): java.util.TreeSet[java.lang.Long] = {
+  def merge(a: TreeSet[java.lang.Long], b: TreeSet[java.lang.Long]): TreeSet[java.lang.Long] = {
     val it = b.iterator()
     while (it.hasNext) insert(a, it.next())
     a
   }
 
-  override def eval(buf: java.util.TreeSet[java.lang.Long]): Any = {
+  private def ascending(buf: TreeSet[java.lang.Long]): Array[Long] = {
     val out = new Array[Long](buf.size)
     val it = buf.iterator()
     var i = 0
     while (it.hasNext) { out(i) = it.next(); i += 1 }
-    new GenericArrayData(out)
+    out
   }
 
-  override def serialize(buf: java.util.TreeSet[java.lang.Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * buf.size)
-    val it = buf.iterator()
-    while (it.hasNext) bb.putLong(it.next())
-    bb.array()
-  }
+  def result(buf: TreeSet[java.lang.Long]): Any = new GenericArrayData(ascending(buf))
 
-  override def deserialize(bytes: Array[Byte]): java.util.TreeSet[java.lang.Long] = {
-    val buf = createAggregationBuffer()
-    val bb = ByteBuffer.wrap(bytes)
-    while (bb.remaining() >= 8) buf.add(bb.getLong)
+  def toBytes(buf: TreeSet[java.lang.Long]): Array[Byte] = SketchAggregate.toBytes(ascending(buf))
+
+  def fromBytes(bytes: Array[Byte]): TreeSet[java.lang.Long] = {
+    val buf = empty
+    SketchAggregate.fromBytes(bytes).foreach(v => buf.add(v))
     buf
   }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): KMinValues =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KMinValues =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): KMinValues =
-    copy(child = newChild)
-}
-
-object KMinValues {
-  /** Column form: `kminValues(hashCol, k)` → ascending array of ≤ k hashes. */
-  def apply(c: Column, k: Int): Column =
-    GraftBridge.column(
-      new KMinValues(GraftBridge.expression(c), k).toAggregateExpression())
-
-  // SQL registration (GraftCatalog): the analyzer wraps a bare
-  // AggregateFunction returned by a registry builder in an
-  // AggregateExpression itself, same as the built-in aggregates
-  val info = new ExpressionInfo(classOf[KMinValues].getName, "kmin_values")
-  val builder: Seq[Expression] => Expression = {
-    case Seq(child, IntLit(k)) => new KMinValues(child, k)
-    case other if other.size != 2 => throw new IllegalArgumentException(
-      s"kmin_values(hash BIGINT, k INT literal) expects 2 arguments, got ${other.size}")
-    case other => throw new IllegalArgumentException(
-      s"kmin_values: k must be an INT literal, got ${other(1).sql}")
-  }
-  val identifier: FunctionIdentifier = FunctionIdentifier("kmin_values")
-
 }

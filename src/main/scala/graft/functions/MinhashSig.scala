@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.lit
-import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Row-local MinHash signature: one md5 per shingle, k affine mixes
   * `h·(2s+1) + s·12582917 mod p` taking running minima — the signature
@@ -26,7 +26,7 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
   */
 object MinhashSig extends NativeFunction("minhash_sig",
     Seq(In.array(In.string),
-      In("int literal >= 1", _ == IntegerType, Some(_.asInstanceOf[Int] >= 1))),
+      In.intLiteral(">= 1", _ >= 1)),
     ArrayType(LongType, containsNull = false), NullRule.Propagate,
     "graft.functions.MinhashSigOps.run") {
   /** DataFrame-API entry. */

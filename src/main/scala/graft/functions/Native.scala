@@ -1,9 +1,12 @@
 package graft.functions
 
+import java.nio.ByteBuffer
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.graftbridge.GraftBridge
@@ -27,19 +30,32 @@ abstract class NativeFunction(
     val inputs: Seq[In],
     val dataType: DataType,
     val nulls: NullRule,
-    val kernel: String) extends Serializable {
+    val kernel: String) extends SqlNative {
 
-  /** The expression over `children`; also the SQL builder. */
   def apply(children: Expression*): Expression =
     NativeScalar(this, children.toIndexedSeq)
+
+  protected def expressionClass: Class[_] = classOf[NativeScalar]
 
   /** The DataFrame-API form over columns. */
   protected def call(args: Column*): Column =
     GraftBridge.column(apply(args.map(GraftBridge.expression): _*))
+}
 
-  val identifier: FunctionIdentifier = FunctionIdentifier(name)
-  def info: ExpressionInfo = new ExpressionInfo(classOf[NativeScalar].getName, name)
-  val builder: Seq[Expression] => Expression = ch => apply(ch: _*)
+/** A native entry with a SQL name: what the session extension and
+  * [[graft.GraftCatalog.registerFunctions]] register for it.
+  */
+trait SqlNative extends Serializable {
+  def name: String
+
+  /** The expression over `children`; also the SQL builder. */
+  def apply(children: Expression*): Expression
+
+  protected def expressionClass: Class[_]
+
+  def identifier: FunctionIdentifier = FunctionIdentifier(name)
+  def info: ExpressionInfo = new ExpressionInfo(expressionClass.getName, name)
+  def builder: Seq[Expression] => Expression = ch => apply(ch: _*)
 }
 
 /** One input of a signature: how the type-check message spells it, and
@@ -59,6 +75,17 @@ final case class In(sql: String, isType: DataType => Boolean,
 }
 
 object In {
+  /** The one type check of every native: `children` against `inputs`,
+    * failing with "`<name> requires (…), got (…)`".
+    */
+  def check(name: String, inputs: Seq[In], children: Seq[Expression]): TypeCheckResult =
+    if (children.length == inputs.length &&
+        children.zip(inputs).forall { case (c, in) => in.accepts(c) })
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$name requires ${inputs.map(_.sql).mkString("(", ", ", ")")}, " +
+        s"got ${children.map(_.dataType.simpleString).mkString("(", ", ", ")")}")
+
   /** Any collation passes: kernels read the UTF-8 bytes, and string
     * results are UTF8_BINARY.
     */
@@ -66,6 +93,10 @@ object In {
   val int: In = In("int", _ == IntegerType)
   val bigint: In = In("bigint", _ == LongType)
   val double: In = In("double", _ == DoubleType)
+
+  /** An INT literal within `bound` (spelled after "int literal"). */
+  def intLiteral(bound: String, ok: Int => Boolean): In =
+    In(s"int literal $bound", _ == IntegerType, Some(v => ok(v.asInstanceOf[Int])))
 
   def array(of: In): In = In(s"array<${of.sql}>", {
     case ArrayType(et, _) => of.isType(et)
@@ -108,12 +139,7 @@ case class NativeScalar(fn: NativeFunction, children: IndexedSeq[Expression])
   override protected def stringArgs: Iterator[Any] = children.iterator
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (children.length == fn.inputs.length &&
-        children.zip(fn.inputs).forall { case (c, in) => in.accepts(c) })
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"${fn.name} requires ${fn.inputs.map(_.sql).mkString("(", ", ", ")")}, " +
-        s"got ${children.map(_.dataType.simpleString).mkString("(", ", ", ")")}")
+    In.check(fn.name, fn.inputs, children)
 
   /** The kernel overload generated code calls: parameter classes are the
     * Java classes of the children's types.
@@ -177,4 +203,111 @@ case class NativeScalar(fn: NativeFunction, children: IndexedSeq[Expression])
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression = copy(children = newChildren)
+}
+
+/** How a sketch aggregate reaches Catalyst: one [[NativeAggregate]] entry
+  * names the function, its input signature (the value input, then each
+  * geometry size as an INT literal with its bound), its result type and
+  * its buffer kernel at a given geometry. [[SketchAggregate]] is the one
+  * aggregate that runs every entry.
+  *
+  * The geometry is a plan-time constant: a column-valued size would make
+  * the aggregation buffer's shape data-dependent.
+  */
+abstract class NativeAggregate[B](
+    val name: String,
+    val inputs: Seq[In],
+    val dataType: DataType,
+    val kernel: Seq[Int] => SketchKernel[B]) extends SqlNative {
+
+  /** A bare aggregate function: the analyzer wraps a registry builder's
+    * result in an `AggregateExpression`, as for the built-in aggregates.
+    */
+  def apply(children: Expression*): Expression =
+    SketchAggregate(this, children.toIndexedSeq)
+
+  protected def expressionClass: Class[_] = classOf[SketchAggregate[_]]
+
+  /** The DataFrame-API form over the value column and the geometry sizes. */
+  protected def call(value: Column, sizes: Int*): Column =
+    GraftBridge.column(SketchAggregate(this,
+      (GraftBridge.expression(value) +: sizes.map(Literal(_))).toIndexedSeq)
+      .toAggregateExpression())
+}
+
+/** The buffer arithmetic of one sketch at one geometry: the empty buffer,
+  * one non-NULL value added, two partial buffers merged, the result value
+  * and the buffer as shuffle bytes. `add` and `merge` may update their
+  * first buffer in place.
+  */
+trait SketchKernel[B] extends Serializable {
+  def empty: B
+  def add(buf: B, value: Any): B
+  def merge(a: B, b: B): B
+  def result(buf: B): Any
+  def toBytes(buf: B): Array[Byte]
+  def fromBytes(bytes: Array[Byte]): B
+}
+
+/** The one expression behind every [[NativeAggregate]]: it checks its
+  * inputs at analysis, skips NULL values and prints `name(args)`.
+  */
+case class SketchAggregate[B](
+    fn: NativeAggregate[B],
+    children: IndexedSeq[Expression],
+    override val mutableAggBufferOffset: Int = 0,
+    override val inputAggBufferOffset: Int = 0)
+  extends TypedImperativeAggregate[B] {
+
+  override def prettyName: String = fn.name
+  override def dataType: DataType = fn.dataType
+  override def nullable: Boolean = false
+  // plans print `name(args)`, not the entry and the buffer offsets
+  override protected def stringArgs: Iterator[Any] = children.iterator
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    In.check(fn.name, fn.inputs, children)
+
+  /** The kernel at this call's geometry: the literals after the value
+    * input, read once (as `ApproximatePercentile` reads its accuracy).
+    */
+  @transient private lazy val kernel: SketchKernel[B] =
+    fn.kernel(children.tail.map(_.eval().asInstanceOf[Int]))
+
+  override def createAggregationBuffer(): B = kernel.empty
+
+  override def update(buf: B, input: InternalRow): B = {
+    val v = children.head.eval(input)
+    if (v == null) buf else kernel.add(buf, v)
+  }
+
+  override def merge(a: B, b: B): B = kernel.merge(a, b)
+  override def eval(buf: B): Any = kernel.result(buf)
+  override def serialize(buf: B): Array[Byte] = kernel.toBytes(buf)
+  override def deserialize(bytes: Array[Byte]): B = kernel.fromBytes(bytes)
+
+  override def withNewMutableAggBufferOffset(newOffset: Int): SketchAggregate[B] =
+    copy(mutableAggBufferOffset = newOffset)
+  override def withNewInputAggBufferOffset(newOffset: Int): SketchAggregate[B] =
+    copy(inputAggBufferOffset = newOffset)
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): SketchAggregate[B] = copy(children = newChildren)
+}
+
+object SketchAggregate {
+  /** The one long-array codec of the sketch buffers: big-endian words. */
+  def toBytes(words: Array[Long]): Array[Byte] = {
+    val bb = ByteBuffer.allocate(8 * words.length)
+    var i = 0
+    while (i < words.length) { bb.putLong(words(i)); i += 1 }
+    bb.array()
+  }
+
+  def fromBytes(bytes: Array[Byte]): Array[Long] = {
+    val bb = ByteBuffer.wrap(bytes)
+    val words = new Array[Long](bytes.length / 8)
+    var i = 0
+    while (i < words.length) { words(i) = bb.getLong; i += 1 }
+    words
+  }
 }

@@ -219,12 +219,10 @@ object CoreOps {
     * only the mutation fires the diff — the shorter list alone does not.
     */
   def a7bPrefixDiff(s: SparkSession, dir: String): DataFrame = {
-    val groups = t(s, dir, "lineitem")
-      .select("l_orderkey", "l_partkey")
-      .join(broadcast(t(s, dir, "part").select("p_partkey", "p_name")),
-        col("l_partkey") === col("p_partkey"))
-      .groupBy(col("l_orderkey"))
-      .agg(array_sort(collect_set(col("p_name"))).as("old_list"))
+    // the old side is the harvest's own bridge aggregation (column pruning
+    // drops its unused part-type aggregate)
+    val groups = SyncPipeline.orderGroups(s, dir)
+      .select(col("l_orderkey"), col("group_names").as("old_list"))
     // new_list is a row-local function of old_list, so the "new side" is a
     // withColumn on the SAME aggregation — a self-join here would run the
     // bridge aggregation twice and pay a sort-merge shuffle for an answer

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import java.sql.{Connection, DriverManager, PreparedStatement}
 
 /** K3/K4 production sinks: the reference upserts every package/user/org into
@@ -8,16 +8,16 @@ import java.sql.{Connection, DriverManager, PreparedStatement}
   * 249-257,407`); the engine's equivalent writes set-oriented results back
   * over JDBC.
   *
-  * Two tiers, in preference order:
-  *  1. compute the create/update/delete sets in Spark
-  *     ([[graft.SyncPipeline.classifyAgainst]]) and apply each with a plain
-  *     append/delete — pure connector writes, fully parallel;
-  *  2. `upsert` below — a row-atomic upsert statement batched per partition
-  *     for targets where the merge must be atomic per row; the statement
-  *     shape is dialect-specific (see [[JdbcSink.Dialect]]).
+  * Spark computes the create/update/delete sets
+  * ([[graft.SyncPipeline.classifyAgainst]]); [[JdbcActionSink]] applies the
+  * creates and the updates with `upsert` — a row-atomic upsert statement,
+  * so a replayed create is not a duplicate-key failure, shaped per dialect
+  * (see [[JdbcSink.Dialect]]) — and the deletes with `deleteByKey`.
+  * `append` is the plain connector write, for rows known to be absent.
   *
-  * Partition-parallel: every executor holds one connection and writes its
-  * partition in `batchSize` chunks. Exercised end-to-end against embedded
+  * Partition-parallel: `upsert` and `deleteByKey` share one write loop in
+  * which every executor holds one connection and writes its partition in
+  * `batchSize` chunks. Exercised end-to-end against embedded
   * Derby in JdbcSpec; the MySQL dialect is compile-checked only (no MySQL
   * server in the harness).
   */
@@ -122,7 +122,9 @@ object JdbcSink {
     }
   }
 
-  /** Plain append through the built-in connector (create-set application). */
+  /** Plain append through the built-in connector, for rows known to be
+    * absent from the target.
+    */
   def append(df: DataFrame, url: String, table: String): Unit =
     df.write.mode("append").format("jdbc")
       .option("url", url).option("dbtable", table).save()
@@ -138,26 +140,9 @@ object JdbcSink {
     require(missing.isEmpty,
       s"upsert: key column(s) ${missing.mkString(", ")} not in DataFrame schema")
     val (sql, bindOrder) = dialect.upsertStatement(table, cols, keyCols)
-    df.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-      if (rows.nonEmpty) {
-        val conn: Connection = DriverManager.getConnection(url)
-        try {
-          conn.setAutoCommit(false)
-          val st: PreparedStatement = conn.prepareStatement(sql)
-          try {
-            var n = 0
-            rows.foreach { r =>
-              bindOrder.zipWithIndex.foreach { case (colIdx, paramIdx) =>
-                st.setObject(paramIdx + 1, r.get(colIdx))
-              }
-              st.addBatch()
-              n += 1
-              if (n % batchSize == 0) { st.executeBatch(); conn.commit() }
-            }
-            st.executeBatch()
-            conn.commit()
-          } finally st.close()
-        } finally conn.close()
+    batched(df, url, sql, batchSize) { (st, r) =>
+      bindOrder.zipWithIndex.foreach { case (colIdx, paramIdx) =>
+        st.setObject(paramIdx + 1, r.get(colIdx))
       }
     }
   }
@@ -194,22 +179,33 @@ object JdbcSink {
   def deleteByKey(df: DataFrame, url: String, table: String, keyCol: String,
       batchSize: Int = 500, dialect: Dialect = MySqlDialect): Unit = {
     val sql = s"DELETE FROM ${dialect.qualify(table)} WHERE ${dialect.quote(keyCol)} = ?"
-    df.select(keyCol).foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
+    batched(df.select(keyCol), url, sql, batchSize)((st, r) => st.setObject(1, r.get(0)))
+  }
+
+  /** The one per-partition write loop: one connection per non-empty
+    * partition, autocommit off, `sql` prepared once, each row bound by
+    * `bind` and batched, a commit every `batchSize` rows and at the end.
+    */
+  private def batched(df: DataFrame, url: String, sql: String, batchSize: Int)(
+      bind: (PreparedStatement, Row) => Unit): Unit =
+    df.foreachPartition { rows: Iterator[Row] =>
       if (rows.nonEmpty) {
-        val conn = DriverManager.getConnection(url)
+        val conn: Connection = DriverManager.getConnection(url)
         try {
           conn.setAutoCommit(false)
-          val st = conn.prepareStatement(sql)
+          val st: PreparedStatement = conn.prepareStatement(sql)
           try {
             var n = 0
             rows.foreach { r =>
-              st.setObject(1, r.get(0)); st.addBatch(); n += 1
+              bind(st, r)
+              st.addBatch()
+              n += 1
               if (n % batchSize == 0) { st.executeBatch(); conn.commit() }
             }
-            st.executeBatch(); conn.commit()
+            st.executeBatch()
+            conn.commit()
           } finally st.close()
         } finally conn.close()
       }
     }
-  }
 }

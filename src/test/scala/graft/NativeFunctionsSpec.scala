@@ -11,8 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions._
 import graft.llm.{Similarity, TextAnalysis, TextHash}
 
-/** Every scalar native on degenerate inputs: NULL, empty strings and
-  * arrays, non-ASCII text and, wherever an input is a double, NaN and ±∞.
+/** Every native on degenerate inputs. A scalar sees NULL, empty strings
+  * and arrays, non-ASCII text and, wherever an input is a double, NaN and
+  * ±∞; a sketch aggregate sees zero rows, an all-NULL group and a group
+  * split across partitions, under both aggregate operators.
   *
   * Each row runs twice over an RDD-backed frame (so the optimizer can
   * neither fold the call nor evaluate it in a local relation): once with
@@ -20,8 +22,8 @@ import graft.llm.{Similarity, TextAnalysis, TextHash}
   * which evaluates the expression interpreted, and once with
   * `CODEGEN_ONLY`, which compiles its generated code. Both must give the
   * same rows, and so must the declarative spec form where one exists.
-  * One wrong-typed call per function must fail analysis with
-  * "`<name> requires`".
+  * One wrong-typed call per function, and each sketch aggregate misuse,
+  * must fail analysis with "`<name> requires`".
   */
 class NativeFunctionsSpec extends AnyFunSuite with SharedSpark {
 
@@ -258,6 +260,76 @@ class NativeFunctionsSpec extends AnyFunSuite with SharedSpark {
         assert(messages.exists(_.contains("bloom_contains: not a bloom_build sketch")),
           s"sketch $sketch, literal = $literal: $err")
       }
+    }
+  }
+
+  // ---- sketch aggregates ----------------------------------------------------
+
+  /** Group 1 is eight hashes (with repeats) and their CMS bucket pairs,
+    * spread over all 4 partitions, so its sketch is merged from serialized
+    * partial buffers; group 2 is all NULL. `s` and `k` feed the misuse rows.
+    */
+  private val sketchSchema = fields("g" -> IntegerType, "h" -> LongType,
+    "b" -> ArrayType(IntegerType), "s" -> StringType, "k" -> IntegerType)
+  private val sketchRows =
+    Seq(5L, 3L, 9L, 3L, 1L << 31, 7L, (3L << 30) + 1, 9L).map { h =>
+      Row(1, h, Seq((h % 4).toInt, ((h >>> 2) % 4).toInt), "x", 8)
+    } ++ Seq.fill(2)(Row(2, null, null, null, null))
+
+  private def sketchFrame(rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), sketchSchema)
+
+  /** Each aggregate: its call, its value for group 1, its value for the
+    * all-NULL group (also its value over zero rows), and SQL misuses: a
+    * wrong value type, a non-literal geometry, a BIGINT geometry literal,
+    * a wrong arity and an out-of-bound geometry.
+    */
+  private val sketches: Seq[(String, Column, String, String, Seq[String])] = Seq(
+    ("kmin_values", KMinValues(col("h"), 3), "[3, 5, 7]", "[]",
+      Seq("kmin_values(s, 3)", "kmin_values(h, k)", "kmin_values(h, 3L)",
+        "kmin_values(h)", "kmin_values(h, 1)")),
+    ("hll_registers", HllRegisters(col("h"), 2), "[29, 0, 31, 30]", "[0, 0, 0, 0]",
+      Seq("hll_registers(s, 2)", "hll_registers(h, k)", "hll_registers(h, 2L)",
+        "hll_registers(h, 2, 2)", "hll_registers(h, 17)")),
+    ("cms_sketch", CmsSketch(col("b"), 2, 4), "[1, 4, 0, 3, 4, 2, 2, 0]",
+      "[0, 0, 0, 0, 0, 0, 0, 0]",
+      Seq("cms_sketch(h, 2, 4)", "cms_sketch(b, 2, k)", "cms_sketch(b, 2L, 4)",
+        "cms_sketch(b, 2)", "cms_sketch(b, 0, 4)")),
+    ("bloom_build", BloomBuild(col("h"), 64, 2), "[2, 18018800919134891]", "[2, 0]",
+      Seq("bloom_build(s, 64, 2)", "bloom_build(h, k, 2)", "bloom_build(h, 64L, 2)",
+        "bloom_build(h, 64)", "bloom_build(h, 100, 2)")))
+
+  private def rendered(r: Row): String = r.getSeq[Any](0).mkString("[", ", ", "]")
+
+  /** `agg` per group and over zero rows, under ObjectHashAggregate or,
+    * with it switched off, SortAggregate.
+    */
+  private def sketchRun(agg: Column, objectHash: Boolean): (Seq[String], String) =
+    withConfs("spark.sql.execution.useObjectHashAggregateExec" -> objectHash.toString) {
+      val grouped = sketchFrame(sketchRows).groupBy("g").agg(agg.as("r"))
+        .orderBy("g").select("r")
+      val operator = if (objectHash) "ObjectHashAggregate" else "SortAggregate"
+      assert(grouped.queryExecution.executedPlan.toString.contains(operator),
+        grouped.queryExecution.executedPlan.toString)
+      (grouped.collect().toSeq.map(rendered),
+        rendered(sketchFrame(Nil).agg(agg.as("r")).head()))
+    }
+
+  sketches.foreach { case (name, agg, group, allNull, misuses) =>
+    Seq("ObjectHashAggregate" -> true, "SortAggregate" -> false).foreach {
+      case (operator, objectHash) =>
+        test(s"$name: zero rows, all-NULL and split groups, $operator") {
+          assert(sketchRun(agg, objectHash) == (Seq(group, allNull), allNull))
+        }
+    }
+
+    test(s"$name: misuse fails analysis") {
+      GraftCatalog.registerFunctions(spark)
+      sketchFrame(sketchRows).createOrReplaceTempView("sketch_input")
+      try misuses.foreach { call =>
+        val err = intercept[AnalysisException](spark.sql(s"SELECT $call FROM sketch_input"))
+        assert(err.getMessage.contains(s"$name requires ("), s"$call: ${err.getMessage}")
+      } finally spark.catalog.dropTempView("sketch_input")
     }
   }
 

@@ -6,13 +6,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-import graft.functions.{GraftExtensions, NativeScalar}
+import graft.functions.{GraftExtensions, NativeScalar, SketchAggregate}
 
-/** Every native scalar function is one `NativeFunction` entry over its
-  * kernel, run by the one `NativeScalar` expression. The scan below pins
-  * that no main source writes its own expression members, so a new native
-  * cannot come back as a hand-written Catalyst class; only `JsonProject`
-  * (it carries a per-schema writer) and the four sketch aggregates do.
+/** Every native SQL function but `json_project` is one entry over its
+  * kernel: a `NativeFunction` run by the one `NativeScalar` expression, or
+  * a `NativeAggregate` run by the one `SketchAggregate`. The scan below
+  * pins that no other main source writes its own expression members, so a
+  * new native cannot come back as a hand-written Catalyst class; only
+  * `JsonProject` (it carries a per-schema writer) does.
   */
 class NativeShapeSpec extends AnyFunSuite {
 
@@ -32,26 +33,27 @@ class NativeShapeSpec extends AnyFunSuite {
     }.toSet
   }
 
-  private val aggregates = Set("KMinValues", "HllRegisters", "CmsSketch", "BloomBuild")
-
   test("generated code is written only by NativeScalar and JsonProject") {
     assert(sites("\\bdef\\s+doGenCode\\b".r) == Set("NativeScalar", "JsonProject"))
   }
 
-  test("expression members are written only by the shape, JsonProject and the aggregates") {
-    assert(sites("\\bdef\\s+(nullSafeEval|withNewChildInternal|withNewChildrenInternal)\\b".r) ==
-      Set("NativeScalar", "JsonProject") ++ aggregates)
+  test("expression members are written only by the two shapes and JsonProject") {
+    assert(sites(("\\bdef\\s+(nullSafeEval|withNewChildInternal|withNewChildrenInternal|" +
+      "withNewMutableAggBufferOffset)\\b").r) ==
+      Set("NativeScalar", "SketchAggregate", "JsonProject"))
   }
 
-  test("every scalar SQL function is built from a NativeFunction entry") {
-    val nonScalar = Set("json_project", "kmin_values", "hll_registers", "cms_sketch", "bloom_build")
+  test("every SQL function but json_project is built from an entry") {
     val built = GraftExtensions.functions.flatMap { case (id, _, builder) =>
       Try(builder(Seq.empty)).toOption.collect {
         case NativeScalar(fn, _) if fn.name == id.funcName => id.funcName
+        case SketchAggregate(fn, _, _, _) if fn.name == id.funcName => id.funcName
       }
     }
     assert(GraftExtensions.functions.size == 20)
-    assert(built.toSet == GraftExtensions.functions.map(_._1.funcName).toSet -- nonScalar)
-    assert(built.toSet == GraftExtensions.scalars.map(_.name).toSet)
+    assert(built.size == 19)
+    assert(built.toSet == GraftExtensions.functions.map(_._1.funcName).toSet - "json_project")
+    assert(built.toSet ==
+      (GraftExtensions.scalars ++ GraftExtensions.aggregates).map(_.name).toSet)
   }
 }
